@@ -46,7 +46,9 @@ def _mat64(va: pd.Series) -> tuple[np.ndarray, np.ndarray]:
     """(n×dim float64 matrix, null row mask) from an array-column batch.
     Null rows become zero rows (masked back to NULL by the caller).
     Requires equal-length non-null rows — the fixed-dim embedding
-    contract every caller of these folds already has."""
+    contract every caller of these folds already has.  An all-null
+    batch has no dim to take (the matrix is n×1): callers return it
+    all-NULL instead of folding."""
     vals = va.tolist()
     mask = np.array([v is None for v in vals], dtype=bool)
     if mask.any():
@@ -87,6 +89,8 @@ def cosine_fold_arrow(a, b):
             return pd.Series([], dtype="float64")
         A, ma = _mat64(va)
         B, mb = _mat64(vb)
+        if (ma | mb).all():
+            return _null_safe(np.zeros(len(va)), ma | mb)
         num = _fold_dot(A, B)
         den = np.sqrt(_fold_dot(A, A)) * np.sqrt(_fold_dot(B, B))
         safe = np.where(den != 0.0, den, 1.0)
@@ -107,6 +111,8 @@ def dot_literal_fold(vec, qvec: list[float]):
         if len(va) == 0:
             return pd.Series([], dtype="float64")
         A, mask = _mat64(va)
+        if mask.all():
+            return _null_safe(np.zeros(len(va)), mask)
         acc = np.zeros(A.shape[0], dtype=np.float64)
         for j in range(len(q)):
             acc = acc + A[:, j] * q[j]
@@ -134,6 +140,8 @@ def cosine_literal_fold(vec, qvec: list[float]):
         if len(va) == 0:
             return pd.Series([], dtype="float64")
         A, mask = _mat64(va)
+        if mask.all():
+            return _null_safe(np.zeros(len(va)), mask)
         num = np.zeros(A.shape[0], dtype=np.float64)
         na = np.zeros(A.shape[0], dtype=np.float64)
         for j in range(len(q)):

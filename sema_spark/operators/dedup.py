@@ -20,7 +20,8 @@ shuffle-conscious:
 At 100 TB: every strategy is (blocking-key shuffle) + (bounded local
 pair-gen) + (CC on the tiny duplicate-edge graph); none materializes the
 N² pair space.  Giant buckets (boilerplate text) are capped by
-``max_bucket`` with a logged drop, the standard recall/cost dial.
+``max_bucket``, the standard recall/cost dial; the rows the cap drops
+are not yet counted or reported.
 """
 
 from __future__ import annotations
@@ -390,31 +391,6 @@ def simhash(col, num_bits: int = SIMHASH_BITS):
     )
 
 
-def simhash_from_hex_udf(num_bits: int = SIMHASH_BITS):
-    """Arrow-batched numpy sign-sum over precomputed token base hashes
-    (15-hex-char strings) → bit string.  VALUE-IDENTICAL to
-    :func:`simhash` (asserted in tests/test_minhash_paths.py): the
-    60-bit value occupies the low bits of a uint64, so MSB-first
-    unpackbits[4:] equals ``lpad(conv(hex,16,2),60,'0')``.  Replaces the
-    round-1 hotspot — a 64-pass interpreted aggregate per document —
-    with one JVM hash pass plus a vectorized bit-count."""
-
-    from pyspark.sql.types import StringType
-
-    def sh_one(hexes) -> str:
-        if hexes is None or len(hexes) == 0:
-            return "0" * num_bits
-        h = np.array([int(x, 16) for x in hexes], dtype=np.uint64)
-        bits = np.unpackbits(h.astype(">u8").view(np.uint8).reshape(-1, 8), axis=1)
-        sums = (2 * bits[:, 64 - num_bits :].astype(np.int64) - 1).sum(axis=0)
-        return "".join("1" if v > 0 else "0" for v in sums)
-
-    def _impl(s):
-        return s.map(sh_one)
-
-    return pandas_udf(_impl, StringType())
-
-
 # per-worker token→60-bit-hash memo for simhash_arrow: the token sha is
 # a pure function and corpora repeat a small vocabulary, so one
 # hashlib call per DISTINCT token replaces one interpreted JVM sha2 per
@@ -723,11 +699,10 @@ def _ngram_bitmap_pairs(
     verified redundantly and deduplicated only after the threshold
     filter, when they number in the hundreds.
 
-    r7: the raw stream now comes from DISTINCT-BUCKET clique generation
-    (see :func:`_lsh_raw_band_pairs` — 109.5M → ~8M pairs at sf1.0), so
-    the two bitmap probe joins run over an order of magnitude fewer
-    rows; the bitmap table broadcasts when it fits the session budget
-    (the same adaptive dial as embedding_dup_pairs' scoring path)."""
+    The raw stream is the per-(band, bh) clique union of
+    :func:`_lsh_raw_band_pairs`.  The bitmap table broadcasts when it
+    fits the session budget (the same adaptive dial as
+    embedding_dup_pairs' scoring path)."""
     n_words = (u + 63) // 64
     # deterministic dictionary: rank by gram; ≤ max_universe rows, so a
     # single-partition window is fine at any corpus scale

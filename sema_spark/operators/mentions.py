@@ -6,20 +6,13 @@ Generalizes the reference's crawl+chunk scan
 mention detection emitting candidate ``(subj, pred, obj)`` triples with
 line provenance, ``pred ∈ {defines, contains, imports, calls}``.
 
-Two interchangeable implementations, tested for equality:
+:func:`extract_triples` runs on pure built-in functions:
+``posexplode(split(content,'\\n'))`` + per-language
+``regexp_extract_all`` banks evaluated inside whole-stage codegen.  No
+Python in the loop at all; the whole stage is one narrow map followed
+by a single dedup shuffle.
 
-* :func:`extract_triples` — **default hot path**: pure built-in
-  functions.  ``posexplode(split(content,'\\n'))`` + per-language
-  ``regexp_extract_all`` banks evaluated inside whole-stage codegen.
-  No Python in the loop at all; the whole stage is one narrow map
-  followed by a single dedup shuffle.
-* :func:`extract_triples_arrow` — Arrow-batched ``mapInPandas``
-  (north_star stage-1 contract: "vectorized pandas/Arrow UDFs perform
-  mention detection"); useful template for detectors that genuinely
-  need Python (e.g. a real tree-sitter parse).
-
-Semantics (documented approximations, consistent across both paths and
-the fixture oracle):
+Semantics (documented approximations, shared with the fixture oracle):
 
 * triples are file-attributed: ``(repo/path, calls, sym)`` rather than
   per-enclosing-function attribution;
@@ -31,8 +24,6 @@ the fixture oracle):
 """
 
 from __future__ import annotations
-
-import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -288,80 +279,3 @@ def extract_triples(df: DataFrame, apply_filters: bool = True, dedup: bool = Tru
     if apply_filters:
         df = apply_crawl_filters(df)
     return mentions_to_triples(extract_mentions(df), dedup=dedup)
-
-
-# ---------------------------------------------------------------------------
-# Arrow variant — the north_star stage-1 UDF contract.  Same semantics as
-# the SQL path (asserted in tests/test_mentions.py).
-
-_COMPILED: dict[str, list[tuple[str, re.Pattern]]] = {}
-
-
-def _compiled_bank(lang: str):
-    # re.ASCII: Java regex \w is ASCII-only, Python's is Unicode — the
-    # two paths must match the same identifiers ('def café(x):' would
-    # otherwise produce a triple on the Arrow path and none on the SQL
-    # path, breaking the interchangeability contract)
-    if lang not in _COMPILED:
-        _COMPILED[lang] = [(k, re.compile(p, re.ASCII)) for k, p in PATTERN_BANK.get(lang, [])]
-        _COMPILED[lang + "/class"] = re.compile(CLASS_PATTERN.get(lang, r"$^"), re.ASCII)
-    return _COMPILED[lang], _COMPILED[lang + "/class"]
-
-
-_MENTION_SCHEMA = (
-    "repo string, path string, commit string, content_sha string, "
-    "file_class string, line long, kind string, sym string"
-)
-
-
-def extract_mentions_arrow(df: DataFrame) -> DataFrame:
-    """Arrow-batched per-file mention detector (mapInPandas).
-
-    Batches arrive as pandas DataFrames (Arrow transfer, no per-row
-    Python round trips at the executor boundary); the regex loop is
-    per-file but CPython-side, exactly where a tree-sitter parse would
-    slot in.  The encoder-style per-batch model reload bug of the
-    reference (/root/reference/src/storage/lance_indexer.rs:60-73) is
-    avoided: banks compile once per worker via module cache.
-    """
-    if "content_sha" not in df.columns:
-        df = with_content_sha(df)
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "repo", "path", "commit", "content_sha", "file_class", "line", "kind", "sym"
-            )}
-            for repo, path, commit, lang, content, sha in zip(
-                pdf["repo"], pdf["path"], pdf["commit"], pdf["lang"], pdf["content"], pdf["content_sha"]
-            ):
-                if content is None:
-                    continue
-                bank, class_re = _compiled_bank(lang)
-                m = class_re.search(content)
-                file_class = m.group(1) if m else None
-                for lineno, line in enumerate(content.split("\n"), start=1):
-                    for kind, pat in bank:
-                        for g in pat.findall(line):
-                            out["repo"].append(repo)
-                            out["path"].append(path)
-                            out["commit"].append(commit)
-                            out["content_sha"].append(sha)
-                            out["file_class"].append(file_class)
-                            out["line"].append(lineno)
-                            out["kind"].append(kind)
-                            out["sym"].append(g)
-            yield pd.DataFrame(out)
-
-    cols = ["repo", "path", "commit", "lang", "content", "content_sha"]
-    return df.select(*cols).mapInPandas(run, schema=_MENTION_SCHEMA)
-
-
-def extract_triples_arrow(df: DataFrame, apply_filters: bool = True, dedup: bool = True) -> DataFrame:
-    if "content_sha" not in df.columns:
-        df = with_content_sha(df)
-    if apply_filters:
-        df = apply_crawl_filters(df)
-    return mentions_to_triples(extract_mentions_arrow(df), dedup=dedup)

@@ -2,7 +2,7 @@
 metadata.
 
 The Spark-side contract is real and tested — schemas, Arrow batch shape,
-partition-stable UDF signatures, frame-sample fan-out.  Codec status:
+partition-stable UDF signatures.  Codec status:
 
 * PPM (P6), 24-bit BMP, and 8-bit-RGB PNG images (stdlib-zlib inflate +
   full five-filter scanline reconstruction) and PCM-16 WAV audio are
@@ -483,42 +483,6 @@ def decode_features(df: DataFrame, strict: bool = False) -> DataFrame:
         ]
     )
     return df.select("media_id", "kind", "mime", "bytes").mapInPandas(run, schema=schema)
-
-
-def sample_frames(df: DataFrame, every_ms: int = 1000, strict: bool = False) -> DataFrame:
-    """video rows → one row per sampled frame (media_id, frame_idx, ts_ms,
-    frame_bytes).  Fan-out shape is real; frame extraction is stubbed as
-    content-derived fake bytes."""
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"media_id": [], "frame_idx": [], "ts_ms": [], "frame_bytes": []}
-            for mid, payload, meta in zip(pdf["media_id"], pdf["bytes"], pdf["meta"]):
-                if strict:
-                    raise NotImplementedError("real frame sampling requires ffmpeg")
-                duration = (meta["duration_ms"] if meta is not None and meta["duration_ms"] is not None else 0)
-                n_frames = max(int(duration // every_ms), 1)
-                base = bytes(payload) if payload is not None else b""
-                for i in range(n_frames):
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(i)
-                    out["ts_ms"].append(i * every_ms)
-                    out["frame_bytes"].append(hashlib.sha256(base + i.to_bytes(4, "little")).digest())
-            yield pd.DataFrame(out)
-
-    schema = StructType(
-        [
-            StructField("media_id", LongType(), False),
-            StructField("frame_idx", IntegerType(), False),
-            StructField("ts_ms", LongType(), False),
-            StructField("frame_bytes", BinaryType(), False),
-        ]
-    )
-    return df.filter(F.col("kind") == "video").select("media_id", "bytes", "meta").mapInPandas(
-        run, schema=schema
-    )
 
 
 def _pattern_image(i: int) -> np.ndarray:

@@ -69,7 +69,6 @@ from sema_spark.sources.checkpoint import (
     run_forced_incremental_stage,
     run_incremental_stage,
     run_snapshot_stage,
-    snapshot_commit,
     stage_rows_for_keys,
 )
 
@@ -110,8 +109,7 @@ def run_pipeline(
     form is per-file increments either way).  Output is identical by
     construction; the flag only changes the amount of work.  Falls back
     to the full re-link when the stored linked state cannot be trusted
-    (params flip, legacy snapshot-format base, compaction pruned the
-    history the delta needs).
+    (params flip, compaction pruned the history the delta needs).
 
     Change detection hashes every source byte per run (the stage-1
     anti-join) UNLESS ``src`` already carries a ``content_sha`` column —
@@ -209,14 +207,8 @@ def _run_edges_stage(
     if anchor is not None and {k: anchor.get(k) for k in target} == target:
         return StageRun(STAGE_EDGES, "", 0, 0, skipped=True, fingerprint=fp_nodes)
     ekeys = current_checkpoint(spark, base, STAGE_EDGES).select(*key_cols)
-    if (
-        anchor is None
-        and ekeys.limit(1).count() == 0
-        and keys.limit(1).count() == 0
-        and snapshot_commit(spark, base, STAGE_EDGES) is None
-    ):
-        # empty corpus, empty stage, no legacy snapshot a read fallback
-        # could mis-serve: nothing to do and nothing to mark
+    if anchor is None and ekeys.limit(1).count() == 0 and keys.limit(1).count() == 0:
+        # empty corpus, empty stage: nothing to do and nothing to mark
         return StageRun(STAGE_EDGES, "", 0, 0, skipped=True, fingerprint=fp_nodes)
 
     llog = read_checkpoint_log(spark, base, STAGE_LINKED)
@@ -352,11 +344,8 @@ def _run_linked_stage(
       computed under the other setting).  A flag flip forces a full
       re-link.
 
-    The returned fingerprint is the same ``<keys-fp>:fuzzy=<f>`` string
-    the old snapshot stage committed, so stage-4 skip keys survive the
-    storage-format migration unchanged; legacy snapshot-format bases
-    have no per-file linked log, diff as all-changed, and migrate
-    themselves on first contact."""
+    The returned fingerprint is ``<keys-fp>:fuzzy=<f>``, the key the
+    stage-4 anchor records."""
     from sema_spark.plans.materialize import materialize
 
     key_cols = ["repo", "path", "content_sha"]
@@ -368,18 +357,10 @@ def _run_linked_stage(
     changed = keys.join(lkeys, key_cols, "left_anti").transform(materialize)
     gone = lkeys.join(keys, key_cols, "left_anti").transform(materialize)
     n_changed, n_gone = changed.count(), gone.count()
-    if n_changed == 0 and n_gone == 0 and (
-        params_ok
-        or (
-            lkeys.limit(1).count() == 0
-            and snapshot_commit(spark, base, STAGE_LINKED) is None
-        )
-    ):
+    if n_changed == 0 and n_gone == 0 and (params_ok or lkeys.limit(1).count() == 0):
         # params_ok guards against skip-serving rows computed under a
         # different fuzzy flag; an empty stage over an empty corpus has
-        # no rows to mis-serve — UNLESS a legacy snapshot lingers (the
-        # read fallback would serve it), in which case fall through so
-        # the params-row commit below retires the fallback
+        # no rows to mis-serve
         return StageRun(STAGE_LINKED, "", 0, 0, skipped=True, fingerprint=fp), "full"
 
     mode = "full"
@@ -438,26 +419,7 @@ def read_triples(spark: SparkSession, base: str) -> DataFrame:
 
 
 def read_linked(spark: SparkSession, base: str) -> DataFrame:
-    return _read_incremental_or_legacy(spark, base, STAGE_LINKED, LINKED_TRIPLES)
-
-
-def _read_incremental_or_legacy(spark: SparkSession, base: str, stage: str, schema) -> DataFrame:
-    """Read a log-structured stage, falling back to the legacy snapshot
-    form when the base predates the r6 storage migration: a
-    pre-migration base has only a ``__SNAPSHOT__`` commit in its log,
-    so the per-file read alone would return SILENTLY EMPTY results for
-    a graph that is in fact stored.  Running the pipeline once migrates
-    the stage and retires this path.
-
-    ANY new-format row — file rows OR a params marker — disables the
-    fallback: an empty corpus migrated over a legacy base commits only
-    a params row (there are no files to log), and falling back past it
-    would serve the stale pre-deletion snapshot forever."""
-    log = read_checkpoint_log(spark, base, stage)
-    has_new = log.filter(F.col("repo") != COMMIT_MARK).limit(1).count() > 0
-    if not has_new and snapshot_commit(spark, base, stage) is not None:
-        return read_snapshot(spark, base, stage, schema=schema)
-    return read_stage_output(spark, base, stage, schema=schema)
+    return read_stage_output(spark, base, STAGE_LINKED, schema=LINKED_TRIPLES)
 
 
 def read_nodes(spark: SparkSession, base: str) -> DataFrame:
@@ -465,7 +427,7 @@ def read_nodes(spark: SparkSession, base: str) -> DataFrame:
 
 
 def read_edges(spark: SparkSession, base: str) -> DataFrame:
-    return _read_incremental_or_legacy(spark, base, STAGE_EDGES, EDGES)
+    return read_stage_output(spark, base, STAGE_EDGES, schema=EDGES)
 
 
 def graph_stats(spark: SparkSession, base: str) -> DataFrame:

@@ -194,8 +194,7 @@ def _indexed_ids(spark: SparkSession, index_dir: str) -> DataFrame:
     the marker is set before the payload append and cleared only after
     the sidecar append, so a crash between the two leaves the marker
     and the NEXT append reconciles the sidecar from the payload table
-    (one recovery scan) before trusting it again.  Legacy indexes built
-    before the sidecar existed reconcile the same way."""
+    (one recovery scan) before trusting it again."""
     marker = f"{index_dir}/.append-inflight"
     sidecar = f"{index_dir}/ids"
     if os.path.exists(marker) or not os.path.exists(f"{sidecar}/_SUCCESS"):
@@ -469,7 +468,7 @@ def _chunk_rows(docs_with_sha: DataFrame, gen: int) -> DataFrame:
 def _file_state(spark: SparkSession, index_dir: str) -> DataFrame | None:
     """Latest filestate entry per (repo, path): ``(repo, path,
     content_sha, gen)`` with ``gen == _GEN_DELETED`` meaning the file
-    was removed.  None for a legacy (pre-filestate) index.  The log is
+    was removed.  None when the index has no log.  The log is
     FILE-level — orders of magnitude smaller than the chunk table — so
     both the append membership check and the query-side liveness join
     read it instead of scanning chunks (and the liveness join
@@ -479,8 +478,7 @@ def _file_state(spark: SparkSession, index_dir: str) -> DataFrame | None:
             f"{index_dir}/filestate.compact-tmp/_SUCCESS"
         ):
             # a compaction swap died mid-flight: the log EXISTS, just
-            # under its swap name.  Treating this as "legacy" would
-            # silently serve dead generations — fail loudly instead;
+            # under its swap name.  Report the swap, not a missing log;
             # any maintenance op (append/remove/compact) repairs it
             # via _recover_swap under the writer lock.
             raise RuntimeError(
@@ -525,15 +523,12 @@ def live_chunks(spark: SparkSession, index_dir: str) -> DataFrame:
     written LAST) and are GC'd by :func:`compact_semantic_index`."""
     chunks = spark.read.parquet(f"{index_dir}/chunks")
     state = _file_state(spark, index_dir)
-    if "_gen" not in chunks.columns:
-        return chunks  # legacy append-only index
     if state is None:
-        # generational chunks with no log at all (and no swap dir to
-        # recover from — _file_state raises on that): serving every
-        # generation would duplicate superseded files
+        # no log at all (and no swap dir to recover from — _file_state
+        # raises on that): serving every generation would duplicate
+        # superseded files
         raise RuntimeError(
-            f"{index_dir}/filestate missing but chunks carry _gen — "
-            "restore the log or rebuild the index"
+            f"{index_dir}/filestate missing — restore the log or rebuild the index"
         )
     alive = state.where(F.col("gen") != _GEN_DELETED).select(
         "repo", "path", F.col("gen").alias("_gen")
@@ -594,11 +589,7 @@ def semantic_index_append(docs: DataFrame, index_dir: str) -> int:
     log entry would make BOTH copies live (the r6 review's duplicate-
     serving scenario); with it, :func:`_next_gen` allocates past every
     generation physically present in the payload, so the orphans stay
-    dead forever.
-
-    Legacy (pre-filestate) indexes fall back to the r5 (repo, path)
-    anti-join: append-only, content changes NOT detected (rebuild to
-    upgrade)."""
+    dead forever."""
     from sema_spark.plans.materialize import materialize
 
     spark = docs.sparkSession
@@ -606,32 +597,6 @@ def semantic_index_append(docs: DataFrame, index_dir: str) -> int:
         _recover_swap(f"{index_dir}/chunks")
         _recover_swap(f"{index_dir}/filestate")
         state = _file_state(spark, index_dir)
-        if state is None and os.path.exists(f"{index_dir}/chunks/_SUCCESS"):
-            if "_gen" in spark.read.parquet(f"{index_dir}/chunks").columns:
-                # chunks carry generations but the log is gone and not
-                # recoverable from a swap dir: appending in legacy
-                # (gen-less) shape would write rows that can never
-                # become live once the log reappears
-                raise RuntimeError(
-                    f"{index_dir}/filestate missing but chunks carry _gen — "
-                    "restore the log or rebuild the index"
-                )
-            # legacy fallback (r5 semantics)
-            from sema_spark.functions.vector import l2_norm
-            from sema_spark.operators.chunker import chunk_and_embed
-
-            existing = spark.read.parquet(f"{index_dir}/chunks").select("repo", "path").distinct()
-            fresh = materialize(docs.join(existing, ["repo", "path"], "left_anti"))
-            n = fresh.count()
-            if n:
-                (
-                    chunk_and_embed(fresh)
-                    .withColumn("emb_norm", l2_norm(F.col("embedding")))
-                    .write.mode("append")
-                    .parquet(f"{index_dir}/chunks")
-                )
-            return n
-
         if state is None:
             raise ValueError(
                 f"no index at {index_dir} — build_semantic_index first (an empty "
@@ -685,7 +650,7 @@ def semantic_index_remove(spark: SparkSession, index_dir: str, paths: DataFrame)
         _recover_swap(f"{index_dir}/filestate")
         state = _file_state(spark, index_dir)
         if state is None:
-            raise ValueError("legacy index has no filestate log — rebuild to enable removal")
+            raise ValueError(f"no index at {index_dir} — build_semantic_index first")
         alive = state.where(F.col("gen") != _GEN_DELETED)
         doomed = materialize(
             paths.select("repo", "path").distinct().join(alive, ["repo", "path"], "left_semi")
@@ -712,10 +677,7 @@ def semantic_search_stored(spark: SparkSession, index_dir: str, query: str, k: i
     from sema_spark.plans.pipeline import semantic_search
 
     chunks = live_chunks(spark, index_dir)
-    # indexes written before the emb_norm column existed still answer
-    # correctly through the three-aggregate path
-    norm_col = "emb_norm" if "emb_norm" in chunks.columns else None
-    out = semantic_search(spark, chunks, query, k=k, norm_col=norm_col)
+    out = semantic_search(spark, chunks, query, k=k, norm_col="emb_norm")
     return out.drop("emb_norm", "content_sha", "_gen")
 
 
@@ -862,8 +824,7 @@ def _recover_swap(table_dir: str) -> None:
     Crash windows and their repair (names are deterministic, so any
     later process can finish the job — the old ``.old-<pid>`` naming
     made the r6 review's scenario PERMANENT: nothing could find the
-    orphaned copy, and a filestate gap silently downgraded the index to
-    legacy semantics, serving dead generations):
+    orphaned copy):
 
     * table present → any leftover ``.old`` / ``.compact-tmp`` is
       garbage from after-swap or before-swap crashes; delete them.
@@ -911,8 +872,7 @@ def compact_semantic_index(spark: SparkSession, index_dir: str) -> None:
         _compact_table(
             spark, f"{index_dir}/chunks", df=live_chunks(spark, index_dir)
         )
-        if state is not None:
-            live = state.where(F.col("gen") != _GEN_DELETED).withColumn(
-                "seq", F.abs("gen")
-            ).select("repo", "path", "content_sha", "gen", "seq")
-            _compact_table(spark, f"{index_dir}/filestate", df=live)
+        live = state.where(F.col("gen") != _GEN_DELETED).withColumn(
+            "seq", F.abs("gen")
+        ).select("repo", "path", "content_sha", "gen", "seq")
+        _compact_table(spark, f"{index_dir}/filestate", df=live)

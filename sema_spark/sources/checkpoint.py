@@ -333,8 +333,7 @@ def run_forced_incremental_stage(
 
 def latest_params(spark: SparkSession, base: str, stage: str) -> str | None:
     """The params string of the stage's most recent committed increment
-    (None when the stage has never committed one — including legacy
-    snapshot-format stages)."""
+    (None when the stage has never committed one)."""
     rows = (
         read_checkpoint_log(spark, base, stage)
         .filter(F.col("repo") == PARAMS_MARK)
@@ -411,8 +410,8 @@ def read_stage_output(
     :func:`current_checkpoint`).
 
     When ``schema`` is given the scan uses it EXPLICITLY (plus run_id):
-    a stage dir can mix file generations after a storage-format
-    migration (e.g. pre-r6 edges lack content_sha), and inferred-schema
+    a stage dir can mix file generations with different column sets
+    (e.g. snapshot-format edges without content_sha), and inferred-schema
     reads would nondeterministically adopt whichever footer Spark
     samples — with the declared schema, columns missing from old files
     read as null and the liveness join filters those rows out anyway.
@@ -500,15 +499,13 @@ def delete_files(
 
 
 # ---------------------------------------------------------------------------
-# Snapshot stages (derived tables).  Stages 2-4 derive from the FULL
-# stage-1 snapshot: entity linking of file A depends on symbols defined in
-# file B, so per-file incremental checkpointing would be semantically
-# wrong for them.  Instead each run writes a complete snapshot and commits
-# it with the *input fingerprint*; an unchanged fingerprint skips the run
-# entirely (the expensive content-scanning work is stage 1's, which IS
-# per-file incremental — derived tables are orders of magnitude smaller).
-
-
+# Snapshot stages (derived tables).  Only the pipeline's stage 3
+# (canonical nodes) is one: canonicalization is a global fixpoint, so one
+# changed file can merge or split components anywhere.  Each run writes
+# a complete snapshot and commits it with the *input fingerprint*; an
+# unchanged fingerprint skips the run entirely.  Stages 2 and 4 are 1:1
+# with the triples and are stored as per-file increments instead
+# (plans/pipeline.py).
 
 
 def input_fingerprint(keys: DataFrame) -> str:
@@ -528,17 +525,6 @@ def input_fingerprint(keys: DataFrame) -> str:
         .collect()[0]
     )
     return f"{row.n}:{row.s}"
-
-
-def snapshot_commit(spark: SparkSession, base: str, stage: str) -> tuple[str, str] | None:
-    """(run_id, committed fingerprint) of the latest snapshot commit for
-    ``stage``, or None if never committed.  The fingerprint is the full
-    skip key — ``input_fingerprint(keys)`` plus any ``params`` suffix —
-    letting callers decide whether a stored snapshot matches a given
-    input state (e.g. the pipeline's legacy-base read fallback checks
-    it before serving a pre-migration snapshot)."""
-    last = _latest_commit(spark, base, stage)
-    return None if last is None else (last.run_id, last.content_sha)
 
 
 def _latest_commit(spark: SparkSession, base: str, stage: str):
@@ -698,16 +684,13 @@ def compact(spark: SparkSession, base: str, stage: str) -> str:
         # legitimately-empty stage (zero-row runs write no files): nothing
         # to rewrite and no schema to infer — no-op
         return rid
-    # a stage with ANY new-format row — per-file rows OR a params
-    # marker — is incremental, even if a LEGACY snapshot commit mark
-    # lingers from before a storage-format migration: preferring the
-    # mark would rewrite the stage back to the stale snapshot and GC
-    # the live increments (r6 review).  The predicate is the SAME one
-    # _read_incremental_or_legacy serves reads with (r7 ADVICE fix —
-    # file_rows() excludes the params marker, so an emptied corpus
-    # migrated over a legacy base, whose whole new-format state IS one
-    # params row, was compacted back to the stale snapshot and its
-    # params row GC'd: deleted data served forever)
+    # a stage with ANY per-file or params row is incremental, even if a
+    # snapshot commit mark lingers from the snapshot storage format
+    # that stages 2 and 4 had before r6: preferring the mark would
+    # rewrite the stage back to the stale snapshot and GC the live
+    # increments.  file_rows() is not enough here: it excludes the
+    # params marker, and a stage whose whole per-file state is one
+    # params row must stay incremental too
     has_new_rows = (
         read_checkpoint_log(spark, base, stage)
         .filter(F.col("repo") != COMMIT_MARK)

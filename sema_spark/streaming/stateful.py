@@ -44,10 +44,7 @@ STATE_SCHEMA = (
 
 
 def _fold_sessions(user_id, batch: pd.DataFrame, carried, gap_seconds: int):
-    """The one microbatch session fold shared by BOTH stateful APIs
-    (applyInPandasWithState and transformWithStateInPandas) — parity
-    between the two operators is by construction, and the cross-API
-    equality test guards the plumbing, not a re-implementation.
+    """One microbatch of the session fold for one user.
 
     ``batch`` needs columns (ts_epoch, value); ``carried`` is the prior
     state tuple or None.  Returns (output_rows, new_state_tuple).
@@ -136,72 +133,4 @@ def sessionize_stream(
     )
     return prepared.groupBy("user_id").applyInPandasWithState(
         fn, OUTPUT_SCHEMA, STATE_SCHEMA, "update", timeout
-    )
-
-
-def sessionize_stream_tws(
-    events: DataFrame,
-    gap_seconds: int = 1800,
-    state_ttl_ms: int | None = None,
-) -> DataFrame:
-    """Session windows via ``transformWithStateInPandas`` — the Spark 4
-    successor to ``applyInPandasWithState`` (SPARK-46815, "Arbitrary
-    State API v2"): named state variables with per-state TTL instead of
-    one opaque tuple + group timeout.
-
-    Same semantics as :func:`sessionize_stream` by construction — both
-    call :func:`_fold_sessions` per microbatch; tests drain the same
-    multi-batch stream through both operators and assert equal final
-    sessions.  ``state_ttl_ms`` maps the old processing-time timeout onto
-    the new API's state TTL: an idle user's state silently expires (TTL
-    eviction cannot emit a final row — the one behavioral difference from
-    the timeout path, which emits the closed session; callers needing
-    that emission use timers, which availableNow drains don't fire).
-
-    At scale the RocksDB state store keeps one small tuple per active
-    user; changelog checkpointing bounds the per-batch upload to the
-    delta, so state size tracks active users, not history.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap = gap_seconds
-    ttl = state_ttl_ms
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._session = handle.getValueState("session", STATE_SCHEMA, ttl)
-
-        def handleInputRows(self, key, rows, timer_values):
-            (user_id,) = key
-            batch = pd.concat(list(rows), ignore_index=True)
-            carried = self._session.get() if self._session.exists() else None
-            out, new_state = _fold_sessions(user_id, batch, carried, gap)
-            self._session.update(new_state)
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "user_id", "session_idx", "session_start",
-                    "n_events", "session_value", "open",
-                ],
-            )
-
-        def close(self) -> None:
-            pass
-
-    prepared = events.select(
-        "user_id",
-        F.col("ts").cast("timestamp").cast("double").alias("ts_epoch"),
-        "value",
-    )
-    return prepared.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=SessionProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        # state TTL is only legal under ProcessingTime mode — a TTL with
-        # timeMode="None" fails handle.getValueState at first microbatch
-        timeMode="ProcessingTime" if ttl is not None else "None",
     )

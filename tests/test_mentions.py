@@ -1,11 +1,7 @@
 import hashlib
 
 from sema_spark.corpus import corpus_df, generate_corpus
-from sema_spark.operators.mentions import (
-    extract_triples,
-    extract_triples_arrow,
-    with_content_sha,
-)
+from sema_spark.operators.mentions import extract_triples, with_content_sha
 
 
 def _triple_set(df):
@@ -20,23 +16,6 @@ def test_sql_extraction_exact_pr(spark):
     extra = got - expected
     assert not missing, f"recall misses ({len(missing)}): {sorted(missing)[:5]}"
     assert not extra, f"precision misses ({len(extra)}): {sorted(extra)[:5]}"
-
-
-def test_arrow_variant_matches_sql(spark):
-    df = corpus_df(spark, "xs")
-    sql_rows = {
-        tuple(r)
-        for r in extract_triples(df).select(
-            "subj", "pred", "obj", "repo", "path", "line", "content_sha"
-        ).collect()
-    }
-    arrow_rows = {
-        tuple(r)
-        for r in extract_triples_arrow(df).select(
-            "subj", "pred", "obj", "repo", "path", "line", "content_sha"
-        ).collect()
-    }
-    assert sql_rows == arrow_rows
 
 
 def test_sha_invariant(spark):

@@ -12,7 +12,6 @@ from sema_spark.operators.multimodal import (
     encode_ppm,
     encode_wav_pcm16,
     image_feature,
-    sample_frames,
     synthetic_media,
     synthetic_real_media,
 )
@@ -99,22 +98,6 @@ def test_real_decode_matches_pattern_stats(spark):
         )
         assert out[i].kind == ("image" if i % 2 == 0 else "audio")
         assert out[i].feature == expect, f"media {i}"
-
-
-def test_sample_frames_fanout(spark):
-    media = synthetic_media(spark, 12)
-    frames = sample_frames(media, every_ms=1000).collect()
-    vids = media.filter("kind = 'video'").count()
-    assert vids > 0
-    # duration 3500ms → 3 frames each
-    assert len(frames) == vids * 3
-    by_media = {}
-    for r in frames:
-        by_media.setdefault(r.media_id, []).append(r)
-    for rows in by_media.values():
-        assert sorted(r.frame_idx for r in rows) == [0, 1, 2]
-        assert sorted(r.ts_ms for r in rows) == [0, 1000, 2000]
-        assert all(len(r.frame_bytes) == 32 for r in rows)
 
 
 def test_bmp_round_trip_and_edges():

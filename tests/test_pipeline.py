@@ -266,16 +266,19 @@ def test_fuzzy_flip_forces_full_relink_and_params_survive_compact(spark, tmp_pat
 
 
 def test_legacy_snapshot_base_reads_and_migrates(spark, tmp_path):
-    """A pre-r6 base stores linked/edges as SNAPSHOTS.  Reads must fall
-    back to the snapshot (not silently return empty), running the
-    pipeline must migrate the stage to per-file increments, and a
-    post-migration compact must keep the LIVE increments, not revert to
-    the stale legacy snapshot (the r6 review's data-loss scenario)."""
-    from sema_spark.operators.linking import link_triples
-    from sema_spark.operators.mentions import extract_triples, salted_repartition
-    from sema_spark.schemas import TRIPLES
+    """A pre-r6 base stores linked/edges as SNAPSHOTS.  There is no read
+    fallback: the first pipeline run diffs the empty per-file log as
+    all-changed and rebuilds both stages as per-file increments equal to
+    a from-scratch build.  A post-migration compact must keep the LIVE
+    increments, not revert to the stale legacy snapshot (data loss), and
+    must merge the mixed-schema edges dir."""
+    from sema_spark.operators.canonicalize import canonical_edges, canonicalize_nodes
+    from sema_spark.operators.linking import build_nodes, link_triples
+    from sema_spark.operators.mentions import extract_triples, salted_repartition, with_content_sha
+    from sema_spark.schemas import LINKED_TRIPLES, NODES, TRIPLES
     from sema_spark.sources.checkpoint import (
         compact,
+        read_snapshot,
         read_stage_output,
         run_incremental_stage,
         run_snapshot_stage,
@@ -283,9 +286,7 @@ def test_legacy_snapshot_base_reads_and_migrates(spark, tmp_path):
 
     src = corpus_df(spark, "xs").filter("repo = 'org0/proj0'")
     base = str(tmp_path / "kg")
-    # build a LEGACY-format stage 2 exactly as the pre-r6 code did
-    from sema_spark.operators.mentions import with_content_sha
-
+    # build LEGACY-format stages 2-4 exactly as the pre-r6 code did
     run_incremental_stage(
         spark, with_content_sha(src), "triples", base,
         lambda p: extract_triples(salted_repartition(p, None)),
@@ -296,42 +297,40 @@ def test_legacy_snapshot_base_reads_and_migrates(spark, tmp_path):
         spark, keys, "linked", base, lambda: link_triples(triples, fuzzy=True),
         params="fuzzy=True",
     )
-    legacy_rows = P.read_linked(spark, base)
-    n_legacy = legacy_rows.count()
-    assert n_legacy > 0  # snapshot fallback, not silently empty
-
-    # legacy stage 3 + 4: pre-r6 edges had NO content_sha column, so the
-    # migrated data dir will mix schemas — reads must stay deterministic
-    from sema_spark.operators.canonicalize import canonical_edges, canonicalize_nodes
-    from sema_spark.operators.linking import build_nodes
-    from sema_spark.schemas import LINKED_TRIPLES, NODES
-    from sema_spark.sources.checkpoint import read_snapshot
-
+    legacy_rows = read_snapshot(spark, base, "linked", schema=LINKED_TRIPLES)
     run_snapshot_stage(
         spark, keys, "nodes", base, lambda: canonicalize_nodes(build_nodes(triples)),
         partition_cols=["kind"],
     )
     legacy_nodes = read_snapshot(spark, base, "nodes", schema=NODES)
+    # pre-r6 edges had NO content_sha column, so the migrated data dir
+    # will mix schemas — reads must stay deterministic
     run_snapshot_stage(
         spark, keys, "edges", base,
         lambda: canonical_edges(legacy_rows, legacy_nodes).drop("content_sha"),
         partition_cols=["pred"], params="legacy",
     )
-    n_legacy_edges = P.read_edges(spark, base).count()
-    assert n_legacy_edges > 0  # snapshot fallback for edges too
 
-    # first pipeline contact migrates stages 2 and 4 (and rebuilds 3)
+    fresh = str(tmp_path / "fresh")
+    P.run_pipeline(spark, src, fresh, incremental_link=True)
+    want_linked = sorted(map(tuple, P.read_linked(spark, fresh).collect()))
+    want_edges = sorted(map(tuple, P.read_edges(spark, fresh).collect()))
+    assert want_linked and want_edges
+
+    def assert_from_scratch():
+        assert sorted(map(tuple, P.read_linked(spark, base).collect())) == want_linked
+        assert sorted(map(tuple, P.read_edges(spark, base).collect())) == want_edges
+
+    # first pipeline contact migrates stages 2 and 4
     r = P.run_pipeline(spark, src, base, incremental_link=True)
     assert not r.linked.skipped and not r.edges.skipped
-    assert P.read_linked(spark, base).count() == n_legacy
-    assert P.read_edges(spark, base).count() == n_legacy_edges
+    assert_from_scratch()
     # compact must keep the live increments (per-file branch wins even
     # though the legacy __SNAPSHOT__ mark lingers in the log), and the
     # mixed-schema edges dir must compact cleanly (mergeSchema)
     compact(spark, base, "linked")
     compact(spark, base, "edges")
-    assert P.read_linked(spark, base).count() == n_legacy
-    assert P.read_edges(spark, base).count() == n_legacy_edges
+    assert_from_scratch()
     assert not P.run_pipeline(spark, src, base, incremental_link=True).any_work
 
 
@@ -364,10 +363,9 @@ def test_deletion_wave_commits_tombstones_atomically_with_relinks(spark, tmp_pat
 
 
 def test_legacy_base_emptied_corpus_serves_empty_not_stale(spark, tmp_path):
-    """Legacy snapshot base whose corpus empties out: the run must NOT
-    silently skip, and reads must stop falling back to the stale
-    snapshot once the migration commits (even though an empty corpus
-    logs no file rows — the params row retires the fallback)."""
+    """Legacy snapshot base whose corpus empties out: reads serve the
+    empty per-file state, never the stale snapshot, and compaction does
+    not bring the snapshot back."""
     from sema_spark.operators.linking import link_triples
     from sema_spark.operators.mentions import extract_triples, salted_repartition, with_content_sha
     from sema_spark.schemas import REPOS, TRIPLES
@@ -390,21 +388,17 @@ def test_legacy_base_emptied_corpus_serves_empty_not_stale(spark, tmp_path):
         spark, keys, "linked", base, lambda: link_triples(triples, fuzzy=True),
         params="fuzzy=True",
     )
-    assert P.read_linked(spark, base).count() > 0  # legacy fallback serves it
 
     # empty the corpus: tombstone every file, then run on an empty source
     delete_files(spark, base, "triples", src.select("repo", "path").distinct())
     empty = spark.createDataFrame([], REPOS)
-    r = P.run_pipeline(spark, empty, base, incremental_link=True)
-    assert not r.linked.skipped  # must migrate, not skip past the legacy snapshot
+    P.run_pipeline(spark, empty, base, incremental_link=True)
     assert P.read_linked(spark, base).count() == 0
     assert P.read_edges(spark, base).count() == 0
     # and the state is now stable
     assert not P.run_pipeline(spark, empty, base, incremental_link=True).any_work
-    # r7 ADVICE fix: compaction must honor the params-only migration —
-    # file_rows() excludes the params marker, so the old branch
-    # predicate rewrote the stale pre-deletion snapshot as live and
-    # GC'd the params row (deleted data served forever after compact)
+    # compaction rewrites the legacy snapshot as a snapshot; the per-file
+    # read still ignores it
     from sema_spark.sources.checkpoint import compact
 
     compact(spark, base, "linked")

@@ -1,5 +1,3 @@
-import pytest
-
 from sema_spark.corpus import corpus_df, write_corpus
 from sema_spark.operators.mentions import extract_triples
 from sema_spark.streaming.ingest import run_triples_stream, windowed_event_counts
@@ -168,96 +166,6 @@ def test_stream_to_checkpoint_log_exactly_once(spark, tmp_path):
     q2 = run_triples_stream_to_log(spark, src, base, str(tmp_path / "sck2"))
     q2.awaitTermination(300)
     assert ck.read_stage_output(spark, base, "triples").count() == n1
-
-
-def test_tws_sessionization_matches_v1_and_batch(spark, tmp_path):
-    """transformWithStateInPandas sessionization == applyInPandasWithState
-    == batch lag+cumsum, drained over two microbatches (same fixture as
-    test_stateful_sessionization_matches_batch).
-
-    SKIPS when google.protobuf is unavailable: the TWS state-server
-    protocol is protobuf-based (transform_with_state_driver_worker
-    crashes with ImportError before init() runs), and this sandbox has
-    no protobuf and no pip.  The operator itself shares _fold_sessions
-    with the applyInPandasWithState path, which IS exercised — only the
-    new API's plumbing needs this test.
-    """
-    pytest.importorskip("google.protobuf", reason="TWS state protocol needs protobuf")
-    from datetime import datetime, timezone
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from sema_spark.streaming.stateful import sessionize_stream, sessionize_stream_tws
-
-    t0 = 1_700_000_000
-    rows = [
-        [(1, t0, 10.0), (1, t0 + 600, 5.0), (2, t0, 1.0)],
-        [(1, t0 + 1200, 2.0), (1, t0 + 7200, 7.0), (2, t0 + 4000, 3.0)],
-    ]
-    src = str(tmp_path / "events")
-    schema = "user_id long, ts timestamp, value double"
-    for batch in rows:
-        spark.createDataFrame(
-            [(u, datetime.fromtimestamp(e, tz=timezone.utc).replace(tzinfo=None), v)
-             for u, e, v in batch], schema
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    # transformWithState requires the RocksDB state store provider
-    prior = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        finals = {}
-        for name, op in [("tws", sessionize_stream_tws), ("v1", sessionize_stream)]:
-            stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-            q = (
-                op(stream, gap_seconds=1800)
-                .writeStream.format("memory")
-                .queryName(f"sess_{name}")
-                .outputMode("update")
-                .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(300)
-            updates = spark.sql(f"select * from sess_{name}").collect()
-            assert len(updates) >= 2
-            final = {}
-            for r in updates:
-                key = (r.user_id, r.session_idx)
-                if key not in final or r.n_events > final[key][0]:
-                    final[key] = (r.n_events, round(r.session_value, 6))
-            finals[name] = final
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prior)
-
-    assert finals["tws"] == finals["v1"]
-    # and both equal the batch computation
-    both = spark.createDataFrame(
-        [(u, datetime.fromtimestamp(e, tz=timezone.utc).replace(tzinfo=None), v)
-         for batch in rows for u, e, v in batch], schema
-    )
-    w = Window.partitionBy("user_id").orderBy("ts")
-    epoch = F.col("ts").cast("double")
-    gap = epoch - F.lag(epoch).over(w)
-    expect = {
-        (r.user_id, r.session_idx): (r.n_events, round(r.session_value, 6))
-        for r in (
-            both.withColumn("new_sess", F.when(gap.isNull() | (gap > 1800), 1).otherwise(0))
-            .withColumn("session_idx", F.sum("new_sess").over(w) - 1)
-            .groupBy("user_id", "session_idx")
-            .agg(F.count("*").alias("n_events"), F.sum("value").alias("session_value"))
-            .collect()
-        )
-    }
-    assert finals["tws"] == expect
-    assert finals["tws"][(1, 0)][0] == 3  # cross-batch continuity through TWS state
 
 
 def test_streaming_semantic_index_maintenance(spark, tmp_path):

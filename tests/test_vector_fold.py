@@ -37,9 +37,17 @@ def vec_df(spark):
     rows.append((len(rows), [0.0] * dim, _vec(rng, dim)))  # zero-norm a
     rows.append((len(rows), _vec(rng, dim), [0.0] * dim))  # zero-norm b
     rows.append((len(rows), None, _vec(rng, dim)))  # null a
-    df = spark.createDataFrame(
-        rows, "id long, a array<float>, b array<float>"
-    )
+    schema = "id long, a array<float>, b array<float>"
+    df = spark.createDataFrame(rows, schema)
+    # one partition whose every a is null and one whose every b is null:
+    # their Arrow batches have no row to take the dim from
+    for side in ("a", "b"):
+        n = len(rows)
+        rows += [
+            (n + i, None, _vec(rng, dim)) if side == "a" else (n + i, _vec(rng, dim), None)
+            for i in range(4)
+        ]
+        df = df.union(spark.createDataFrame(rows[n:], schema).coalesce(1))
     return df.localCheckpoint(eager=True)
 
 
