@@ -30,6 +30,8 @@ import sys as _sys
 
 _sys.path.insert(0, _os.path.dirname(_os.path.abspath(__file__)))
 
+from sema_spark.plans.materialize import spread  # noqa: E402  (needs the path above)
+
 _PKG_SHIPPED: set[int] = set()
 
 
@@ -73,20 +75,6 @@ def _ship_package(spark: SparkSession) -> None:
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """r7 scan-parallelism fix (guide §2.5 "input skew: … repartition
-    immediately after the read"): the testdata parquets are single-row-
-    group files, so the scan is ONE task no matter the split config, and
-    every CPU-heavy per-row phase (regex banks, tokenize, sha, encode)
-    ran serially on one core.  One round-robin exchange of the slim
-    input (scale-adaptive: 2× the session's core count; at real scale a
-    well-split scan makes this a cheap no-op-ish reshuffle) buys the map
-    phase its parallelism.  Value-neutral: results are graded as
-    order-insensitive multisets and every ordered query sorts
-    explicitly."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism * 2)
 
 
 def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -346,7 +334,7 @@ def q_cosine_dup_pairs(spark, sf):
 def q_term_mentions(spark, sf):
     """U3 regex machinery: term mention extraction + counts."""
     return (
-        _spread(_docs(spark, sf).select("doc_id", "text"))
+        spread(_docs(spark, sf).select("doc_id", "text"))
         .select(
             "doc_id",
             F.explode(
@@ -361,7 +349,7 @@ def q_term_mentions(spark, sf):
 def q_lang_id(spark, sf):
     from sema_spark.functions.text import language_id
 
-    return _spread(_docs(spark, sf).select("doc_id", "text")).select(
+    return spread(_docs(spark, sf).select("doc_id", "text")).select(
         "doc_id", language_id("text").alias("lang_guess")
     )
 
@@ -369,7 +357,7 @@ def q_lang_id(spark, sf):
 def q_quality_score(spark, sf):
     from sema_spark.functions.text import quality_score, token_count_bpe_ish, word_count
 
-    return _spread(_docs(spark, sf).select("doc_id", "text")).select(
+    return spread(_docs(spark, sf).select("doc_id", "text")).select(
         "doc_id",
         word_count("text").alias("n_words"),
         token_count_bpe_ish("text").alias("n_tokens"),
@@ -380,7 +368,7 @@ def q_quality_score(spark, sf):
 def q_fingerprint(spark, sf):
     from sema_spark.functions.text import content_fingerprint
 
-    return _spread(_docs(spark, sf).select("doc_id", "text")).select(
+    return spread(_docs(spark, sf).select("doc_id", "text")).select(
         "doc_id", content_fingerprint("text").alias("fingerprint")
     )
 
@@ -397,7 +385,7 @@ def q_dedup_exact(spark, sf):
 def q_s4_posting_list(spark, sf):
     """S4: inverted-index build (term, doc_id, tf)."""
     return (
-        _spread(_docs(spark, sf).select("doc_id", "text"))
+        spread(_docs(spark, sf).select("doc_id", "text"))
         .select("doc_id", F.explode(F.split(F.lower("text"), r"[^a-z0-9]+")).alias("term"))
         .filter(F.col("term") != "")
         .groupBy("term", "doc_id")
@@ -523,7 +511,7 @@ def q_events_windowed_agg(spark, sf):
     # The FINAL column is cast to double (one exact, correctly-rounded
     # conversion) because a DecimalType output can't hash-match the
     # driver's DuckDB pandas path (round-2 failure).
-    # note (r7): a _spread here was A/B'd and REJECTED — the exchange of
+    # note (r7): a spread here was A/B'd and REJECTED — the exchange of
     # the full 1M-row event stream costs what the parallel partial agg
     # saves (map-side partial aggregation already bounds the shuffle)
     return (
@@ -714,7 +702,7 @@ def q_u1_encoder(spark, sf):
     from sema_spark.functions.vector import l2_norm
 
     return (
-        _spread(_docs(spark, sf).select("doc_id", "text"))
+        spread(_docs(spark, sf).select("doc_id", "text"))
         .select("doc_id", encode_text(F.col("text")).alias("embedding"))
         .select(
             "doc_id",
@@ -1312,7 +1300,7 @@ def q_curation_pipeline(spark, sf):
     from sema_spark.functions.text import content_fingerprint, language_id, quality_score
     from pyspark.sql import Window
 
-    docs = _spread(_docs(spark, sf).select("doc_id", "text")).select(
+    docs = spread(_docs(spark, sf).select("doc_id", "text")).select(
         "doc_id", "text", language_id("text").alias("lang_guess"), quality_score("text").alias("quality")
     )
     filtered = docs.filter((F.col("lang_guess") == "en") & (F.col("quality") >= 0.3))
@@ -1583,7 +1571,7 @@ def q_redact_pii(spark, sf):
     pattern-ordering logic are exercised end-to-end on real data widths."""
     from sema_spark.operators.curation import redact_pii
 
-    aug = _spread(_docs(spark, sf).select("doc_id", "text")).select(
+    aug = spread(_docs(spark, sf).select("doc_id", "text")).select(
         "doc_id",
         F.concat(
             F.col("text"),
@@ -1671,13 +1659,11 @@ def q_triangle_count(spark, sf):
     two-join algorithm, each (a<b<c) triangle emitted exactly once."""
     from sema_spark.operators.graph import triangles
 
-    from sema_spark.operators.curation import _spread
-
     w = F.split(F.trim(F.col("text")), r"\s+")
     pairs = (
-        # one spread heuristic for every interpreted-HOF phase — see
-        # curation._spread (no-op when the scan is already split)
-        _spread(_docs(spark, sf))
+        # one spread heuristic for every interpreted-HOF phase (see
+        # plans.materialize.spread)
+        spread(_docs(spark, sf))
         .select(
             F.explode(
                 F.transform(

@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from sema_spark.plans.materialize import spread
+
 CHUNK_SIZE = 1000
 OVERLAP_SIZE = 100
 MIN_CHUNK_SIZE = 50
@@ -130,17 +132,10 @@ def chunk_files(df: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
                         rows[c].append(pdf[c].iloc[i])
             yield pd.DataFrame(rows)
 
-    # r7 (guide §2.5 "input skew — repartition immediately after the
-    # read"): a single-row-group parquet (or any under-split source)
-    # arrives as ONE partition and serializes the Python chunk walk AND
-    # the downstream encoder; a round-robin spread of the slim
-    # projection guarantees the per-file loop its parallelism at one
-    # narrow exchange.  Scale-adaptive (2× the session's core count)
-    # and value-neutral: chunk rows are a pure per-file function and
-    # every consumer is order-insensitive or re-sorts.
-    slim = df.select("repo", "path", "content", *carry)
-    slim = slim.repartition(df.sparkSession.sparkContext.defaultParallelism * 2)
-    return slim.mapInPandas(run, schema=schema)
+    # r7: spread the slim projection — the Python chunk walk AND the
+    # downstream encoder otherwise run on the scan's single partition
+    # (chunk rows are a pure per-file function)
+    return spread(df.select("repo", "path", "content", *carry)).mapInPandas(run, schema=schema)
 
 
 def chunk_and_embed(df: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sema_spark.plans.materialize import spread
+
 __all__ = [
     "decontaminate",
     "dedup_passages",
@@ -46,24 +48,6 @@ __all__ = [
     "weighted_interleave",
     "curation_chain",
 ]
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition before interpreted-HOF phases (``F.transform``
-    lambdas are not codegen'd): a parquet file below row-group size
-    arrives as ONE split, and AQE's 64MB coalescing target serializes
-    CPU-bound post-shuffle stages the same way.
-
-    Unconditional explicit-numPartitions repartition: AQE does not
-    coalesce a user-specified repartition, so the interpreted phase is
-    guaranteed its parallelism whether the input is an under-split
-    scan or a post-join exchange.  (A partition-count probe was tried
-    and rejected: the pre-runtime count is AQE-blind — it reports the
-    static shuffle partitions exactly where AQE then coalesces them.)
-    Cost: one round-robin exchange of the slim (id, text) projection,
-    counted in each operator's docstring."""
-    sc = df.sparkSession.sparkContext
-    return df.repartition(sc.defaultParallelism * 2)
 
 
 def _norm(col: Column) -> Column:
@@ -131,7 +115,7 @@ def decontaminate(
       slim shuffles remain: the distinct over contaminated ids (combiner-
       reduced, bounded by corpus rows) and the id-only flag join back to
       the corpus (single bigint column; AQE broadcasts it when the
-      contaminated set is small, which is the common case).  _spread
+      contaminated set is small, which is the common case).  spread
       adds one AQE-proof round-robin exchange of the slim (id, text)
       projection before the interpreted gram explode.
     * Gram strings (not hashes) join so the result is collision-exact; the
@@ -141,7 +125,7 @@ def decontaminate(
         benchmark.select(F.explode(_word_ngrams(F.col(text_col), n)).alias("gram"))
         .distinct()
     )
-    doc_grams = _spread(docs.select(id_col, text_col)).select(
+    doc_grams = spread(docs.select(id_col, text_col)).select(
         F.col(id_col), F.explode(_word_ngrams(F.col(text_col), n)).alias("gram")
     )
     contaminated = (
@@ -175,7 +159,7 @@ def dedup_passages(
     rank partitioned by a **128-bit sha256 prefix** of the passage:
     collision-safe at 10^12 passages where a 64-bit hash is not,
     ~3·10^4 expected collisions at that count) and document reassembly
-    keyed on id — plus _spread's AQE-proof round-robin exchange before
+    keyed on id — plus spread's AQE-proof round-robin exchange before
     the interpreted passage explode.  The passage subtree is evaluated
     ONCE: the window replaces the min-struct + semi-join formulation
     (which planned the explode three times and re-shuffled the full
@@ -202,7 +186,7 @@ def dedup_passages(
     # bijective with the hex form, so winner selection groups
     # identically, at half the shuffled key bytes (A/B at sf1.0: ~20%
     # off the winner shuffle)
-    passages = _spread(docs.select(id_col, text_col)).select(
+    passages = spread(docs.select(id_col, text_col)).select(
         F.col(id_col).alias("_id"),
         F.posexplode(passage_arr).alias("_pos", "_passage"),
     ).withColumn("_h", F.unhex(F.substring(F.sha2(F.col("_passage"), 256), 1, 32)))
@@ -279,7 +263,7 @@ def duplicated_spans(
 
     normed = _norm(F.col(text_col))
     occ = materialize(
-        _spread(docs.select(id_col, text_col))
+        spread(docs.select(id_col, text_col))
         .select(
             F.col(id_col).alias("_id"),
             F.posexplode(_word_ngrams_of_norm(normed, w)).alias("_pos", "_gram"),
@@ -372,10 +356,10 @@ def remove_spans(
         ),
     )
     return (
-        # _spread (r7): the span map broadcasts, so without it the
+        # spread (r7): the span map broadcasts, so without it the
         # interpreted per-word cut HOF ran on the (single-split) scan's
         # partitioning — one core for the whole corpus
-        _spread(docs.where(F.col(text_col).isNotNull()))
+        spread(docs.where(F.col(text_col).isNotNull()))
         .join(sp, id_col, "left")
         .select(
             id_col,
@@ -419,7 +403,7 @@ def repetition_signals(
     functions, no Python.
     """
     normed = _norm(F.col(text_col))
-    base = _spread(docs.select(id_col, text_col)).select(
+    base = spread(docs.select(id_col, text_col)).select(
         F.col(id_col).alias("_id"), normed.alias("_nt")
     )
     # words = split of the normalized text ([''] for empty text — the
@@ -571,10 +555,10 @@ def pack_sequences(
 
     words = _norm_words(F.col(text_col))
     n_tokens = F.when(_norm(F.col(text_col)) == "", F.lit(0)).otherwise(F.size(words))
-    # _spread (r7): the token-count map phase (normalize + split per
+    # spread (r7): the token-count map phase (normalize + split per
     # doc) otherwise runs on the scan's partitioning — one task for a
     # single-row-group parquet; the fold itself stays n_shards-wide
-    base = _spread(docs).select(
+    base = spread(docs).select(
         F.col(id_col),
         (sha_bucket(F.col(id_col)) % n_shards).alias("shard"),
         n_tokens.cast("long").alias("n_tokens"),

@@ -42,27 +42,18 @@ from sema_spark.functions.minhash import (
     with_minhash,
 )
 from sema_spark.functions.text import content_fingerprint
-from sema_spark.plans.materialize import materialize
+from sema_spark.plans.materialize import materialize, spread
 from sema_spark.functions.vector import cosine, cosine_arrow
 from sema_spark.operators.canonicalize import connected_components
-
-
-def _spread(df: DataFrame, *cols: str) -> DataFrame:
-    """Repartition small-file inputs before CPU-heavy sketch phases:
-    higher-order-function pipelines (minhash/simhash) are interpreted,
-    not codegen'd, and a tiny parquet arrives as ONE partition — measured
-    10s single-core for 5k docs that parallelizes to sub-second."""
-    sc = df.sparkSession.sparkContext
-    return df.repartition(sc.defaultParallelism * 2, *cols)
 
 
 # ---------------------------------------------------------------------- exact
 def exact_dedup(df: DataFrame, id_col: str = "id", text_col: str = "text") -> DataFrame:
     """Keep one row (min id) per normalized-content fingerprint; adds
     group_size.  Single hash-keyed shuffle, no content comparison.
-    _spread (r7): the normalize+sha map phase otherwise inherits the
+    spread (r7): the normalize+sha map phase otherwise inherits the
     scan's partitioning — one task for a single-row-group parquet."""
-    fp = _spread(df, id_col).withColumn("_fp", content_fingerprint(text_col))
+    fp = spread(df, id_col).withColumn("_fp", content_fingerprint(text_col))
     w = Window.partitionBy("_fp")
     return (
         fp.withColumn("group_size", F.count("*").over(w))
@@ -111,7 +102,7 @@ def _lsh_raw_band_pairs(
     # pipeline), then band/join on slim (id, band, bh) rows only — the
     # 64-long signature array never enters the self-join shuffle
     mh = with_minhash(
-        _spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t")), "id"),
+        spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t")), "id"),
         text_col="t",
         shingle_words=shingle_words,
         bands=choose_bands(threshold),
@@ -305,7 +296,7 @@ def minhash_dup_edges(
     :func:`minhash_candidate_pairs`, bounded by its ``max_bucket``
     cap)."""
     mh = with_minhash(
-        _spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t")), "id"),
+        spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t")), "id"),
         text_col="t",
         bands=choose_bands(threshold),
     ).select("id", "mh_sig", "mh_bands").transform(materialize)
@@ -462,7 +453,7 @@ def simhash_pairs(
     Hamming ≤ 3 over 60 bits must agree exactly on ≥ 1 of 4 bands), then
     exact Hamming filter.  Both signature paths are value-identical."""
     sig = simhash_arrow if use_arrow else simhash
-    sh = _spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t")), "id").select(
+    sh = spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t")), "id").select(
         "id", sig(F.col("t")).alias("sh")
     )
     bands = sh.select(
@@ -504,7 +495,7 @@ def simhash_dup_edges(
     members to the bucket-min-id hub, keep links with Hamming ≤ max."""
     sig = simhash_arrow if use_arrow else simhash
     sh = (
-        _spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t")), "id")
+        spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t")), "id")
         .select("id", sig(F.col("t")).alias("sh"))
         .transform(materialize)
     )
@@ -619,10 +610,10 @@ def ngram_jaccard_pairs(
     tests must pick their path via ``max_universe``."""
     # ONE shingle scan feeds everything: the universe probe, and either
     # the bitmap encoding or the fallback's hashed arrays + sizes.
-    # _spread (r7): the shingle regex otherwise runs on the scan's
+    # spread (r7): the shingle regex otherwise runs on the scan's
     # partitioning — one task for a single-row-group parquet
     gsets = materialize(
-        _spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t")), "id")
+        spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t")), "id")
         .select("id", char_shingles(F.col("t"), n).alias("gs"))
     )
     ex = gsets.select("id", F.explode("gs").alias("gram"))
@@ -839,7 +830,7 @@ def embedding_dup_pairs(
     scale the dedup-then-join trade wins again)."""
     sk = hyperplane_sketch(dim, num_bits)
     base = (
-        _spread(df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")), "id")
+        spread(df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")), "id")
         .withColumn("sk", sk(F.col("v")))
         .transform(materialize)
     )

@@ -191,8 +191,9 @@ def changed_alias_blocks(
     between the old and new versions of the CHANGED files only — alias
     rows are file-local (entity ids embed their (repo, path)), so
     unchanged files contribute identical rows to both sides and never
-    need scanning.  Shared by link_triples_incremental and the
-    pipeline's stage-2 maintenance: a resolution's full dependency
+    need scanning.  The pipeline's stage-2 delta maintenance
+    (plans/pipeline._run_linked_stage) re-links the changed files plus
+    every file with a link triple in one of these blocks: a resolution's full dependency
     footprint (exact key, tier-1 normalized key, tier-2 block) lies
     inside its obj's own block, so an unchanged block ⇒ an unchanged
     resolution."""
@@ -207,109 +208,6 @@ def changed_alias_blocks(
         .distinct()
         .transform(materialize)
     )
-
-
-def link_triples_incremental(
-    triples_new: DataFrame,
-    prev_triples: DataFrame,
-    prev_linked: DataFrame,
-    broadcast: bool | None = None,
-    fuzzy: bool = True,
-    cosine_threshold: float = COSINE_THRESHOLD,
-    new_keys: DataFrame | None = None,
-    prev_keys: DataFrame | None = None,
-) -> DataFrame:
-    """Delta-maintained stage 2: row-for-row equal to
-    ``link_triples(triples_new)`` while re-linking only what can have
-    changed — the incremental-view-maintenance form of the alias join.
-
-    A full snapshot re-link costs ~|all triples| per run even when one
-    file changed (measured at the 50k-file bench corpus: 31 s of the
-    80 s incremental pipeline re-run — the dominant snapshot cost).  At
-    100 TB that is the difference between "incremental" and "rescan the
-    derived world every run".  This form recomputes links for exactly:
-
-    * triples of NEW or CHANGED files (their links never existed), and
-    * unchanged link-pred triples whose (repo, 2-char normalized
-      prefix) ALIAS BLOCK gained or lost any candidate row — the
-      complete dependency footprint of a resolution: the exact-key
-      candidates share the obj's own normalized prefix, tier-1 shares
-      its normalized key, and tier-2 pairs only within the block (the
-      contract _fuzzy_link documents); kind or entity-id changes in the
-      block surface as row-level set deltas, covering tie-break flips.
-
-    Everything else keeps its previous linked row verbatim.  Deleted
-    files drop out (their keys are absent from ``triples_new``) and
-    their vanished aliases flag the affected blocks.  Equality with the
-    from-scratch operator is property-tested over add/change/delete
-    mutations (tests/test_linking.py) and the wired pipeline re-grades
-    against the from-scratch oracle via ``kg_incremental_rebuild``.
-
-    Caller contract: ``prev_linked`` must be the output of
-    ``link_triples`` (same ``fuzzy``/threshold/broadcast parameters)
-    over exactly ``prev_triples`` — violating it silently keeps stale
-    rows, so verify provenance before calling (the pipeline does NOT
-    call this row-level form: its stage-2 maintenance applies the same
-    dependency analysis at FILE granularity against the log-structured
-    store, see plans/pipeline._run_linked_stage; this operator is the
-    standalone two-DataFrames-in / one-DataFrame-out version).
-    ``new_keys``/``prev_keys``: the two states' (repo, path,
-    content_sha) file sets, if the caller already has them cheaper than
-    a triple scan (e.g. from a checkpoint log — one row per file).
-
-    Cost shape (first cut of this operator measured SLOWER than the
-    full re-link at the 50k-file corpus — full-dict subtracts and a
-    5.7M-row materialize ate the join savings; all three fixed):
-
-    * the alias delta is computed from CHANGED FILES ONLY — an alias
-      row's entity_id embeds its (repo, path), so a file's alias
-      contributions are file-local and the old-side dict needs only
-      ``prev_triples ⋉ changed-or-deleted keys``, never the full
-      corpus;
-    * ``kept`` is NOT materialized: its two consumers re-scan the
-      stored snapshot (two cheap columnar scans beat checkpointing the
-      full-width table);
-    * file keys come from the caller when available (see above)."""
-    file_cols = ["repo", "path", "content_sha"]
-
-    def file_keys(t: DataFrame) -> DataFrame:
-        return t.select(*file_cols).distinct()
-
-    new_keys = new_keys if new_keys is not None else file_keys(triples_new)
-    prev_keys = prev_keys if prev_keys is not None else file_keys(prev_triples)
-    # changed = new or content-changed; gone = deleted or content-changed
-    changed_files = new_keys.join(prev_keys, file_cols, "left_anti").transform(materialize)
-    gone_files = prev_keys.join(new_keys, file_cols, "left_anti")
-
-    new_changed_t = triples_new.join(changed_files, file_cols, "left_semi").transform(materialize)
-    old_changed_t = prev_triples.join(gone_files, file_cols, "left_semi")
-    # tiny: one row per (repo, prefix) block with any membership change
-    changed_blocks = changed_alias_blocks(new_changed_t, old_changed_t)
-
-    # prev rows of files still present at the same content; changed
-    # files carry a NEW sha in triples_new, so their old rows drop here
-    kept = prev_linked.join(new_keys, file_cols, "left_semi").withColumn(
-        "_p", _block_expr(F.col("obj"))
-    )
-    is_link = F.col("pred").isin(*LINK_PREDS)
-    affected = kept.filter(is_link).join(changed_blocks, ["repo", "_p"], "left_semi")
-    unaffected = kept.filter(~is_link).unionByName(
-        kept.filter(is_link).join(changed_blocks, ["repo", "_p"], "left_anti")
-    )
-
-    triple_cols = ["subj", "pred", "obj", "repo", "path", "commit", "line", "content_sha"]
-    to_link = new_changed_t.select(*triple_cols).unionByName(affected.select(*triple_cols))
-    relinked = link_triples(
-        to_link,
-        nodes=build_nodes(triples_new),
-        broadcast=broadcast,
-        fuzzy=fuzzy,
-        cosine_threshold=cosine_threshold,
-    )
-    # the semi-join hoisted its USING columns to the front; restore the
-    # caller's column order (positional consumers — exceptAll, parquet
-    # appends to an existing snapshot — depend on it)
-    return unaffected.drop("_p").unionByName(relinked).select(*prev_linked.columns)
 
 
 def _fuzzy_link(unresolved: DataFrame, alias: DataFrame, threshold: float) -> DataFrame:
@@ -331,8 +229,8 @@ def _fuzzy_link(unresolved: DataFrame, alias: DataFrame, threshold: float) -> Da
     what other queries exist.  Without the block equality, a band-hash
     collision could pair a query with a candidate from another block
     that is only present because some OTHER query pulled it in — making
-    results query-set-dependent, which would break
-    :func:`link_triples_incremental`'s affected-set reasoning (and is
+    results query-set-dependent, which would break the stage-2 delta's
+    affected-set reasoning (:func:`changed_alias_blocks`; and is
     surprising behavior on its own).  Cross-block near-duplicates whose
     first two normalized chars differ fall back to ``ext:`` — the same
     recall trade every prefix-blocked LSH makes.
@@ -342,9 +240,9 @@ def _fuzzy_link(unresolved: DataFrame, alias: DataFrame, threshold: float) -> Da
     with score ≥ threshold (tier-1 hits score 1.0).
     """
     # _norm_expr / the 2-char prefix are SHARED with
-    # link_triples_incremental's changed-block detection: the affected-
-    # set reasoning is only sound if both sides compute the identical
-    # block key
+    # changed_alias_blocks (via _block_expr): the stage-2 delta's
+    # affected-set reasoning is only sound if both sides compute the
+    # identical block key
     norm = _norm_expr
 
     q0 = (

@@ -58,6 +58,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sema_spark.plans.materialize import materialize_lazy, spread
+
 _TOKEN = re.compile(r'([+-]?)"([^"]*)"(?:~(\d+))?|(\S+)')
 _WORD = re.compile(r"[a-z0-9]+")
 
@@ -324,27 +326,31 @@ def bm25_search(
     # per-doc frame" note, now done without a construction-time job —
     # tests/test_plans.py forbids driver actions at build time).
     scoped_fields = {f for f, _ in pq.scoped} | {f for f, _ in pq.scoped_not}
-    scoped_cols = sorted((scoped_fields & set(docs.columns)) - {id_col, text_col})
     keep_text = text_col in scoped_fields  # a text-scoped filter needs the raw column
-    slim = docs.select(
-        F.col(id_col).alias("doc_id"),
-        *[F.col(c) for c in scoped_cols],
-        F.col(text_col).alias("_text"),
-    ).repartition(docs.sparkSession.sparkContext.defaultParallelism * 2)
+    # every projected column gets an INTERNAL name, so a scoped user
+    # column called doc_id, _text or _toks cannot collide with the
+    # projection's own columns; _field_ref resolves a field to its alias
+    scoped = {
+        c: f"_s{i}"
+        for i, c in enumerate(sorted((scoped_fields & set(docs.columns)) - {id_col, text_col}))
+    }
+    slim = spread(
+        docs.select(
+            F.col(id_col).alias("doc_id"),
+            *[F.col(c).alias(a) for c, a in scoped.items()],
+            F.col(text_col).alias("_text"),
+        )
+    )
     tokenized = slim.select(
         "doc_id",
-        *[F.col(c) for c in scoped_cols],
+        *scoped.values(),
         *(["_text"] if keep_text else []),
         _tokens("_text").alias("_toks"),
     )
+    internal = {**scoped, id_col: "doc_id", text_col: "_text"}
 
     def _field_ref(field: str):
-        # scoped fields reference the RENAMED projection columns
-        if field == id_col:
-            return F.col("doc_id")
-        if field == text_col:
-            return F.col("_text")
-        return F.col(field)
+        return F.col(internal[field])
 
     toks = F.col("_toks")
     keep = F.lit(True)
@@ -383,8 +389,6 @@ def bm25_search(
     # no posting shuffle, no per-(doc,term) rows ever exist) — lazily
     # cut so the stats branch and the scoring branch share ONE
     # evaluation of the tokenize + tf work instead of two full scans
-    from sema_spark.plans.materialize import materialize_lazy
-
     tf = lambda i: F.col(f"_tf_{i}")
     per_doc = materialize_lazy(
         tokenized.select(

@@ -110,3 +110,20 @@ def materialize_lazy(df: DataFrame) -> DataFrame:
             )
         return df.checkpoint(eager=False)
     return df.localCheckpoint(eager=False)
+
+
+def spread(df: DataFrame, *cols: str) -> DataFrame:
+    """Repartition to 2× the session's cores before a CPU-heavy per-row
+    phase (regex banks, interpreted HOFs, sketches, encoders, Python
+    UDFs): a parquet file below row-group size arrives as ONE split, so
+    that phase would otherwise run on one core.  ``cols`` hash-partition
+    on them; none is a round-robin exchange.
+
+    Unconditional explicit-numPartitions repartition: AQE does not
+    coalesce a user-specified partition count, so the phase gets its
+    parallelism whether the input is an under-split scan or a
+    post-shuffle exchange.  (A partition-count probe was tried and
+    rejected: the pre-runtime count is AQE-blind — it reports the
+    static shuffle partitions exactly where AQE then coalesces them.)
+    Value-neutral: every consumer is order-insensitive or re-sorts."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism * 2, *cols)

@@ -34,7 +34,7 @@ lineage rows — `graph_stats` aggregates headline metrics per run.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,16 +54,15 @@ from sema_spark.operators.mentions import (
 )
 from sema_spark.schemas import EDGES, LINKED_TRIPLES, NODES, TRIPLES
 from sema_spark.sources.checkpoint import (
-    COMMIT_MARK,
     TOMBSTONE,
     StageRun,
-    commit_log_entries,
     current_checkpoint,
     file_rows,
     input_fingerprint,
     latest_params,
     logged_keys,
     read_checkpoint_log,
+    read_committed_snapshot,
     read_snapshot,
     read_stage_output,
     run_forced_incremental_stage,
@@ -84,8 +83,9 @@ class PipelineRun:
     linked: StageRun
     nodes: StageRun
     edges: StageRun
-    # how stage 2 was produced: "full" re-link, "delta"
-    # (link_triples_incremental), or whatever ran before a skip
+    # how stage 2 was produced: "full" re-link, "delta" (re-link of
+    # the changed and alias-affected files only, see _run_linked_stage),
+    # or "full" for a skip
     link_mode: str = "full"
 
     @property
@@ -217,34 +217,13 @@ def _run_edges_stage(
     mode = "full"
     old_cmap = None
     if incremental and anchor is not None and anchor.get("linked_run") is not None:
-        # the old canonical map: the nodes snapshot run whose committed
-        # fingerprint the anchor recorded (None if compaction pruned it)
-        nlog = read_checkpoint_log(spark, base, STAGE_NODES)
-        old_commit = (
-            nlog.filter((F.col("repo") == COMMIT_MARK) & (F.col("content_sha") == anchor["nodes"]))
-            .agg(F.max("run_id"))
-            .collect()[0][0]
-        )
-        if old_commit is not None:
-            # r7 ADVICE fix: tolerant read — an absent or zero-row nodes
-            # data dir (emptied-then-repopulated corpus whose anchor
-            # survives) raised AnalysisException here and failed the
-            # whole run instead of honoring the 'pruned history ⇒ fall
-            # back to full' contract
-            from pyspark.errors import AnalysisException
-
-            from sema_spark.sources.checkpoint import _ABSENT_OR_EMPTY
-
-            try:
-                old_rows = spark.read.parquet(f"{base}/{STAGE_NODES}/data").filter(
-                    F.col("run_id") == old_commit
-                )
-                if old_rows.limit(1).count() > 0:
-                    old_cmap = old_rows.select("entity_id", "canonical_id")
-                    mode = "delta"
-            except AnalysisException as e:
-                if not any(c in str(e) for c in _ABSENT_OR_EMPTY):
-                    raise  # corruption/permissions must propagate
+        # the old canonical map: the nodes snapshot the anchor recorded.
+        # None when that history is gone — compaction pruned it, or an
+        # emptied-then-repopulated corpus left no nodes rows (r7 ADVICE)
+        old_nodes = read_committed_snapshot(spark, base, STAGE_NODES, anchor["nodes"], NODES)
+        if old_nodes is not None:
+            old_cmap = old_nodes.select("entity_id", "canonical_id")
+            mode = "delta"
 
     if mode == "delta":
         new_cmap = nodes.select("entity_id", F.col("canonical_id").alias("_new_cid"))
@@ -285,26 +264,24 @@ def _run_edges_stage(
         rows = canonical_edges(linked, nodes)
 
     # tombstones + anchor ride the increment's own checkpoint append —
-    # no ordering of separate writes survives every crash point
-    gone_paths = (
-        ekeys.select("repo", "path")
+    # no ordering of separate writes survives every crash point (an
+    # empty refresh set, e.g. a pure-deletion run, commits them alone)
+    rf = run_forced_incremental_stage(
+        spark, refresh, rows, STAGE_EDGES, base, partition_cols=["pred"],
+        params=json.dumps({**target, "linked_run": lmax}), tombstone_paths=_gone_paths(ekeys, keys),
+    )
+    return replace(rf, fingerprint=fp_nodes)
+
+
+def _gone_paths(old_keys: DataFrame, keys: DataFrame) -> DataFrame | None:
+    """(repo, path) of ``old_keys`` with no live version in ``keys`` —
+    the paths a derived stage tombstones; None when there are none."""
+    gone = (
+        old_keys.select("repo", "path")
         .distinct()
         .join(keys.select("repo", "path").distinct(), ["repo", "path"], "left_anti")
     )
-    gp = gone_paths if gone_paths.count() else None
-    anchor_json = json.dumps({**target, "linked_run": lmax})
-    rf = run_forced_incremental_stage(
-        spark, refresh, rows, STAGE_EDGES, base, partition_cols=["pred"],
-        params=anchor_json, tombstone_paths=gp,
-    )
-    if rf.skipped:
-        # an empty refresh set writes no checkpoint rows, so the anchor
-        # (and any tombstones) must commit in one standalone append
-        # (e.g. a pure-deletion run)
-        commit_log_entries(spark, base, STAGE_EDGES, params=anchor_json, tombstone_paths=gp)
-    return StageRun(
-        STAGE_EDGES, rf.run_id, rf.input_files, rf.output_rows, skipped=False, fingerprint=fp_nodes
-    )
+    return gone if gone.count() else None
 
 
 def _run_linked_stage(
@@ -394,24 +371,13 @@ def _run_linked_stage(
     # a separate tombstone write before a crashed commit would erase
     # the `gone` state-diff this very function needs to recover (the
     # r6 second-review finding), and one after it would strand deleted
-    # paths behind an already-current params row
-    gone_paths = (
-        gone.select("repo", "path")
-        .distinct()
-        .join(keys.select("repo", "path").distinct(), ["repo", "path"], "left_anti")
-    )
-    gp = gone_paths if (n_gone and gone_paths.count()) else None
+    # paths behind an already-current params row.  A pure-deletion run
+    # or a bare params refresh commits them alone.
     rf = run_forced_incremental_stage(
-        spark, relink_files, rows, STAGE_LINKED, base, params=want_params, tombstone_paths=gp
+        spark, relink_files, rows, STAGE_LINKED, base, params=want_params,
+        tombstone_paths=_gone_paths(gone, keys) if n_gone else None,
     )
-    if rf.skipped:
-        # pure-deletion run (or bare params refresh): no increment to
-        # carry the rows — commit them in one standalone append
-        commit_log_entries(spark, base, STAGE_LINKED, params=want_params, tombstone_paths=gp)
-    return (
-        StageRun(STAGE_LINKED, rf.run_id, rf.input_files, rf.output_rows, skipped=False, fingerprint=fp),
-        mode,
-    )
+    return replace(rf, fingerprint=fp), mode
 
 
 def read_triples(spark: SparkSession, base: str) -> DataFrame:

@@ -23,6 +23,13 @@ A data row is *visible* only if the current checkpoint references its
   ``max_by(run_id)`` → old output rows become invisible (upsert S8);
 * deletion (S7) is a tombstone checkpoint row, no data touched.
 
+Every commit goes through ONE write tail (``_commit_increment``): data,
+then lineage, then one checkpoint append that carries the increment's
+per-file rows together with its params and tombstone rows, or a
+snapshot's single commit mark.  An increment over an empty file set
+that still has params or tombstones to record commits them alone, in
+one standalone append.
+
 This is Iceberg snapshot semantics hand-rolled over plain parquet; on a
 cluster with an Iceberg catalog the same API maps onto MERGE INTO +
 snapshot reads, but nothing here requires it.
@@ -128,25 +135,16 @@ def read_checkpoint_log(spark: SparkSession, base: str, stage: str) -> DataFrame
     return _read_or_empty(spark, _ckpt_dir(base, stage), schema)
 
 
-def current_checkpoint(
-    spark: SparkSession, base: str, stage: str, before_run: str | None = None
-) -> DataFrame:
+def current_checkpoint(spark: SparkSession, base: str, stage: str) -> DataFrame:
     """Latest (content_sha, run_id) per file — last writer wins by sortable
     run_id.  One row per live file; tombstones excluded.
 
-    ``before_run``: time travel — the state as it was before that run
-    committed (run_ids sort chronologically).  The data files of every
-    run are retained until compaction, so any as-of state they anchor
-    remains readable (e.g. for reconstructing the exact input a derived
-    table was last computed from).
-
     Marker rows (snapshot commit marks, params rows) are not files and
     are excluded here; read them from :func:`read_checkpoint_log` /
-    :func:`latest_params`.
+    :func:`latest_params`.  Superseded versions stay readable through
+    :func:`stage_rows_for_keys` until compaction.
     """
     log = read_checkpoint_log(spark, base, stage)
-    if before_run is not None:
-        log = log.filter(F.col("run_id") < before_run)
     latest = file_rows(log).groupBy(
         "stage", "repo", "path"
     ).agg(
@@ -194,27 +192,12 @@ def run_incremental_stage(
 
     ``src`` must carry (repo, path, content_sha) plus whatever
     ``transform`` needs; ``transform(pending_df)`` must return rows that
-    keep (repo, path, content_sha).  Write order: data → lineage →
-    checkpoint (crash between any two is safe, see module docstring).
+    keep (repo, path, content_sha), and is called only when some file is
+    pending.  Write order: data → lineage → checkpoint (crash between any
+    two is safe, see module docstring).
     """
-    run_id = run_id or new_run_id()
-    ckpt = current_checkpoint(spark, base, stage)
-    pending = pending_files(src, ckpt)
-    # The checkpoint keys of this increment (small: one row per file).
-    # Persisted: unpersisted, the count here and the checkpoint append
-    # below would EACH rescan+rehash the full content (the anti-join
-    # reads every byte) — and the committed keys must come from the same
-    # evaluation the count saw.
-    files = pending.select("repo", "path", "content_sha").distinct().persist()
-    n_files = files.count()
-    if n_files == 0:
-        files.unpersist()
-        return StageRun(stage, run_id, 0, 0, skipped=True)
-    try:
-        n_rows = _commit_increment(spark, base, stage, files, transform(pending), run_id)
-    finally:
-        files.unpersist()
-    return StageRun(stage, run_id, n_files, n_rows, skipped=False)
+    pending = pending_files(src, current_checkpoint(spark, base, stage))
+    return _run_files(spark, base, stage, pending, lambda: transform(pending), run_id)
 
 
 def file_rows(log: DataFrame) -> DataFrame:
@@ -225,34 +208,30 @@ def file_rows(log: DataFrame) -> DataFrame:
     return log.filter(~F.col("repo").isin(COMMIT_MARK, PARAMS_MARK))
 
 
-def commit_log_entries(
-    spark: SparkSession,
-    base: str,
-    stage: str,
-    params: str | None = None,
-    tombstone_paths: DataFrame | None = None,
-    run_id: str | None = None,
-) -> str:
-    """Append a params row and/or tombstone rows to the stage log in
-    ONE parquet append — atomic-per-reader like any commit.  Used when
-    there is no data increment to ride (e.g. a pure-deletion run);
-    increments carry these rows inside their own checkpoint append via
-    :func:`run_forced_incremental_stage`."""
-    run_id = run_id or new_run_id()
-    df = _log_entry_rows(spark, stage, run_id, params, tombstone_paths)
-    if df is not None:
-        df.write.mode("append").parquet(_ckpt_dir(base, stage))
-    return run_id
+def _mark_row(spark: SparkSession, stage: str, mark: str, value: str, run_id: str) -> DataFrame:
+    """One marker row of the checkpoint log (snapshot commit or params)."""
+    return spark.createDataFrame([(stage, mark, mark, value, run_id)], _CKPT_RUN_SCHEMA)
 
 
 def _log_entry_rows(
     spark: SparkSession,
     stage: str,
     run_id: str,
-    params: str | None,
-    tombstone_paths: DataFrame | None,
+    files: DataFrame | None = None,
+    params: str | None = None,
+    tombstone_paths: DataFrame | None = None,
 ) -> DataFrame | None:
+    """The checkpoint rows of one commit: a row per (repo, path,
+    content_sha) of ``files``, a tombstone per (repo, path) of
+    ``tombstone_paths`` and the ``params`` marker — None when there are
+    none."""
     parts = []
+    if files is not None:
+        parts.append(
+            files.select(
+                F.lit(stage).alias("stage"), "repo", "path", "content_sha", F.lit(run_id).alias("run_id")
+            )
+        )
     if tombstone_paths is not None:
         parts.append(
             tombstone_paths.select(
@@ -264,11 +243,7 @@ def _log_entry_rows(
             )
         )
     if params is not None:
-        parts.append(
-            spark.createDataFrame(
-                [(stage, PARAMS_MARK, PARAMS_MARK, params, run_id)], _CKPT_RUN_SCHEMA
-            )
-        )
+        parts.append(_mark_row(spark, stage, PARAMS_MARK, params, run_id))
     if not parts:
         return None
     df = parts[0]
@@ -306,26 +281,49 @@ def run_forced_incremental_stage(
     wrong parameters or (the r6 review's scenario) consume the
     state-diff a rerun needs to recover: tombstones appended SEPARATELY
     before a crashed commit would erase the ``gone`` diff while the
-    re-link they travelled with never landed.  Read params back with
-    :func:`latest_params`."""
+    re-link they travelled with never landed.  With an EMPTY file set
+    (a pure-deletion run, a bare params refresh) no data is written and
+    the params and tombstone rows commit alone, in one standalone
+    append; the run reports ``skipped`` only when there was nothing at
+    all to commit.  Read params back with :func:`latest_params`."""
+    return _run_files(
+        spark, base, stage, files, lambda: rows, run_id, partition_cols, params, tombstone_paths
+    )
+
+
+def _run_files(
+    spark: SparkSession,
+    base: str,
+    stage: str,
+    files: DataFrame,
+    rows,
+    run_id: str | None,
+    partition_cols: list[str] | None = None,
+    params: str | None = None,
+    tombstone_paths: DataFrame | None = None,
+) -> StageRun:
+    """The shared body of both increment kinds: count the file set,
+    then commit ``rows()`` for it (``rows`` is called only for a
+    non-empty set) with the params and tombstone rows in the same
+    checkpoint append."""
     run_id = run_id or new_run_id()
+    # The checkpoint keys of this increment (small: one row per file).
+    # Persisted: unpersisted, the count here and the checkpoint append
+    # would EACH re-evaluate the file set (for run_incremental_stage the
+    # anti-join rescans and rehashes the full content) — and the
+    # committed keys must come from the same evaluation the count saw.
     files = files.select("repo", "path", "content_sha").distinct().persist()
-    n_files = files.count()
-    if n_files == 0:
-        files.unpersist()
-        return StageRun(stage, run_id, 0, 0, skipped=True)
     try:
-        n_rows = _commit_increment(
-            spark,
-            base,
-            stage,
-            files,
-            rows,
-            run_id,
-            partition_cols=partition_cols,
-            params=params,
-            tombstone_paths=tombstone_paths,
+        n_files = files.count()
+        entries = _log_entry_rows(
+            spark, stage, run_id, files if n_files else None, params, tombstone_paths
         )
+        if entries is None:
+            return StageRun(stage, run_id, 0, 0, skipped=True)
+        if n_files == 0:  # no data: the params and tombstones commit alone
+            entries.write.mode("append").parquet(_ckpt_dir(base, stage))
+            return StageRun(stage, run_id, 0, 0, skipped=False)
+        n_rows = _commit_increment(spark, base, stage, rows(), entries, run_id, partition_cols)
     finally:
         files.unpersist()
     return StageRun(stage, run_id, n_files, n_rows, skipped=False)
@@ -348,15 +346,16 @@ def _commit_increment(
     spark: SparkSession,
     base: str,
     stage: str,
-    files: DataFrame,
     rows: DataFrame,
+    ckpt_rows: DataFrame,
     run_id: str,
     partition_cols: list[str] | None = None,
-    params: str | None = None,
-    tombstone_paths: DataFrame | None = None,
 ) -> int:
-    """Shared write tail: data → lineage → checkpoint (commit LAST; see
-    module docstring for the crash contract)."""
+    """The one write tail: data → lineage → checkpoint (commit LAST; see
+    module docstring for the crash contract).  ``ckpt_rows`` are the
+    checkpoint rows that make the data visible: an increment's per-file
+    rows plus its params and tombstones, or a snapshot's commit mark.
+    Returns the data row count."""
     out = rows.withColumn("run_id", F.lit(run_id)).persist()
     try:
         out.write.mode("append").partitionBy("run_id", *(partition_cols or [])).parquet(
@@ -378,23 +377,13 @@ def _commit_increment(
             _lineage_dir(base, stage)
         )
         # Checkpoint LAST — only now do this run's rows become visible.
-        # Params and tombstones ride the SAME append: visible iff the
-        # data is.
-        ckpt_rows = files.select(
-            F.lit(stage).alias("stage"), "repo", "path", "content_sha", F.lit(run_id).alias("run_id")
-        )
-        extra = _log_entry_rows(spark, stage, run_id, params, tombstone_paths)
-        if extra is not None:
-            ckpt_rows = ckpt_rows.unionByName(extra)
         ckpt_rows.write.mode("append").parquet(_ckpt_dir(base, stage))
     finally:
         out.unpersist()
     return n_rows
 
 
-def read_stage_output(
-    spark: SparkSession, base: str, stage: str, schema=None, before_run: str | None = None
-) -> DataFrame:
+def read_stage_output(spark: SparkSession, base: str, stage: str, schema=None) -> DataFrame:
     """Current snapshot: data rows referenced by the live checkpoint.
 
     left-semi on (repo, path, content_sha, run_id) — orphans from
@@ -405,9 +394,6 @@ def read_stage_output(
     inference fails on a legitimately-empty stage; with ``schema`` the
     caller gets an empty DataFrame instead of an error (an empty or
     fully-filtered source is a valid pipeline state, not a crash).
-
-    ``before_run``: the snapshot as of before that run committed (see
-    :func:`current_checkpoint`).
 
     When ``schema`` is given the scan uses it EXPLICITLY (plus run_id):
     a stage dir can mix file generations with different column sets
@@ -425,7 +411,7 @@ def read_stage_output(
     )
     if "run_id" not in data.columns:
         return data  # legitimately-empty stage: nothing to join
-    ckpt = current_checkpoint(spark, base, stage, before_run=before_run)
+    ckpt = current_checkpoint(spark, base, stage)
     keys = ["repo", "path", "content_sha", "run_id"]
     return data.join(ckpt.select(*keys), on=keys, how="left_semi").drop("run_id")
 
@@ -489,13 +475,9 @@ def delete_files(
     ``paths``: DataFrame with (repo, path).
     """
     run_id = run_id or new_run_id()
-    paths.select(
-        F.lit(stage).alias("stage"),
-        "repo",
-        "path",
-        F.lit(TOMBSTONE).alias("content_sha"),
-        F.lit(run_id).alias("run_id"),
-    ).write.mode("append").parquet(_ckpt_dir(base, stage))
+    _log_entry_rows(spark, stage, run_id, tombstone_paths=paths).write.mode("append").parquet(
+        _ckpt_dir(base, stage)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -566,24 +548,10 @@ def run_snapshot_stage(
     last = _latest_commit(spark, base, stage)
     if last is not None and last.content_sha == fp:
         return StageRun(stage, last.run_id, 0, 0, skipped=True, fingerprint=fp)
-    out = producer().withColumn("run_id", F.lit(run_id)).persist()
-    try:
-        parts = ["run_id"] + (partition_cols or [])
-        out.write.mode("append").partitionBy(*parts).parquet(_data_dir(base, stage))
-        n_rows = out.count()
-        lineage = (
-            out.groupBy(F.spark_partition_id().cast("long").alias("partition_id"))
-            .agg(F.count("*").alias("rows"))
-            .select(F.lit(stage).alias("stage"), "partition_id", "rows", F.lit(run_id).alias("run_id"))
-        )
-        spark.createDataFrame(lineage.collect(), LINEAGE).write.mode("append").parquet(
-            _lineage_dir(base, stage)
-        )
-        spark.createDataFrame(
-            [(stage, COMMIT_MARK, COMMIT_MARK, fp, run_id)], _CKPT_RUN_SCHEMA
-        ).write.mode("append").parquet(_ckpt_dir(base, stage))
-    finally:
-        out.unpersist()
+    n_rows = _commit_increment(
+        spark, base, stage, producer(), _mark_row(spark, stage, COMMIT_MARK, fp, run_id), run_id,
+        partition_cols,
+    )
     return StageRun(stage, run_id, -1, n_rows, skipped=False, fingerprint=fp)
 
 
@@ -593,12 +561,36 @@ def read_snapshot(spark: SparkSession, base: str, stage: str, schema=None) -> Da
     last = _latest_commit(spark, base, stage)
     if last is None:
         raise FileNotFoundError(f"no committed snapshot for stage {stage!r} under {base}")
+    return _snapshot_rows(spark, base, stage, last.run_id, schema)
+
+
+def read_committed_snapshot(
+    spark: SparkSession, base: str, stage: str, fingerprint: str, schema
+) -> DataFrame | None:
+    """Rows of the latest snapshot run committed under ``fingerprint``
+    (an older snapshot stays readable until compaction) — None when
+    that history is gone: no such commit is logged, or the data dir is
+    absent or the run has no rows.  Every other read error propagates
+    (the :func:`_read_parquet` policy)."""
+    rid = (
+        read_checkpoint_log(spark, base, stage)
+        .filter((F.col("repo") == COMMIT_MARK) & (F.col("content_sha") == fingerprint))
+        .agg(F.max("run_id"))
+        .collect()[0][0]
+    )
+    if rid is None:
+        return None
+    rows = _snapshot_rows(spark, base, stage, rid, schema)
+    return rows if rows.limit(1).count() > 0 else None
+
+
+def _snapshot_rows(spark: SparkSession, base: str, stage: str, run_id: str, schema) -> DataFrame:
     data = _read_parquet(
         spark, _data_dir(base, stage), empty_schema=schema, codes=_ABSENT_OR_EMPTY
     )
     if "run_id" not in data.columns:
         return data  # legitimately-empty snapshot
-    return data.filter(F.col("run_id") == last.run_id).drop("run_id")
+    return data.filter(F.col("run_id") == run_id).drop("run_id")
 
 
 def read_lineage(spark: SparkSession, base: str, stage: str) -> DataFrame:
@@ -707,9 +699,7 @@ def compact(spark: SparkSession, base: str, stage: str) -> str:
     old_ckpt = list(_list_children(spark, _ckpt_dir(base, stage)))
     if last is not None and not has_new_rows:  # snapshot stage
         live = read_snapshot(spark, base, stage).withColumn("run_id", F.lit(rid))
-        ckpt_new = spark.createDataFrame(
-            [(stage, COMMIT_MARK, COMMIT_MARK, last.content_sha, rid)], _CKPT_RUN_SCHEMA
-        )
+        ckpt_new = _mark_row(spark, stage, COMMIT_MARK, last.content_sha, rid)
     else:  # incremental stage: keep rows referenced by the live checkpoint
         # merge footers: a migrated dir can mix file generations with
         # different column sets, and compact has no declared schema to
@@ -724,13 +714,9 @@ def compact(spark: SparkSession, base: str, stage: str) -> str:
             .drop("run_id")
             .withColumn("run_id", F.lit(rid))
         )
-        ckpt_new = current_checkpoint(spark, base, stage).withColumn("run_id", F.lit(rid))
         # the params marker must survive compaction or the next
         # maintenance run would needlessly distrust the stored rows
-        params = latest_params(spark, base, stage)
-        extra = _log_entry_rows(spark, stage, rid, params, None)
-        if extra is not None:
-            ckpt_new = ckpt_new.unionByName(extra)
+        ckpt_new = _log_entry_rows(spark, stage, rid, ckpt, latest_params(spark, base, stage))
     # (1) data append: read of the old state completes while writing
     live.write.mode("append").partitionBy("run_id", *extra_parts).parquet(_data_dir(base, stage))
     # (2) checkpoint append: the compacted run becomes current

@@ -61,41 +61,6 @@ def test_changed_file_supersedes(spark, src, tmp_path):
     assert not (before & after)  # old rows invisible
 
 
-def test_before_run_time_travel(spark, src, tmp_path):
-    """current_checkpoint/read_stage_output(before_run=...) reconstruct
-    the state as of before a given run committed — superseded versions
-    stay readable until compaction."""
-    base = str(tmp_path / "kg")
-    r1 = ck.run_incremental_stage(spark, src, "triples", base, _transform)
-    before = {
-        (r.subj, r.pred, r.obj)
-        for r in ck.read_stage_output(spark, base, "triples").collect()
-    }
-    mutated = with_content_sha(
-        src.drop("content_sha").withColumn(
-            "content",
-            F.when(
-                (F.col("repo") == "org0/proj0") & (F.col("path") == "src/m0.py"),
-                F.lit('"""changed."""\nimport zz_new_module\n# padding to pass the fifty char guard\n'),
-            ).otherwise(F.col("content")),
-        )
-    )
-    r2 = ck.run_incremental_stage(spark, mutated, "triples", base, _transform)
-    # as-of before r2: the ORIGINAL state, byte-for-byte
-    asof = {
-        (r.subj, r.pred, r.obj)
-        for r in ck.read_stage_output(spark, base, "triples", before_run=r2.run_id).collect()
-    }
-    assert asof == before
-    now = {
-        (r.subj, r.pred, r.obj)
-        for r in ck.read_stage_output(spark, base, "triples").collect()
-    }
-    assert now != before
-    # as-of before the first run: empty state
-    assert ck.current_checkpoint(spark, base, "triples", before_run=r1.run_id).count() == 0
-
-
 def test_crash_before_checkpoint_reprocesses(spark, src, tmp_path):
     """Data written, checkpoint append never happened → rows invisible,
     rerun re-processes (reference ordering, src/storage/mod.rs:59-67)."""

@@ -98,87 +98,3 @@ def test_alias_dict_shape(spark):
     row = alias.filter("repo='org0/proj0' and alias='m3'").collect()
     assert any(r.entity_id == "org0/proj0/src/m3.py" for r in row)
     assert alias.filter("alias = ''").count() == 0
-
-
-def test_incremental_link_equals_full(spark):
-    """link_triples_incremental over an add + change + delete mutation
-    must equal the from-scratch link_triples row-for-row (multiset).
-
-    The mutations are chosen so UNCHANGED files' resolutions flip:
-    adding src/os.py gives the previously-external `imports os` triples
-    of every other file in the repo an alias target; deleting src/m1.py
-    strips the target of other files' `imports m1` / `calls f1_*`;
-    changing src/m2.py adds a new defined symbol.  All three surface
-    only through the alias-delta affected-block logic."""
-    from sema_spark.corpus import FileRow, generate_corpus
-    from sema_spark.operators.linking import link_triples_incremental
-    from sema_spark.schemas import REPOS
-
-    rows, _ = generate_corpus("xs")
-
-    def df_of(rs):
-        return extract_triples(
-            spark.createDataFrame([r.__dict__ for r in rs], REPOS)
-        ).persist()
-
-    old = rows
-    new = []
-    for r in rows:
-        if r.repo == "org0/proj0" and r.path == "src/m1.py":
-            continue  # delete
-        if r.repo == "org0/proj0" and r.path == "src/m2.py":
-            r = FileRow(
-                r.repo, r.path, r.commit, r.lang,
-                r.content + "\n\ndef brand_new_sym_xyz(x):\n    return x\n",
-            )  # change
-        new.append(r)
-    new.append(
-        FileRow(
-            "org0/proj0", "src/os.py", rows[0].commit, "py",
-            '"""os shim — gives `imports os` an alias target."""\n\n'
-            "def path_join(a, b):\n    return a\n",
-        )
-    )  # add
-
-    t_old, t_new = df_of(old), df_of(new)
-    try:
-        full = link_triples(t_new).persist()
-        incr = link_triples_incremental(t_new, t_old, link_triples(t_old)).persist()
-        try:
-            assert incr.count() == full.count()
-            assert incr.exceptAll(full).count() == 0
-            assert full.exceptAll(incr).count() == 0
-            # the flips actually happened (the test has teeth)
-            os_links = full.filter("repo='org0/proj0' and pred='imports' and obj='os'")
-            assert os_links.filter("link_method = 'unresolved'").count() == 0
-            m1_refs = full.filter("repo='org0/proj0' and pred='imports' and obj='m1'")
-            assert m1_refs.count() > 0
-            assert m1_refs.filter("obj_id = 'org0/proj0/src/m1.py'").count() == 0
-        finally:
-            full.unpersist()
-            incr.unpersist()
-    finally:
-        t_old.unpersist()
-        t_new.unpersist()
-
-
-def test_incremental_link_no_change_relinks_nothing(spark):
-    """With zero file changes the delta path must keep every previous
-    row verbatim (empty alias delta → empty affected set)."""
-    from sema_spark.operators.linking import link_triples_incremental
-
-    t = extract_triples(corpus_df(spark, "xs")).persist()
-    try:
-        prev = link_triples(t).persist()
-        keys = t.select("repo", "path", "content_sha").distinct()
-        try:
-            # once with derived keys, once with caller-supplied key sets
-            # (the checkpoint-log fast path)
-            for kw in ({}, {"new_keys": keys, "prev_keys": keys}):
-                out = link_triples_incremental(t, t, prev, **kw)
-                assert out.count() == prev.count()
-                assert out.exceptAll(prev).count() == 0
-        finally:
-            prev.unpersist()
-    finally:
-        t.unpersist()

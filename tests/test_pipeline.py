@@ -156,7 +156,16 @@ def test_linked_stage_write_volume_proportional_to_delta(spark, tmp_path):
 
 def test_linked_stage_delete_propagates(spark, tmp_path):
     """Tombstoned files vanish from the linked view and their alias
-    targets in OTHER files re-link (delta mode)."""
+    targets in OTHER files re-link (delta mode).
+
+    The same wave also changes src/m2.py (a new defined symbol) and
+    adds src/os.py, which gives other files' previously-external
+    `imports os` an alias target.  All three mutations flip resolutions
+    in UNCHANGED files only through the alias-delta affected-block
+    logic, so the delta result must equal a from-scratch link of the
+    mutated corpus row for row."""
+    from sema_spark.operators.linking import link_triples
+    from sema_spark.operators.mentions import extract_triples
     from sema_spark.sources.checkpoint import delete_files
 
     src = corpus_df(spark, "xs")
@@ -166,7 +175,25 @@ def test_linked_stage_delete_propagates(spark, tmp_path):
         spark, base, "triples",
         spark.createDataFrame([("org0/proj0", "src/m1.py")], "repo string, path string"),
     )
-    shrunk = src.filter(~((F.col("repo") == "org0/proj0") & (F.col("path") == "src/m1.py")))
+    in_m2 = (F.col("repo") == "org0/proj0") & (F.col("path") == "src/m2.py")
+    os_py = spark.createDataFrame(
+        [(
+            "org0/proj0", "src/os.py", "718c5a1673b55515fa56ecfa1de3bb764314d117", "py",
+            '"""os shim — gives `imports os` an alias target."""\n\n'
+            "def path_join(a, b):\n    return a\n",
+        )],
+        src.schema,
+    )
+    shrunk = (
+        src.filter(~((F.col("repo") == "org0/proj0") & (F.col("path") == "src/m1.py")))
+        .withColumn(
+            "content",
+            F.when(
+                in_m2, F.concat("content", F.lit("\n\ndef brand_new_sym_xyz(x):\n    return x\n"))
+            ).otherwise(F.col("content")),
+        )
+        .unionByName(os_py)
+    )
     r = P.run_pipeline(spark, shrunk, base, incremental_link=True)
     assert r.link_mode == "delta" and not r.linked.skipped
     live = P.read_linked(spark, base)
@@ -175,6 +202,16 @@ def test_linked_stage_delete_propagates(spark, tmp_path):
     m1_refs = live.filter("repo='org0/proj0' and pred='imports' and obj='m1'")
     assert m1_refs.count() > 0
     assert m1_refs.filter("obj_id = 'org0/proj0/src/m1.py'").count() == 0
+    # unchanged files' `imports os` now resolve to the added file
+    os_refs = live.filter("repo='org0/proj0' and pred='imports' and obj='os'")
+    assert os_refs.filter("path != 'src/os.py'").count() > 0
+    assert os_refs.filter("obj_id != 'org0/proj0/src/os.py'").count() == 0
+    assert live.filter("path='src/m2.py' and obj like '%brand_new_sym_xyz'").count() > 0
+    # the delta result equals a from-scratch link, row for row
+    full = link_triples(extract_triples(shrunk)).select(*live.columns)
+    assert live.count() == full.count()
+    assert live.exceptAll(full).count() == 0
+    assert full.exceptAll(live).count() == 0
 
 
 def test_edges_stage_write_volume_and_canon_flip(spark, tmp_path):
