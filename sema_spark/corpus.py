@@ -255,20 +255,6 @@ def corpus_df(spark, scale: str = "xs"):
     return spark.createDataFrame([r.__dict__ for r in rows], REPOS)
 
 
-def expected_triples_df(spark, scale: str = "xs"):
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    _, expected = _generated(scale)
-    schema = StructType(
-        [
-            StructField("subj", StringType(), False),
-            StructField("pred", StringType(), False),
-            StructField("obj", StringType(), False),
-        ]
-    )
-    return spark.createDataFrame(sorted(expected), schema)
-
-
 def expected_edges(scale: str = "xs") -> set[tuple[str, str, str]]:
     """Construction-time truth for stages 2+3: the exact (src, pred, dst)
     edge set the pipeline must emit for a scale, computed by an

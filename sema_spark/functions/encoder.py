@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, FloatType
@@ -197,6 +196,3 @@ def encode_query(text: str) -> list[float]:
     /root/reference/src/storage/lance_indexer.rs:113-118)."""
     return [float(x) for x in encode_numpy(text)]
 
-
-def query_literal(text: str) -> Column:
-    return F.array(*[F.lit(v) for v in encode_query(text)])

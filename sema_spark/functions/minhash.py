@@ -1,5 +1,5 @@
-"""MinHash signatures and LSH banding — pure built-in higher-order
-functions, entirely JVM-side.
+"""MinHash signatures and LSH banding: JVM-side tokenizing, base hashes
+and bands; the permutation grid runs Arrow-batched in numpy.
 
 Replaces the reference's Lance ANN index
 (/root/reference/src/storage/lance_indexer.rs:107-141) with a
@@ -20,6 +20,8 @@ folding restores ~J·k agreement — see tests/test_functions.py).
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -91,28 +93,6 @@ def _base_hash(t: Column, base: str) -> Column:
     return F.pmod(F.xxhash64(t), F.lit(_H_SPACE))
 
 
-def minhash_signature(tokens: Column, num_perm: int = NUM_PERM, base: str = "xxhash64") -> Column:
-    """array<bigint> minhash signature of a token array."""
-    a_co, b_co = _coefficients(num_perm)
-    hs = F.transform(tokens, lambda t: _base_hash(t, base))
-    pairs = F.arrays_zip(
-        F.array(*[F.lit(a) for a in a_co]).alias("a"),
-        F.array(*[F.lit(b) for b in b_co]).alias("b"),
-    )
-    return F.transform(
-        pairs,
-        lambda p: F.coalesce(
-            F.array_min(
-                F.transform(
-                    hs,
-                    lambda h: F.pmod(F.pmod(p["a"] * h + p["b"], F.lit(_P)), F.lit(_H_SPACE)),
-                )
-            ),
-            F.lit(_P),  # empty token set → sentinel signature value
-        ),
-    )
-
-
 def lsh_bands(sig: Column, bands: int = LSH_BANDS, num_perm: int = NUM_PERM) -> Column:
     """array<struct<band:int, bh:bigint>> — hash per signature band."""
     rows = num_perm // bands
@@ -125,27 +105,45 @@ def lsh_bands(sig: Column, bands: int = LSH_BANDS, num_perm: int = NUM_PERM) -> 
     )
 
 
-def token_base_hashes(tokens: Column, base: str = "xxhash64") -> Column:
-    """array<bigint>: base hash mod 2^31 per token — the single JVM-side
-    pass shared by BOTH signature paths, which is what makes the Arrow
-    path value-identical to the HOF path."""
-    return F.transform(tokens, lambda t: _base_hash(t, base))
+# Bound of the token-hash memos: a memo is cleared when it exceeds this
+# many entries (pathological vocabularies).
+_MEMO_MAX = 1_000_000
 
 
-def signature_from_hashes_udf(num_perm: int = NUM_PERM):
-    """Arrow-batched numpy permutation-min over precomputed base hashes.
+def sha_token_hashes(tokens, memo: dict[str, int], hex_chars: int) -> list[int]:
+    """``int(sha256(t).hexdigest()[:hex_chars], 16)`` per token under a
+    distinct-token memo.  The hash is a pure function and corpora repeat
+    a small vocabulary, so one hashlib call per DISTINCT token replaces
+    one interpreted JVM sha2 per token OCCURRENCE.
+    hashlib's sha256 hex equals the JVM's ``sha2(t, 256)``, so the value
+    is the one the DuckDB oracles compute.  Each caller owns its memo; a
+    memo referenced from a UDF closure ships with the pickled UDF, so it
+    lives as long as the deserialized UDF on the worker."""
+    import hashlib
 
-    The hybrid fast path: Spark computes one xxhash64 per token (a single
-    interpreted-HOF pass), numpy does the num_perm×tokens permutation
-    grid that made the pure-HOF path the round-1 bench hotspot (HOF
-    lambdas are interpreted, not codegen'd — 64 interpreted passes,
-    ~2ms/doc/core measured).  Identical arithmetic in uint64 —
-    ``(a*h+b) mod P mod 2^31`` with a,h < 2^31 so a*h+b < 2^63 never
-    overflows — makes it VALUE-IDENTICAL to :func:`minhash_signature`
-    (asserted in tests/test_minhash_paths.py), so flipping paths can
-    never change dedup results."""
-    import numpy as np
-    import pandas as pd
+    if len(memo) > _MEMO_MAX:
+        memo.clear()
+    vals = []
+    for t in tokens:
+        v = memo.get(t)
+        if v is None:
+            v = memo[t] = int(hashlib.sha256(t.encode("utf-8")).hexdigest()[:hex_chars], 16)
+        vals.append(v)
+    return vals
+
+
+# sha base memo of the minhash signature UDF (see sha_token_hashes)
+_SHA_BASE_MEMO: dict[str, int] = {}
+
+
+def _signature_udf(num_perm: int, base_hashes):
+    """Arrow-batched numpy permutation-min grid: array column → minhash
+    signature.  ``base_hashes`` maps a non-empty row to its per-token
+    base hashes (< 2^31); an empty or null row gets the sentinel
+    signature.  In uint64, ``(a*h+b) mod P mod 2^31`` with a,h < 2^31 so
+    a*h+b < 2^63 never overflows — the same arithmetic as the
+    interpreted-HOF reference in tests/hof_oracles.py (asserted value-
+    identical in tests/test_minhash_paths.py)."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
 
@@ -154,64 +152,14 @@ def signature_from_hashes_udf(num_perm: int = NUM_PERM):
     B = np.array(b_co, dtype=np.uint64)[:, None]
     sentinel = [int(_P)] * num_perm
 
-    def sig_one(hashes) -> list[int]:
-        if hashes is None or len(hashes) == 0:
+    def sig_one(row) -> list[int]:
+        if row is None or len(row) == 0:
             return sentinel
-        h = np.asarray(hashes, dtype=np.uint64)[None, :]
+        h = np.asarray(base_hashes(row), dtype=np.uint64)[None, :]
         m = (A * h + B) % _P % _H_SPACE
         return m.min(axis=1).astype(np.int64).tolist()
 
     # no type hints: they'd be unresolvable strings in this local scope
-    def _impl(s):
-        return s.map(sig_one)
-
-    return pandas_udf(_impl, ArrayType(LongType()))
-
-
-# per-worker token→base-hash memo for the sha base (a pure function;
-# corpora repeat a small vocabulary, so one hashlib call per DISTINCT
-# token replaces one interpreted JVM sha2+conv per token OCCURRENCE —
-# measured the dominant cost of the sha signature stage at sf1.0).
-# Bounded like the simhash memo.
-_SHA_BASE_MEMO: dict[str, int] = {}
-
-
-def signature_from_tokens_sha_udf(num_perm: int = NUM_PERM):
-    """token array → minhash signature with the sha base hash computed
-    in Python under a per-worker distinct-token memo.  VALUE-IDENTICAL
-    to the JVM path: ``int(sha256(t).hexdigest()[:8], 16) % 2^31`` is
-    exactly ``pmod(conv(substring(sha2(t,256),1,8),16,10), 2^31)``
-    (asserted in tests/test_minhash_paths.py), and the permutation grid
-    is the same uint64 arithmetic as signature_from_hashes_udf."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
-
-    a_co, b_co = _coefficients(num_perm)
-    A = np.array(a_co, dtype=np.uint64)[:, None]
-    B = np.array(b_co, dtype=np.uint64)[:, None]
-    sentinel = [int(_P)] * num_perm
-
-    def sig_one(tokens) -> list[int]:
-        if tokens is None or len(tokens) == 0:
-            return sentinel
-        memo = _SHA_BASE_MEMO
-        if len(memo) > 1_000_000:
-            memo.clear()
-        vals = []
-        for t in tokens:
-            v = memo.get(t)
-            if v is None:
-                v = int(hashlib.sha256(t.encode("utf-8")).hexdigest()[:8], 16) % _H_SPACE
-                memo[t] = v
-            vals.append(v)
-        h = np.asarray(vals, dtype=np.uint64)[None, :]
-        m = (A * h + B) % _P % _H_SPACE
-        return m.min(axis=1).astype(np.int64).tolist()
-
     def _impl(s):
         return s.map(sig_one)
 
@@ -224,32 +172,33 @@ def with_minhash(
     shingle_words: bool = True,
     num_perm: int = NUM_PERM,
     bands: int = LSH_BANDS,
-    use_arrow: bool = True,
     base: str = "xxhash64",
     tokens_ready: bool = False,
 ) -> DataFrame:
-    """Add mh_sig + mh_bands.  Both paths produce IDENTICAL signatures;
-    the Arrow hybrid is the default (the pure-HOF path was the round-1
-    bench hotspot), the HOF path remains as the no-Python-workers option
-    and as the independent implementation the equality test checks
-    against.  ``base="sha"`` makes signatures DuckDB-replicable (see
-    :func:`_base_hash`).  ``tokens_ready=True`` means ``text_col``
-    already holds the token/shingle ARRAY (callers that shingled once
-    for their own verify tier pass it through instead of paying the
-    shingle scan twice)."""
+    """Add mh_sig + mh_bands.  The permutation grid runs Arrow-batched
+    in numpy (interpreted HOF lambdas made it the round-1 bench
+    hotspot).  The xxhash64 base hash is one JVM-side pass per token;
+    ``base="sha"`` makes signatures DuckDB-replicable (see
+    :func:`_base_hash`) and computes that base in the Python batch under
+    a distinct-token memo, bit-identical to the JVM form.
+    ``tokens_ready=True`` means ``text_col`` already holds the
+    token/shingle ARRAY (callers that shingled once for their own verify
+    tier pass it through instead of paying the shingle scan twice)."""
     if tokens_ready:
         tokens = F.col(text_col)
     else:
         tokens = tokenize(text_col) if shingle_words else char_shingles(text_col)
-    if use_arrow:
-        if base == "sha":
-            # r7: the sha base hash moves into the Python batch under a
-            # distinct-token memo (bit-identical — see the UDF)
-            sig = signature_from_tokens_sha_udf(num_perm)(tokens)
-        else:
-            sig = signature_from_hashes_udf(num_perm)(token_base_hashes(tokens, base))
+    if base == "sha":
+        # int(sha256(t).hexdigest()[:8], 16) % 2^31 is exactly the JVM's
+        # pmod(conv(substring(sha2(t,256),1,8),16,10), 2^31)
+        sig = _signature_udf(
+            num_perm,
+            lambda toks: np.asarray(sha_token_hashes(toks, _SHA_BASE_MEMO, 8), dtype=np.uint64)
+            % _H_SPACE,
+        )(tokens)
     else:
-        sig = minhash_signature(tokens, num_perm, base)
+        hashes = F.transform(tokens, lambda t: _base_hash(t, base))
+        sig = _signature_udf(num_perm, lambda h: h)(hashes)
     return df.withColumn("mh_sig", sig).withColumn(
         "mh_bands", lsh_bands(F.col("mh_sig"), bands, num_perm)
     )
@@ -262,24 +211,20 @@ def explode_bands(df: DataFrame, id_cols: list[str]) -> DataFrame:
     )
 
 
-def estimated_jaccard(sig_a: Column, sig_b: Column) -> Column:
-    """Signature agreement rate — unbiased Jaccard estimate."""
-    return F.aggregate(
-        F.zip_with(sig_a, sig_b, lambda x, y: F.when(x == y, 1).otherwise(0)),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    ) / F.size(sig_a)
+def agreement_rate(A: np.ndarray, B: np.ndarray) -> pd.Series:
+    """Per-row signature agreement rate of two n×num_perm matrices — the
+    unbiased Jaccard estimate.  The agreement count is an exact integer
+    and count/num_perm one int/int→double quotient, so no summation-order
+    freedom exists."""
+    return pd.Series((A == B).sum(axis=1) / A.shape[1])
 
 
 def estimated_jaccard_arrow(sig_a: Column, sig_b: Column) -> Column:
-    """Arrow-batched :func:`estimated_jaccard` — VALUE-IDENTICAL (the
-    agreement count is an exact integer, so no summation-order concern
-    exists, and count/size is the same int/int→double quotient the HOF
-    form produces; asserted in tests/test_minhash_paths.py).  The HOF
-    form is 64 interpreted lambda evaluations per pair — the measured
+    """Arrow-batched :func:`agreement_rate` of two signature columns —
+    value-identical to the interpreted zip_with/aggregate fold
+    (tests/hof_oracles.py; asserted in tests/test_minhash_paths.py),
+    which was 64 interpreted lambda evaluations per pair, the measured
     hot half of the star-edge verify at sf1.0."""
-    import numpy as np
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -288,6 +233,6 @@ def estimated_jaccard_arrow(sig_a: Column, sig_b: Column) -> Column:
             return pd.Series([], dtype="float64")
         A = np.stack(sa.map(lambda x: np.asarray(x, dtype=np.int64)))
         B = np.stack(sb.map(lambda x: np.asarray(x, dtype=np.int64)))
-        return pd.Series((A == B).sum(axis=1) / A.shape[1])
+        return agreement_rate(A, B)
 
     return _est(sig_a, sig_b)

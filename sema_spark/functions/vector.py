@@ -169,18 +169,23 @@ def l2_norm_fold(vec):
     return _norm(vec)
 
 
-@pandas_udf(DoubleType())
-def cosine_arrow(va: pd.Series, vb: pd.Series) -> pd.Series:
-    """Vectorized cosine for bulk pair re-ranking (float64; NaN-free:
-    zero-norm pairs return NULL like the HOF path)."""
-    if len(va) == 0:
-        return pd.Series([], dtype="float64")
-    a = np.stack(va.map(lambda x: np.asarray(x, dtype=np.float64)))
-    b = np.stack(vb.map(lambda x: np.asarray(x, dtype=np.float64)))
+def cosine_rows(a: np.ndarray, b: np.ndarray) -> pd.Series:
+    """Row-wise cosine of two n×dim float64 matrices (numpy pairwise
+    sums; NaN-free: a zero-norm row pair gives NULL like the HOF path)."""
     num = (a * b).sum(axis=1)
     den = np.sqrt((a * a).sum(axis=1)) * np.sqrt((b * b).sum(axis=1))
     out = np.where(den > 0, num / np.where(den > 0, den, 1.0), np.nan)
     return pd.Series(out).where(den > 0, other=None)
+
+
+@pandas_udf(DoubleType())
+def cosine_arrow(va: pd.Series, vb: pd.Series) -> pd.Series:
+    """Vectorized :func:`cosine_rows` for bulk pair re-ranking."""
+    if len(va) == 0:
+        return pd.Series([], dtype="float64")
+    a = np.stack(va.map(lambda x: np.asarray(x, dtype=np.float64)))
+    b = np.stack(vb.map(lambda x: np.asarray(x, dtype=np.float64)))
+    return cosine_rows(a, b)
 
 
 def l2_normalize(a: Column | str) -> Column:

@@ -181,6 +181,16 @@ def kmeans_python(ids, vectors, k: int = 8, iterations: int = 5) -> dict:
     return {ids[i]: int(a[i]) for i in range(len(ids))}
 
 
+def probe_cells(cents: np.ndarray, qvec, probes: int) -> list[int]:
+    """The ``probes`` cells whose centroids are nearest ``qvec``:
+    squared-L2 on the driver (centroids are k×dim, a scalar cost), ties
+    to the lower cell id.  The one probe rule of every IVF query, so the
+    in-plan and stored indexes probe the same cells."""
+    q = np.asarray(qvec, dtype=np.float64)
+    dist = ((cents - q[None, :]) ** 2).sum(axis=1)
+    return [int(x) for x in np.argsort(dist, kind="stable")[:probes]]
+
+
 def ivf_kmeans_topk(
     df: DataFrame,
     qvec,
@@ -205,9 +215,7 @@ def ivf_kmeans_topk(
     from sema_spark.functions.vector import cosine_literal_fold
 
     cents, src = kmeans_fit(df, n_clusters, iterations, id_col, vec_col)
-    q = np.asarray(qvec, dtype=np.float64)
-    dist = ((cents - q[None, :]) ** 2).sum(axis=1)
-    probe = [int(x) for x in np.argsort(dist, kind="stable")[:probes]]
+    probe = probe_cells(cents, qvec, probes)
     return (
         src.withColumn("_c", _assign_udf(cents)(F.col("_v")))
         .where(F.col("_c").isin(probe))

@@ -9,12 +9,12 @@ shuffle-conscious:
   within-bucket pair generation → signature-Jaccard filter → connected
   components → canonical survivor.  Candidate generation never compares
   across buckets, so cost is Σ bucket² not N².
-* :func:`simhash` / :func:`simhash_dedup` — 60-bit simhash (sha256
-  token base so the DuckDB oracle can replicate it); blocking on 4×15-bit
-  bands (Hamming ≤ 3 near-dups must collide on ≥ 1 exact band).
+* :func:`simhash_dedup` — 60-bit simhash (sha256 token base so the
+  DuckDB oracle can replicate it); blocking on 4×15-bit bands (Hamming
+  ≤ 3 near-dups must collide on ≥ 1 exact band).
 * :func:`ngram_jaccard_pairs` — exact character-n-gram Jaccard for
   candidate pairs (the precision re-rank stage after any blocker).
-* :func:`embedding_dedup` — cosine near-dup over an embedding column
+* :func:`embedding_dup_pairs` — cosine near-dup over an embedding column
   using random-hyperplane sign-sketch blocking + exact cosine re-rank.
 
 At 100 TB: every strategy is (blocking-key shuffle) + (bounded local
@@ -22,6 +22,14 @@ pair-gen) + (CC on the tiny duplicate-edge graph); none materializes the
 N² pair space.  Giant buckets (boilerplate text) are capped by
 ``max_bucket``, the standard recall/cost dial; the rows the cap drops
 are not yet counted or reported.
+
+Each operator has one production path.  Signatures, sketches and pair
+scores are Arrow-batched numpy; the interpreted-HOF references they
+are value-identical to live in tests/hof_oracles.py.  Pair scoring
+broadcasts the id-sorted payload matrix when it fits the session's
+broadcast budget (:func:`_broadcast_pair_score`) and joins it onto the
+pairs past it; both dedup graphs are built from star edges
+(:func:`_star_edges`).
 """
 
 from __future__ import annotations
@@ -31,19 +39,22 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import LongType
 
 from sema_spark.functions.minhash import (
+    NUM_PERM,
+    agreement_rate,
     char_shingles,
     choose_bands,
     estimated_jaccard_arrow,
     explode_bands,
+    sha_token_hashes,
     tokenize,
     with_minhash,
 )
 from sema_spark.functions.text import content_fingerprint
 from sema_spark.plans.materialize import materialize, spread
-from sema_spark.functions.vector import cosine, cosine_arrow
+from sema_spark.functions.vector import cosine_arrow, cosine_rows
 from sema_spark.operators.canonicalize import connected_components
 
 
@@ -60,16 +71,6 @@ def exact_dedup(df: DataFrame, id_col: str = "id", text_col: str = "text") -> Da
         .withColumn("_keep", F.min(id_col).over(w))
         .filter(F.col(id_col) == F.col("_keep"))
         .drop("_keep", "_fp")
-    )
-
-
-def exact_dup_groups(df: DataFrame, id_col: str = "id", text_col: str = "text") -> DataFrame:
-    """(fingerprint, group_size, canonical_id) for groups with dups."""
-    return (
-        df.select(F.col(id_col).alias("id"), content_fingerprint(text_col).alias("fingerprint"))
-        .groupBy("fingerprint")
-        .agg(F.count("*").alias("group_size"), F.min("id").alias("canonical_id"))
-        .filter(F.col("group_size") > 1)
     )
 
 
@@ -156,46 +157,22 @@ def minhash_candidate_pairs(
     # without a second exchange)
     n_parts = 4 * df.sparkSession.sparkContext.defaultParallelism
     cand = raw.repartition(n_parts, "a", "b").dropDuplicates()
-    spark = df.sparkSession
-    n_ids = mh.count()  # mh is materialized — cheap
-    from sema_spark.functions.minhash import NUM_PERM
-
-    if n_ids * NUM_PERM * 8 <= _broadcast_budget(spark):
-        # r7 (guide §8): est-verify via a BROADCAST signature matrix —
-        # the r6 shape joined two 64-long signature arrays onto every
-        # deduped pair (~33 GB of shuffle at sf1.0's 32M pairs, 48.5s
-        # measured); the pairs stay two ids wide and the signatures
-        # ship once per executor.  Value-identical: the agreement count
-        # is an exact integer and count/num_perm is the same quotient
-        # (pinned by a forced-budget parity test).
-        pdf = mh.select("id", "mh_sig").toPandas()
-        ids = pdf["id"].to_numpy()
-        SIG = np.stack(pdf["mh_sig"].map(lambda s: np.asarray(s, dtype=np.int64)))
-        order = np.argsort(ids, kind="stable")
-        bc = spark.sparkContext.broadcast((ids[order], SIG[order]))
-
-        @pandas_udf("double")
-        def est_lookup(a: pd.Series, b: pd.Series) -> pd.Series:
-            sorted_ids, sig_m = bc.value
-            ia = np.searchsorted(sorted_ids, a.to_numpy())
-            ib = np.searchsorted(sorted_ids, b.to_numpy())
-            eq = (sig_m[ia] == sig_m[ib]).sum(axis=1)
-            return pd.Series(eq / sig_m.shape[1])
-
-        return (
-            cand.withColumn("est_jaccard", est_lookup("a", "b"))
-            .filter(F.col("est_jaccard") >= threshold)
-            .select("a", "b", "est_jaccard")
-        )
-    sig = mh.select("id", "mh_sig")
-    pairs = (
-        cand.join(sig.select(F.col("id").alias("a"), F.col("mh_sig").alias("sig_a")), "a")
-        .join(sig.select(F.col("id").alias("b"), F.col("mh_sig").alias("sig_b")), "b")
-        .withColumn("est_jaccard", estimated_jaccard_arrow(F.col("sig_a"), F.col("sig_b")))
+    # r7: est-verify via a BROADCAST signature matrix — the r6 shape
+    # joined two 64-long signature arrays onto every deduped pair (~33 GB
+    # of shuffle at sf1.0's 32M pairs, 48.5s measured), kept past the
+    # budget.  Value-identical (pinned by a forced-budget parity test).
+    est = _broadcast_pair_score(mh, "mh_sig", NUM_PERM, np.int64, agreement_rate)
+    if est is None:
+        sig = mh.select("id", "mh_sig")
+        cand = cand.join(
+            sig.select(F.col("id").alias("a"), F.col("mh_sig").alias("sig_a")), "a"
+        ).join(sig.select(F.col("id").alias("b"), F.col("mh_sig").alias("sig_b")), "b")
+        est = estimated_jaccard_arrow(F.col("sig_a"), F.col("sig_b"))
+    return (
+        cand.withColumn("est_jaccard", est)
         .filter(F.col("est_jaccard") >= threshold)
         .select("a", "b", "est_jaccard")
     )
-    return pairs
 
 
 def _numeric_cc_losers(spark, pdf: pd.DataFrame) -> np.ndarray:
@@ -268,6 +245,30 @@ def _drop_cc_losers(df: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
     return df.join(losers, df[id_col] == F.col("_loser"), "left_anti")
 
 
+def _star_edges(
+    bands: DataFrame, key: str, sketches: DataFrame, col: str, name: str, score
+) -> DataFrame:
+    """(a=hub, b=member, name) STAR edges of the duplicate graph: per
+    (band, key) bucket every member links to the bucket-min-id hub, and
+    ``score`` (a Column function of the two ends' ``col`` sketches)
+    scores each link.  O(Σ bucket) edges, not O(Σ bucket²); callers
+    filter on the score."""
+    w = Window.partitionBy("band", key)
+    edges = (
+        bands.withColumn("hub", F.min("id").over(w))
+        .filter(F.col("id") != F.col("hub"))
+        .select("hub", "id")
+        .distinct()
+    )
+    sig = sketches.select("id", col)
+    return (
+        edges.join(sig.select(F.col("id").alias("hub"), F.col(col).alias("sig_a")), "hub")
+        .join(sig.select(F.col("id").alias("id"), F.col(col).alias("sig_b")), "id")
+        .withColumn(name, score(F.col("sig_a"), F.col("sig_b")))
+        .select(F.col("hub").alias("a"), F.col("id").alias("b"), name)
+    )
+
+
 def minhash_dup_edges(
     df: DataFrame,
     id_col: str = "id",
@@ -300,22 +301,9 @@ def minhash_dup_edges(
         text_col="t",
         bands=choose_bands(threshold),
     ).select("id", "mh_sig", "mh_bands").transform(materialize)
-    bands = explode_bands(mh, ["id"])
-    w = Window.partitionBy("band", "bh")
-    edges = (
-        bands.withColumn("hub", F.min("id").over(w))
-        .filter(F.col("id") != F.col("hub"))
-        .select("hub", "id")
-        .distinct()
-    )
-    sig = mh.select("id", "mh_sig")
-    return (
-        edges.join(sig.select(F.col("id").alias("hub"), F.col("mh_sig").alias("sig_a")), "hub")
-        .join(sig.select(F.col("id").alias("id"), F.col("mh_sig").alias("sig_b")), "id")
-        .withColumn("est_jaccard", estimated_jaccard_arrow(F.col("sig_a"), F.col("sig_b")))
-        .filter(F.col("est_jaccard") >= threshold)
-        .select(F.col("hub").alias("a"), F.col("id").alias("b"), "est_jaccard")
-    )
+    return _star_edges(
+        explode_bands(mh, ["id"]), "bh", mh, "mh_sig", "est_jaccard", estimated_jaccard_arrow
+    ).filter(F.col("est_jaccard") >= threshold)
 
 
 def minhash_dedup(
@@ -343,77 +331,29 @@ def minhash_dedup(
 
 # -------------------------------------------------------------------- simhash
 SIMHASH_BITS = 60  # 15 sha256 hex chars; 4 bands x 15 bits
-SIMHASH_BANDS = 4
 
 
-def _token_hex15(col):
-    """Per-token 60-bit base hash as 15 sha256 hex chars — sha256 (not
-    xxhash64) so the DuckDB oracle can compute the identical simhash."""
-    return F.transform(tokenize(col), lambda t: F.substring(F.sha2(t, 256), 1, 15))
+# token→60-bit-hash memo of simhash_arrow (see sha_token_hashes)
+_SIMHASH_TOKEN_MEMO: dict[str, int] = {}
 
 
-def simhash(col, num_bits: int = SIMHASH_BITS):
+def simhash_arrow(col, num_bits: int = SIMHASH_BITS):
     """Simhash of the word-token set as a ``num_bits``-char bit STRING.
 
     bit_i = sign of Σ_tokens (±1 per bit i of sha256(token)[0:60]).  A
     bit string (not a long) because Spark's Python API only shifts by
     int literals — string slicing gives the same banding joins with
-    plans that stay in whole-stage codegen.  This is the slow reference
-    path (num_bits interpreted aggregate passes per doc);
-    :func:`simhash_arrow` is value-identical and the default.
-    """
-    bitstrs = F.transform(
-        _token_hex15(col), lambda h: F.lpad(F.conv(h, 16, 2), num_bits, "0")
-    )
-    return F.concat_ws(
-        "",
-        F.transform(
-            F.sequence(F.lit(1), F.lit(num_bits)),
-            lambda i: F.when(
-                F.aggregate(
-                    bitstrs,
-                    F.lit(0),
-                    lambda acc, s: acc + F.when(s.substr(i, F.lit(1)) == "1", 1).otherwise(-1),
-                )
-                > 0,
-                F.lit("1"),
-            ).otherwise(F.lit("0")),
-        ),
-    )
-
-
-# per-worker token→60-bit-hash memo for simhash_arrow: the token sha is
-# a pure function and corpora repeat a small vocabulary, so one
-# hashlib call per DISTINCT token replaces one interpreted JVM sha2 per
-# token OCCURRENCE (the r7-measured remaining cost of dedup_simhash).
-# Bounded: cleared when it exceeds 1M entries (pathological vocabularies)
-_SIMHASH_TOKEN_MEMO: dict[str, int] = {}
-
-
-def simhash_tokens_udf(num_bits: int = SIMHASH_BITS):
-    """token array → simhash bit string, hashing tokens in Python with a
-    per-worker memo.  VALUE-IDENTICAL to :func:`simhash` /
-    :func:`simhash_arrow` (hashlib sha256 hex == JVM sha2 hex; the
-    first 15 hex chars are the same 60-bit value — asserted in
-    tests/test_minhash_paths.py)."""
-    import hashlib
-
+    plans that stay in whole-stage codegen.  Tokenized JVM-side; the
+    memoized per-distinct-token sha256 (:func:`sha_token_hashes`) and
+    the numpy sign-sum run in the Python batch.  Value-identical to the
+    interpreted-HOF reference in tests/hof_oracles.py (asserted in
+    tests/test_minhash_paths.py), which the DuckDB oracle replicates."""
     from pyspark.sql.types import StringType
 
     def sh_one(tokens) -> str:
         if tokens is None or len(tokens) == 0:
             return "0" * num_bits
-        memo = _SIMHASH_TOKEN_MEMO
-        if len(memo) > 1_000_000:
-            memo.clear()
-        vals = []
-        for t in tokens:
-            v = memo.get(t)
-            if v is None:
-                v = int(hashlib.sha256(t.encode("utf-8")).hexdigest()[:15], 16)
-                memo[t] = v
-            vals.append(v)
-        h = np.array(vals, dtype=np.uint64)
+        h = np.array(sha_token_hashes(tokens, _SIMHASH_TOKEN_MEMO, 15), dtype=np.uint64)
         bits = np.unpackbits(h.astype(">u8").view(np.uint8).reshape(-1, 8), axis=1)
         sums = (2 * bits[:, 64 - num_bits :].astype(np.int64) - 1).sum(axis=0)
         return "".join("1" if v > 0 else "0" for v in sums)
@@ -421,13 +361,7 @@ def simhash_tokens_udf(num_bits: int = SIMHASH_BITS):
     def _impl(s):
         return s.map(sh_one)
 
-    return pandas_udf(_impl, StringType())
-
-
-def simhash_arrow(col, num_bits: int = SIMHASH_BITS):
-    """Fast-path simhash: tokenize JVM-side, per-distinct-token sha256
-    via the memoized Python hasher, numpy sign-sum."""
-    return simhash_tokens_udf(num_bits)(tokenize(col))
+    return pandas_udf(_impl, StringType())(tokenize(col))
 
 
 def hamming_bits(a, b, num_bits: int = SIMHASH_BITS):
@@ -442,61 +376,20 @@ def hamming_bits(a, b, num_bits: int = SIMHASH_BITS):
     )
 
 
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str = "id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    use_arrow: bool = True,
-) -> DataFrame:
-    """Near-dup pairs by simhash: block on 4 x 15-bit bands (any pair with
-    Hamming ≤ 3 over 60 bits must agree exactly on ≥ 1 of 4 bands), then
-    exact Hamming filter.  Both signature paths are value-identical."""
-    sig = simhash_arrow if use_arrow else simhash
-    sh = spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t")), "id").select(
-        "id", sig(F.col("t")).alias("sh")
-    )
-    bands = sh.select(
-        "id",
-        "sh",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(3)),
-                lambda j: F.struct(
-                    j.cast("int").alias("band"),
-                    F.col("sh").substr(j * 15 + 1, F.lit(15)).alias("key"),
-                ),
-            )
-        ).alias("b"),
-    ).select("id", "sh", F.col("b.band").alias("band"), F.col("b.key").alias("key")).transform(materialize)
-    l, r = bands.alias("l"), bands.alias("r")
-    return (
-        l.join(r, on=["band", "key"])
-        .filter(F.col("l.id") < F.col("r.id"))
-        .select(
-            F.col("l.id").alias("a"),
-            F.col("r.id").alias("b"),
-            hamming_bits(F.col("l.sh"), F.col("r.sh")).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
 def simhash_dup_edges(
     df: DataFrame,
     id_col: str = "id",
     text_col: str = "text",
     max_hamming: int = 3,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Verified duplicate-graph star edges for simhash (same O(Σ bucket)
-    rationale as :func:`minhash_dup_edges`): per 15-bit band bucket, link
-    members to the bucket-min-id hub, keep links with Hamming ≤ max."""
-    sig = simhash_arrow if use_arrow else simhash
+    rationale as :func:`minhash_dup_edges`): block on 4 x 15-bit bands
+    (any pair with Hamming ≤ 3 over 60 bits agrees exactly on ≥ 1 of 4
+    bands), link members to the bucket-min-id hub, keep links with
+    Hamming ≤ max."""
     sh = (
         spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t")), "id")
-        .select("id", sig(F.col("t")).alias("sh"))
+        .select("id", simhash_arrow(F.col("t")).alias("sh"))
         .transform(materialize)
     )
     bands = sh.select(
@@ -511,19 +404,8 @@ def simhash_dup_edges(
             )
         ).alias("b"),
     ).select("id", F.col("b.band").alias("band"), F.col("b.key").alias("key"))
-    w = Window.partitionBy("band", "key")
-    edges = (
-        bands.withColumn("hub", F.min("id").over(w))
-        .filter(F.col("id") != F.col("hub"))
-        .select("hub", "id")
-        .distinct()
-    )
-    return (
-        edges.join(sh.select(F.col("id").alias("hub"), F.col("sh").alias("sh_a")), "hub")
-        .join(sh.select(F.col("id").alias("id"), F.col("sh").alias("sh_b")), "id")
-        .withColumn("hamming", hamming_bits(F.col("sh_a"), F.col("sh_b")))
-        .filter(F.col("hamming") <= max_hamming)
-        .select(F.col("hub").alias("a"), F.col("id").alias("b"), "hamming")
+    return _star_edges(bands, "key", sh, "sh", "hamming", hamming_bits).filter(
+        F.col("hamming") <= max_hamming
     )
 
 
@@ -532,25 +414,15 @@ def simhash_dedup(
     id_col: str = "id",
     text_col: str = "text",
     max_hamming: int = 3,
-    exact_pairs: bool = False,
 ) -> DataFrame:
     """df minus simhash near-duplicates (min numeric id kept per
-    component).
-
-    Default: CC over verified star edges — O(Σ bucket), with the same
-    RECALL CAVEAT as :func:`minhash_dup_edges`: a member-member pair
-    with Hamming ≤ max_hamming whose bucket hubs all fail verification
-    is silently missed (each of the 4 bands contributes an independent
-    hub, so misses decay with band count but are not zero).
-
-    ``exact_pairs=True``: CC over the full within-bucket pair set
-    (:func:`simhash_pairs`, O(Σ bucket²)) — every same-band pair with
-    Hamming ≤ max_hamming is linked, the pre-round-2 semantics."""
-    if exact_pairs:
-        pairs = simhash_pairs(df, id_col, text_col, max_hamming)
-    else:
-        pairs = simhash_dup_edges(df, id_col, text_col, max_hamming)
-    return _drop_cc_losers(df, pairs, id_col)
+    component): CC over verified star edges — O(Σ bucket), with the
+    same RECALL CAVEAT as :func:`minhash_dup_edges`: a member-member
+    pair with Hamming ≤ max_hamming whose bucket hubs all fail
+    verification is silently missed (each of the 4 bands contributes an
+    independent hub, so misses decay with band count but are not
+    zero)."""
+    return _drop_cc_losers(df, simhash_dup_edges(df, id_col, text_col, max_hamming), id_col)
 
 
 # ------------------------------------------------------------- ngram jaccard
@@ -769,6 +641,38 @@ def _broadcast_budget(spark) -> int:
     return int(m.group(1)) * {"": 1, "k": 2**10, "m": 2**20, "g": 2**30}[m.group(2)]
 
 
+def _broadcast_pair_score(table: DataFrame, col: str, width: int, dtype, score):
+    """Score column over the (a, b) id columns of a pair frame via a
+    BROADCAST matrix of ``table``'s (id, ``col``) rows, or None when the
+    n×width matrix exceeds :func:`_broadcast_budget` (callers then join
+    the payload onto the pairs instead).
+
+    r7 (guide §8 "decide with small rows, move big rows once", §3.1
+    broadcast-vs-shuffle): the pairs stay two ids wide and the payload
+    ships once per executor instead of twice per pair through id joins.
+    ``score(A, B)`` maps the two ends' row matrices (``dtype``) to a
+    pd.Series; ids resolve by ``searchsorted`` over the id-sorted matrix
+    (a dict ``.map`` was measured as the batch bottleneck at ~16M
+    candidate pairs)."""
+    spark = table.sparkSession
+    if table.count() * width * 8 > _broadcast_budget(spark):
+        return None
+    pdf = table.select("id", col).toPandas()
+    ids = pdf["id"].to_numpy()
+    M = np.stack(pdf[col].map(lambda x: np.asarray(x, dtype=dtype)))
+    order = np.argsort(ids, kind="stable")
+    bc = spark.sparkContext.broadcast((ids[order], M[order]))
+
+    @pandas_udf("double")
+    def _pair_score(a: pd.Series, b: pd.Series) -> pd.Series:
+        sorted_ids, mat = bc.value
+        ia = np.searchsorted(sorted_ids, a.to_numpy())
+        ib = np.searchsorted(sorted_ids, b.to_numpy())
+        return score(mat[ia], mat[ib])
+
+    return _pair_score("a", "b")
+
+
 _PLANES_SEED = 1234
 
 
@@ -814,14 +718,12 @@ def embedding_dup_pairs(
     never enters the exploded-band shuffle (round 1 pushed 4 copies of
     every vector through it and ran distinct() over float-array rows).
 
-    r7 scoring path (guide §8 "decide with small rows, move big rows
-    once", §3.1 broadcast-vs-shuffle): when the whole vector table fits
-    the session's broadcast budget, the candidate pairs are scored by a
-    BROADCAST-MATRIX lookup UDF — the (a, b) id pairs stay two longs
-    wide and the vectors ship ONCE per executor instead of once per
-    pair (the r6 shape shuffled ~2 vector copies per candidate through
-    two id joins: measured 15.2M candidate pairs × 2×64 floats ≈ 8 GB
-    of vector traffic at sf1.0 — 12.4s of the query).  The pre-scoring
+    r7 scoring path: when the whole vector table fits the session's
+    broadcast budget, the candidate pairs are scored against a
+    broadcast vector matrix (:func:`_broadcast_pair_score`; the r6 shape
+    shuffled ~2 vector copies per candidate through two id joins:
+    measured 15.2M candidate pairs × 2×64 floats ≈ 8 GB of vector
+    traffic at sf1.0 — 12.4s of the query).  The pre-scoring
     pair ``distinct`` is dropped on this path: multi-band duplicates
     are scored redundantly (cheap against the broadcast matrix) and
     deduplicated AFTER the threshold filter, when they number in the
@@ -841,33 +743,11 @@ def embedding_dup_pairs(
         .filter(F.col("l.id") < F.col("r.id"))
         .select(F.col("l.id").alias("a"), F.col("r.id").alias("b"))
     )
-    spark = df.sparkSession
-    n_vecs = base.count()  # base is materialized — a cheap metadata-ish job
-    if n_vecs * dim * 8 <= _broadcast_budget(spark):
-        pdf = base.select("id", "v").toPandas()
-        ids = pdf["id"].to_numpy()
-        # same conversion cosine_arrow performs: asarray(float64) row-wise
-        M = np.stack(pdf["v"].map(lambda x: np.asarray(x, dtype=np.float64)))
-        order = np.argsort(ids, kind="stable")
-        bc = spark.sparkContext.broadcast((ids[order], M[order]))
-
-        @pandas_udf("double")
-        def cos_lookup(a: pd.Series, b: pd.Series) -> pd.Series:
-            sorted_ids, mat = bc.value
-            # vectorized id→row resolution (a dict .map here was measured
-            # as the batch bottleneck at ~16M candidate pairs)
-            ia = np.searchsorted(sorted_ids, a.to_numpy())
-            ib = np.searchsorted(sorted_ids, b.to_numpy())
-            A, B = mat[ia], mat[ib]
-            # EXACT replica of cosine_arrow's arithmetic (same dtypes,
-            # same pairwise axis-1 sums, same zero-norm NULL handling)
-            num = (A * B).sum(axis=1)
-            den = np.sqrt((A * A).sum(axis=1)) * np.sqrt((B * B).sum(axis=1))
-            out = np.where(den > 0, num / np.where(den > 0, den, 1.0), np.nan)
-            return pd.Series(out).where(den > 0, other=None)
-
+    # the same float64 rows and cosine_rows arithmetic as cosine_arrow
+    cos = _broadcast_pair_score(base, "v", dim, np.float64, cosine_rows)
+    if cos is not None:
         return (
-            cand.withColumn("cos", cos_lookup("a", "b"))
+            cand.withColumn("cos", cos)
             .filter(F.col("cos") >= threshold)
             .dropDuplicates(["a", "b"])
             .select("a", "b", F.round("cos", 6).alias("cos"))

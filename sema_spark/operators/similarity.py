@@ -24,10 +24,6 @@ from sema_spark.functions.vector import cosine_fold_arrow, cosine_literal_fold
 from sema_spark.operators.dedup import hyperplane_sketch
 
 
-def _qlit(qvec: list[float]):
-    return F.array(*[F.lit(float(x)) for x in qvec])
-
-
 def cosine_topk(
     df: DataFrame, qvec: list[float], k: int = 10, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:

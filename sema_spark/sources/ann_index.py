@@ -50,7 +50,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sema_spark.operators.clustering import _assign_udf, kmeans_fit
+from sema_spark.operators.clustering import _assign_udf, kmeans_fit, probe_cells
 
 # Deleted-file liveness sentinel: a filestate entry at this gen kills
 # every chunk generation of its (repo, path).
@@ -279,9 +279,9 @@ def ivf_stored_topk(
 ) -> DataFrame:
     """Top-k cosine over the stored index — no quantizer retrain.
 
-    Probe selection is squared-L2 against the collected centroids on
-    the driver (identical to ivf_kmeans_topk's, so results match the
-    in-plan operator bit-for-bit); the scan reads only the probed
+    Probe selection is :func:`clustering.probe_cells` over the collected
+    centroids (the in-plan operator's rule, so results match it
+    bit-for-bit); the scan reads only the probed
     cluster partitions (PartitionFilters, not a post-scan filter).
     Scores are the sequential-fold cosine rounded at 6 with id
     tiebreaks — the same contract the python oracle replicates (the r7
@@ -290,10 +290,7 @@ def ivf_stored_topk(
     """
     from sema_spark.functions.vector import cosine_literal_fold
 
-    cents = load_centroids(spark, index_dir)
-    q = np.asarray(qvec, dtype=np.float64)
-    dist = ((cents - q[None, :]) ** 2).sum(axis=1)
-    probe = [int(x) for x in np.argsort(dist, kind="stable")[:probes]]
+    probe = probe_cells(load_centroids(spark, index_dir), qvec, probes)
     return (
         spark.read.parquet(f"{index_dir}/vectors")
         .where(F.col("cluster").isin(probe))
@@ -748,11 +745,7 @@ def semantic_search_ann(
     from sema_spark.functions.encoder import encode_query
     from sema_spark.plans.pipeline import semantic_search
 
-    rows = spark.read.parquet(f"{index_dir}/centroids").orderBy("cluster").collect()
-    cents = np.stack([np.asarray(r.centroid, dtype=np.float64) for r in rows])
-    q = np.asarray(encode_query(query), dtype=np.float64)
-    dist = ((cents - q[None, :]) ** 2).sum(axis=1)
-    probe = [int(x) for x in np.argsort(dist, kind="stable")[:probes]]
+    probe = probe_cells(load_centroids(spark, index_dir), encode_query(query), probes)
     cand = spark.read.parquet(f"{index_dir}/chunks").where(
         F.col("cluster").isin(probe)
     )

@@ -1,16 +1,15 @@
 import pytest
+from hof_oracles import minhash_signature, simhash
 from pyspark.sql import functions as F
 
 from sema_spark.operators.dedup import (
     embedding_dup_pairs,
     exact_dedup,
-    exact_dup_groups,
     minhash_candidate_pairs,
     minhash_dedup,
     ngram_jaccard_pairs,
-    simhash,
     simhash_dedup,
-    simhash_pairs,
+    simhash_dup_edges,
 )
 
 BASE = "the quick brown fox jumps over the lazy dog while the cat sleeps near the warm fire"
@@ -34,8 +33,8 @@ def test_exact_dedup(spark, docs):
     ids = {r.id for r in kept.select("id").collect()}
     assert 0 in ids and 1 not in ids and 2 not in ids
     assert {3, 4, 5} <= ids
-    groups = exact_dup_groups(docs).collect()
-    assert len(groups) == 1 and groups[0].group_size == 3 and groups[0].canonical_id == 0
+    sizes = {r.id: r.group_size for r in kept.select("id", "group_size").collect()}
+    assert sizes[0] == 3 and sizes[3] == 1
 
 
 def test_minhash_candidates_and_dedup(spark, docs):
@@ -60,7 +59,8 @@ def test_simhash_blocking(spark):
     docs = spark.createDataFrame(rows, "id long, text string")
     sh = {r.id: r.s for r in docs.select("id", simhash(F.col("text")).alias("s")).collect()}
     assert sh[0] == sh[1]
-    pairs = {(r.a, r.b): r.hamming for r in simhash_pairs(docs, max_hamming=3).collect()}
+    # star edges: 0 is the min-id hub of every bucket 1 and 2 share with it
+    pairs = {(r.a, r.b): r.hamming for r in simhash_dup_edges(docs, max_hamming=3).collect()}
     assert pairs[(0, 1)] == 0
     assert (0, 2) in pairs and pairs[(0, 2)] <= 3
     assert not any(3 in p for p in pairs)
@@ -115,25 +115,6 @@ def test_dedup_negative_ids_keep_numeric_min(spark):
 def test_minhash_dedup_exact_pairs_mode(spark, docs):
     kept = {r.id for r in minhash_dedup(docs, threshold=0.5, exact_pairs=True).select("id").collect()}
     assert kept == {0, 4, 5}
-
-
-def test_simhash_dedup_exact_pairs_mode(spark):
-    """exact_pairs=True links every same-band pair with Hamming ≤ max
-    (full within-bucket semantics), mirroring minhash_dedup's option."""
-    rows = [
-        (0, BASE),
-        (1, BASE),
-        (2, BASE + " extra tail words appended here"),
-        (3, "totally unrelated content entirely different words"),
-    ]
-    docs = spark.createDataFrame(rows, "id long, text string")
-    kept_star = {r.id for r in simhash_dedup(docs, max_hamming=3).select("id").collect()}
-    kept_exact = {r.id for r in simhash_dedup(docs, max_hamming=3, exact_pairs=True).select("id").collect()}
-    # on this corpus both modes agree (hub links verify); exact mode may
-    # only ever link MORE pairs, never fewer.  Doc 2's appended tail
-    # flips > 3 bits, so only the exact dup (1) collapses into 0.
-    assert kept_exact <= kept_star
-    assert kept_exact == {0, 2, 3}
 
 
 def test_ngram_two_paths_agree(spark, docs):
@@ -205,17 +186,17 @@ def test_numeric_cc_matches_string_cc(spark):
 
 def test_sha_signature_memo_path_value_identical(spark):
     """r7: the memoized-Python sha base path must produce the identical
-    signatures as the JVM sha base (HOF and hash-UDF forms)."""
+    signatures as the JVM sha base of the interpreted-HOF reference."""
     from pyspark.sql import functions as F
 
-    from sema_spark.functions.minhash import minhash_signature, tokenize, with_minhash
+    from sema_spark.functions.minhash import tokenize, with_minhash
 
     docs = spark.createDataFrame(
         [(i, f"alpha beta_{i % 7} gamma DELTA_{i % 3} é中 x") for i in range(40)]
         + [(99, ""), (100, None)],
         "id long, content string",
     )
-    fast = with_minhash(docs, use_arrow=True, base="sha").select("id", "mh_sig")
+    fast = with_minhash(docs, base="sha").select("id", "mh_sig")
     slow = docs.withColumn("mh_sig", minhash_signature(tokenize(F.col("content")), base="sha")).select(
         "id", "mh_sig"
     )

@@ -1,13 +1,15 @@
-"""Both minhash signature paths (built-in HOF and the Arrow/numpy
-hybrid) must produce IDENTICAL signature values — the base hash is the
-same JVM-side xxhash64 pass, so flipping paths can never change dedup
-results.  Same contract for the two simhash paths."""
+"""The production Arrow/numpy minhash signatures must be IDENTICAL to
+the interpreted-HOF reference (tests/hof_oracles.py) — the base hash is
+the same JVM-side xxhash64 pass (or the same sha256-derived value), so
+the two can never disagree on dedup results.  Same contract for
+simhash, the agreement-rate estimate and the broadcast pair scorers."""
 
 import pytest
+from hof_oracles import estimated_jaccard, minhash_signature, simhash
 from pyspark.sql import functions as F
 
-from sema_spark.functions.minhash import estimated_jaccard, with_minhash
-from sema_spark.operators.dedup import simhash, simhash_arrow
+from sema_spark.functions.minhash import tokenize, with_minhash
+from sema_spark.operators.dedup import simhash_arrow
 
 ROWS = [
     ("a", "the quick brown fox jumps over the lazy dog"),
@@ -24,10 +26,19 @@ def docs(spark):
     return spark.createDataFrame(ROWS, "id string, content string")
 
 
-@pytest.mark.parametrize("use_arrow", [False, True])
-def test_minhash_contract(spark, docs, use_arrow):
-    out = with_minhash(docs, use_arrow=use_arrow)
-    sigs = {r.id: r.mh_sig for r in out.select("id", "mh_sig").collect()}
+def _signatures(docs, arrow: bool, base: str = "xxhash64") -> dict:
+    """{id: mh_sig} from the production Arrow ``with_minhash`` or, with
+    ``arrow=False``, the interpreted-HOF reference."""
+    if arrow:
+        out = with_minhash(docs, base=base)
+    else:
+        out = docs.withColumn("mh_sig", minhash_signature(tokenize("content"), base=base))
+    return {r.id: r.mh_sig for r in out.select("id", "mh_sig").collect()}
+
+
+@pytest.mark.parametrize("arrow", [False, True])
+def test_minhash_contract(spark, docs, arrow):
+    sigs = _signatures(docs, arrow)
     assert sigs["a"] == sigs["b"]  # identical sets → identical signatures
     assert all(len(s) == 64 for s in sigs.values())
     paired = spark.createDataFrame(
@@ -36,29 +47,27 @@ def test_minhash_contract(spark, docs, use_arrow):
     jac = [r.j for r in paired.select(estimated_jaccard("x", "y").alias("j")).collect()]
     assert jac[0] > 0.6 and jac[1] < 0.2
     # determinism across invocations
-    again = {r.id: r.mh_sig for r in with_minhash(docs, use_arrow=use_arrow).select("id", "mh_sig").collect()}
-    assert again == sigs
+    assert _signatures(docs, arrow) == sigs
 
 
 def test_minhash_paths_value_identical(spark, docs):
-    hof = {r.id: r.mh_sig for r in with_minhash(docs, use_arrow=False).select("id", "mh_sig").collect()}
-    arrow = {r.id: r.mh_sig for r in with_minhash(docs, use_arrow=True).select("id", "mh_sig").collect()}
-    assert hof == arrow
+    assert _signatures(docs, False) == _signatures(docs, True)
 
 
 def test_minhash_sha_base(spark, docs):
-    """sha base: both paths identical to each other AND to a pure-Python
-    recomputation of the sha256-derived base hash + permutation grid
-    (the arithmetic the DuckDB dedup_minhash_sha oracle replicates)."""
+    """sha base: production and reference identical to each other AND
+    to a pure-Python recomputation of the sha256-derived base hash +
+    permutation grid (the arithmetic the DuckDB dedup_minhash_sha
+    oracle replicates)."""
     import hashlib
 
     from sema_spark.functions.minhash import _coefficients
 
-    hof = {r.id: r.mh_sig for r in with_minhash(docs, use_arrow=False, base="sha").select("id", "mh_sig").collect()}
-    arrow = {r.id: r.mh_sig for r in with_minhash(docs, use_arrow=True, base="sha").select("id", "mh_sig").collect()}
+    hof = _signatures(docs, False, base="sha")
+    arrow = _signatures(docs, True, base="sha")
     assert hof == arrow
     # sha base must differ from xxhash64 base (it's a different hash)
-    xx = {r.id: r.mh_sig for r in with_minhash(docs, use_arrow=True).select("id", "mh_sig").collect()}
+    xx = _signatures(docs, True)
     assert hof["a"] != xx["a"]
 
     P, H = (1 << 61) - 1, 1 << 31
@@ -90,7 +99,7 @@ def test_estimated_jaccard_arrow_value_identical(spark):
 
     from pyspark.sql import functions as F
 
-    from sema_spark.functions.minhash import estimated_jaccard, estimated_jaccard_arrow
+    from sema_spark.functions.minhash import estimated_jaccard_arrow
 
     rng = random.Random(5)
     rows = []
@@ -120,6 +129,9 @@ def test_embedding_dup_pairs_broadcast_equals_join_path(spark):
     rows = [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(120)]
     # planted near-dups
     rows += [(1000 + i, [x * 1.001 for x in rows[i][1]]) for i in range(10)]
+    # two all-zero vectors: both sketch to 0, so they are a candidate
+    # pair whose zero-norm cosine is NULL on both scoring paths
+    rows += [(2000, [0.0] * 16), (2001, [0.0] * 16)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     fast = {
         (r.a, r.b): r.cos
@@ -135,3 +147,4 @@ def test_embedding_dup_pairs_broadcast_equals_join_path(spark):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert fast == slow and len(fast) >= 10
+    assert not any({2000, 2001} & {a, b} for a, b in fast)

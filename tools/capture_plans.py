@@ -4,12 +4,24 @@ Usage: python tools/capture_plans.py <tag> <suffix> [query ...]
 Writes plans/<tag>/<query>_<suffix>.txt for each query (default: all
 bench queries).  Used for the r07 optimization evidence files
 (plans/r07/<query>_before.txt / _after.txt).
+
+Expression ids (``#123``) and ``plan_id=`` tags are per-session
+counters, so they are stripped: two captures of an unchanged plan diff
+empty, which makes ``diff -r`` a plan-identity check for refactors.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
+
+_VOLATILE = re.compile(r"#\d+L?|,? ?plan_id=\d+")
+
+
+def normalize(plan: str) -> str:
+    """Drop the session-local expression ids and plan ids."""
+    return _VOLATILE.sub("", plan)
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -38,7 +50,7 @@ def main() -> int:
         except Exception as e:  # capture the failure instead of dying
             plan = f"EXPLAIN FAILED: {e!r}"
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
-            f.write(plan)
+            f.write(normalize(plan))
         print(f"wrote {name}_{suffix}.txt")
     return 0
 
