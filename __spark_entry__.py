@@ -81,6 +81,26 @@ def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _keyed_dir(root: str, path: str, tag: str) -> str:
+    """``root``/<sig> for a stored index or expected-parquet set, KEYED by
+    the input table's identity (realpath, mtime, size) + ``tag`` (the
+    params): a rebuilt testdata dir or a different scale never reuses a
+    stale build, and every grading scale gets its OWN dir.  The r5
+    version wrote one shared set guarded by a sidecar: oracle_sql()
+    unconditionally re-ensured sf0.01 while the queries ensured whatever
+    sf they ran at, so at a non-pinned grading scale whichever ran second
+    clobbered the other (order-dependent false fails — the r5 ADVICE
+    item).  With keyed dirs the writes coexist; nothing overwrites
+    anything."""
+    import hashlib
+
+    st = _os.stat(path)
+    sig = hashlib.sha1(
+        f"{_os.path.realpath(path)}|{st.st_mtime_ns}|{st.st_size}|{tag}".encode()
+    ).hexdigest()[:16]
+    return f"{root}/{sig}"
+
+
 # ---------------------------------------------------------------- flagship
 def entry(spark: SparkSession) -> DataFrame:
     """Keyword search over sf0.001 documents: tokenize → posting join →
@@ -480,16 +500,11 @@ def q_j4_connected_components(spark, sf):
     )
     # source = src{doc_id % 20} in the test data → link doc to the next
     # doc of the same source (id+20) to get real multi-node components
-    # zero-pad: CC's min-id canonical is lexicographic on strings; padding
-    # makes it agree with the oracle's numeric min
-    pad = lambda c: F.lpad(c.cast("string"), 8, "0")
     edges = docs.join(
         nxt, (F.col("source") == F.col("s2")) & (F.col("b_id") == F.col("doc_id") + 20)
-    ).select(pad(F.col("doc_id")).alias("a"), pad(F.col("b_id")).alias("b"))
+    ).select(F.col("doc_id").alias("a"), F.col("b_id").alias("b"))
     comp = connected_components(edges)
-    return comp.select(
-        F.col("id").cast("long").alias("doc_id"), F.col("component").cast("long").alias("component")
-    )
+    return comp.select(F.col("id").alias("doc_id"), "component")
 
 
 def q_set_except(spark, sf):
@@ -801,15 +816,8 @@ def q_ann_lsh_stored_topk(spark, sf):
         lsh_stored_topk,
     )
 
-    import hashlib
-
     emb = _augmented_embeddings(spark, sf)
-    path = f"{sf}/embeddings.parquet"
-    st = _os.stat(path)
-    sig = hashlib.sha1(
-        f"{_os.path.realpath(path)}|{st.st_mtime_ns}|{st.st_size}|aug_lsh_d64b8_v1".encode()
-    ).hexdigest()[:16]
-    idx = f"/tmp/sema_lsh_index/{sig}"
+    idx = _keyed_dir("/tmp/sema_lsh_index", f"{sf}/embeddings.parquet", "aug_lsh_d64b8_v1")
     if not lsh_index_ready(idx):
         build_lsh_stored_index(
             emb.where(F.col("vec_id") % 2 == 0), idx, dim=64, num_bits=8
@@ -1135,26 +1143,6 @@ def q_bpe_token_counts(spark, sf):
     )
 
 
-def _kmeans_expected_dir(sf: str) -> str:
-    """Expected-parquet location for the kmeans/IVF family, KEYED by the
-    embeddings-file signature + params so every grading scale gets its
-    OWN file set.  The r5 version wrote one shared set guarded by a
-    sidecar: oracle_sql() unconditionally re-ensured sf0.01 while the
-    queries ensured whatever sf they ran at, so at a non-pinned grading
-    scale whichever ran second clobbered the other (order-dependent
-    false fails — the r5 ADVICE item).  With keyed dirs the two writes
-    coexist; nothing overwrites anything."""
-    import hashlib
-
-    path = f"{sf}/embeddings.parquet"
-    st = _os.stat(path)
-    sig = hashlib.sha1(
-        f"{_os.path.realpath(path)}|{st.st_mtime_ns}|{st.st_size}|"
-        f"k8_i5__ivf_i3_p2_q0__incr_half".encode()
-    ).hexdigest()[:16]
-    return f"/tmp/sema_expected_kmeans/{sig}"
-
-
 def _ensure_kmeans_expected(sf: str) -> str:
     """Write the kmeans/IVF expected parquet for THE SCALE THE QUERY
     RUNS AT into its signature-keyed dir (memoized by a done-marker —
@@ -1162,7 +1150,9 @@ def _ensure_kmeans_expected(sf: str) -> str:
     dir."""
     from sema_spark.operators.clustering import write_expected_kmeans
 
-    d = _kmeans_expected_dir(sf)
+    d = _keyed_dir(
+        "/tmp/sema_expected_kmeans", f"{sf}/embeddings.parquet", "k8_i5__ivf_i3_p2_q0__incr_half"
+    )
     if not _os.path.exists(f"{d}/.done"):
         _os.makedirs(d, exist_ok=True)
         write_expected_kmeans(d, f"{sf}/embeddings.parquet", 8, 5)
@@ -1202,18 +1192,10 @@ def q_ann_ivf_kmeans_topk(spark, sf):
 
 def _ivf_index_dir(sf: str) -> str:
     """Stored-index location keyed by the embeddings file identity +
-    quantizer params: a rebuilt testdata dir or different scale can
-    never silently reuse a stale index; the SAME table re-queried
+    quantizer params (:func:`_keyed_dir`): the SAME table re-queried
     reuses the stored build (the amortization the stored form exists
     for)."""
-    import hashlib
-
-    path = f"{sf}/embeddings.parquet"
-    st = _os.stat(path)
-    sig = hashlib.sha1(
-        f"{_os.path.realpath(path)}|{st.st_mtime_ns}|{st.st_size}|k8_i3_v2".encode()
-    ).hexdigest()[:16]
-    return f"/tmp/sema_ivf_index/{sig}"
+    return _keyed_dir("/tmp/sema_ivf_index", f"{sf}/embeddings.parquet", "k8_i3_v2")
 
 
 def q_ann_ivf_stored_topk(spark, sf):
@@ -1337,19 +1319,6 @@ def q_semantic_search(spark, sf):
     return out.select("path", "start_line", F.round("score", 4).alias("score"), "matches_in_file")
 
 
-def _semantic_index_dir(sf: str) -> str:
-    """Stored semantic-index location, keyed by the documents table's
-    identity (same discipline as _ivf_index_dir)."""
-    import hashlib
-
-    path = f"{sf}/documents.parquet"
-    st = _os.stat(path)
-    sig = hashlib.sha1(
-        f"{_os.path.realpath(path)}|{st.st_mtime_ns}|{st.st_size}|chunks_v3".encode()
-    ).hexdigest()[:16]
-    return f"/tmp/sema_semantic_index/{sig}"
-
-
 def q_semantic_search_stored(spark, sf):
     """Entry point B served from the PERSISTED chunk-embedding index —
     the reference's real serving path (lance_indexer.rs:30-163 +
@@ -1374,7 +1343,7 @@ def q_semantic_search_stored(spark, sf):
         F.col("doc_id").cast("string").alias("path"),
         F.col("text").alias("content"),
     )
-    idx = _semantic_index_dir(sf)
+    idx = _keyed_dir("/tmp/sema_semantic_index", f"{sf}/documents.parquet", "chunks_v3")
     if not semantic_index_ready(idx):
         build_semantic_index(
             docs.where(F.col("path").cast("long") % 2 == 0), idx
@@ -1408,14 +1377,7 @@ def q_semantic_search_ann(spark, sf):
         F.col("doc_id").cast("string").alias("path"),
         F.col("text").alias("content"),
     )
-    import hashlib
-
-    p = f"{sf}/documents.parquet"
-    st = _os.stat(p)
-    sig = hashlib.sha1(
-        f"{_os.path.realpath(p)}|{st.st_mtime_ns}|{st.st_size}|semann_v1".encode()
-    ).hexdigest()[:16]
-    idx = f"/tmp/sema_semantic_ann/{sig}"
+    idx = _keyed_dir("/tmp/sema_semantic_ann", f"{sf}/documents.parquet", "semann_v1")
     if not semantic_ann_ready(idx):
         build_semantic_ann_index(docs, idx, n_clusters=8, iterations=3)
     out = semantic_search_ann(

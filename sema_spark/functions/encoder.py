@@ -55,7 +55,8 @@ def encode_numpy(text: str | None) -> np.ndarray:
 
 def encode_batch_numpy(texts) -> np.ndarray:
     """Whole-batch encoder, VALUE-IDENTICAL to a per-row
-    :func:`encode_numpy` loop (asserted in tests/test_encoder_parity.py)
+    :func:`encode_numpy` loop (asserted in
+    tests/test_vector_fold.py::test_encode_batch_matches_per_row)
     but vectorized across rows — the per-row path was the measured
     hotspot of u1_encoder / semantic_index_build (one ``np.add.at`` +
     two tiny array allocations per document).
@@ -124,71 +125,6 @@ def encode_text(s: pd.Series) -> pd.Series:
 
 def with_embedding(df, text_col: str = "content", out_col: str = "embedding"):
     return df.withColumn(out_col, encode_text(F.col(text_col)))
-
-
-# ---------------------------------------------------------------------------
-# mapInArrow encoder with the PRODUCTION model-object lifecycle.  This is
-# the slot a real MiniLM ONNX session plugs into
-# (/root/reference/src/semantic/embeddings.rs:93-103): an expensive
-# model object loaded ONCE per worker process (lazy module-level
-# singleton — the reference reloads per batch,
-# /root/reference/src/storage/lance_indexer.rs:60-73), fed bounded
-# sub-batches so peak memory is model + batch_rows rows regardless of
-# Arrow batch size.  The "weights" here are the deterministic hashing
-# encoder, so outputs are value-identical to encode_text (tested).
-
-
-class _EncoderModel:
-    """Stand-in for an ONNX session: expensive to construct, cheap to
-    call, must be reused across batches.  ``loads`` counts constructions
-    so tests can assert the once-per-worker lifecycle."""
-
-    loads = 0
-
-    def __init__(self) -> None:
-        type(self).loads += 1
-        self.dim = EMBEDDING_DIM
-
-    def encode_batch(self, texts: list[str | None]) -> np.ndarray:
-        return encode_batch_numpy(texts)  # value-identical to per-row encode_numpy
-
-
-_MODEL: _EncoderModel | None = None
-
-
-def _get_model() -> _EncoderModel:
-    global _MODEL
-    if _MODEL is None:
-        _MODEL = _EncoderModel()
-    return _MODEL
-
-
-def encode_with_model(df, text_col: str = "content", out_col: str = "embedding", batch_rows: int = 1024):
-    """Append an embedding column via ``mapInArrow`` with load-once model
-    lifecycle and explicit inference batch sizing."""
-    import pyarrow as pa
-
-    from pyspark.sql.types import StructField, StructType
-
-    names = df.schema.names
-    out_schema = StructType(list(df.schema.fields) + [StructField(out_col, ArrayType(FloatType()))])
-
-    def run(batches):
-        model = _get_model()  # loaded once per worker process, not per batch
-        for batch in batches:
-            texts = batch.column(names.index(text_col)).to_pylist()
-            chunks = [
-                model.encode_batch(texts[i : i + batch_rows])
-                for i in range(0, len(texts), batch_rows)
-            ]
-            vecs = [v.tolist() for c in chunks for v in c]
-            emb = pa.array(vecs, type=pa.list_(pa.float32()))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(batch.num_columns)] + [emb],
-                names=names + [out_col],
-            )
-
-    return df.mapInArrow(run, schema=out_schema)
 
 
 def encode_query(text: str) -> list[float]:

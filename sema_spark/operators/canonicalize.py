@@ -7,22 +7,28 @@ Generalizes the reference's exact-hash identity dedup
 key — ``content_sha`` for file entities, ``content_sha#normalized(symbol)``
 for symbol entities — and transitively closed into components.
 
-Connected components is label propagation with **pointer jumping**:
-each iteration does (1) a 1-hop min-propagation over edges and (2) a
-path-halving step comp(v) ← comp(comp(v)), giving O(log diameter)
-iterations instead of O(diameter) — a 25-node chain converges in ~5
-rounds, not 25.  Every iteration ends in an eager ``localCheckpoint`` to
-cut the lineage chain (iterative Catalyst plans otherwise grow without
-bound), and convergence is detected by a bit_xor fingerprint of the
-assignment (one cheap agg on checkpointed data, no extra join).  A
-GraphFrames ``connectedComponents`` drop-in is noted for clusters that
-ship it.
+:func:`connected_components` is the one CC operator, over ids of any
+one orderable type (component = min id), in two tiers.  Graphs within
+the driver budget are solved on the driver by vectorized numpy
+min-label propagation.  Larger ones run distributed label propagation
+with **pointer jumping**: each iteration does (1) a 1-hop
+min-propagation over edges and (2) a path-halving step
+comp(v) ← comp(comp(v)), giving O(log diameter) iterations instead of
+O(diameter) — a 25-node chain converges in ~5 rounds, not 25.  Every
+iteration ends in an eager ``localCheckpoint`` to cut the lineage chain
+(iterative Catalyst plans otherwise grow without bound), and
+convergence is detected by a bit_xor fingerprint of the assignment
+(one cheap agg on checkpointed data, no extra join).  A GraphFrames
+``connectedComponents`` drop-in is noted for clusters that ship it.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from sema_spark.plans.materialize import materialize
 
 
@@ -56,9 +62,9 @@ def _contract(e: DataFrame, rounds: int = 2):
 
 
 def driver_cc_budget(spark) -> int:
-    """Edge count the union-find tier may pull to the driver, scaled
+    """Edge count of string ids the driver CC tier may pull, scaled
     from spark.driver.memory instead of a fixed constant: the Arrow
-    frame + parent dict cost ~0.5 KB/edge of string ids, and the budget
+    frame + object arrays cost ~0.5 KB/edge of string ids, and the budget
     must never eat more than ~1/4 of the heap (the rest is the driver's
     normal working set).  Bounds: [100k, 64M]."""
     import re
@@ -75,62 +81,64 @@ def driver_cc_budget(spark) -> int:
     return max(100_000, min(64_000_000, nbytes // 4 // 512))
 
 
-def _driver_cc(spark, e: DataFrame) -> DataFrame:
-    """Union-find on the driver — for edge sets that fit trivially in
-    driver memory this beats the iterative-join path by ~10x wall clock
-    (each distributed iteration costs scheduler round-trips regardless
-    of data size).  The distributed path remains for graphs that don't."""
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        parent.setdefault(x, x)
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    pdf = e.toPandas()  # Arrow transfer — toLocalIterator's py4j row
-    # stream measured ~10s for 2M edges; this is sub-second
-    for a, b in zip(pdf.iloc[:, 0].to_numpy(), pdf.iloc[:, 1].to_numpy()):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            if rb < ra:
-                ra, rb = rb, ra
-            parent[rb] = ra
-    import pandas as pd
-
-    # Arrow path back up (r7): createDataFrame over a pandas frame rides
-    # spark.sql.execution.arrow.pyspark.enabled — the list-of-tuples
-    # form pickled every row through the RDD path (measured seconds at
-    # 10^5 nodes, the dominant cost of the driver CC tier)
-    nodes = list(parent)
-    return spark.createDataFrame(
-        pd.DataFrame({"id": nodes, "component": [find(n) for n in nodes]}),
-        schema="id string, component string",
-    )
+def _driver_tier(spark, e: DataFrame) -> DataFrame:
+    """Vectorized min-label propagation + pointer jumping on the driver
+    — for edge sets that fit trivially in driver memory this beats the
+    iterative-join path by ~10x wall clock (each distributed iteration
+    costs scheduler round-trips regardless of data size).  Nodes are
+    indexed into the ascending unique-id array, so label minimality IS
+    id minimality under the type's own order and every node's fixpoint
+    label is its component's min.  Each round is a few numpy passes over
+    the edges; dense duplicate graphs converge in 2-3 rounds."""
+    # Arrow transfer both ways — toLocalIterator's py4j row stream and
+    # createDataFrame over tuples each measured seconds at 10^5-10^6 rows
+    pdf = e.toPandas()
+    a, b = pdf["a"].to_numpy(), pdf["b"].to_numpy()
+    # sort=True orders strings by code point = Spark's binary string order
+    codes, nodes = pd.factorize(np.concatenate([a, b]), sort=True)
+    ea, eb = codes[: len(a)], codes[len(a) :]
+    lab = np.arange(len(nodes), dtype=np.int64)
+    while True:
+        m = np.minimum(lab[ea], lab[eb])
+        new = lab.copy()
+        np.minimum.at(new, ea, m)
+        np.minimum.at(new, eb, m)
+        for _ in range(3):  # pointer jumping (path halving)
+            new = np.minimum(new, new[new])
+        if np.array_equal(new, lab):
+            break
+        lab = new
+    t = e.schema["a"].dataType
+    schema = T.StructType([T.StructField("id", t), T.StructField("component", t)])
+    return spark.createDataFrame(pd.DataFrame({"id": nodes, "component": nodes[lab]}), schema)
 
 
 def connected_components(
     edges: DataFrame, max_iter: int = 25, driver_max_edges: int | None = None
 ) -> DataFrame:
-    """edges(a string, b string) → (id string, component string).
+    """edges(a, b) → (id, component), ids of one orderable type (string,
+    int or long) and the output of that same type.
 
-    Component id = lexicographic min node id in the component.
-    Includes singleton handling for any id appearing in edges.
-    Hybrid execution: small edge sets union-find on the driver (budget
-    scaled from spark.driver.memory; pass driver_max_edges=0 to force
-    the distributed path); larger ones run min-label contraction +
-    pointer-jumping label propagation.
+    Component id = the min node id in the component under the type's
+    order: numeric min for int/long ids, binary (code-point) min for
+    strings — so numeric ids need no order-preserving string encoding.
+    Every id appearing in a non-loop edge gets exactly one row.
+    Two tiers: edge sets within the driver budget
+    (:func:`driver_cc_budget`, ×16 for integral ids, whose Arrow
+    columns are 8 B/id instead of ~0.5 KB of strings) solve by
+    vectorized propagation on the driver; larger ones run min-label
+    contraction + pointer-jumping label propagation.  Pass
+    driver_max_edges=0 to force the distributed tier.
     """
     if driver_max_edges is None:
         driver_max_edges = driver_cc_budget(edges.sparkSession)
+        if isinstance(edges.schema["a"].dataType, T.IntegralType):
+            driver_max_edges *= 16
     if driver_max_edges:
         e_simple = edges.filter(F.col("a") != F.col("b")).persist()
         n_edges = e_simple.count()
         if n_edges <= driver_max_edges:
-            out = _driver_cc(edges.sparkSession, e_simple)
+            out = _driver_tier(edges.sparkSession, e_simple)
             e_simple.unpersist()
             return out
         e_simple.unpersist()

@@ -18,10 +18,12 @@ shuffle-conscious:
   using random-hyperplane sign-sketch blocking + exact cosine re-rank.
 
 At 100 TB: every strategy is (blocking-key shuffle) + (bounded local
-pair-gen) + (CC on the tiny duplicate-edge graph); none materializes the
-N² pair space.  Giant buckets (boilerplate text) are capped by
-``max_bucket``, the standard recall/cost dial; the rows the cap drops
-are not yet counted or reported.
+pair-gen) + (CC on the tiny duplicate-edge graph: the one
+:func:`connected_components` over the long ids, numeric min-id
+survivor); none materializes the N² pair space.  Giant buckets
+(boilerplate text) are capped by ``max_bucket``, the standard
+recall/cost dial; the rows the cap drops are not yet counted or
+reported.
 
 Each operator has one production path.  Signatures, sketches and pair
 scores are Arrow-batched numpy; the interpreted-HOF references they
@@ -175,73 +177,15 @@ def minhash_candidate_pairs(
     )
 
 
-def _numeric_cc_losers(spark, pdf: pd.DataFrame) -> np.ndarray:
-    """Component non-minima of an int64 edge list, via vectorized
-    min-label propagation + pointer jumping on the driver.  Labels are
-    indices into the ASCENDING-unique node array, so index minimality
-    IS numeric minimality and the fixpoint label of every node is its
-    component's min — the same survivor the string CC's lexicographic
-    min (over order-preserving encodings) picks.  Each round is a few
-    numpy passes over the edges; dense duplicate graphs converge in 2-3
-    rounds (vs ~60s of distributed CC at 26M edges)."""
-    a = pdf.iloc[:, 0].to_numpy(dtype=np.int64)
-    b = pdf.iloc[:, 1].to_numpy(dtype=np.int64)
-    nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
-    ea, eb = inv[: len(a)], inv[len(a) :]
-    lab = np.arange(len(nodes), dtype=np.int64)
-    while True:
-        m = np.minimum(lab[ea], lab[eb])
-        new = lab.copy()
-        np.minimum.at(new, ea, m)
-        np.minimum.at(new, eb, m)
-        for _ in range(3):  # pointer jumping (path halving)
-            new = np.minimum(new, new[new])
-        if np.array_equal(new, lab):
-            break
-        lab = new
-    return nodes[lab != np.arange(len(nodes), dtype=np.int64)]
-
-
 def _drop_cc_losers(df: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
-    """Remove every non-survivor of the duplicate-pair graph from df.
-
-    r7 fast path: duplicate-pair ids here are NUMERIC, so when the edge
-    list fits the driver budget (int64 pairs are 16 B vs ~0.5 KB of
-    encoded strings — the budget scales accordingly) the components are
-    solved by :func:`_numeric_cc_losers`; equality with the string CC
-    is pinned by tests/test_dedup.py::test_numeric_cc_matches_string_cc.
-
-    String path (bigger graphs): connected_components picks the
-    LEXICOGRAPHIC min string as the representative, so ids are encoded
-    order-preservingly first: offset by 2^63 into unsigned (exact
-    decimal arithmetic — '-' sorts below '0', so raw zero-padding would
-    invert the order of negative ids) then zero-pad to 20 digits.
-    Otherwise a component {9, 10} would keep 10 and violate the
-    'numeric min id kept' contract."""
-    from sema_spark.operators.canonicalize import driver_cc_budget
-
-    spark = df.sparkSession
-    e = pairs.select(F.col("a").cast("long").alias("a"), F.col("b").cast("long").alias("b")).persist()
-    n_edges = e.count()
-    if n_edges <= driver_cc_budget(spark) * 16:
-        pdf = e.toPandas()
-        e.unpersist()
-        losers_arr = _numeric_cc_losers(spark, pdf)
-        if len(losers_arr) == 0:
-            return df
-        losers = spark.createDataFrame(
-            pd.DataFrame({"_loser": losers_arr}), schema="_loser long"
-        )
-        return df.join(losers, df[id_col] == F.col("_loser"), "left_anti")
-    e.unpersist()
-    offset = F.lit("9223372036854775808").cast("decimal(20,0)")
-    pad = lambda c: F.lpad(
-        (F.col(c).cast("decimal(20,0)") + offset).cast("decimal(20,0)").cast("string"), 20, "0"
+    """Remove every non-survivor of the duplicate-pair graph from df:
+    :func:`connected_components` over the long ids labels each component
+    with its numeric min id (the survivor), and every other member is
+    left-anti joined away."""
+    comp = connected_components(
+        pairs.select(F.col("a").cast("long").alias("a"), F.col("b").cast("long").alias("b"))
     )
-    comp = connected_components(pairs.select(pad("a").alias("a"), pad("b").alias("b")))
-    losers = comp.filter(F.col("id") != F.col("component")).select(
-        (F.col("id").cast("decimal(20,0)") - offset).cast("long").alias("_loser")
-    )
+    losers = comp.filter(F.col("id") != F.col("component")).select(F.col("id").alias("_loser"))
     return df.join(losers, df[id_col] == F.col("_loser"), "left_anti")
 
 

@@ -35,6 +35,16 @@ def test_cc_row_order_invariance(spark):
     assert c1 == c2
 
 
+@pytest.mark.parametrize("id_type", ["string", "long"])
+@pytest.mark.parametrize("driver_max_edges", [None, 0], ids=["driver", "distributed"])
+def test_cc_empty_edges(spark, id_type, driver_max_edges):
+    edges = spark.createDataFrame([], f"a {id_type}, b {id_type}")
+    out = connected_components(edges, driver_max_edges=driver_max_edges)
+    assert out.collect() == []
+    t = edges.schema["a"].dataType
+    assert [(f.name, f.dataType) for f in out.schema] == [("id", t), ("component", t)]
+
+
 def test_canonicalize_merges_identical_files(spark):
     """dup_shared.py is byte-identical in repos 0 and 3 → one canonical
     file entity and one canonical dup_fn symbol entity."""

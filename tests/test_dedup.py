@@ -147,16 +147,13 @@ def test_ngram_two_paths_agree(spark, docs):
 
 
 def test_numeric_cc_matches_string_cc(spark):
-    """r7: the numeric min-label driver CC must drop the exact loser set
-    the padded-string connected_components drops (negative ids, chains,
-    cliques, singletons-in-pairs)."""
+    """connected_components over long ids (negative ids, chains, cliques)
+    gives the same (id, component) set on the driver tier, on the
+    distributed tier, and over an order-preserving string encoding of
+    the same ids — component = numeric min id in every case."""
     import random
 
-    import pandas as pd
-    from pyspark.sql import functions as F
-
     from sema_spark.operators.canonicalize import connected_components
-    from sema_spark.operators.dedup import _numeric_cc_losers
 
     rng = random.Random(17)
     edges = [(-5, 3), (3, 9), (100, 101)]  # chain crossing zero + pair
@@ -165,23 +162,18 @@ def test_numeric_cc_matches_string_cc(spark):
         a, b = rng.choice(nodes), rng.choice(nodes)
         if a != b:
             edges.append((min(a, b), max(a, b)))
-    pdf = pd.DataFrame({"a": [a for a, _ in edges], "b": [b for _, b in edges]})
-    fast = set(int(x) for x in _numeric_cc_losers(spark, pdf))
-    offset = F.lit("9223372036854775808").cast("decimal(20,0)")
-    pad = lambda c: F.lpad(
-        (F.col(c).cast("decimal(20,0)") + offset).cast("decimal(20,0)").cast("string"),
-        20,
-        "0",
-    )
-    e = spark.createDataFrame(pdf, "a long, b long")
-    comp = connected_components(e.select(pad("a").alias("a"), pad("b").alias("b")))
-    slow = {
-        int(r[0])
-        for r in comp.filter(F.col("id") != F.col("component"))
-        .select((F.col("id").cast("decimal(20,0)") - offset).cast("long"))
-        .collect()
+    e = spark.createDataFrame(edges, "a long, b long")
+    driver = {(r.id, r.component) for r in connected_components(e).collect()}
+    dist = {(r.id, r.component) for r in connected_components(e, driver_max_edges=0).collect()}
+    # offset into unsigned, then zero-pad: string order == numeric order
+    enc = lambda x: f"{x + 2**63:020d}"
+    se = spark.createDataFrame([(enc(a), enc(b)) for a, b in edges], "a string, b string")
+    via_str = {
+        (int(r.id) - 2**63, int(r.component) - 2**63)
+        for r in connected_components(se).collect()
     }
-    assert fast == slow and len(fast) > 0
+    assert driver == dist == via_str
+    assert {(3, -5), (9, -5), (101, 100)} <= driver
 
 
 def test_sha_signature_memo_path_value_identical(spark):

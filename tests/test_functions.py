@@ -26,6 +26,7 @@ def test_encoder_contract():
 
 def test_encoder_udf_matches_numpy(spark):
     texts = ["hello world", "def f(x): return x", "", "日本語テキスト"]
+    texts += [None, "def f(x): return x\n" * 20]  # NULL row; past MAX_TOKENS bytes
     df = spark.createDataFrame([(t,) for t in texts], "t string")
     got = {r.t: r.e for r in df.select("t", encode_text("t").alias("e")).collect()}
     for t in texts:
@@ -102,20 +103,3 @@ def test_lsh_bands_collide_for_near_duplicates(spark):
     pairs = {(r[0], r[1]) for r in joined}
     assert ("a", "b") in pairs
     assert ("a", "d") not in pairs and ("b", "d") not in pairs
-
-
-def test_encode_with_model_lifecycle_and_parity(spark):
-    """The mapInArrow encoder (load-once model singleton + bounded
-    inference sub-batches) must be value-identical to the pandas_udf
-    path, and the model handle must be a process-level singleton."""
-    from sema_spark.functions.encoder import _get_model, encode_with_model, with_embedding
-
-    docs = spark.createDataFrame(
-        [(0, "the quick brown fox"), (1, None), (2, "ab"), (3, "x" * 500)],
-        "id long, content string",
-    )
-    arrow = {r.id: r.embedding for r in encode_with_model(docs, batch_rows=2).collect()}
-    pandas = {r.id: r.embedding for r in with_embedding(docs).collect()}
-    assert arrow == pandas
-    assert all(len(v) == 384 for v in arrow.values())
-    assert _get_model() is _get_model()  # singleton: one load per process
