@@ -58,12 +58,16 @@ from sema_spark.sources.checkpoint import (
     StageRun,
     current_checkpoint,
     file_rows,
+    fingerprint_rows,
+    has_checkpoint_log,
     input_fingerprint,
     latest_params,
+    local_frame,
     logged_keys,
     read_checkpoint_log,
     read_committed_snapshot,
     read_snapshot,
+    read_snapshot_run,
     read_stage_output,
     run_forced_incremental_stage,
     run_incremental_stage,
@@ -133,8 +137,13 @@ def run_pipeline(
     # rows) and spuriously fail the delta path's trust check
     key_cols = ["repo", "path", "content_sha"]
     keys = current_checkpoint(spark, base, STAGE_TRIPLES).select(*key_cols)
+    # one fingerprint job per run, shared by stages 2 and 3; its row
+    # count is also stage 4's "no input keys" check
+    fp_keys = input_fingerprint(keys)
 
-    r2, link_mode = _run_linked_stage(spark, base, triples, keys, fuzzy, incremental_link)
+    r2, link_mode = _run_linked_stage(
+        spark, base, triples, keys, fp_keys, fuzzy, incremental_link
+    )
     linked = read_stage_output(spark, base, STAGE_LINKED, schema=LINKED_TRIPLES)
 
     # params fold non-key dependencies into each skip fingerprint:
@@ -144,13 +153,16 @@ def run_pipeline(
     # forces the derivation to re-run; a compacted upstream keeps it, so
     # compaction does not trigger spurious downstream regeneration)
     r3 = run_snapshot_stage(
-        spark, keys, STAGE_NODES, base, lambda: canonicalize_nodes(build_nodes(triples)),
+        spark, fp_keys, STAGE_NODES, base, lambda: canonicalize_nodes(build_nodes(triples)),
         partition_cols=["kind"],
     )
-    nodes = read_snapshot(spark, base, STAGE_NODES, schema=NODES)
+    # the run id the stage just committed (or skipped at) is the latest
+    # commit: no second log read
+    nodes = read_snapshot_run(spark, base, STAGE_NODES, r3.run_id, NODES)
 
     r4 = _run_edges_stage(
-        spark, base, linked, nodes, keys, r2.fingerprint, r3.fingerprint, incremental_link
+        spark, base, linked, nodes, keys, fingerprint_rows(fp_keys),
+        r2.fingerprint, r3.fingerprint, incremental_link,
     )
     return PipelineRun(r1, r2, r3, r4, link_mode=link_mode)
 
@@ -161,6 +173,7 @@ def _run_edges_stage(
     linked: DataFrame,
     nodes: DataFrame,
     keys: DataFrame,
+    n_keys: int,
     fp_linked: str,
     fp_nodes: str,
     incremental: bool,
@@ -206,8 +219,8 @@ def _run_edges_stage(
         anchor = None
     if anchor is not None and {k: anchor.get(k) for k in target} == target:
         return StageRun(STAGE_EDGES, "", 0, 0, skipped=True, fingerprint=fp_nodes)
-    ekeys = current_checkpoint(spark, base, STAGE_EDGES).select(*key_cols)
-    if anchor is None and ekeys.limit(1).count() == 0 and keys.limit(1).count() == 0:
+    stored = has_checkpoint_log(spark, base, STAGE_EDGES)
+    if not stored and n_keys == 0:
         # empty corpus, empty stage: nothing to do and nothing to mark
         return StageRun(STAGE_EDGES, "", 0, 0, skipped=True, fingerprint=fp_nodes)
 
@@ -268,7 +281,9 @@ def _run_edges_stage(
     # empty refresh set, e.g. a pure-deletion run, commits them alone)
     rf = run_forced_incremental_stage(
         spark, refresh, rows, STAGE_EDGES, base, partition_cols=["pred"],
-        params=json.dumps({**target, "linked_run": lmax}), tombstone_paths=_gone_paths(ekeys, keys),
+        params=json.dumps({**target, "linked_run": lmax}),
+        tombstone_paths=_gone_paths(current_checkpoint(spark, base, STAGE_EDGES), keys)
+        if stored else None,
     )
     return replace(rf, fingerprint=fp_nodes)
 
@@ -289,6 +304,7 @@ def _run_linked_stage(
     base: str,
     triples: DataFrame,
     keys: DataFrame,
+    fp_keys: str,
     fuzzy: bool,
     incremental_link: bool,
 ) -> tuple[StageRun, str]:
@@ -302,8 +318,9 @@ def _run_linked_stage(
     both are ∝ the delta:
 
     * diff the triples log against the linked log (file-key level, one
-      row per file on each side): ``changed`` = versions not yet
-      linked, ``gone`` = linked versions no longer live;
+      row per file on each side) in ONE materialized full-outer join:
+      ``changed`` = versions not yet linked, ``gone`` = linked versions
+      no longer live, both counted by one aggregate;
     * ``delta`` mode narrows the re-link to changed files plus files
       whose triples reference an alias block the change touched
       (operators/linking.changed_alias_blocks — the old side reads the
@@ -321,23 +338,32 @@ def _run_linked_stage(
       computed under the other setting).  A flag flip forces a full
       re-link.
 
-    The returned fingerprint is ``<keys-fp>:fuzzy=<f>``, the key the
-    stage-4 anchor records."""
+    The returned fingerprint is ``<keys-fp>:fuzzy=<f>`` (``fp_keys`` is
+    :func:`input_fingerprint` of ``keys``), the key the stage-4 anchor
+    records."""
     from sema_spark.plans.materialize import materialize
 
     key_cols = ["repo", "path", "content_sha"]
-    fp = f"{input_fingerprint(keys)}:fuzzy={fuzzy}"
+    fp = f"{fp_keys}:fuzzy={fuzzy}"
     want_params = f"fuzzy={fuzzy}"
     lkeys = current_checkpoint(spark, base, STAGE_LINKED).select(*key_cols)
     params_ok = latest_params(spark, base, STAGE_LINKED) == want_params
 
-    changed = keys.join(lkeys, key_cols, "left_anti").transform(materialize)
-    gone = lkeys.join(keys, key_cols, "left_anti").transform(materialize)
-    n_changed, n_gone = changed.count(), gone.count()
-    if n_changed == 0 and n_gone == 0 and (params_ok or lkeys.limit(1).count() == 0):
+    # keys and lkeys are unique per file, so a key without a partner on
+    # the other side is exactly one of the two left-anti differences
+    diff = materialize(
+        keys.withColumn("_live", F.lit(True))
+        .join(lkeys.withColumn("_linked", F.lit(True)), key_cols, "full_outer")
+        .where(F.col("_live").isNull() | F.col("_linked").isNull())
+    )
+    n_changed, n_gone = diff.agg(F.count("_live"), F.count("_linked")).collect()[0]
+    changed = diff.where(F.col("_live").isNotNull()).select(*key_cols)
+    gone = diff.where(F.col("_linked").isNotNull()).select(*key_cols)
+    if n_changed == 0 and n_gone == 0 and (params_ok or fingerprint_rows(fp_keys) == 0):
         # params_ok guards against skip-serving rows computed under a
         # different fuzzy flag; an empty stage over an empty corpus has
-        # no rows to mis-serve
+        # no rows to mis-serve (no diff: the stage is empty iff the
+        # corpus is)
         return StageRun(STAGE_LINKED, "", 0, 0, skipped=True, fingerprint=fp), "full"
 
     mode = "full"
@@ -345,7 +371,7 @@ def _run_linked_stage(
         # the delta needs the OLD triples of gone versions; compaction
         # may have pruned that history — verify before trusting it
         unlogged = gone.join(logged_keys(spark, base, STAGE_TRIPLES), key_cols, "left_anti")
-        if unlogged.count() == 0:
+        if n_gone == 0 or unlogged.count() == 0:
             mode = "delta"
 
     if mode == "delta":
@@ -466,7 +492,7 @@ def semantic_search(
             list(chunks_with_embeddings.schema.fields)
             + [StructField("score", DoubleType()), StructField("matches_in_file", LongType())]
         )
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     if norm_col is not None:
         # replicate the HOF's sequential float64 query-norm exactly:
         # acc = 0.0; acc += q[i]*q[i] in index order, then one sqrt —

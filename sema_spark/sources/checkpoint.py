@@ -23,12 +23,29 @@ A data row is *visible* only if the current checkpoint references its
   ``max_by(run_id)`` → old output rows become invisible (upsert S8);
 * deletion (S7) is a tombstone checkpoint row, no data touched.
 
-Every commit goes through ONE write tail (``_commit_increment``): data,
-then lineage, then one checkpoint append that carries the increment's
-per-file rows together with its params and tombstone rows, or a
-snapshot's single commit mark.  An increment over an empty file set
-that still has params or tombstones to record commits them alone, in
-one standalone append.
+Every commit goes through ONE write tail (``_commit_increment``), four
+Spark actions in this order:
+
+1. the data write (the rows are persisted for the next action);
+2. one collect of the per-partition row counts — the lineage rows,
+   whose sum is the commit's row count (no separate count);
+3. the lineage append (a zero-row commit has no lineage row and skips
+   it);
+4. one checkpoint append that carries the increment's per-file rows
+   together with its params and tombstone rows, or a snapshot's single
+   commit mark.
+
+An increment over an empty file set that still has params or
+tombstones to record commits them alone, in one standalone append.
+Every driver-built frame — lineage rows, marker rows, the empty frame
+of an absent path — is one Arrow batch (:func:`local_frame`): it plans
+as a ``LocalTableScan``, so no Python worker unpickles its rows.
+
+Absent-log rule: a path that does not exist yet reads as the empty
+local frame of its schema (``_read_or_empty``).  Spark's optimizer
+folds a filter/sort/limit collect over that frame without running a
+job, so :func:`latest_params` and ``_latest_commit`` of a stage with no
+log yet answer ``None`` at no job cost.
 
 This is Iceberg snapshot semantics hand-rolled over plain parquet; on a
 cluster with an Iceberg catalog the same API maps onto MERGE INTO +
@@ -54,8 +71,6 @@ TOMBSTONE = "__DELETED__"
 # append, so a crash can never leave data claiming the wrong params)
 COMMIT_MARK = "__SNAPSHOT__"
 PARAMS_MARK = "__PARAMS__"
-
-_CKPT_RUN_SCHEMA = "stage string, repo string, path string, content_sha string, run_id string"
 
 
 _RUN_COUNTER = itertools.count()
@@ -89,6 +104,22 @@ def _lineage_dir(base: str, stage: str) -> str:
     return f"{base}/{stage}/lineage"
 
 
+def local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
+    """A driver-side frame of ``rows`` (tuples in ``schema`` field order)
+    built from ONE Arrow batch.  It plans as a ``LocalTableScan``, which
+    every action reads in the JVM; ``createDataFrame(<list>)`` plans as
+    a scan over a ``PythonRDD`` instead, and Python workers unpickle its
+    rows again on every action.  ``schema`` is kept exactly,
+    nullability included."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
+
+
 _ABSENT = ("PATH_NOT_FOUND",)
 _ABSENT_OR_EMPTY = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 
@@ -117,7 +148,7 @@ def _read_parquet(
         return reader.parquet(path)
     except AnalysisException as e:
         if empty_schema is not None and any(c in str(e) for c in codes):
-            return spark.createDataFrame([], empty_schema)
+            return local_frame(spark, [], empty_schema)
         raise
 
 
@@ -127,12 +158,15 @@ def _read_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
 
 
 def read_checkpoint_log(spark: SparkSession, base: str, stage: str) -> DataFrame:
-    from pyspark.sql.types import StringType, StructField, StructType
+    return _read_or_empty(spark, _ckpt_dir(base, stage), _with_run_id(CHECKPOINT))
 
-    schema = StructType(
-        CHECKPOINT.fields + [StructField("run_id", StringType(), False)]
-    )
-    return _read_or_empty(spark, _ckpt_dir(base, stage), schema)
+
+def has_checkpoint_log(spark: SparkSession, base: str, stage: str) -> bool:
+    """Whether the stage has a checkpoint log yet — a driver-side file-
+    system check, no Spark job."""
+    path = _ckpt_dir(base, stage)
+    fs, hpath = _fs(spark, path)
+    return fs.exists(hpath(path))
 
 
 def current_checkpoint(spark: SparkSession, base: str, stage: str) -> DataFrame:
@@ -210,7 +244,7 @@ def file_rows(log: DataFrame) -> DataFrame:
 
 def _mark_row(spark: SparkSession, stage: str, mark: str, value: str, run_id: str) -> DataFrame:
     """One marker row of the checkpoint log (snapshot commit or params)."""
-    return spark.createDataFrame([(stage, mark, mark, value, run_id)], _CKPT_RUN_SCHEMA)
+    return local_frame(spark, [(stage, mark, mark, value, run_id)], _with_run_id(CHECKPOINT))
 
 
 def _log_entry_rows(
@@ -355,27 +389,24 @@ def _commit_increment(
     module docstring for the crash contract).  ``ckpt_rows`` are the
     checkpoint rows that make the data visible: an increment's per-file
     rows plus its params and tombstones, or a snapshot's commit mark.
-    Returns the data row count."""
+    Returns the data row count: the sum of the lineage rows, so the
+    write tail runs no separate count."""
     out = rows.withColumn("run_id", F.lit(run_id)).persist()
     try:
         out.write.mode("append").partitionBy("run_id", *(partition_cols or [])).parquet(
             _data_dir(base, stage)
         )
-        n_rows = out.count()
         # Per-partition lineage rows (A3 generalized; north rule).
-        lineage = (
-            out.groupBy(F.spark_partition_id().cast("long").alias("partition_id"))
+        counts = (
+            out.groupBy(F.spark_partition_id().alias("partition_id"))
             .agg(F.count("*").alias("rows"))
-            .select(
-                F.lit(stage).alias("stage"),
-                "partition_id",
-                "rows",
-                F.lit(run_id).alias("run_id"),
-            )
+            .collect()
         )
-        spark.createDataFrame(lineage.collect(), LINEAGE).write.mode("append").parquet(
-            _lineage_dir(base, stage)
-        )
+        n_rows = sum(r.rows for r in counts)
+        if counts:
+            local_frame(
+                spark, [(stage, r.partition_id, r.rows, run_id) for r in counts], LINEAGE
+            ).write.mode("append").parquet(_lineage_dir(base, stage))
         # Checkpoint LAST — only now do this run's rows become visible.
         ckpt_rows.write.mode("append").parquet(_ckpt_dir(base, stage))
     finally:
@@ -509,7 +540,13 @@ def input_fingerprint(keys: DataFrame) -> str:
     return f"{row.n}:{row.s}"
 
 
+def fingerprint_rows(fp: str) -> int:
+    """The distinct key count an :func:`input_fingerprint` carries."""
+    return int(fp.split(":", 1)[0])
+
+
 def _latest_commit(spark: SparkSession, base: str, stage: str):
+    """The stage's latest snapshot commit mark row (None when it has none)."""
     log = read_checkpoint_log(spark, base, stage)
     rows = (
         log.filter(F.col("repo") == COMMIT_MARK)
@@ -522,7 +559,7 @@ def _latest_commit(spark: SparkSession, base: str, stage: str):
 
 def run_snapshot_stage(
     spark: SparkSession,
-    input_keys: DataFrame,
+    input_fp: str,
     stage: str,
     base: str,
     producer,
@@ -532,8 +569,11 @@ def run_snapshot_stage(
 ) -> StageRun:
     """Full-snapshot stage with fingerprint skip + commit-last visibility.
 
-    ``producer()`` → the complete output DataFrame for this snapshot.
-    Crash before the commit row → snapshot invisible, rerun regenerates.
+    ``input_fp`` is :func:`input_fingerprint` of the stage's input keys
+    (the pipeline computes it once per run and shares it between stages
+    2 and 3).  ``producer()`` → the complete output DataFrame for this
+    snapshot.  Crash before the commit row → snapshot invisible, rerun
+    regenerates.
 
     ``params``: everything BEYOND the input keys that the output depends
     on — pipeline flags, upstream snapshot run_ids — folded into the
@@ -542,9 +582,7 @@ def run_snapshot_stage(
     return the stale snapshot.
     """
     run_id = run_id or new_run_id()
-    fp = input_fingerprint(input_keys)
-    if params:
-        fp = f"{fp}:{params}"
+    fp = f"{input_fp}:{params}" if params else input_fp
     last = _latest_commit(spark, base, stage)
     if last is not None and last.content_sha == fp:
         return StageRun(stage, last.run_id, 0, 0, skipped=True, fingerprint=fp)
@@ -561,7 +599,7 @@ def read_snapshot(spark: SparkSession, base: str, stage: str, schema=None) -> Da
     last = _latest_commit(spark, base, stage)
     if last is None:
         raise FileNotFoundError(f"no committed snapshot for stage {stage!r} under {base}")
-    return _snapshot_rows(spark, base, stage, last.run_id, schema)
+    return read_snapshot_run(spark, base, stage, last.run_id, schema)
 
 
 def read_committed_snapshot(
@@ -580,11 +618,13 @@ def read_committed_snapshot(
     )
     if rid is None:
         return None
-    rows = _snapshot_rows(spark, base, stage, rid, schema)
+    rows = read_snapshot_run(spark, base, stage, rid, schema)
     return rows if rows.limit(1).count() > 0 else None
 
 
-def _snapshot_rows(spark: SparkSession, base: str, stage: str, run_id: str, schema) -> DataFrame:
+def read_snapshot_run(spark: SparkSession, base: str, stage: str, run_id: str, schema) -> DataFrame:
+    """Rows of the snapshot committed as ``run_id`` (e.g. the run id a
+    :func:`run_snapshot_stage` call returned)."""
     data = _read_parquet(
         spark, _data_dir(base, stage), empty_schema=schema, codes=_ABSENT_OR_EMPTY
     )

@@ -1,8 +1,11 @@
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
+from pyspark.sql.types import StringType, StructField, StructType
 
 from sema_spark.corpus import corpus_df
 from sema_spark.operators.mentions import extract_triples, with_content_sha
+from sema_spark.schemas import CHECKPOINT, LINEAGE
 from sema_spark.sources import checkpoint as ck
 
 
@@ -96,6 +99,76 @@ def test_lineage_rows(spark, src, tmp_path):
     assert rows and sum(x.rows for x in rows) == r.output_rows
 
 
+def _local_scan(df) -> bool:
+    """The frame is read in the JVM from a driver-built local relation:
+    a LocalTableScan, with no PythonRDD for a Python worker to unpickle."""
+    qe = df._jdf.queryExecution()
+    return (
+        "LocalTableScan" in qe.executedPlan().toString()
+        and "PythonRDD" not in qe.toRdd().toDebugString()
+    )
+
+
+def test_driver_built_frames_are_local_scans(spark, src, tmp_path, monkeypatch):
+    """Commit marker rows, lineage rows and the empty frame of an absent
+    log are one-batch local relations with the exact LINEAGE and
+    checkpoint-log schemas; a zero-row increment commits its files with
+    output_rows == 0 and no lineage row.  An absent log answers "no
+    params" and "no snapshot" without a Spark job."""
+    log_schema = StructType(CHECKPOINT.fields + [StructField("run_id", StringType(), False)])
+    base = str(tmp_path / "kg")
+    absent = ck.read_checkpoint_log(spark, base, "nodes")
+    assert absent.schema == log_schema and _local_scan(absent)
+    assert ck.read_lineage(spark, base, "nodes").schema == LINEAGE
+    sc = spark.sparkContext
+    sc.setJobGroup("absent-log", "absent-log reads")
+    try:
+        assert ck.latest_params(spark, base, "nodes") is None
+        with pytest.raises(FileNotFoundError):
+            ck.read_snapshot(spark, base, "nodes")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup("absent-log")
+
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def recording(self, path, *args, **kwargs):
+        written.append((path.rsplit("/", 1)[-1], self._df))
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
+    keys = src.select("repo", "path", "content_sha")
+    run = ck.run_snapshot_stage(
+        spark, ck.input_fingerprint(keys), "nodes", base, lambda: _transform(src)
+    )
+    frames = {name: df for name, df in written if name != "data"}
+    assert set(frames) == {"lineage", "checkpoint"}
+    assert frames["lineage"].schema == LINEAGE and frames["checkpoint"].schema == log_schema
+    assert all(_local_scan(df) for df in frames.values())
+    assert sum(r.rows for r in frames["lineage"].collect()) == run.output_rows > 0
+
+    # a zero-row increment: its files commit, with no data and no lineage row
+    written.clear()
+    run = ck.run_forced_incremental_stage(
+        spark, keys, _transform(src).limit(0), "triples", base, params="p=1"
+    )
+    assert run.output_rows == 0 and run.input_files == keys.distinct().count()
+    assert [name for name, _ in written] == ["data", "checkpoint"]
+    assert ck.read_lineage(spark, base, "triples").count() == 0
+    assert ck.current_checkpoint(spark, base, "triples").count() == run.input_files
+    assert ck.latest_params(spark, base, "triples") == "p=1"
+
+    # a params-only commit appends the marker row alone
+    written.clear()
+    ck.run_forced_incremental_stage(
+        spark, keys.limit(0), src.limit(0), "triples", base, params="p=2"
+    )
+    (name, marker), = written
+    assert name == "checkpoint" and marker.schema == log_schema and _local_scan(marker)
+    assert ck.latest_params(spark, base, "triples") == "p=2"
+
+
 def test_compact_incremental_stage(spark, src, tmp_path):
     """compact() rewrites the log-structured stage to one live run and
     SWAPS it in: snapshot identical, superseded/tombstoned rows gone
@@ -143,10 +216,11 @@ def test_compact_incremental_stage(spark, src, tmp_path):
 def test_compact_snapshot_stage(spark, src, tmp_path):
     base = str(tmp_path / "kg")
     keys = src.select("repo", "path", "content_sha")
-    ck.run_snapshot_stage(spark, keys, "nodes", base, lambda: src.select("repo", "path"))
+    fp, fp10 = ck.input_fingerprint(keys), ck.input_fingerprint(keys.limit(10))
+    ck.run_snapshot_stage(spark, fp, "nodes", base, lambda: src.select("repo", "path"))
     # second snapshot with different input → supersedes the first
     ck.run_snapshot_stage(
-        spark, keys.limit(10), "nodes", base, lambda: src.select("repo", "path").limit(10)
+        spark, fp10, "nodes", base, lambda: src.select("repo", "path").limit(10)
     )
     before = ck.read_snapshot(spark, base, "nodes").count()
     raw_before = spark.read.parquet(f"{base}/nodes/data").count()
@@ -156,7 +230,7 @@ def test_compact_snapshot_stage(spark, src, tmp_path):
     assert spark.read.parquet(f"{base}/nodes/data").count() == before
     # fingerprint preserved → unchanged input still skips
     r = ck.run_snapshot_stage(
-        spark, keys.limit(10), "nodes", base, lambda: src.select("repo", "path").limit(10)
+        spark, fp10, "nodes", base, lambda: src.select("repo", "path").limit(10)
     )
     assert r.skipped and r.run_id == rid
 
@@ -182,9 +256,12 @@ def test_compact_partitioned_snapshot_stage(spark, src, tmp_path):
             F.when(F.col("path").endswith(".py"), "py").otherwise("other").alias("kind"),
         )
 
-    ck.run_snapshot_stage(spark, keys, "nodes", base, prod, partition_cols=["kind"])
     ck.run_snapshot_stage(
-        spark, keys.limit(10), "nodes", base, lambda: prod().limit(10), partition_cols=["kind"]
+        spark, ck.input_fingerprint(keys), "nodes", base, prod, partition_cols=["kind"]
+    )
+    ck.run_snapshot_stage(
+        spark, ck.input_fingerprint(keys.limit(10)), "nodes", base, lambda: prod().limit(10),
+        partition_cols=["kind"],
     )
     before = ck.read_snapshot(spark, base, "nodes").count()
     ck.compact(spark, base, "nodes")

@@ -53,6 +53,41 @@ def test_rerun_skips_everything(spark, kg):
     assert not run2.any_work
 
 
+# Spark jobs of an unchanged pass over the xs corpus in `local` mode:
+# 30 before the one-action commit tail and the shared key diff, 20 after
+UNCHANGED_PASS_JOB_BUDGET = 20
+
+
+def test_unchanged_pass_job_budget(spark, kg):
+    """An unchanged re-run is a handful of skip checks; every extra Spark
+    job is fixed per-action cost (the D1 job diet).  Runs right after
+    the cold build of the module fixture, before any test mutates it."""
+    from sema_spark.plans.materialize import set_materialize_mode
+
+    base, src, _ = kg
+    sc = spark.sparkContext
+    set_materialize_mode("local")
+    sc.setJobGroup("unchanged-pass-budget", "unchanged pass")
+    try:
+        run = P.run_pipeline(spark, src, base)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        set_materialize_mode(None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("unchanged-pass-budget"))
+    assert not run.any_work
+    assert jobs <= UNCHANGED_PASS_JOB_BUDGET, jobs
+
+
+def test_semantic_search_short_query_is_local_empty(spark):
+    """The short-query guard answers an empty frame built on the driver
+    (a LocalTableScan, no Python worker) with the result schema."""
+    chunks = chunk_and_embed(corpus_df(spark, "xs").limit(2))
+    res = P.semantic_search(spark, chunks, "ab")
+    assert res.columns == chunks.columns + ["score", "matches_in_file"]
+    assert "LocalTableScan" in res._jdf.queryExecution().executedPlan().toString()
+    assert res.count() == 0
+
+
 def test_graph_referential_integrity(spark, kg):
     base, _, _ = kg
     nodes = P.read_nodes(spark, base)
@@ -315,6 +350,7 @@ def test_legacy_snapshot_base_reads_and_migrates(spark, tmp_path):
     from sema_spark.schemas import LINKED_TRIPLES, NODES, TRIPLES
     from sema_spark.sources.checkpoint import (
         compact,
+        input_fingerprint,
         read_snapshot,
         read_stage_output,
         run_incremental_stage,
@@ -329,21 +365,21 @@ def test_legacy_snapshot_base_reads_and_migrates(spark, tmp_path):
         lambda p: extract_triples(salted_repartition(p, None)),
     )
     triples = read_stage_output(spark, base, "triples", schema=TRIPLES)
-    keys = triples.select("repo", "path", "content_sha").distinct()
+    fp = input_fingerprint(triples.select("repo", "path", "content_sha"))
     run_snapshot_stage(
-        spark, keys, "linked", base, lambda: link_triples(triples, fuzzy=True),
+        spark, fp, "linked", base, lambda: link_triples(triples, fuzzy=True),
         params="fuzzy=True",
     )
     legacy_rows = read_snapshot(spark, base, "linked", schema=LINKED_TRIPLES)
     run_snapshot_stage(
-        spark, keys, "nodes", base, lambda: canonicalize_nodes(build_nodes(triples)),
+        spark, fp, "nodes", base, lambda: canonicalize_nodes(build_nodes(triples)),
         partition_cols=["kind"],
     )
     legacy_nodes = read_snapshot(spark, base, "nodes", schema=NODES)
     # pre-r6 edges had NO content_sha column, so the migrated data dir
     # will mix schemas — reads must stay deterministic
     run_snapshot_stage(
-        spark, keys, "edges", base,
+        spark, fp, "edges", base,
         lambda: canonical_edges(legacy_rows, legacy_nodes).drop("content_sha"),
         partition_cols=["pred"], params="legacy",
     )
@@ -408,6 +444,7 @@ def test_legacy_base_emptied_corpus_serves_empty_not_stale(spark, tmp_path):
     from sema_spark.schemas import REPOS, TRIPLES
     from sema_spark.sources.checkpoint import (
         delete_files,
+        input_fingerprint,
         read_stage_output,
         run_incremental_stage,
         run_snapshot_stage,
@@ -420,9 +457,9 @@ def test_legacy_base_emptied_corpus_serves_empty_not_stale(spark, tmp_path):
         lambda p: extract_triples(salted_repartition(p, None)),
     )
     triples = read_stage_output(spark, base, "triples", schema=TRIPLES)
-    keys = triples.select("repo", "path", "content_sha").distinct()
+    fp = input_fingerprint(triples.select("repo", "path", "content_sha"))
     run_snapshot_stage(
-        spark, keys, "linked", base, lambda: link_triples(triples, fuzzy=True),
+        spark, fp, "linked", base, lambda: link_triples(triples, fuzzy=True),
         params="fuzzy=True",
     )
 
