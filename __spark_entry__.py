@@ -1343,7 +1343,7 @@ def q_semantic_search_stored(spark, sf):
         F.col("doc_id").cast("string").alias("path"),
         F.col("text").alias("content"),
     )
-    idx = _keyed_dir("/tmp/sema_semantic_index", f"{sf}/documents.parquet", "chunks_v3")
+    idx = _keyed_dir("/tmp/sema_semantic_index", f"{sf}/documents.parquet", "chunks_v4")
     if not semantic_index_ready(idx):
         build_semantic_index(
             docs.where(F.col("path").cast("long") % 2 == 0), idx

@@ -8,7 +8,8 @@ Usage:
   SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 python bench_extra.py q1 q2 ...
   (no args = the full bench.BENCH_QUERIES list)
 
-Env: SPARK_GRAFT_BENCH_REPEATS (default 3).
+Env: SPARK_GRAFT_BENCH_REPEATS (default 3), SPARK_GRAFT_CPUS (default:
+the host's core count).
 """
 
 from __future__ import annotations
@@ -25,7 +26,7 @@ from bench import _consume, _cpu_steal  # noqa: E402
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
 
     import __spark_entry__ as E

@@ -82,18 +82,6 @@ def content_fingerprint(col: Column | str) -> Column:
     return F.sha2(F.trim(F.regexp_replace(F.lower(col), r"\s+", " ")), 256)
 
 
-def shingle_fingerprint(col: Column | str, k: int = 5) -> Column:
-    """Rolling min-hash over word k-shingles (winnowing-style document
-    fingerprint).  Spark-only (no SQL oracle — rows-only check)."""
-    col = F.col(col) if isinstance(col, str) else col
-    words = F.split(F.trim(F.lower(col)), r"\s+")
-    n = F.greatest(F.size(words) - (k - 1), F.lit(1))
-    shingles = F.transform(
-        F.sequence(F.lit(1), n), lambda i: F.concat_ws(" ", F.slice(words, i, k))
-    )
-    return F.array_min(F.transform(shingles, lambda s: F.xxhash64(s)))
-
-
 def with_text_features(df, text_col: str = "text"):
     c = F.col(text_col)
     return df.select(

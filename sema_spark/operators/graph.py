@@ -133,17 +133,6 @@ def triangles(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame
     )
 
 
-def triangle_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """Per-vertex triangle participation counts: (id, n_triangles)."""
-    t = triangles(edges, src, dst)
-    verts = (
-        t.select(F.col("a").alias("id"))
-        .union(t.select(F.col("b").alias("id")))
-        .union(t.select(F.col("c").alias("id")))
-    )
-    return verts.groupBy("id").agg(F.count("*").alias("n_triangles"))
-
-
 def k_hop(
     edges: DataFrame,
     seeds: DataFrame,

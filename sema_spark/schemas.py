@@ -46,6 +46,18 @@ CHUNKS = StructType(
     ]
 )
 
+# Stored semantic-index rows (sources/ann_index): a chunk, its file's
+# content_sha (the per-file checkpoint key), its embedding and the
+# precomputed embedding L2 norm — chunk_and_embed's column order.
+STORED_CHUNKS = StructType(
+    CHUNKS.fields
+    + [
+        StructField("content_sha", StringType(), True),
+        StructField("embedding", ArrayType(FloatType()), True),
+        StructField("emb_norm", DoubleType(), True),
+    ]
+)
+
 # Stage-1 output: candidate triples with provenance.  subj/obj use the
 # entity-id convention "<repo>/<path>#<symbol>" (file-level subj when the
 # symbol is the file itself: "<repo>/<path>").

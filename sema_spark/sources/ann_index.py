@@ -51,10 +51,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sema_spark.operators.clustering import _assign_udf, kmeans_fit, probe_cells
-
-# Deleted-file liveness sentinel: a filestate entry at this gen kills
-# every chunk generation of its (repo, path).
-_GEN_DELETED = -1
+from sema_spark.schemas import EMBEDDING_DIM, STORED_CHUNKS
+from sema_spark.sources import checkpoint as ck
 
 
 @contextlib.contextmanager
@@ -63,12 +61,13 @@ def _maintenance_lock(index_dir: str, wait: bool):
     host: flock on ``{index_dir}/.lock`` — cross-process, so a
     foreachBatch streaming maintainer and an operator-run compaction
     cannot interleave (the r5 race: an append landing between compact's
-    read and its rename-swap was silently discarded).  Appends WAIT
-    (compactions are short); compactions raise if any writer is active
-    so an operator never blocks behind a long append — retry, or stop
-    the stream first.  On an object store without flock semantics use
-    the checkpoint log's append-then-GC compaction instead
-    (sources/checkpoint.compact)."""
+    read and its GC was silently discarded).  Appends WAIT (compactions
+    are short); compactions raise if any writer is active so an operator
+    never blocks behind a long append — retry, or stop the stream
+    first.  The IVF and LSH indexes also rely on a rename-capable
+    filesystem for their compaction swap (:func:`_compact_table`); the
+    semantic index compacts with the checkpoint log's append-then-GC
+    (sources/checkpoint.compact), which needs no rename."""
     import fcntl
 
     os.makedirs(index_dir, exist_ok=True)
@@ -439,6 +438,16 @@ def compact_lsh_index(spark: SparkSession, index_dir: str) -> None:
 # precomputed vectors; results are identical by construction (float32
 # embeddings round-trip parquet bit-exactly), so the stored entry point
 # grades against the same oracle as the in-plan one.
+#
+# The store is ONE incremental stage of sources/checkpoint under
+# ``index_dir``: chunk rows are its data and its per-file checkpoint log
+# is the membership and liveness state, under the KG stages' crash
+# contract (data first, checkpoint last; a retry gets a fresh run_id).
+
+_STAGE = "chunks"
+# committed by every build, so even a build over an EMPTY frame has a
+# log that appends accept (stream-first setups)
+_PARAMS = f"embedding_dim={EMBEDDING_DIM}"
 
 
 def _prep_docs(docs: DataFrame) -> DataFrame:
@@ -448,89 +457,29 @@ def _prep_docs(docs: DataFrame) -> DataFrame:
     )
 
 
-def _chunk_rows(docs_with_sha: DataFrame, gen: int) -> DataFrame:
+def _chunk_rows(docs_with_sha: DataFrame) -> DataFrame:
     # l2_norm_fold: bit-identical to the l2_norm HOF
     # (tests/test_vector_fold.py) — indexes written by either path hold
     # the same bytes, so old and new indexes stay interchangeable
     from sema_spark.functions.vector import l2_norm_fold
     from sema_spark.operators.chunker import chunk_and_embed
 
-    return (
-        chunk_and_embed(docs_with_sha, carry=("content_sha",))
-        .withColumn("emb_norm", l2_norm_fold(F.col("embedding")))
-        .withColumn("_gen", F.lit(int(gen)))
+    return chunk_and_embed(docs_with_sha, carry=("content_sha",)).withColumn(
+        "emb_norm", l2_norm_fold(F.col("embedding"))
     )
 
 
-def _file_state(spark: SparkSession, index_dir: str) -> DataFrame | None:
-    """Latest filestate entry per (repo, path): ``(repo, path,
-    content_sha, gen)`` with ``gen == _GEN_DELETED`` meaning the file
-    was removed.  None when the index has no log.  The log is
-    FILE-level — orders of magnitude smaller than the chunk table — so
-    both the append membership check and the query-side liveness join
-    read it instead of scanning chunks (and the liveness join
-    broadcasts)."""
-    if not os.path.exists(f"{index_dir}/filestate/_SUCCESS"):
-        if os.path.exists(f"{index_dir}/filestate.old") or os.path.exists(
-            f"{index_dir}/filestate.compact-tmp/_SUCCESS"
-        ):
-            # a compaction swap died mid-flight: the log EXISTS, just
-            # under its swap name.  Report the swap, not a missing log;
-            # any maintenance op (append/remove/compact) repairs it
-            # via _recover_swap under the writer lock.
-            raise RuntimeError(
-                f"{index_dir}/filestate is mid-compaction-swap (crash?) — "
-                "run semantic_index_append/remove or compact_semantic_index "
-                "to recover before querying"
-            )
-        return None
-    log = spark.read.parquet(f"{index_dir}/filestate")
-    # max_by over seq: later entries supersede earlier ones per file
-    return log.groupBy("repo", "path").agg(
-        F.max_by(F.struct("content_sha", "gen"), "seq").alias("_s"),
-    ).select("repo", "path", F.col("_s.content_sha").alias("content_sha"), F.col("_s.gen").alias("gen"))
-
-
-def _append_filestate(docs_keys: DataFrame, index_dir: str, gen: int) -> None:
-    """Append (repo, path, content_sha) rows to the log at generation
-    ``gen``; ``seq`` copies ``gen`` so later generations win max_by."""
-    (
-        docs_keys.withColumn("gen", F.lit(int(gen)))
-        .withColumn("seq", F.lit(int(abs(gen))))
-        .write.mode("append")
-        .parquet(f"{index_dir}/filestate")
-    )
-
-
-def _next_seq(spark: SparkSession, index_dir: str) -> int:
-    """1 + the log's max seq — the next generation/sequence number.
-    (Monotonic across removals too: a delete entry consumes a seq, so a
-    later re-add of the file gets a strictly larger one.)"""
-    log = spark.read.parquet(f"{index_dir}/filestate")
-    return int(log.agg(F.max("seq")).collect()[0][0] or 0) + 1
+def _require_index(index_dir: str) -> None:
+    if not semantic_index_ready(index_dir):
+        raise ValueError(f"no index at {index_dir} — build_semantic_index first (an empty frame will do)")
 
 
 def live_chunks(spark: SparkSession, index_dir: str) -> DataFrame:
-    """The CURRENT chunk set: payload rows whose ``(repo, path, _gen)``
-    matches the latest live filestate entry.  Superseded generations
-    (content changed) and deleted files drop out here without any
-    physical delete — the liveness join broadcasts the file-level state
-    so the chunk table itself never shuffles.  Orphan payload rows from
-    a crash between payload- and log-append are never live (the log is
-    written LAST) and are GC'd by :func:`compact_semantic_index`."""
-    chunks = spark.read.parquet(f"{index_dir}/chunks")
-    state = _file_state(spark, index_dir)
-    if state is None:
-        # no log at all (and no swap dir to recover from — _file_state
-        # raises on that): serving every generation would duplicate
-        # superseded files
-        raise RuntimeError(
-            f"{index_dir}/filestate missing — restore the log or rebuild the index"
-        )
-    alive = state.where(F.col("gen") != _GEN_DELETED).select(
-        "repo", "path", F.col("gen").alias("_gen")
-    )
-    return chunks.join(F.broadcast(alive), ["repo", "path", "_gen"], "left_semi")
+    """The CURRENT chunk set: the rows the checkpoint log references.
+    Superseded runs, removed files and crash orphans drop out without a
+    physical delete; :func:`compact_semantic_index` reclaims them."""
+    _require_index(index_dir)
+    return ck.read_stage_output(spark, index_dir, _STAGE, STORED_CHUNKS)
 
 
 def build_semantic_index(docs: DataFrame, index_dir: str) -> None:
@@ -539,30 +488,16 @@ def build_semantic_index(docs: DataFrame, index_dir: str) -> None:
     identical ``l2_norm`` expression a query would run, so the stored
     float64 is bit-equal to in-query recomputation — queries then pay
     one interpreted aggregate per chunk instead of three).  Each chunk
-    carries its file's ``content_sha`` (the per-row invariant) and a
-    generation number; the file-level ``filestate`` log records the
-    indexed (repo, path, content_sha) set for incremental maintenance."""
+    carries its file's ``content_sha``, the checkpoint key; the cleared
+    stage takes the whole key set as one forced increment."""
     import shutil
 
     d = _prep_docs(docs)
     with _maintenance_lock(index_dir, wait=True):
-        # a rebuild restarts generation numbering — drop any crashed
-        # append's marker and swap leftovers along with the old tables
-        for leftover in (
-            ".chunks-append-inflight",
-            "chunks.old",
-            "chunks.compact-tmp",
-            "filestate.old",
-            "filestate.compact-tmp",
-        ):
-            p = f"{index_dir}/{leftover}"
-            if os.path.isdir(p):
-                shutil.rmtree(p, ignore_errors=True)
-            elif os.path.exists(p):
-                os.remove(p)
-        _chunk_rows(d, gen=0).write.mode("overwrite").parquet(f"{index_dir}/chunks")
-        shutil.rmtree(f"{index_dir}/filestate", ignore_errors=True)
-        _append_filestate(d.select("repo", "path", "content_sha"), index_dir, gen=0)
+        shutil.rmtree(f"{index_dir}/{_STAGE}", ignore_errors=True)
+        ck.run_forced_incremental_stage(
+            docs.sparkSession, d, _chunk_rows(d), _STAGE, index_dir, params=_PARAMS
+        )
 
 
 def semantic_index_append(docs: DataFrame, index_dir: str) -> int:
@@ -570,98 +505,32 @@ def semantic_index_append(docs: DataFrame, index_dir: str) -> int:
     when its (repo, path, CONTENT-sha) is already live — matching the
     reference watcher, which hashes content and re-indexes on change
     (/root/reference/src/storage/mod.rs process_and_index_files →
-    remove_file_chunks).  Changed files get a new generation; their old
-    chunks die via the liveness join (no physical delete — see
-    :func:`live_chunks`), so searches never serve stale chunks.
-    Re-submitting an unchanged corpus appends nothing (J1 anti-join
-    against the file-level log, NOT a chunk-table scan).  Returns the
-    number of newly indexed files.
-
-    Crash-safety: payload chunks append BEFORE the filestate log, so a
-    crash between the two leaves orphan (never-live) chunk rows that
-    compaction GCs — never stale or missing data.  The
-    ``.chunks-append-inflight`` marker makes the RETRY safe too:
-    without it a retry would draw the SAME generation from the
-    unchanged log, append the chunks a second time, and the eventual
-    log entry would make BOTH copies live (the r6 review's duplicate-
-    serving scenario); with it, :func:`_next_gen` allocates past every
-    generation physically present in the payload, so the orphans stay
-    dead forever."""
-    from sema_spark.plans.materialize import materialize
-
-    spark = docs.sparkSession
+    remove_file_chunks).  A changed file's new run supersedes its old
+    chunks (see :func:`live_chunks`), so searches never serve stale
+    chunks.  Re-submitting an unchanged corpus appends nothing (J1
+    anti-join against the file-level log, NOT a chunk-table scan).
+    Returns the number of newly indexed files."""
     with _maintenance_lock(index_dir, wait=True):
-        _recover_swap(f"{index_dir}/chunks")
-        _recover_swap(f"{index_dir}/filestate")
-        state = _file_state(spark, index_dir)
-        if state is None:
-            raise ValueError(
-                f"no index at {index_dir} — build_semantic_index first (an empty "
-                "docs frame is fine for stream-first setups)"
-            )
-        d = _prep_docs(docs)
-        alive = state.where(F.col("gen") != _GEN_DELETED).select("repo", "path", "content_sha")
-        fresh = materialize(d.join(alive, ["repo", "path", "content_sha"], "left_anti"))
-        n = fresh.count()
-        if n:
-            gen = _next_gen(spark, index_dir)
-            marker = f"{index_dir}/.chunks-append-inflight"
-            open(marker, "w").close()
-            _chunk_rows(fresh, gen).write.mode("append").parquet(f"{index_dir}/chunks")
-            _append_filestate(fresh.select("repo", "path", "content_sha"), index_dir, gen)
-            # only now is gen committed to the log; clearing earlier
-            # would let the next append re-allocate an orphaned gen
-            os.remove(marker)
-        return n
-
-
-def _next_gen(spark: SparkSession, index_dir: str) -> int:
-    """Next chunk generation: 1 + the filestate log's max seq — unless a
-    ``.chunks-append-inflight`` marker says a previous append crashed
-    after its payload write, in which case one recovery scan of the
-    payload's ``_gen`` column bumps past any orphaned generations so a
-    retry can never re-issue one (orphans stay dead until compaction
-    GCs them).  The scan runs only in the post-crash state; the marker
-    survives until some later append COMMITS a higher gen to the log."""
-    nxt = _next_seq(spark, index_dir)
-    if os.path.exists(f"{index_dir}/.chunks-append-inflight"):
-        orphan_max = (
-            spark.read.parquet(f"{index_dir}/chunks")
-            .agg(F.max("_gen"))
-            .collect()[0][0]
-        )
-        nxt = max(nxt, int(orphan_max or 0) + 1)
-    return nxt
+        _require_index(index_dir)
+        return ck.run_incremental_stage(
+            docs.sparkSession, _prep_docs(docs), _STAGE, index_dir, _chunk_rows
+        ).input_files
 
 
 def semantic_index_remove(spark: SparkSession, index_dir: str, paths: DataFrame) -> int:
-    """Remove files from the index: append a DELETED filestate entry per
-    (repo, path) — the reference's ``remove_file_chunks``
-    (/root/reference/src/storage/mod.rs) as a log write; the chunks die
-    at the liveness join and their bytes are reclaimed at compaction.
-    Returns the number of live files removed."""
-    from sema_spark.plans.materialize import materialize
-
+    """Remove files from the index: a tombstone per live (repo, path) —
+    the reference's ``remove_file_chunks``
+    (/root/reference/src/storage/mod.rs) as a log write; the chunks
+    leave the live set at once and their bytes are reclaimed at
+    compaction.  Returns the number of live files removed."""
     with _maintenance_lock(index_dir, wait=True):
-        _recover_swap(f"{index_dir}/chunks")
-        _recover_swap(f"{index_dir}/filestate")
-        state = _file_state(spark, index_dir)
-        if state is None:
-            raise ValueError(f"no index at {index_dir} — build_semantic_index first")
-        alive = state.where(F.col("gen") != _GEN_DELETED)
-        doomed = materialize(
-            paths.select("repo", "path").distinct().join(alive, ["repo", "path"], "left_semi")
+        _require_index(index_dir)
+        doomed = paths.select("repo", "path").distinct().join(
+            ck.current_checkpoint(spark, index_dir, _STAGE), ["repo", "path"], "left_semi"
         )
         n = doomed.count()
         if n:
-            next_seq = _next_seq(spark, index_dir)
-            (
-                doomed.withColumn("content_sha", F.lit(None).cast("string"))
-                .withColumn("gen", F.lit(int(_GEN_DELETED)))
-                .withColumn("seq", F.lit(int(next_seq)))
-                .write.mode("append")
-                .parquet(f"{index_dir}/filestate")
-            )
+            ck.delete_files(spark, index_dir, _STAGE, doomed)
         return n
 
 
@@ -673,13 +542,14 @@ def semantic_search_stored(spark: SparkSession, index_dir: str, query: str, k: i
     never served)."""
     from sema_spark.plans.pipeline import semantic_search
 
-    chunks = live_chunks(spark, index_dir)
-    out = semantic_search(spark, chunks, query, k=k, norm_col="emb_norm")
-    return out.drop("emb_norm", "content_sha", "_gen")
+    out = semantic_search(spark, live_chunks(spark, index_dir), query, k=k, norm_col="emb_norm")
+    return out.drop("emb_norm", "content_sha")
 
 
 def semantic_index_ready(index_dir: str) -> bool:
-    return os.path.exists(f"{index_dir}/chunks/_SUCCESS")
+    """True once a build has written the index's checkpoint log (its
+    directory, not a ``_SUCCESS`` marker: compaction GCs the marker)."""
+    return os.path.isdir(ck._ckpt_dir(index_dir, _STAGE))
 
 
 # ------------------------------------------- ANN semantic search (IVF)
@@ -764,8 +634,6 @@ def _compact_table(
     spark: SparkSession,
     table_dir: str,
     partition_by: str | None = None,
-    files_per_partition: int = 1,
-    df: DataFrame | None = None,
 ) -> None:
     """Rewrite a stored-index table into few large files (the Lance
     ``optimize``/compaction analog — every append above leaves one file
@@ -783,24 +651,16 @@ def _compact_table(
     dir is fully written before the first rename, so whichever of
     ``.old``/temp survives a crash holds a complete copy.  On an object
     store without atomic rename, use the checkpoint log's
-    append-then-GC compaction instead (sources/checkpoint.compact).
-
-    ``df``: optional replacement row set (e.g. the liveness-filtered
-    chunk table, so compaction GCs dead generations)."""
+    append-then-GC compaction instead (sources/checkpoint.compact)."""
     import shutil
 
     _recover_swap(table_dir)
-    if df is None:
-        df = spark.read.parquet(table_dir)
+    df = spark.read.parquet(table_dir)
     tmp = f"{table_dir}.compact-tmp"
     shutil.rmtree(tmp, ignore_errors=True)  # stale partial from a crash
     # hash-cluster rows so each partition value lands in one task → one
     # output file per partition dir; unpartitioned tables coalesce flat
-    writer = (
-        df.coalesce(files_per_partition)
-        if partition_by is None
-        else df.repartition(partition_by)
-    )
+    writer = df.coalesce(1) if partition_by is None else df.repartition(partition_by)
     w = writer.write.mode("overwrite")
     if partition_by is not None:
         w = w.partitionBy(partition_by)
@@ -852,20 +712,9 @@ def compact_ivf_index(spark: SparkSession, index_dir: str) -> None:
 
 
 def compact_semantic_index(spark: SparkSession, index_dir: str) -> None:
-    """Compact the chunk table into a single file set, GC-ing dead rows
-    (superseded generations, deleted files, crash orphans), then shrink
-    the filestate log to its latest live entry per file.  Raises if
-    another writer (append / stream) is active.  Order matters for
-    crash-safety: chunks first — a crash before the log compaction
-    leaves extra log entries whose liveness semantics are unchanged."""
+    """Rewrite the live chunk rows into one run and GC every older run,
+    checkpoint file and crash orphan (:func:`checkpoint.compact`:
+    append-then-GC, crash-safe at every step).  Raises if another writer
+    (append / stream) is active."""
     with _maintenance_lock(index_dir, wait=False):
-        _recover_swap(f"{index_dir}/chunks")
-        _recover_swap(f"{index_dir}/filestate")
-        state = _file_state(spark, index_dir)
-        _compact_table(
-            spark, f"{index_dir}/chunks", df=live_chunks(spark, index_dir)
-        )
-        live = state.where(F.col("gen") != _GEN_DELETED).withColumn(
-            "seq", F.abs("gen")
-        ).select("repo", "path", "content_sha", "gen", "seq")
-        _compact_table(spark, f"{index_dir}/filestate", df=live)
+        ck.compact(spark, index_dir, _STAGE)

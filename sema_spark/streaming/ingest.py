@@ -125,9 +125,10 @@ def run_semantic_index_stream(
     incrementally) as Structured Streaming: every microbatch of
     newly-landed repo files flows through ``semantic_index_append``,
     whose (repo, path, CONTENT-sha) anti-join makes replayed
-    microbatches no-ops while a file re-landing with NEW content gets a
-    new generation (its old chunks die at the liveness join) — the same
-    two-level exactly-once story as ``run_triples_stream_to_log``
+    microbatches no-ops while a file re-landing with NEW content commits
+    a new run that supersedes its old chunks in the index's checkpoint
+    log — the same two-level exactly-once story as
+    ``run_triples_stream_to_log``
     (file-source checkpoint dedupes input files, the anti-join dedupes
     work).  Note the file source only surfaces newly-ARRIVED files: an
     in-place mtime-only edit is invisible to Spark's file source, so

@@ -179,6 +179,7 @@ def test_semantic_index_build_append_query(spark, tmp_path):
         build_semantic_index,
         semantic_index_append,
         semantic_index_ready,
+        semantic_index_remove,
         semantic_search_stored,
     )
 
@@ -191,12 +192,20 @@ def test_semantic_index_build_append_query(spark, tmp_path):
     )
     idx = str(tmp_path / "sem")
     assert not semantic_index_ready(idx)
+    # maintenance and queries on a directory with no index fail loudly
+    for no_index in (
+        lambda: semantic_index_append(docs, idx),
+        lambda: semantic_index_remove(spark, idx, docs.select("repo", "path")),
+        lambda: semantic_search_stored(spark, idx, "spark shuffle join"),
+    ):
+        with pytest.raises(ValueError, match="no index"):
+            no_index()
     build_semantic_index(docs.where(F.col("path").isin("f0.py", "f1.py", "f2.py")), idx)
     assert semantic_index_ready(idx)
     assert semantic_index_append(docs, idx) == 9  # only the new files
     assert semantic_index_append(docs, idx) == 0  # idempotent
 
-    stored_chunks = spark.read.parquet(f"{idx}/chunks")
+    stored_chunks = spark.read.parquet(f"{idx}/chunks/data")
     assert stored_chunks.count() == chunk_and_embed(docs).count()
 
     q = "spark shuffle join"
@@ -217,86 +226,46 @@ def _sem_docs(spark, n=8):
 
 
 def test_append_retry_after_payload_crash_serves_no_duplicates(spark, tmp_path):
-    """Crash between the payload append and the filestate append, then
-    RETRY the same batch: the retry must allocate a generation past the
-    orphaned one (via the inflight marker), so exactly one copy of each
-    chunk is ever live, and compaction GCs the orphans."""
+    """Crash after an append's chunk rows landed but before its
+    checkpoint rows, then RETRY the same batch: the orphan run is never
+    live, the retry commits under a fresh run_id, so exactly one copy of
+    each chunk is ever live, and compaction GCs the orphans."""
     from sema_spark.sources.ann_index import (
         _chunk_rows,
-        _next_gen,
         _prep_docs,
         build_semantic_index,
         compact_semantic_index,
         live_chunks,
         semantic_index_append,
     )
+    from sema_spark.sources.checkpoint import new_run_id
 
     docs = _sem_docs(spark)
     idx = str(tmp_path / "sem")
     build_semantic_index(docs.where(F.col("path") < "f4"), idx)
+    n_built = live_chunks(spark, idx).count()
 
-    # simulate the crashed append of the remaining files: payload rows
-    # land at gen 1 with the marker set, but the log write never happens
+    # simulate the crashed append of the remaining files: an orphan data
+    # run that no checkpoint row references
     batch = _prep_docs(docs.where(F.col("path") >= "f4"))
-    open(f"{idx}/.chunks-append-inflight", "w").close()
-    _chunk_rows(batch, gen=1).write.mode("append").parquet(f"{idx}/chunks")
+    (
+        _chunk_rows(batch)
+        .withColumn("run_id", F.lit(new_run_id()))
+        .write.mode("append")
+        .partitionBy("run_id")
+        .parquet(f"{idx}/chunks/data")
+    )
+    assert live_chunks(spark, idx).count() == n_built  # the orphan is not live
 
-    # the retry sees the marker and must skip past the orphaned gen
-    assert _next_gen(spark, idx) == 2
     assert semantic_index_append(docs, idx) == 4
     live = live_chunks(spark, idx)
     per_chunk = live.groupBy("repo", "path", "start_line").count()
     assert per_chunk.where(F.col("count") > 1).count() == 0
     n_live = live.count()
-    # marker cleared by the successful retry; orphans GC'd by compaction
-    import os as _os
-
-    assert not _os.path.exists(f"{idx}/.chunks-append-inflight")
-    total_before = spark.read.parquet(f"{idx}/chunks").count()
+    total_before = spark.read.parquet(f"{idx}/chunks/data").count()
     assert total_before > n_live  # orphans physically present
     compact_semantic_index(spark, idx)
-    assert spark.read.parquet(f"{idx}/chunks").count() == n_live
-
-
-def test_crashed_compaction_swap_recovers(spark, tmp_path):
-    """Kill the compaction between its two renames: readers must FAIL
-    LOUDLY (not silently downgrade to legacy all-generations serving),
-    and the next maintenance op must repair the swap and serve exactly
-    the pre-crash answers."""
-    import os as _os
-
-    import pytest as _pytest
-
-    from sema_spark.sources.ann_index import (
-        build_semantic_index,
-        semantic_index_append,
-        semantic_search_stored,
-    )
-
-    docs = _sem_docs(spark)
-    idx = str(tmp_path / "sem")
-    build_semantic_index(docs.where(F.col("path") < "f4"), idx)
-    # change every file's content so superseded generations exist
-    changed = docs.withColumn("content", F.concat(F.col("content"), F.lit("# v2\n")))
-    semantic_index_append(changed, idx)
-    q = "spark shuffle join"
-    before = [
-        (r.repo, r.path, r.start_line, r.score)
-        for r in semantic_search_stored(spark, idx, q, k=10).collect()
-    ]
-
-    # crash window: filestate renamed away, replacement never promoted
-    _os.rename(f"{idx}/filestate", f"{idx}/filestate.old")
-    with _pytest.raises(RuntimeError, match="mid-compaction-swap"):
-        semantic_search_stored(spark, idx, q, k=10)
-
-    # any maintenance op repairs the swap under the writer lock
-    assert semantic_index_append(changed, idx) == 0
-    after = [
-        (r.repo, r.path, r.start_line, r.score)
-        for r in semantic_search_stored(spark, idx, q, k=10).collect()
-    ]
-    assert after == before and after
+    assert spark.read.parquet(f"{idx}/chunks/data").count() == n_live
 
 
 def test_compaction_preserves_answers(spark, tmp_path):
@@ -340,7 +309,7 @@ def test_compaction_preserves_answers(spark, tmp_path):
     compact_semantic_index(spark, sidx)
     safter = [(r.path, r.start_line, r.score) for r in semantic_search_stored(spark, sidx, sq, k=5).collect()]
     assert safter == sbefore and sbefore
-    assert len(glob.glob(f"{sidx}/chunks/*.parquet")) == 1
+    assert len(glob.glob(f"{sidx}/chunks/data/run_id=*")) == 1
 
 
 def test_semantic_ann_allprobe_equals_exact_and_prunes(spark, tmp_path):
@@ -439,7 +408,7 @@ def test_semantic_index_reindexes_changed_content(spark, tmp_path):
     assert top_kafka[0].path == "a.py"
     assert top_spark[0].path == "b.py"
     # stale generation rows exist physically but are never live
-    raw = spark.read.parquet(f"{idx}/chunks")
+    raw = spark.read.parquet(f"{idx}/chunks/data")
     assert raw.count() > live.count()
 
 
@@ -468,7 +437,7 @@ def test_semantic_index_remove_and_reindex(spark, tmp_path):
 
 def test_semantic_compaction_gcs_dead_generations(spark, tmp_path):
     """Compaction physically drops superseded/deleted chunk rows and
-    shrinks the filestate log, answers unchanged."""
+    shrinks the checkpoint log, answers unchanged."""
     from sema_spark.sources.ann_index import (
         build_semantic_index,
         compact_semantic_index,
@@ -477,6 +446,7 @@ def test_semantic_compaction_gcs_dead_generations(spark, tmp_path):
         semantic_index_remove,
         semantic_search_stored,
     )
+    from sema_spark.sources.checkpoint import file_rows, read_checkpoint_log
 
     old = "def spark_shuffle_join():\n    pass\n" * 8
     new = "def kafka_stream_sink():\n    pass\n" * 8
@@ -492,10 +462,11 @@ def test_semantic_compaction_gcs_dead_generations(spark, tmp_path):
         for r in semantic_search_stored(spark, idx, "spark shuffle join", k=10).collect()
     ]
     n_live = live_chunks(spark, idx).count()
-    assert spark.read.parquet(f"{idx}/chunks").count() > n_live
+    assert spark.read.parquet(f"{idx}/chunks/data").count() > n_live
     compact_semantic_index(spark, idx)
-    assert spark.read.parquet(f"{idx}/chunks").count() == n_live
-    assert spark.read.parquet(f"{idx}/filestate").count() == 2  # a.py, b.py latest only
+    assert spark.read.parquet(f"{idx}/chunks/data").count() == n_live
+    log = file_rows(read_checkpoint_log(spark, idx, "chunks"))
+    assert log.count() == 2  # a.py, b.py latest only
     after = [
         (r.path, r.start_line, r.score)
         for r in semantic_search_stored(spark, idx, "spark shuffle join", k=10).collect()
@@ -529,9 +500,9 @@ def test_noop_append_membership_reads_log_not_payload(spark, tmp_path, monkeypat
     monkeypatch.setattr(DataFrameReader, "parquet", spy)
     assert A.semantic_index_append(docs, sidx) == 0
     assert A.ivf_index_append(_df(spark, ids, vecs), vidx) == 0
-    payload_reads = [p for p in seen if p.endswith("/chunks") or p.endswith("/vectors")]
+    payload_reads = [p for p in seen if p.endswith("/chunks/data") or p.endswith("/vectors")]
     assert payload_reads == []
-    assert any(p.endswith("/filestate") for p in seen)
+    assert any(p.endswith("/chunks/checkpoint") for p in seen)
     assert any(p.endswith("/ids") for p in seen)
 
 

@@ -169,11 +169,10 @@ def test_driver_built_frames_are_local_scans(spark, src, tmp_path, monkeypatch):
     assert ck.latest_params(spark, base, "triples") == "p=2"
 
 
-def test_compact_incremental_stage(spark, src, tmp_path):
-    """compact() rewrites the log-structured stage to one live run and
-    SWAPS it in: snapshot identical, superseded/tombstoned rows gone
-    from disk, checkpoint log collapsed to the compacted run."""
-    base = str(tmp_path / "kg")
+def _fragmented_stage(spark, src, base):
+    """An incremental ``triples`` stage with two data runs — the full
+    source, then one changed file superseding its first version — and
+    one tombstoned file."""
     ck.run_incremental_stage(spark, src, "triples", base, _transform)
     mutated = with_content_sha(
         src.drop("content_sha").withColumn(
@@ -188,18 +187,24 @@ def test_compact_incremental_stage(spark, src, tmp_path):
     victim = spark.createDataFrame([("org0/proj0", "src/m1.py")], "repo string, path string")
     ck.delete_files(spark, base, "triples", victim)
 
-    before = {
-        (r.subj, r.pred, r.obj)
-        for r in ck.read_stage_output(spark, base, "triples").select("subj", "pred", "obj").collect()
-    }
+
+def _live_triples(spark, base):
+    """The stage's live rows as a sorted list (duplicates count)."""
+    rows = ck.read_stage_output(spark, base, "triples").select("subj", "pred", "obj").collect()
+    return sorted(tuple(r) for r in rows)
+
+
+def test_compact_incremental_stage(spark, src, tmp_path):
+    """compact() rewrites the log-structured stage to one live run and
+    SWAPS it in: snapshot identical, superseded/tombstoned rows gone
+    from disk, checkpoint log collapsed to the compacted run."""
+    base = str(tmp_path / "kg")
+    _fragmented_stage(spark, src, base)
+    before = _live_triples(spark, base)
     raw_before = spark.read.parquet(f"{base}/triples/data").count()
 
     rid = ck.compact(spark, base, "triples")
-    after = {
-        (r.subj, r.pred, r.obj)
-        for r in ck.read_stage_output(spark, base, "triples").select("subj", "pred", "obj").collect()
-    }
-    assert after == before  # reader-visible snapshot unchanged
+    assert _live_triples(spark, base) == before  # reader-visible snapshot unchanged
     raw = spark.read.parquet(f"{base}/triples/data")
     assert raw.count() < raw_before  # superseded + tombstoned rows physically gone
     assert {r.run_id for r in raw.select("run_id").distinct().collect()} == {rid}
@@ -211,6 +216,42 @@ def test_compact_incremental_stage(spark, src, tmp_path):
     # mutated version) and m1.py (tombstone dropped with its data)
     r = ck.run_incremental_stage(spark, src, "triples", base, _transform)
     assert not r.skipped and r.input_files == 2
+
+
+@pytest.mark.parametrize("window", ["data_appended", "checkpoint_gc_done"])
+def test_compact_crash_windows(spark, src, tmp_path, window):
+    """A compact() that dies part-way leaves a stage every read answers
+    as before, and the next compact() leaves one live run.  Windows:
+    ``data_appended`` — the compacted data run landed, its checkpoint
+    rows did not; ``checkpoint_gc_done`` — the GC deleted the old
+    checkpoint files but not the old data runs.  Each crash state is
+    rebuilt from a copy of the stage taken before the compaction."""
+    import os
+    import shutil
+
+    base = str(tmp_path / "kg")
+    stage, saved = f"{base}/triples", str(tmp_path / "saved")
+    _fragmented_stage(spark, src, base)
+    before = _live_triples(spark, base)
+    shutil.copytree(stage, saved)
+    rid = ck.compact(spark, base, "triples")
+    if window == "data_appended":  # the old stage + the compacted run's data
+        shutil.copytree(f"{stage}/data/run_id={rid}", f"{saved}/data/run_id={rid}")
+        shutil.rmtree(stage)
+        shutil.copytree(saved, stage)
+    else:  # the compacted stage + the old data runs
+        for run in os.listdir(f"{saved}/data"):
+            if run.startswith("run_id="):
+                shutil.copytree(f"{saved}/data/{run}", f"{stage}/data/{run}")
+    assert sum(d.startswith("run_id=") for d in os.listdir(f"{stage}/data")) > 1
+    assert _live_triples(spark, base) == before
+
+    rid2 = ck.compact(spark, base, "triples")
+    assert _live_triples(spark, base) == before
+    raw = spark.read.parquet(f"{stage}/data")
+    assert {r.run_id for r in raw.select("run_id").distinct().collect()} == {rid2}
+    log = ck.read_checkpoint_log(spark, base, "triples")
+    assert {r.run_id for r in log.select("run_id").distinct().collect()} == {rid2}
 
 
 def test_compact_snapshot_stage(spark, src, tmp_path):

@@ -3,7 +3,7 @@
 import numpy as np
 import pytest
 
-from sema_spark.operators.graph import degree_stats, pagerank, triangle_stats, triangles
+from sema_spark.operators.graph import degree_stats, pagerank, triangles
 
 EDGES = [
     ("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"),
@@ -92,13 +92,6 @@ def test_triangles_each_emitted_once(spark):
     rows = triangles(df).collect()
     assert len(rows) == 4 == len({(r.a, r.b, r.c) for r in rows})
     assert all(r.a < r.b < r.c for r in rows)
-
-
-def test_triangle_stats_participation(spark):
-    edges = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "a")]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    got = {r.id: r.n_triangles for r in triangle_stats(df).collect()}
-    assert got == {"a": 2, "b": 1, "c": 2, "d": 1}
 
 
 def test_k_hop_min_distance(spark):

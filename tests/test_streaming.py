@@ -189,7 +189,7 @@ def test_streaming_semantic_index_maintenance(spark, tmp_path):
 
     q = run_semantic_index_stream(spark, src, idx, ckpt)
     q.awaitTermination(300)
-    stored = spark.read.parquet(f"{idx}/chunks")
+    stored = spark.read.parquet(f"{idx}/chunks/data")
     n_expected = chunk_and_embed(batch).count()
     assert stored.count() == n_expected
     # files below the 50-char chunk minimum yield no chunks and so never
@@ -203,7 +203,7 @@ def test_streaming_semantic_index_maintenance(spark, tmp_path):
     # re-drain: nothing new → no duplicate chunks
     q2 = run_semantic_index_stream(spark, src, idx, ckpt)
     q2.awaitTermination(300)
-    assert spark.read.parquet(f"{idx}/chunks").count() == n_expected
+    assert spark.read.parquet(f"{idx}/chunks/data").count() == n_expected
 
     # and the index answers: stored search equals in-plan over the batch
     from sema_spark.plans.pipeline import semantic_search

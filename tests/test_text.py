@@ -6,7 +6,6 @@ from sema_spark.functions.text import (
     content_fingerprint,
     language_id,
     quality_score,
-    shingle_fingerprint,
     token_count_bpe_ish,
     with_text_features,
     word_count,
@@ -52,15 +51,6 @@ def test_fingerprint_normalization(spark):
     )
     fps = {r.id: r.f for r in df.select("id", content_fingerprint("text").alias("f")).collect()}
     assert fps[0] == fps[1] == fps[2] != fps[3]
-
-
-def test_shingle_fingerprint_stability(spark):
-    df = spark.createDataFrame(
-        [(0, "a b c d e f g h i j"), (1, "a b c d e f g h i j"), (2, "q r s t u v w x y z")],
-        "id long, text string",
-    )
-    fps = {r.id: r.f for r in df.select("id", shingle_fingerprint("text").alias("f")).collect()}
-    assert fps[0] == fps[1] != fps[2]
 
 
 def test_spark_duckdb_parity_on_documents(spark):
