@@ -81,14 +81,3 @@ def content_fingerprint(col: Column | str) -> Column:
     col = F.col(col) if isinstance(col, str) else col
     return F.sha2(F.trim(F.regexp_replace(F.lower(col), r"\s+", " ")), 256)
 
-
-def with_text_features(df, text_col: str = "text"):
-    c = F.col(text_col)
-    return df.select(
-        "*",
-        language_id(c).alias("lang_guess"),
-        word_count(c).alias("n_words"),
-        token_count_bpe_ish(c).alias("n_tokens"),
-        quality_score(c).alias("quality"),
-        content_fingerprint(c).alias("fingerprint"),
-    )

@@ -187,8 +187,3 @@ def cosine_arrow(va: pd.Series, vb: pd.Series) -> pd.Series:
     b = np.stack(vb.map(lambda x: np.asarray(x, dtype=np.float64)))
     return cosine_rows(a, b)
 
-
-def l2_normalize(a: Column | str) -> Column:
-    a = F.col(a) if isinstance(a, str) else a
-    n = F.nullif(l2_norm(a), F.lit(0.0))
-    return F.transform(a, lambda x: (x.cast("double") / n).cast("float"))

@@ -105,14 +105,3 @@ def apply_gitignore(
         how="left_anti",
     )
 
-
-def gitignore_table(spark, rows: list[tuple[str, str]]) -> DataFrame:
-    """Build a patterns table from (repo, gitignore-file-content) pairs —
-    the shape a crawler would emit after reading each repo's root
-    .gitignore."""
-    flat = [
-        (repo, idx, line)
-        for repo, content in rows
-        for idx, line in enumerate(content.splitlines())
-    ]
-    return spark.createDataFrame(flat, "repo string, idx int, pattern string")

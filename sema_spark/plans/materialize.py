@@ -24,7 +24,7 @@ deployment decision, not an algorithm decision:
   session ends or ``spark.catalog.clearCache()`` — call it between
   pipelines when running many in one session.
 
-Select with ``set_materialize_mode()`` or ``$SPARK_GRAFT_MATERIALIZE``.
+Select with ``$SPARK_GRAFT_MATERIALIZE``.
 All call sites use ``df.transform(materialize)`` so the mode is a pure
 runtime switch; the e2e pipeline test runs in every mode.
 
@@ -41,20 +41,11 @@ from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
 MODES = ("local", "reliable", "persist")
-_mode_override: str | None = None
 _DEFAULT_CKPT_DIR = "/tmp/sema_spark_reliable_ckpt"
 
 
-def set_materialize_mode(mode: str | None) -> None:
-    """Process-wide override; ``None`` returns control to the env var."""
-    global _mode_override
-    if mode is not None and mode not in MODES:
-        raise ValueError(f"materialize mode must be one of {MODES}, got {mode!r}")
-    _mode_override = mode
-
-
 def materialize_mode() -> str:
-    mode = _mode_override or os.environ.get("SPARK_GRAFT_MATERIALIZE", "local")
+    mode = os.environ.get("SPARK_GRAFT_MATERIALIZE", "local")
     if mode not in MODES:
         raise ValueError(f"$SPARK_GRAFT_MATERIALIZE must be one of {MODES}, got {mode!r}")
     return mode
@@ -96,11 +87,16 @@ def materialize_lazy(df: DataFrame) -> DataFrame:
     later action — for multi-consumer subtrees inside queries whose
     construction must stay action-free (bm25_search's per-doc frame:
     tests/test_plans.py forbids driver actions at build time, and an
-    eager cut would execute a job per query construction).  Same
-    mode dispatch as :func:`materialize`; local-checkpoint blocks are
-    released by the ContextCleaner when the DataFrame is GC'd, so
-    per-query cuts do not accumulate across a long session the way
-    CacheManager-tracked persists would."""
+    eager cut would execute a job per query construction).
+
+    Mode dispatch differs from :func:`materialize`: ``reliable`` makes
+    a lazy durable checkpoint, but ``local`` AND ``persist`` both make
+    a lazy local checkpoint.  Persist mode does not persist here
+    because local-checkpoint blocks are released by the ContextCleaner
+    when the DataFrame is GC'd, so per-query cuts do not accumulate
+    across a long session the way CacheManager-tracked persists would;
+    the cost is that, in persist mode, these cuts are not recomputable
+    after executor loss."""
     mode = materialize_mode()
     if mode == "reliable":
         sc = df.sparkSession.sparkContext

@@ -57,14 +57,14 @@ from sema_spark.sources import checkpoint as ck
 
 @contextlib.contextmanager
 def _maintenance_lock(index_dir: str, wait: bool):
-    """Mutual exclusion between index WRITERS (append / compact) on one
-    host: flock on ``{index_dir}/.lock`` — cross-process, so a
-    foreachBatch streaming maintainer and an operator-run compaction
-    cannot interleave (the r5 race: an append landing between compact's
-    read and its GC was silently discarded).  Appends WAIT (compactions
-    are short); compactions raise if any writer is active so an operator
-    never blocks behind a long append — retry, or stop the stream
-    first.  The IVF and LSH indexes also rely on a rename-capable
+    """Mutual exclusion between index WRITERS (build / append / remove /
+    compact) on one host: flock on ``{index_dir}/.lock`` — cross-process,
+    so an append in one process and an operator-run compaction in
+    another cannot interleave (the r5 race: an append landing between
+    compact's read and its GC was silently discarded).  Appends WAIT
+    (compactions are short); compactions raise if any writer is active
+    so an operator never blocks behind a long append — retry once the
+    append has finished.  The IVF and LSH indexes also rely on a rename-capable
     filesystem for their compaction swap (:func:`_compact_table`); the
     semantic index compacts with the checkpoint log's append-then-GC
     (sources/checkpoint.compact), which needs no rename."""
@@ -77,8 +77,8 @@ def _maintenance_lock(index_dir: str, wait: bool):
             fcntl.flock(fd, fcntl.LOCK_EX | (0 if wait else fcntl.LOCK_NB))
         except BlockingIOError:
             raise RuntimeError(
-                f"another writer holds {index_dir}/.lock — stop streaming "
-                "maintenance / in-flight appends before compacting"
+                f"another writer holds {index_dir}/.lock — let in-flight "
+                "appends finish before compacting"
             ) from None
         yield
     finally:
@@ -446,7 +446,8 @@ def compact_lsh_index(spark: SparkSession, index_dir: str) -> None:
 
 _STAGE = "chunks"
 # committed by every build, so even a build over an EMPTY frame has a
-# log that appends accept (stream-first setups)
+# log that appends accept and queries answer (an index may start empty
+# and be filled by appends)
 _PARAMS = f"embedding_dim={EMBEDDING_DIM}"
 
 
@@ -642,8 +643,7 @@ def _compact_table(
 
     Writer exclusion is the CALLER's job (take ``_maintenance_lock``
     non-blocking — an append landing between the read and the rename
-    would be silently discarded, including the streaming maintainer's,
-    whose file-source checkpoint never re-offers processed files).
+    would be silently discarded after its caller saw it succeed).
     Crash-safe on a rename-capable filesystem: the rewrite lands in a
     sibling DETERMINISTIC temp dir, then two renames swap it in, and
     :func:`_recover_swap` (run here and by every writer before touching
@@ -704,7 +704,7 @@ def _recover_swap(table_dir: str) -> None:
 
 def compact_ivf_index(spark: SparkSession, index_dir: str) -> None:
     """Compact the vector table to one file per cluster partition.
-    Raises if another writer (append / stream) is active."""
+    Raises if another writer (build / append) is active."""
     with _maintenance_lock(index_dir, wait=False):
         _compact_table(spark, f"{index_dir}/vectors", partition_by="cluster")
         # resize the membership sidecar too (same row set, fewer files)
@@ -715,6 +715,6 @@ def compact_semantic_index(spark: SparkSession, index_dir: str) -> None:
     """Rewrite the live chunk rows into one run and GC every older run,
     checkpoint file and crash orphan (:func:`checkpoint.compact`:
     append-then-GC, crash-safe at every step).  Raises if another writer
-    (append / stream) is active."""
+    (build / append / remove) is active."""
     with _maintenance_lock(index_dir, wait=False):
         ck.compact(spark, index_dir, _STAGE)

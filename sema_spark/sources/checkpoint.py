@@ -42,7 +42,8 @@ of an absent path — is one Arrow batch (:func:`local_frame`): it plans
 as a ``LocalTableScan``, so no Python worker unpickles its rows.
 
 Absent-log rule: a path that does not exist yet reads as the empty
-local frame of its schema (``_read_or_empty``).  Spark's optimizer
+local frame of its schema (``_read_or_empty``); a driver-side existence
+check decides it, so Spark never sees the absent path.  Spark's optimizer
 folds a filter/sort/limit collect over that frame without running a
 job, so :func:`latest_params` and ``_latest_commit`` of a stage with no
 log yet answer ``None`` at no job cost.
@@ -81,11 +82,11 @@ def new_run_id() -> str:
     process-monotonic counter + entropy.
 
     last-writer-wins resolution is ``max_by(run_id)`` string order, so
-    same-SECOND runs must still sort in creation order — a bare
-    second-resolution timestamp left consecutive streaming microbatches
-    randomly ordered (50% chance the older content won).  The '.' after
-    the seconds sorts above the old format's '-', so new ids always
-    supersede old-format ids from the same second."""
+    any two runs started in the same SECOND must still sort in creation
+    order — a bare second-resolution timestamp left back-to-back
+    increments randomly ordered (50% chance the older content won).
+    The '.' after the seconds sorts above the old format's '-', so new
+    ids always supersede old-format ids from the same second."""
     ns = time.time_ns()
     frac = ns % 1_000_000_000
     stamp = time.strftime("%Y%m%dT%H%M%S", time.gmtime(ns // 1_000_000_000))
@@ -138,9 +139,15 @@ def _read_parquet(
     The ONE place the absent-vs-broken policy lives: anything outside
     ``codes`` (corruption, permissions, transient storage errors) always
     propagates — swallowing it would silently reprocess and re-append
-    every file on the next incremental run."""
+    every file on the next incremental run.
+
+    Absence is decided on the driver first (:func:`_exists`, no Spark
+    job): handed an absent path, Spark logs a WARN with a full
+    ``FileNotFoundException`` trace before it raises ``PATH_NOT_FOUND``."""
     from pyspark.errors import AnalysisException
 
+    if empty_schema is not None and not _exists(spark, path):
+        return local_frame(spark, [], empty_schema)
     try:
         reader = spark.read.schema(read_schema) if read_schema is not None else spark.read
         if merge_schema:
@@ -164,9 +171,7 @@ def read_checkpoint_log(spark: SparkSession, base: str, stage: str) -> DataFrame
 def has_checkpoint_log(spark: SparkSession, base: str, stage: str) -> bool:
     """Whether the stage has a checkpoint log yet — a driver-side file-
     system check, no Spark job."""
-    path = _ckpt_dir(base, stage)
-    fs, hpath = _fs(spark, path)
-    return fs.exists(hpath(path))
+    return _exists(spark, _ckpt_dir(base, stage))
 
 
 def current_checkpoint(spark: SparkSession, base: str, stage: str) -> DataFrame:
@@ -640,6 +645,11 @@ def read_lineage(spark: SparkSession, base: str, stage: str) -> DataFrame:
 def _fs(spark: SparkSession, path: str):
     hpath = spark._jvm.org.apache.hadoop.fs.Path
     return hpath(path).getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def _exists(spark: SparkSession, path: str) -> bool:
+    fs, hpath = _fs(spark, path)
+    return fs.exists(hpath(path))
 
 
 def _list_children(spark: SparkSession, path: str) -> list[str]:

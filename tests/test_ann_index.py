@@ -172,7 +172,8 @@ def test_incremental_matches_python_oracle(spark, tmp_path):
 def test_semantic_index_build_append_query(spark, tmp_path):
     """Stored chunk-embedding index: incremental build converges to the
     one-shot table, re-append is a no-op, and the stored query equals
-    the in-plan semantic_search exactly."""
+    the in-plan semantic_search exactly — also for an index built over
+    an EMPTY frame, which queries answer with no rows and appends fill."""
     from sema_spark.operators.chunker import chunk_and_embed
     from sema_spark.plans.pipeline import semantic_search
     from sema_spark.sources.ann_index import (
@@ -200,19 +201,24 @@ def test_semantic_index_build_append_query(spark, tmp_path):
     ):
         with pytest.raises(ValueError, match="no index"):
             no_index()
-    build_semantic_index(docs.where(F.col("path").isin("f0.py", "f1.py", "f2.py")), idx)
-    assert semantic_index_ready(idx)
-    assert semantic_index_append(docs, idx) == 9  # only the new files
-    assert semantic_index_append(docs, idx) == 0  # idempotent
-
-    stored_chunks = spark.read.parquet(f"{idx}/chunks/data")
-    assert stored_chunks.count() == chunk_and_embed(docs).count()
-
     q = "spark shuffle join"
-    got = semantic_search_stored(spark, idx, q, k=10).collect()
     exp = semantic_search(spark, chunk_and_embed(docs), q, k=10).collect()
     key = lambda r: (r.repo, r.path, r.start_line, r.score, r.matches_in_file)
-    assert sorted(map(key, got)) == sorted(map(key, exp)) and got
+    for i, seed in enumerate((docs.where(F.col("path").isin("f0.py", "f1.py", "f2.py")), docs.limit(0))):
+        idx = str(tmp_path / f"sem{i}")
+        build_semantic_index(seed, idx)
+        assert semantic_index_ready(idx)
+        n_seeded = seed.count()
+        if n_seeded == 0:
+            assert semantic_search_stored(spark, idx, q, k=10).count() == 0
+        assert semantic_index_append(docs, idx) == 12 - n_seeded  # only the new files
+        assert semantic_index_append(docs, idx) == 0  # idempotent
+
+        stored_chunks = spark.read.parquet(f"{idx}/chunks/data")
+        assert stored_chunks.count() == chunk_and_embed(docs).count()
+
+        got = semantic_search_stored(spark, idx, q, k=10).collect()
+        assert sorted(map(key, got)) == sorted(map(key, exp)) and got
 
 
 def _sem_docs(spark, n=8):

@@ -169,6 +169,35 @@ def test_driver_built_frames_are_local_scans(spark, src, tmp_path, monkeypatch):
     assert ck.latest_params(spark, base, "triples") == "p=2"
 
 
+def test_absent_paths_are_never_read(spark, tmp_path, monkeypatch):
+    """An absent log or data dir is decided on the driver: Spark is never
+    handed the path (it would log a WARN with a full
+    FileNotFoundException trace before raising PATH_NOT_FOUND), and the
+    reads of a fresh base answer empty frames with their exact schemas."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from sema_spark.schemas import TRIPLES
+
+    parquet = DataFrameReader.parquet
+
+    def existing_only(self, *paths, **kwargs):
+        missing = [p for p in paths if not os.path.exists(p)]
+        assert not missing, f"spark.read handed absent paths {missing}"
+        return parquet(self, *paths, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", existing_only)
+    log_schema = StructType(CHECKPOINT.fields + [StructField("run_id", StringType(), False)])
+    base = str(tmp_path / "kg")
+    log = ck.read_checkpoint_log(spark, base, "triples")
+    assert log.schema == log_schema and log.count() == 0
+    out = ck.read_stage_output(spark, base, "triples", schema=TRIPLES)
+    assert out.schema == TRIPLES and out.count() == 0
+    lin = ck.read_lineage(spark, base, "triples")
+    assert lin.schema == LINEAGE and lin.count() == 0
+
+
 def _fragmented_stage(spark, src, base):
     """An incremental ``triples`` stage with two data runs — the full
     source, then one changed file superseding its first version — and

@@ -5,7 +5,7 @@ from pyspark.sql import functions as F
 
 from sema_spark.functions.encoder import EMBEDDING_DIM, encode_numpy, encode_text
 from sema_spark.functions.minhash import char_shingles, explode_bands, tokenize, with_minhash
-from sema_spark.functions.vector import cosine, dot, l2_norm, l2_normalize
+from sema_spark.functions.vector import cosine, dot, l2_norm
 
 
 def test_encoder_contract():
@@ -41,12 +41,10 @@ def test_vector_functions(spark):
         dot("a", "b").alias("d"),
         l2_norm("a").alias("n"),
         cosine("a", "b").alias("c"),
-        l2_normalize("a").alias("u"),
     ).collect()[0]
     assert row.d == pytest.approx(18.0)
     assert row.n == pytest.approx(3.0)
     assert row.c == pytest.approx(1.0)
-    assert np.allclose(row.u, [1 / 3, 2 / 3, 2 / 3], atol=1e-6)
     # zero-norm → NULL, not NaN/error
     z = spark.createDataFrame([([0.0, 0.0], [1.0, 1.0])], "a array<float>, b array<float>")
     assert z.select(cosine("a", "b").alias("c")).collect()[0].c is None

@@ -1,7 +1,20 @@
 """Gitignore-content semantics (F3 full-fidelity tier): glob→regex
 compilation, anchoring, directory patterns, last-match-wins negation."""
 
-from sema_spark.operators.gitignore import apply_gitignore, compile_gitignore, gitignore_table
+from sema_spark.operators.gitignore import apply_gitignore, compile_gitignore
+
+
+def gitignore_table(spark, rows: list[tuple[str, str]]):
+    """A (repo, idx, pattern) patterns table from (repo, gitignore-file-
+    content) pairs — the shape a crawler would emit after reading each
+    repo's root .gitignore."""
+    flat = [
+        (repo, idx, line)
+        for repo, content in rows
+        for idx, line in enumerate(content.splitlines())
+    ]
+    return spark.createDataFrame(flat, "repo string, idx int, pattern string")
+
 
 GITIGNORE = "\n".join(
     [

@@ -5,24 +5,18 @@ reliable checkpoint, recomputable persist)."""
 import pytest
 
 from sema_spark.corpus import corpus_df, expected_edges
-from sema_spark.plans.materialize import materialize_mode, set_materialize_mode
-
-
-@pytest.fixture()
-def reset_mode():
-    yield
-    set_materialize_mode(None)
+from sema_spark.plans.materialize import materialize_mode
 
 
 @pytest.mark.parametrize("mode", ["reliable", "persist"])
-def test_pipeline_identical_in_every_mode(spark, tmp_path, mode, reset_mode):
+def test_pipeline_identical_in_every_mode(spark, tmp_path, mode, monkeypatch):
     # 'local' is the default exercised by the whole rest of the suite;
     # here the cluster-resilient modes must produce the identical graph.
     from sema_spark.operators.canonicalize import canonical_edges, canonicalize_nodes
     from sema_spark.operators.linking import build_nodes, link_triples
     from sema_spark.operators.mentions import extract_triples
 
-    set_materialize_mode(mode)
+    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", mode)
     if mode == "reliable":
         spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
     assert materialize_mode() == mode
@@ -36,7 +30,7 @@ def test_pipeline_identical_in_every_mode(spark, tmp_path, mode, reset_mode):
     assert got == expected_edges("xs")
 
 
-def test_mode_validation():
+def test_mode_validation(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "nope")
     with pytest.raises(ValueError):
-        set_materialize_mode("nope")
-    set_materialize_mode(None)
+        materialize_mode()

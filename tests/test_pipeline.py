@@ -58,21 +58,18 @@ def test_rerun_skips_everything(spark, kg):
 UNCHANGED_PASS_JOB_BUDGET = 20
 
 
-def test_unchanged_pass_job_budget(spark, kg):
+def test_unchanged_pass_job_budget(spark, kg, monkeypatch):
     """An unchanged re-run is a handful of skip checks; every extra Spark
     job is fixed per-action cost (the D1 job diet).  Runs right after
     the cold build of the module fixture, before any test mutates it."""
-    from sema_spark.plans.materialize import set_materialize_mode
-
     base, src, _ = kg
     sc = spark.sparkContext
-    set_materialize_mode("local")
+    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "local")
     sc.setJobGroup("unchanged-pass-budget", "unchanged pass")
     try:
         run = P.run_pipeline(spark, src, base)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-        set_materialize_mode(None)
     jobs = len(sc.statusTracker().getJobIdsForGroup("unchanged-pass-budget"))
     assert not run.any_work
     assert jobs <= UNCHANGED_PASS_JOB_BUDGET, jobs

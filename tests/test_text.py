@@ -7,7 +7,6 @@ from sema_spark.functions.text import (
     language_id,
     quality_score,
     token_count_bpe_ish,
-    with_text_features,
     word_count,
 )
 
@@ -60,7 +59,14 @@ def test_spark_duckdb_parity_on_documents(spark):
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     got = {
         r.doc_id: (r.lang_guess, r.n_words, r.n_tokens, float(r.quality), r.fingerprint)
-        for r in with_text_features(docs).collect()
+        for r in docs.select(
+            "doc_id",
+            language_id("text").alias("lang_guess"),
+            word_count("text").alias("n_words"),
+            token_count_bpe_ish("text").alias("n_tokens"),
+            quality_score("text").alias("quality"),
+            content_fingerprint("text").alias("fingerprint"),
+        ).collect()
     }
     con = duckdb.connect()
     en, de, fr, es = (
