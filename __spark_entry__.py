@@ -1103,7 +1103,7 @@ def _xs_bpe_vocab(spark, n_merges: int = 20):
     key = ("xs-vocab", n_merges)
     if key not in _BPE_MERGES_CACHE:
         docs = corpus_df(spark, "xs").select(F.col("content").alias("text"))
-        words = [r[0] for r in word_vocab(docs, top_n=20000).collect()]
+        words = [r[0] for r in word_vocab(docs).collect()]
         _BPE_MERGES_CACHE[key] = precompute_vocab(
             _xs_bpe_merges(spark, n_merges), words
         )

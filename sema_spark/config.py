@@ -4,7 +4,13 @@ CrawlerConfig (/root/reference/src/config/mod.rs:26-115,
 compile to Catalyst predicates.
 
 Config is driver-side state, not a dataflow operator: load → build
-predicates → let Catalyst push them into the scan.
+predicates → let Catalyst push them into the scan.  This is the one
+definition of the crawl filter (SURVEY F1-F3): the reference applies
+its crawler config once, when it crawls, and so do callers here —
+``PipelineConfig.apply`` on the input, then ``run_pipeline`` (the CLI
+does exactly this).  Stage 1 adds only the 50-char content guard (F4,
+``mentions.MIN_CONTENT_CHARS``), a processor constant in the reference
+(src/storage/processor.rs:8), not a config key.
 """
 
 from __future__ import annotations
@@ -30,11 +36,9 @@ DEFAULT_EXCLUDE_PATTERNS = [".git", "target", "node_modules", ".cache", "*.tmp",
 @dataclass
 class PipelineConfig:
     max_file_size: int = 10_485_760  # src/config/mod.rs:29
-    min_content_chars: int = 50  # src/storage/processor.rs:8
     file_extensions: list[str] = field(default_factory=lambda: list(DEFAULT_EXTENSIONS))
     exclude_patterns: list[str] = field(default_factory=lambda: list(DEFAULT_EXCLUDE_PATTERNS))
     include_hidden: bool = False  # src/config/mod.rs:113
-    langs: tuple[str, ...] | None = None
 
     @classmethod
     def from_toml(cls, path: str) -> "PipelineConfig":
@@ -46,7 +50,7 @@ class PipelineConfig:
             data = tomllib.load(f)
         general = data.get("general", data)
         kwargs = {}
-        for key in ("max_file_size", "min_content_chars", "file_extensions", "exclude_patterns", "include_hidden"):
+        for key in ("max_file_size", "file_extensions", "exclude_patterns", "include_hidden"):
             if key in general:
                 kwargs[key] = general[key]
         return cls(**kwargs)
@@ -81,21 +85,15 @@ class PipelineConfig:
         return ~F.col("path").rlike(r"(^|/)\.")
 
     def size_predicate(self) -> Column:
-        # max_file_size is BYTES (reference semantics, config/mod.rs:29)
-        # → octet_length; the min guard is a character count by design
-        return (
-            F.col("content").isNotNull()
-            & (F.length("content") >= self.min_content_chars)
-            & (F.octet_length("content") <= self.max_file_size)
-        )
+        """F2: content present and at most ``max_file_size`` BYTES
+        (reference semantics, config/mod.rs:29) → octet_length.  The
+        50-char minimum is stage 1's guard (F4), not a config key."""
+        return F.col("content").isNotNull() & (F.octet_length("content") <= self.max_file_size)
 
     def apply(self, df: DataFrame) -> DataFrame:
-        out = df.filter(
+        return df.filter(
             self.size_predicate()
             & self.extension_predicate()
             & self.exclude_predicate()
             & self.hidden_predicate()
         )
-        if self.langs:
-            out = out.filter(F.col("lang").isin(*self.langs))
-        return out

@@ -372,9 +372,9 @@ def expected_pagerank(
     return {v: float(rank[ix[v]]) for v in nodes}
 
 
-def expected_kcore(scale: str = "xs", k: int = 3) -> set[str]:
-    """Independent pure-Python k-core: iteratively peel nodes of
-    undirected degree < k from the expected edge set (self-loops and
+def expected_kcore(scale: str = "xs") -> set[str]:
+    """Independent pure-Python 3-core: iteratively peel nodes of
+    undirected degree < 3 from the expected edge set (self-loops and
     direction dropped, parallel edges collapsed — the same normalization
     operators/graph.k_core applies).  Driver oracle for ``kg_kcore``."""
     import collections
@@ -388,7 +388,7 @@ def expected_kcore(scale: str = "xs", k: int = 3) -> set[str]:
     while changed:
         changed = False
         for node in list(adj):
-            if len(adj[node]) < k:
+            if len(adj[node]) < 3:
                 for nb in adj[node]:
                     adj[nb].discard(node)
                 del adj[node]
@@ -452,7 +452,7 @@ def write_expected_tables(out_dir: str, scale: str = "xs") -> None:
     write("triples", ("subj", "pred", "obj"), triples)
     write("edges", ("src", "pred", "dst"), expected_edges(scale))
     write_table(
-        "kcore3", pa.table({"id": sorted(expected_kcore(scale, k=3))})
+        "kcore3", pa.table({"id": sorted(expected_kcore(scale))})
     )
     lpa = expected_label_propagation(scale, iterations=5)
     lpa_ids = sorted(lpa)
@@ -548,7 +548,7 @@ def write_expected_tables(out_dir: str, scale: str = "xs") -> None:
     )
 
 
-def write_corpus(spark, out_dir: str, scale: str = "xs", num_files: int | None = None) -> None:
+def write_corpus(spark, out_dir: str, scale: str = "xs") -> None:
     """Materialize the corpus as a parquet table laid out like the real
     input would be: many files, rows hash-spread so a monorepo doesn't
     own a contiguous region (parquet splits can't go below row-group /
@@ -556,8 +556,7 @@ def write_corpus(spark, out_dir: str, scale: str = "xs", num_files: int | None =
     from pyspark.sql import functions as F
 
     df = corpus_df(spark, scale)
-    if num_files is None:
-        n_repos, base_modules, mono, body = SCALES[scale]
-        approx_rows = n_repos * base_modules + base_modules * (mono - 1)
-        num_files = max(8, min(128, approx_rows // 400))
+    n_repos, base_modules, mono, body = SCALES[scale]
+    approx_rows = n_repos * base_modules + base_modules * (mono - 1)
+    num_files = max(8, min(128, approx_rows // 400))
     df.repartition(num_files, F.xxhash64("repo", "path")).write.mode("overwrite").parquet(out_dir)

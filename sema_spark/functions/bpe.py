@@ -253,21 +253,24 @@ def precompute_vocab(merges, words) -> dict[str, list[str]]:
     return {w: apply_merges(w, rules) for w in words}
 
 
-def word_vocab(docs: DataFrame, text_col: str = "text", top_n: int | None = None) -> DataFrame:
-    """Distinct words of the corpus (same word regex as train/encode),
-    optionally capped to the ``top_n`` most frequent — the bounded
-    vocabulary a caller pre-encodes and broadcasts via
+VOCAB_TOP_N = 20_000
+
+
+def word_vocab(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """The :data:`VOCAB_TOP_N` most frequent distinct words of the
+    corpus (same word regex as train/encode) — the bounded vocabulary a
+    caller pre-encodes with :func:`precompute_vocab` and broadcasts via
     :func:`bpe_encode`'s ``vocab``.  Zipf makes a modest cap cover
     nearly all occurrences, so the broadcast stays small at any corpus
     size."""
-    counts = (
+    return (
         docs.select(F.explode(_words(F.col(text_col))).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("cnt"))
+        .orderBy(F.desc("cnt"), "w")
+        .limit(VOCAB_TOP_N)
+        .select("w")
     )
-    if top_n is not None:
-        counts = counts.orderBy(F.desc("cnt"), "w").limit(top_n)
-    return counts.select("w")
 
 
 def bpe_encode(
@@ -287,12 +290,10 @@ def bpe_encode(
     the closure.  No shuffle: a narrow map over the corpus.
 
     ``vocab``: seed the workers' memo cache via broadcast instead of
-    deriving it per task.  Accepts a precomputed mapping from
-    :func:`precompute_vocab` (the amortized form — build once per merge
-    table), a :func:`word_vocab` DataFrame, or an iterable of words
-    (both pre-encoded here, driver-side, per call).  Without it each
-    worker falls back to a memo cache that persists ACROSS Arrow
-    batches for the life of the deserialized task closure (the r5
+    deriving it per task: a word → tokens mapping from
+    :func:`precompute_vocab` (build it once per merge table).  Without
+    it each worker falls back to a memo cache that persists ACROSS
+    Arrow batches for the life of the deserialized task closure (the r5
     version reset it per 10k-row Arrow batch).
 
     MEASURED r6 (50k-file bench corpus, 200 rules, 64 partitions,
@@ -306,22 +307,10 @@ def bpe_encode(
     1.13 s one-time precompute — break-even at ~3 encode jobs).  Keep
     ``vocab=None`` for one-shot encodes; pass a precomputed mapping
     when one table encodes many corpora/queries."""
-    from collections.abc import Mapping
-
     from pyspark.sql.functions import pandas_udf
 
     rules = list(merges)
-    pre: dict[str, list[str]] = {}
-    if vocab is not None:
-        if isinstance(vocab, Mapping):
-            pre = dict(vocab)
-        else:
-            words = (
-                [r[0] for r in vocab.select(vocab.columns[0]).collect()]
-                if isinstance(vocab, DataFrame)
-                else list(vocab)
-            )
-            pre = {w: apply_merges(w, rules) for w in words}
+    pre = dict(vocab) if vocab is not None else {}
     # broadcast only a NON-empty seed, and memoize per mapping object:
     # broadcasts are cleaned only when the driver GCs the Broadcast
     # handle, so re-broadcasting the same multi-MB dict on every encode
@@ -371,20 +360,13 @@ _BCAST_MEMO_MAX = 8
 
 
 def _broadcast_memo(spark, vocab, pre: dict):
-    from collections.abc import Mapping
-
     sc = spark.sparkContext
-    if isinstance(vocab, Mapping):
-        key = (sc.applicationId, id(vocab))
-        hit = _BCAST_MEMO.get(key)
-        if hit is not None and hit[0] is vocab:
-            return hit[1]
-        b = sc.broadcast(pre)
-        _BCAST_MEMO[key] = (vocab, b)
-        while len(_BCAST_MEMO) > _BCAST_MEMO_MAX:
-            _BCAST_MEMO.pop(next(iter(_BCAST_MEMO)))
-        return b
-    # DataFrame / iterable vocab is re-encoded per call anyway (the
-    # documented losing path for repeated jobs) — no stable identity to
-    # memo on
-    return sc.broadcast(pre)
+    key = (sc.applicationId, id(vocab))
+    hit = _BCAST_MEMO.get(key)
+    if hit is not None and hit[0] is vocab:
+        return hit[1]
+    b = sc.broadcast(pre)
+    _BCAST_MEMO[key] = (vocab, b)
+    while len(_BCAST_MEMO) > _BCAST_MEMO_MAX:
+        _BCAST_MEMO.pop(next(iter(_BCAST_MEMO)))
+    return b

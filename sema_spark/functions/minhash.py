@@ -32,16 +32,16 @@ NUM_PERM = 64
 LSH_BANDS = 16  # 16 bands x 4 rows; s-curve threshold ~ (1/16)^(1/4) ≈ 0.5
 
 
-def choose_bands(threshold: float, num_perm: int = NUM_PERM) -> int:
-    """Pick the band count whose S-curve midpoint (1/b)^(r/num_perm... )
+def choose_bands(threshold: float) -> int:
+    """Pick the band count whose S-curve midpoint (1/b)^(r/NUM_PERM... )
     ≈ (1/b)^(1/r) sits at the requested similarity threshold.  A banding
     far below the threshold floods candidate generation: on corpora with
     small vocabularies (boilerplate), 16x4 banding at threshold 0.7
     produced near-N² candidates (measured 77s for 5k docs)."""
     best, best_gap = LSH_BANDS, 1e9
     b = 2
-    while b <= num_perm:
-        r = num_perm // b
+    while b <= NUM_PERM:
+        r = NUM_PERM // b
         mid = (1.0 / b) ** (1.0 / r)
         gap = abs(mid - threshold)
         if gap < best_gap:

@@ -593,17 +593,15 @@ def curation_chain(
     capacity: int = 256,
     decontam_n: int = 3,
     passage_words: int = 10,
-    remove_dup_spans: int | None = None,
 ) -> DataFrame:
     """The five-stage curation composition (single source of truth for
     ``__spark_entry__.q_curation_v2`` AND ``tools/bench_scaling.py``'s
     curation scaling job): decontaminate (bench = ``doc_id % 97 == 0``)
-    → repetition-quality keep → [optional: exact-substring span removal
-    at window ``remove_dup_spans``, Lee et al. 2022's strongest dedup
-    tier — detect + CUT, see :func:`duplicated_spans` /
-    :func:`remove_spans`] → corpus-wide passage dedup (keep cleaned
+    → repetition-quality keep → corpus-wide passage dedup (keep cleaned
     text) → next-fit sequence packing → weighted training-mix
-    interleave.  ``docs``: (doc_id, text, source).
+    interleave.  ``docs``: (doc_id, text, source).  The exact-substring
+    tier (:func:`duplicated_spans` / :func:`remove_spans`) is not a
+    chain stage; it is its own operator.
 
     ``weights`` must assign a POSITIVE weight to every source in the
     corpus (validated: non-positive weights raise here; an uncovered
@@ -648,18 +646,6 @@ def curation_chain(
             keep_ids, "doc_id", "left_semi"
         )
     )
-    if remove_dup_spans:
-        # exact-substring tier: detect duplicated >=w-word runs corpus-
-        # wide and CUT them before passage dedup (remove_spans already
-        # materializes nothing extra — duplicated_spans cuts `occ`
-        # internally; the barrier here is because the cleaned text
-        # feeds the multi-consumer dedup_passages stage)
-        spans = duplicated_spans(train, w=remove_dup_spans)
-        train = materialize(
-            remove_spans(train, spans).select(
-                "doc_id", F.col("clean_text").alias("text")
-            )
-        )
     # no materialize barrier here since r5: after the pack/interleave
     # fusion below, `cleaned` has exactly ONE consumer (the r4 shape fed
     # two branches from it), so a cut would only cost a write+read

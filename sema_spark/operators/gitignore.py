@@ -78,19 +78,14 @@ def apply_gitignore(
     patterns: DataFrame,
     repo_col: str = "repo",
     path_col: str = "path",
-    broadcast_rules: bool = True,
 ) -> DataFrame:
     """Drop rows of ``df`` ignored by their repo's gitignore patterns.
 
     Last match wins: a path is dropped iff the highest-idx matching rule
-    is non-negated.  One repo-keyed join + one aggregate; rules
-    broadcast by default (per-repo pattern lists are tiny — pass
-    ``broadcast_rules=False`` when the compiled rule table is too big,
-    and the join co-partitions on repo instead).
+    is non-negated.  One repo-keyed join + one aggregate; the rules
+    always broadcast (per-repo pattern lists are tiny).
     """
-    rules = compile_gitignore(patterns)
-    if broadcast_rules:
-        rules = F.broadcast(rules)
+    rules = F.broadcast(compile_gitignore(patterns))
     keys = df.select(F.col(repo_col).alias("repo"), F.col(path_col).alias("path")).distinct()
     matches = keys.join(rules, "repo").filter(F.expr("path rlike rx"))
     ignored = (

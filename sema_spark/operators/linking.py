@@ -12,11 +12,10 @@ stage 1) to entity ids.  Generalizes the reference's two lookup paths:
 
 Resolution is repo-scoped: the join key is ``(repo, alias)`` so on a
 cluster both sides co-partition by repo and a monorepo's hot key is
-handled by AQE skew-join.  ``broadcast=None`` (default) lets AQE decide
-at runtime from the dictionary's actual size (autoBroadcastJoinThreshold)
-— a forced hint would OOM executors at 10^12-file scale where the
-symbol table alone is TBs; pass ``broadcast=True`` only when the
-dictionary is known-small (e.g. a curated alias list).
+handled by AQE skew-join.  The alias join carries no broadcast hint:
+AQE decides at runtime from the dictionary's actual size
+(autoBroadcastJoinThreshold) — a forced hint would OOM executors at
+10^12-file scale where the symbol table alone is TBs.
 """
 
 from __future__ import annotations
@@ -97,7 +96,6 @@ def _pick_best_alias(joined: DataFrame, id_cols: list[str]) -> DataFrame:
 def link_triples(
     triples: DataFrame,
     nodes: DataFrame | None = None,
-    broadcast: bool | None = None,
     fuzzy: bool = True,
     cosine_threshold: float = COSINE_THRESHOLD,
 ) -> DataFrame:
@@ -119,7 +117,6 @@ def link_triples(
         F.col("entity_id").alias("cand_id"),
         F.col("kind").alias("cand_kind"),
     ).transform(materialize)
-    alias_j = F.broadcast(alias) if broadcast else alias
 
     passthrough = triples.filter(~F.col("pred").isin(*LINK_PREDS)).select(
         "*",
@@ -131,7 +128,7 @@ def link_triples(
 
     key_cols = ["subj", "pred", "obj", "repo", "path", "commit", "line", "content_sha"]
     joined = raw.join(
-        alias_j,
+        alias,
         on=[F.col("repo") == F.col("a_repo"), F.col("obj") == F.col("a_alias")],
         how="left",
     ).select(*[raw[c] for c in key_cols], "cand_id", "cand_kind").transform(materialize)

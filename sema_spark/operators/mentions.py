@@ -21,6 +21,10 @@ Semantics (documented approximations, shared with the fixture oracle):
 * files shorter than :data:`MIN_CONTENT_CHARS` produce no triples
   (reference MIN_CHUNK_SIZE guard,
   /root/reference/src/storage/processor.rs:8,34-36).
+* that guard is a stage-1 constant, not a config key: the crawl
+  options (SURVEY F1-F3) are applied once, by
+  :meth:`sema_spark.config.PipelineConfig.apply`, before the input
+  reaches :func:`extract_triples`.
 """
 
 from __future__ import annotations
@@ -29,8 +33,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 MIN_CONTENT_CHARS = 50
-MAX_CONTENT_CHARS = 10_485_760  # reference default max_file_size
-                                # (/root/reference/src/config/mod.rs:29)
 SALT_BUCKETS = 64
 
 # Per-line patterns (RE2-safe: no lookbehind, so the DuckDB oracle can run
@@ -97,34 +99,6 @@ _KIND_PRED = {
 def with_content_sha(df: DataFrame) -> DataFrame:
     """North-rule per-row invariant: content_sha == sha256(content)."""
     return df.withColumn("content_sha", F.sha2(F.col("content"), 256))
-
-
-def apply_crawl_filters(
-    df: DataFrame,
-    min_chars: int = MIN_CONTENT_CHARS,
-    max_chars: int = MAX_CONTENT_CHARS,
-    exclude_path_regex: str = r"(^|/)(\.git|target|node_modules|\.cache)(/|$)|\.(tmp|log)$",
-    langs: tuple[str, ...] | None = None,
-) -> DataFrame:
-    """Crawl-config predicates as pushed-down filters (SURVEY F1-F4).
-
-    Mirrors the reference crawler's allow-list / size / hidden /
-    exclude-pattern semantics (/root/reference/src/crawler/mod.rs:28-56,
-    defaults /root/reference/src/config/mod.rs:29-110) as Catalyst
-    predicates, which reach the parquet scan as PushedFilters.
-    """
-    out = df.filter(
-        F.col("content").isNotNull()
-        & (F.length("content") >= min_chars)
-        # byte-accurate max (reference max_file_size is bytes; length()
-        # counts characters — a CJK file can be 4x its char count)
-        & (F.octet_length("content") <= max_chars)
-        & ~F.col("path").rlike(exclude_path_regex)
-        & ~F.col("path").rlike(r"(^|/)\.")  # hidden files/dirs
-    )
-    if langs:
-        out = out.filter(F.col("lang").isin(*langs))
-    return out
 
 
 def salted_repartition(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
@@ -219,7 +193,7 @@ def extract_mentions(df: DataFrame) -> DataFrame:
     )
 
 
-def mentions_to_triples(mentions: DataFrame, dedup: bool = True) -> DataFrame:
+def mentions_to_triples(mentions: DataFrame) -> DataFrame:
     """Assemble TRIPLES rows from mention rows — single select, no join:
     the `contains` parent class was extracted file-level, so no
     mention-vs-mention self-join is needed (shuffle saved at 100 TB).
@@ -248,10 +222,9 @@ def mentions_to_triples(mentions: DataFrame, dedup: bool = True) -> DataFrame:
         "sym",
         pred.alias("pred"),
     )
-    if dedup:
-        base = base.groupBy(
-            "repo", "path", "commit", "content_sha", "file_class", "pred", "sym"
-        ).agg(F.min("line").alias("line"))
+    base = base.groupBy(
+        "repo", "path", "commit", "content_sha", "file_class", "pred", "sym"
+    ).agg(F.min("line").alias("line"))
     file_id = F.concat_ws("/", "repo", "path")
     p = F.col("pred")
     subj = F.when(
@@ -272,10 +245,16 @@ def mentions_to_triples(mentions: DataFrame, dedup: bool = True) -> DataFrame:
     )
 
 
-def extract_triples(df: DataFrame, apply_filters: bool = True, dedup: bool = True) -> DataFrame:
-    """Default stage-1 path: filters → mention scan → triple assembly."""
+def extract_triples(df: DataFrame) -> DataFrame:
+    """Stage 1: F4 guard → mention scan → triple assembly.
+
+    The guard (content present and at least :data:`MIN_CONTENT_CHARS`
+    long) is the only filter here.  The crawl options (F1-F3: size cap,
+    extensions, excludes, hidden files) belong to
+    :class:`sema_spark.config.PipelineConfig`; its ``apply`` runs on the
+    input before it reaches the pipeline.
+    """
     if "content_sha" not in df.columns:
         df = with_content_sha(df)
-    if apply_filters:
-        df = apply_crawl_filters(df)
-    return mentions_to_triples(extract_mentions(df), dedup=dedup)
+    df = df.filter(F.col("content").isNotNull() & (F.length("content") >= MIN_CONTENT_CHARS))
+    return mentions_to_triples(extract_mentions(df))

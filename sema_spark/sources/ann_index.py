@@ -117,34 +117,15 @@ def build_ivf_index(
     iterations: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    train_df: DataFrame | None = None,
 ) -> np.ndarray:
     """Train the quantizer on ``df`` and write the stored index.
 
     Returns the converged centroids (driver-side k×dim ndarray).  The
     stored column names are canonicalized to ``(vec_id, embedding,
-    cluster)`` so readers need no schema hints.
-
-    ``train_df``: optional training subset for the quantizer.  Each
-    Lloyd iteration scans its training input; at 100 TB training on the
-    full corpus pays ``iterations`` full scans for centroids a sample
-    determines just as well — standard IVF practice (Lance trains its
-    quantizer on a sample of the dataset too).  Pass a DETERMINISTIC
-    sample (e.g. ``df.filter(F.pmod(F.xxhash64(id_col), F.lit(16)) == 0)``,
-    never ``.sample()`` — a nondeterministic subset re-evaluated across
-    the build's jobs violates the index's reproducibility contract).
-    The FULL ``df`` is still assigned and stored; equivalence of
-    frozen-quantizer assignment for vectors outside the training set is
-    value-gated by the ann_ivf_incr_topk oracle and
-    test_sampled_train_equals_build_then_append.
+    cluster)`` so readers need no schema hints.  Vectors added later by
+    :func:`ivf_index_append` are assigned to these frozen centroids.
     """
-    if train_df is not None:
-        cents, _ = kmeans_fit(train_df, n_clusters, iterations, id_col, vec_col)
-        from sema_spark.plans.materialize import materialize
-
-        src = materialize(df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")))
-    else:
-        cents, src = kmeans_fit(df, n_clusters, iterations, id_col, vec_col)
+    cents, src = kmeans_fit(df, n_clusters, iterations, id_col, vec_col)
     with _maintenance_lock(index_dir, wait=True):
         _write_centroids(index_dir, cents)
         # r7 ADVICE fix: the inflight marker brackets the REBUILD too —

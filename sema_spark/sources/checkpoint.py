@@ -225,7 +225,6 @@ def run_incremental_stage(
     stage: str,
     base: str,
     transform,
-    run_id: str | None = None,
 ) -> StageRun:
     """Execute one checkpointed stage increment.
 
@@ -236,7 +235,7 @@ def run_incremental_stage(
     two is safe, see module docstring).
     """
     pending = pending_files(src, current_checkpoint(spark, base, stage))
-    return _run_files(spark, base, stage, pending, lambda: transform(pending), run_id)
+    return _run_files(spark, base, stage, pending, lambda: transform(pending))
 
 
 def file_rows(log: DataFrame) -> DataFrame:
@@ -297,7 +296,6 @@ def run_forced_incremental_stage(
     rows: DataFrame,
     stage: str,
     base: str,
-    run_id: str | None = None,
     partition_cols: list[str] | None = None,
     params: str | None = None,
     tombstone_paths: DataFrame | None = None,
@@ -326,7 +324,7 @@ def run_forced_incremental_stage(
     append; the run reports ``skipped`` only when there was nothing at
     all to commit.  Read params back with :func:`latest_params`."""
     return _run_files(
-        spark, base, stage, files, lambda: rows, run_id, partition_cols, params, tombstone_paths
+        spark, base, stage, files, lambda: rows, partition_cols, params, tombstone_paths
     )
 
 
@@ -336,7 +334,6 @@ def _run_files(
     stage: str,
     files: DataFrame,
     rows,
-    run_id: str | None,
     partition_cols: list[str] | None = None,
     params: str | None = None,
     tombstone_paths: DataFrame | None = None,
@@ -345,7 +342,7 @@ def _run_files(
     then commit ``rows()`` for it (``rows`` is called only for a
     non-empty set) with the params and tombstone rows in the same
     checkpoint append."""
-    run_id = run_id or new_run_id()
+    run_id = new_run_id()
     # The checkpoint keys of this increment (small: one row per file).
     # Persisted: unpersisted, the count here and the checkpoint append
     # would EACH re-evaluate the file set (for run_incremental_stage the
@@ -503,15 +500,12 @@ def logged_keys(spark: SparkSession, base: str, stage: str) -> DataFrame:
     )
 
 
-def delete_files(
-    spark: SparkSession, base: str, stage: str, paths: DataFrame, run_id: str | None = None
-) -> None:
+def delete_files(spark: SparkSession, base: str, stage: str, paths: DataFrame) -> None:
     """S7 delete-by-predicate as tombstone appends; no data rewrite.
 
     ``paths``: DataFrame with (repo, path).
     """
-    run_id = run_id or new_run_id()
-    _log_entry_rows(spark, stage, run_id, tombstone_paths=paths).write.mode("append").parquet(
+    _log_entry_rows(spark, stage, new_run_id(), tombstone_paths=paths).write.mode("append").parquet(
         _ckpt_dir(base, stage)
     )
 
@@ -568,9 +562,7 @@ def run_snapshot_stage(
     stage: str,
     base: str,
     producer,
-    run_id: str | None = None,
     partition_cols: list[str] | None = None,
-    params: str = "",
 ) -> StageRun:
     """Full-snapshot stage with fingerprint skip + commit-last visibility.
 
@@ -578,24 +570,18 @@ def run_snapshot_stage(
     (the pipeline computes it once per run and shares it between stages
     2 and 3).  ``producer()`` → the complete output DataFrame for this
     snapshot.  Crash before the commit row → snapshot invisible, rerun
-    regenerates.
-
-    ``params``: everything BEYOND the input keys that the output depends
-    on — pipeline flags, upstream snapshot run_ids — folded into the
-    skip fingerprint.  Without it, rerunning with a changed parameter
-    (e.g. fuzzy=False) or after an upstream regeneration would silently
-    return the stale snapshot.
+    regenerates.  The output must depend on the input keys alone: the
+    fingerprint is the whole skip key.
     """
-    run_id = run_id or new_run_id()
-    fp = f"{input_fp}:{params}" if params else input_fp
+    run_id = new_run_id()
     last = _latest_commit(spark, base, stage)
-    if last is not None and last.content_sha == fp:
-        return StageRun(stage, last.run_id, 0, 0, skipped=True, fingerprint=fp)
+    if last is not None and last.content_sha == input_fp:
+        return StageRun(stage, last.run_id, 0, 0, skipped=True, fingerprint=input_fp)
     n_rows = _commit_increment(
-        spark, base, stage, producer(), _mark_row(spark, stage, COMMIT_MARK, fp, run_id), run_id,
+        spark, base, stage, producer(), _mark_row(spark, stage, COMMIT_MARK, input_fp, run_id), run_id,
         partition_cols,
     )
-    return StageRun(stage, run_id, -1, n_rows, skipped=False, fingerprint=fp)
+    return StageRun(stage, run_id, -1, n_rows, skipped=False, fingerprint=input_fp)
 
 
 def read_snapshot(spark: SparkSession, base: str, stage: str, schema=None) -> DataFrame:

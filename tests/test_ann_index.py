@@ -54,32 +54,6 @@ def test_stored_equals_inplan(spark, tmp_path):
     assert got == exp and got[0][0] == 0
 
 
-def test_sampled_train_equals_build_then_append(spark, tmp_path):
-    """train_df (quantizer trained on a deterministic sample, full
-    corpus assigned frozen) must produce byte-identical centroids and
-    the same stored assignment as the two-step build(sample) +
-    append(rest) path the incr oracle gates — so train-on-sample is a
-    pure cost knob, not a semantics change."""
-    ids, vecs = _blob_data()
-    full = _df(spark, ids, vecs)
-    sample = full.filter(F.col("vec_id") % 2 == 0)
-
-    one = str(tmp_path / "one_shot")
-    two = str(tmp_path / "two_step")
-    cents_one = build_ivf_index(full, one, n_clusters=3, iterations=3, train_df=sample)
-    cents_two = build_ivf_index(sample, two, n_clusters=3, iterations=3)
-    ivf_index_append(full, two)
-
-    assert np.array_equal(cents_one, cents_two)
-    a = {(r.vec_id, r.cluster) for r in spark.read.parquet(f"{one}/vectors").select("vec_id", "cluster").collect()}
-    b = {(r.vec_id, r.cluster) for r in spark.read.parquet(f"{two}/vectors").select("vec_id", "cluster").collect()}
-    assert a == b and len(a) == 60
-    q = [float(x) for x in vecs[0]]
-    got = [(r.vec_id, r.score) for r in ivf_stored_topk(spark, one, q, k=5, probes=1).collect()]
-    exp = [(r.vec_id, r.score) for r in ivf_stored_topk(spark, two, q, k=5, probes=1).collect()]
-    assert got == exp
-
-
 def test_append_is_incremental_and_idempotent(spark, tmp_path):
     ids, vecs = _blob_data()
     half = _df(spark, ids[:30], vecs[:30])

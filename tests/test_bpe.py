@@ -78,11 +78,12 @@ def test_bpe_encode_udf_matches_pure_function(spark):
 
 
 def test_bpe_encode_vocab_forms_identical(spark):
-    """Every ``vocab`` form (precomputed mapping, word DataFrame, word
-    iterable) must encode bit-identically to the no-vocab memo path —
-    the broadcast is a cache seed, never a semantic change.  A mapping
-    covering only SOME words must still encode uncovered words
-    correctly (fallback to apply_merges on miss)."""
+    """Every precomputed ``vocab`` mapping (over chosen words or the
+    corpus's ``word_vocab``) must encode bit-identically to the
+    no-vocab memo path — the broadcast is a cache seed, never a
+    semantic change.  A mapping covering only SOME words must still
+    encode uncovered words correctly (fallback to apply_merges on
+    miss)."""
     from sema_spark.functions.bpe import (
         bpe_encode,
         bpe_train,
@@ -102,8 +103,8 @@ def test_bpe_encode_vocab_forms_identical(spark):
     base = enc()
     full = precompute_vocab(merges, ["the", "theme", "banana", "unseen"])
     assert enc(vocab=full) == base
-    assert enc(vocab=word_vocab(df)) == base
-    assert enc(vocab=["the", "banana"]) == base  # partial coverage
+    assert enc(vocab=precompute_vocab(merges, [r.w for r in word_vocab(df).collect()])) == base
+    assert enc(vocab=precompute_vocab(merges, ["the", "banana"])) == base  # partial coverage
     assert enc(vocab={}) == base  # empty mapping == no-vocab
 
 

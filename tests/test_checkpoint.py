@@ -15,7 +15,7 @@ def src(spark):
 
 
 def _transform(pending):
-    return extract_triples(pending, apply_filters=True, dedup=True)
+    return extract_triples(pending)
 
 
 def test_incremental_run_and_skip(spark, src, tmp_path):

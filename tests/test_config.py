@@ -43,13 +43,14 @@ def test_exclude_and_hidden(spark):
 
 
 def test_size_bounds(spark):
-    cfg = PipelineConfig(min_content_chars=50, max_file_size=200)
+    # the 50-char minimum is stage 1's guard (F4), not a config bound
+    cfg = PipelineConfig(max_file_size=200)
     df = spark.createDataFrame(
         [("small.py", "x" * 10), ("ok.py", "x" * 100), ("big.py", "x" * 500), ("null.py", None)],
         "path string, content string",
     )
     kept = {r.path for r in cfg.apply(df).collect()}
-    assert kept == {"ok.py"}
+    assert kept == {"small.py", "ok.py"}
 
 
 def test_toml_roundtrip(tmp_path):
@@ -61,4 +62,28 @@ def test_toml_roundtrip(tmp_path):
     assert cfg.max_file_size == 1234
     assert cfg.file_extensions == ["py", "rs"]
     assert cfg.include_hidden is True
-    assert cfg.min_content_chars == 50  # default kept
+    assert cfg.exclude_patterns == PipelineConfig().exclude_patterns  # default kept
+
+
+def test_cli_config_is_the_only_crawl_filter(spark, tmp_path, monkeypatch, capsys):
+    """The CLI applies the TOML config once and stage 1 adds no crawl
+    filter of its own: with hidden files included and only `.git`
+    excluded, a hidden dir and a `target/` dir both reach the graph."""
+    import sema_spark.session
+    from sema_spark.__main__ import main
+    from sema_spark.plans.pipeline import read_triples
+
+    body = "import os\n\n\ndef {}(x):\n    return os.path.join(x, 'y')\n"
+    paths = {"src/a.py": "fa", ".cfg/b.py": "fb", "target/c.py": "fc"}
+    rows = [("org/r", p, "c1", "py", body.format(fn)) for p, fn in paths.items()]
+    src = str(tmp_path / "src")
+    spark.createDataFrame(rows, "repo string, path string, commit string, lang string, content string").write.parquet(src)
+    cfg = tmp_path / "config.toml"
+    cfg.write_text('[general]\ninclude_hidden = true\nexclude_patterns = [".git"]\n')
+    base = str(tmp_path / "kg")
+    monkeypatch.setattr(sema_spark.session, "get_spark", lambda **kw: spark)
+
+    assert main(["--src", src, "--base", base, "--config", str(cfg)]) == 0
+    capsys.readouterr()
+    defined = {r.path: r.obj for r in read_triples(spark, base).where("pred = 'defines'").collect()}
+    assert defined == {p: f"org/r/{p}#{fn}" for p, fn in paths.items()}

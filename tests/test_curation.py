@@ -467,21 +467,16 @@ def test_remove_spans_cuts_exactly(spark):
     assert duplicated_spans(cleaned, w=w).count() == 0
 
 
-def test_curation_chain_contract_and_span_stage(spark):
+def test_curation_chain_weight_contract(spark):
     """r6: the chain validates its weight contract (the r5 fusion made
-    partial weight maps silently change bin assignment) and optionally
-    composes the exact-substring removal tier."""
+    partial weight maps silently change bin assignment)."""
     import pytest
     from pyspark.errors.exceptions.captured import SparkRuntimeException
 
     from sema_spark.operators.curation import curation_chain
 
     base = "alpha beta gamma delta epsilon zeta eta theta"
-    dup = "one two three four five six seven eight nine ten"
-    rows = [
-        (i, f"{base} {i} " + (dup if i in (5, 7) else f"tail{i} mid{i} end{i}"), f"src{i % 2}")
-        for i in range(1, 13)
-    ]
+    rows = [(i, f"{base} {i} tail{i} mid{i} end{i}", f"src{i % 2}") for i in range(1, 13)]
     docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
 
     with pytest.raises(ValueError, match="positive"):
@@ -490,16 +485,3 @@ def test_curation_chain_contract_and_span_stage(spark):
     with pytest.raises(SparkRuntimeException, match="no positive weight"):
         curation_chain(docs, weights={"src0": 1.0}).collect()
 
-    w = {"src0": 1.0, "src1": 0.5}
-    plain = curation_chain(docs, weights=w).collect()
-    cut = curation_chain(docs, weights=w, remove_dup_spans=10).collect()
-    tok = lambda rows_: {r.doc_id: r.n_tokens for r in rows_}
-    # docs 5 and 7 share the 10-word run at word index [9, 19).  The
-    # span stage cuts it from BOTH docs (5: 19→9 tokens, 7: 19→9); the
-    # plain chain's passage dedup only drops doc 7's copy of the
-    # trailing 9-word passage (5: 19, 7: 10) — the exact-substring tier
-    # removes strictly more duplication, which is its point.
-    assert (tok(plain)[5], tok(plain)[7]) == (19, 10)
-    assert (tok(cut)[5], tok(cut)[7]) == (9, 9)
-    untouched = set(tok(plain)) - {5, 7}
-    assert {d: tok(cut)[d] for d in untouched} == {d: tok(plain)[d] for d in untouched}

@@ -40,7 +40,7 @@ def test_line_provenance(spark):
     one = sdf.filter("repo = 'org0/proj0' and path = 'src/m1.py'").collect()[0]
     got = {
         (r.obj, r.line)
-        for r in extract_triples(sdf, dedup=True)
+        for r in extract_triples(sdf)
         .filter("repo = 'org0/proj0' and path = 'src/m1.py' and pred = 'imports'")
         .collect()
     }

@@ -363,10 +363,7 @@ def test_legacy_snapshot_base_reads_and_migrates(spark, tmp_path):
     )
     triples = read_stage_output(spark, base, "triples", schema=TRIPLES)
     fp = input_fingerprint(triples.select("repo", "path", "content_sha"))
-    run_snapshot_stage(
-        spark, fp, "linked", base, lambda: link_triples(triples, fuzzy=True),
-        params="fuzzy=True",
-    )
+    run_snapshot_stage(spark, fp, "linked", base, lambda: link_triples(triples, fuzzy=True))
     legacy_rows = read_snapshot(spark, base, "linked", schema=LINKED_TRIPLES)
     run_snapshot_stage(
         spark, fp, "nodes", base, lambda: canonicalize_nodes(build_nodes(triples)),
@@ -378,7 +375,7 @@ def test_legacy_snapshot_base_reads_and_migrates(spark, tmp_path):
     run_snapshot_stage(
         spark, fp, "edges", base,
         lambda: canonical_edges(legacy_rows, legacy_nodes).drop("content_sha"),
-        partition_cols=["pred"], params="legacy",
+        partition_cols=["pred"],
     )
 
     fresh = str(tmp_path / "fresh")
@@ -455,10 +452,7 @@ def test_legacy_base_emptied_corpus_serves_empty_not_stale(spark, tmp_path):
     )
     triples = read_stage_output(spark, base, "triples", schema=TRIPLES)
     fp = input_fingerprint(triples.select("repo", "path", "content_sha"))
-    run_snapshot_stage(
-        spark, fp, "linked", base, lambda: link_triples(triples, fuzzy=True),
-        params="fuzzy=True",
-    )
+    run_snapshot_stage(spark, fp, "linked", base, lambda: link_triples(triples, fuzzy=True))
 
     # empty the corpus: tombstone every file, then run on an empty source
     delete_files(spark, base, "triples", src.select("repo", "path").distinct())

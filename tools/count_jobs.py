@@ -8,7 +8,10 @@ per pass, on the benchmark corpus.
 ``kg_build_refresh``: a cold ``run_pipeline``, an unchanged re-run, and
 the ~1%-change pass (stage-1 tombstones for the deleted files, then
 ``run_pipeline`` over the mutated source), all with
-``incremental_link=True``.
+``incremental_link=True``.  Then ``change_full`` runs the same change
+pass with ``incremental_link=False`` (a full stage-2/4 re-link) on a
+copy of the base taken before the change pass, so the delta and the
+full path are compared on one seed and one state.
 
 ``semantic`` builds the inputs of perfbench's ``search_dedup`` with
 ``workloads.search_prepare`` and runs its index operations:
@@ -24,7 +27,7 @@ wall seconds and process-tree CPU seconds (driver, JVM and Python
 workers); KG passes add ``link_mode``, relinked files and
 edge-refreshed files, index passes the indexed file count.  After each
 part one line holds the sha256 of its sorted final rows — linked and
-edge rows, or the live chunk rows without their ``run_id``/``_gen``
+edge rows (after ``change`` and again after ``change_full``), or the live chunk rows without their ``run_id``/``_gen``
 bookkeeping column, columns in name order (the liveness join of each
 store puts its own keys first) — so two trees can be compared for
 bit-identical output.  Everything is written under ``--work``, or under a fresh
@@ -108,11 +111,14 @@ def main(argv=None) -> int:
         src = spark.read.parquet(f"{work}/src.parquet")
         print(f"kg: {len(kg.rows)} files", flush=True)
 
-        def change_pass():
-            gone = spark.createDataFrame(sorted(kg.deleted), "repo string, path string")
-            delete_files(spark, base, P.STAGE_TRIPLES, gone)
-            mut = spark.read.parquet(f"{work}/mut.parquet")
-            return P.run_pipeline(spark, mut, base, incremental_link=True)
+        def change_pass(at: str, incremental_link: bool):
+            def body():
+                gone = spark.createDataFrame(sorted(kg.deleted), "repo string, path string")
+                delete_files(spark, at, P.STAGE_TRIPLES, gone)
+                mut = spark.read.parquet(f"{work}/mut.parquet")
+                return P.run_pipeline(spark, mut, at, incremental_link=incremental_link)
+
+            return body
 
         def describe(run):
             return (
@@ -123,14 +129,21 @@ def main(argv=None) -> int:
         def pipeline():
             return P.run_pipeline(spark, src, base, incremental_link=True)
 
+        def print_sha(at: str, label: str):
+            print(
+                f"sha256 {label}linked={rows_sha256(P.read_linked(spark, at))} "
+                f"edges={rows_sha256(P.read_edges(spark, at))}",
+                flush=True,
+            )
+
         run_pass("cold", pipeline, describe)
         run_pass("unchanged", pipeline, describe)
-        run_pass("change", change_pass, describe)
-        print(
-            f"sha256 linked={rows_sha256(P.read_linked(spark, base))} "
-            f"edges={rows_sha256(P.read_edges(spark, base))}",
-            flush=True,
-        )
+        full_base = f"{work}/base_full"
+        shutil.copytree(base, full_base)
+        run_pass("change", change_pass(base, True), describe)
+        print_sha(base, "")
+        run_pass("change_full", change_pass(full_base, False), describe)
+        print_sha(full_base, "change_full ")
 
     def semantic_part():
         rows, app, live = workloads.search_prepare(args.seed, inputs.SIZES["full"], work)
