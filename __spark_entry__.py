@@ -910,7 +910,7 @@ def q_kg_incremental_rebuild(spark, sf):
               and the DELTA maintenance path must engage (raises if
               link_mode != 'delta'), re-linking only the changed file
               plus its alias-delta-affected blocks and committing
-              per-file increments into the log-structured stage-2/4
+              per-file increments into the log-structured stage-2
               storage;
       wave 3: a no-op re-run that must skip all four stages (raises
               RuntimeError into the grade if any stage does work).
@@ -918,10 +918,10 @@ def q_kg_incremental_rebuild(spark, sf):
     Oracle: identical to kg_pipeline_edges (corpus.expected_edges) — so
     supersede (stale triples gone), tombstones (scratch triples gone),
     fingerprint/sidecar skips, read_stage_output's orphan semi-join,
-    AND the r6 delta re-link + log-structured increment storage are
-    all value-gated, not just pytest-gated.  (Wave 1 deliberately does
-    NOT run the snapshot stages on the partial corpus: they gate
-    nothing wave 2 doesn't recompute; snapshot
+    AND the r6 stage-2 delta re-link + log-structured increment
+    storage are all value-gated, not just pytest-gated.  (Wave 1
+    deliberately does NOT run the snapshot stages on the partial
+    corpus: they gate nothing wave 2 doesn't recompute; snapshot
     regeneration-on-upstream-change stays pytest-gated in
     test_checkpoint.)  Reference parity: the watcher's skip / re-index
     / remove branches (/root/reference/src/storage/mod.rs:30-52)."""

@@ -265,9 +265,8 @@ def canonical_edges(linked_triples: DataFrame, canonical_nodes: DataFrame) -> Da
             "repo",
             "path",
             "line",
-            # per-row sha invariant; also the per-file supersede key the
-            # log-structured stage-4 storage needs (distinct stays
-            # file-local: (repo, path) determines content_sha)
+            # per-row sha invariant (distinct stays file-local:
+            # (repo, path) determines content_sha)
             "content_sha",
         )
         .distinct()

@@ -10,21 +10,19 @@
       │  stage 3 — nodes        snapshot     (connected components J4)
       ▼
     canonical nodes (entity_id, canonical_id, …)
-      │  stage 4 — edges        incremental  (canonical rewrite; per-file
-      ▼                                       supersede via log + canon-map deltas r6)
+      │  stage 4 — edges        snapshot     (canonical rewrite of every
+      ▼                                       linked row, partitioned by pred)
     edges (src, pred, dst, provenance)
 
 Stage 1 carries the content-bytes cost and is per-file incremental with
-crash-safe resume.  Stages 2 and 4 are 1:1 with the triples, so from r6
-they are ALSO stored as per-file increments and maintained by delta
-(_run_linked_stage / _run_edges_stage) — both compute and write volume
-scale with the change set.  Stage 3 stays a snapshot: canonicalization
-is a global fixpoint (one changed file can merge or split components
-anywhere); its output is entity-sized, and the old/new canonical-map
-diff is how that global effect re-enters the per-file world in stage 4.
-Fingerprint/params skips make no-op runs cheap (see
-sources/checkpoint.py).  Before the heavy
-extraction scan the input is salted-repartitioned on
+crash-safe resume.  Stage 2 is 1:1 with the triples and is stored as
+per-file increments, maintained by delta when ``incremental_link`` is
+set (_run_linked_stage).  Stages 3 and 4 are snapshots:
+canonicalization is a global fixpoint (one changed file can merge or
+split components anywhere), and every edge row carries canonical ids,
+so a change to either input rewrites stage 4 whole.  Fingerprint/params
+skips make no-op runs cheap (see sources/checkpoint.py).  Before the
+heavy extraction scan the input is salted-repartitioned on
 (repo, xxhash64 % SALT) so a monorepo cannot pin a single task (north
 rule: explicit skew handling; AQE skew-join remains on as backstop).
 
@@ -54,18 +52,13 @@ from sema_spark.operators.mentions import (
 )
 from sema_spark.schemas import EDGES, LINKED_TRIPLES, NODES, TRIPLES
 from sema_spark.sources.checkpoint import (
-    TOMBSTONE,
     StageRun,
     current_checkpoint,
-    file_rows,
     fingerprint_rows,
-    has_checkpoint_log,
     input_fingerprint,
     latest_params,
     local_frame,
     logged_keys,
-    read_checkpoint_log,
-    read_committed_snapshot,
     read_snapshot,
     read_snapshot_run,
     read_stage_output,
@@ -137,8 +130,7 @@ def run_pipeline(
     # rows) and spuriously fail the delta path's trust check
     key_cols = ["repo", "path", "content_sha"]
     keys = current_checkpoint(spark, base, STAGE_TRIPLES).select(*key_cols)
-    # one fingerprint job per run, shared by stages 2 and 3; its row
-    # count is also stage 4's "no input keys" check
+    # one fingerprint job per run, shared by stages 2 and 3
     fp_keys = input_fingerprint(keys)
 
     r2, link_mode = _run_linked_stage(
@@ -160,10 +152,7 @@ def run_pipeline(
     # commit: no second log read
     nodes = read_snapshot_run(spark, base, STAGE_NODES, r3.run_id, NODES)
 
-    r4 = _run_edges_stage(
-        spark, base, linked, nodes, keys, fingerprint_rows(fp_keys),
-        r2.fingerprint, r3.fingerprint, incremental_link,
-    )
+    r4 = _run_edges_stage(spark, base, linked, nodes, r2.fingerprint, r3.fingerprint)
     return PipelineRun(r1, r2, r3, r4, link_mode=link_mode)
 
 
@@ -172,120 +161,19 @@ def _run_edges_stage(
     base: str,
     linked: DataFrame,
     nodes: DataFrame,
-    keys: DataFrame,
-    n_keys: int,
     fp_linked: str,
     fp_nodes: str,
-    incremental: bool,
 ) -> StageRun:
-    """Stage 4, stored LOG-STRUCTURED like stage 2 (per-file increments
-    with supersede + tombstones, partitioned by pred within each
-    increment so predicate pruning survives).
-
-    An edge row is a pure function of (its file's linked rows, the
-    canonical mapping of the entities those rows mention), so a file's
-    edges need refreshing only when
-
-    * the file was re-linked since edges were last built (read from the
-      LINKED LOG: every row with run_id past the high-water mark the
-      anchor row recorded — robust to stage-4 lag across crashed
-      runs, not just "this run's" relinks), or
-    * some entity in its rows changed canonical id — the old/new
-      canonical-map diff, readable because the previous nodes SNAPSHOT
-      run is retained until compaction (pruned history ⇒ fall back to
-      full).
-
-    The ANCHOR — (linked fp, nodes fp, linked-log high-water mark) —
-    is a params row committed INSIDE the increment's checkpoint append
-    (never a sidecar file: a crash between two writes would let a later
-    run skip-serve stale rows or diff against the wrong nodes
-    snapshot); anchor == target skips the stage outright — the same
-    skip the old snapshot params gave.  Deleted paths get stage-4
-    tombstones in the same append.  Canonicalization itself (stage 3)
-    stays a snapshot: merge groups span files (identical content in
-    many repos), so the hub of a group can flip from a change anywhere
-    — the map diff is exactly how that global effect re-enters the
-    per-file world here."""
-    import json
-
-    from sema_spark.plans.materialize import materialize
-
-    key_cols = ["repo", "path", "content_sha"]
-    target = {"linked": fp_linked, "nodes": fp_nodes}
-    raw = latest_params(spark, base, STAGE_EDGES)
-    try:
-        anchor = json.loads(raw) if raw is not None else None
-    except ValueError:
-        anchor = None
-    if anchor is not None and {k: anchor.get(k) for k in target} == target:
-        return StageRun(STAGE_EDGES, "", 0, 0, skipped=True, fingerprint=fp_nodes)
-    stored = has_checkpoint_log(spark, base, STAGE_EDGES)
-    if not stored and n_keys == 0:
-        # empty corpus, empty stage: nothing to do and nothing to mark
-        return StageRun(STAGE_EDGES, "", 0, 0, skipped=True, fingerprint=fp_nodes)
-
-    llog = read_checkpoint_log(spark, base, STAGE_LINKED)
-    lmax = llog.agg(F.max("run_id")).collect()[0][0] or ""
-
-    mode = "full"
-    old_cmap = None
-    if incremental and anchor is not None and anchor.get("linked_run") is not None:
-        # the old canonical map: the nodes snapshot the anchor recorded.
-        # None when that history is gone — compaction pruned it, or an
-        # emptied-then-repopulated corpus left no nodes rows (r7 ADVICE)
-        old_nodes = read_committed_snapshot(spark, base, STAGE_NODES, anchor["nodes"], NODES)
-        if old_nodes is not None:
-            old_cmap = old_nodes.select("entity_id", "canonical_id")
-            mode = "delta"
-
-    if mode == "delta":
-        new_cmap = nodes.select("entity_id", F.col("canonical_id").alias("_new_cid"))
-        ce = materialize(
-            old_cmap.join(new_cmap, "entity_id", "full_outer")
-            .where(
-                F.col("canonical_id").isNull()
-                | F.col("_new_cid").isNull()
-                | (F.col("canonical_id") != F.col("_new_cid"))
-            )
-            .select("entity_id")
-        )
-        relinked_since = (
-            file_rows(llog)
-            .filter(
-                (F.col("run_id") > anchor["linked_run"])
-                & (F.col("content_sha") != TOMBSTONE)
-            )
-            .select(*key_cols)
-        )
-        touched = (
-            linked.join(ce, linked["subj"] == ce["entity_id"], "left_semi")
-            .select(*key_cols)
-            .unionByName(
-                linked.join(ce, linked["obj_id"] == ce["entity_id"], "left_semi").select(*key_cols)
-            )
-        )
-        refresh = materialize(
-            relinked_since.unionByName(touched)
-            .distinct()
-            # restrict to LIVE versions (a twice-relinked file's older
-            # sha may appear in the log slice)
-            .join(keys, key_cols, "left_semi")
-        )
-        rows = canonical_edges(linked.join(refresh, key_cols, "left_semi"), nodes)
-    else:
-        refresh = keys
-        rows = canonical_edges(linked, nodes)
-
-    # tombstones + anchor ride the increment's own checkpoint append —
-    # no ordering of separate writes survives every crash point (an
-    # empty refresh set, e.g. a pure-deletion run, commits them alone)
-    rf = run_forced_incremental_stage(
-        spark, refresh, rows, STAGE_EDGES, base, partition_cols=["pred"],
-        params=json.dumps({**target, "linked_run": lmax}),
-        tombstone_paths=_gone_paths(current_checkpoint(spark, base, STAGE_EDGES), keys)
-        if stored else None,
+    """Stage 4, a snapshot like stage 3: the canonical rewrite of every
+    linked row, keyed on the fingerprints of the two states it derives
+    from and partitioned by pred, so predicate reads (`who_imports`)
+    prune.  An edge row depends on its file's linked rows AND the
+    canonical map, and one changed file can flip canonical ids anywhere,
+    so any change to either input regenerates the whole stage."""
+    return run_snapshot_stage(
+        spark, f"{fp_linked}|{fp_nodes}", STAGE_EDGES, base,
+        lambda: canonical_edges(linked, nodes), partition_cols=["pred"],
     )
-    return replace(rf, fingerprint=fp_nodes)
 
 
 def _gone_paths(old_keys: DataFrame, keys: DataFrame) -> DataFrame | None:
@@ -339,8 +227,8 @@ def _run_linked_stage(
       re-link.
 
     The returned fingerprint is ``<keys-fp>:fuzzy=<f>`` (``fp_keys`` is
-    :func:`input_fingerprint` of ``keys``), the key the stage-4 anchor
-    records."""
+    :func:`input_fingerprint` of ``keys``), the first half of stage 4's
+    skip key."""
     from sema_spark.plans.materialize import materialize
 
     key_cols = ["repo", "path", "content_sha"]
@@ -419,7 +307,7 @@ def read_nodes(spark: SparkSession, base: str) -> DataFrame:
 
 
 def read_edges(spark: SparkSession, base: str) -> DataFrame:
-    return read_stage_output(spark, base, STAGE_EDGES, schema=EDGES)
+    return read_snapshot(spark, base, STAGE_EDGES, schema=EDGES)
 
 
 def graph_stats(spark: SparkSession, base: str) -> DataFrame:

@@ -99,8 +99,8 @@ NODES = StructType(
 )
 
 # Final edges (canonical ids).  content_sha rides along (r6): the
-# north-rule per-row invariant, and the per-file supersede key the
-# log-structured stage-4 storage commits increments under.
+# north-rule per-row invariant that ties each edge to the file version
+# it was extracted from.
 EDGES = StructType(
     [
         StructField("src", StringType(), False),

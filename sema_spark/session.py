@@ -63,7 +63,8 @@ def get_spark(
     ``cores`` sets the local master parallelism; default comes from
     ``$SPARK_GRAFT_CPUS`` (driver contract) or ``*``.  On a cluster this
     function is still valid: ``master`` is only set when not already
-    configured by spark-submit.
+    configured by spark-submit.  ``_DEFAULTS`` apply only when this call
+    creates the session; ``extra_conf`` applies either way.
     """
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -82,7 +83,11 @@ def get_spark(
     extra_conf = extra_conf or {}
     if os.path.isdir("/dev/shm") and _want_tmpfs_local_dir(local_master, extra_conf):
         builder = builder.config("spark.local.dir", "/dev/shm/spark-local")
-    for k, v in {**_DEFAULTS, **(extra_conf or {})}.items():
+    # getOrCreate applies every builder option to a live session's
+    # runtime conf: the defaults go only to a session this call creates,
+    # or a second call would reset what its creator configured
+    defaults = _DEFAULTS if SparkSession.getActiveSession() is None else {}
+    for k, v in {**defaults, **extra_conf}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

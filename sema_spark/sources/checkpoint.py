@@ -168,12 +168,6 @@ def read_checkpoint_log(spark: SparkSession, base: str, stage: str) -> DataFrame
     return _read_or_empty(spark, _ckpt_dir(base, stage), _with_run_id(CHECKPOINT))
 
 
-def has_checkpoint_log(spark: SparkSession, base: str, stage: str) -> bool:
-    """Whether the stage has a checkpoint log yet — a driver-side file-
-    system check, no Spark job."""
-    return _exists(spark, _ckpt_dir(base, stage))
-
-
 def current_checkpoint(spark: SparkSession, base: str, stage: str) -> DataFrame:
     """Latest (content_sha, run_id) per file — last writer wins by sortable
     run_id.  One row per live file; tombstones excluded.
@@ -296,7 +290,6 @@ def run_forced_incremental_stage(
     rows: DataFrame,
     stage: str,
     base: str,
-    partition_cols: list[str] | None = None,
     params: str | None = None,
     tombstone_paths: DataFrame | None = None,
 ) -> StageRun:
@@ -304,11 +297,10 @@ def run_forced_incremental_stage(
     caller decides which files to (re)process.  ``rows`` replace those
     files' previous output via the ordinary per-file supersede
     (``max_by(run_id)``), which works even when a file's content_sha is
-    UNCHANGED — the lever behind derived stages whose output for an
-    untouched file can still change because a neighbor changed (the
-    incremental stage-2 maintenance re-links alias-delta-affected
-    files).  Same write order and crash contract as
-    :func:`run_incremental_stage`.
+    UNCHANGED — the lever behind a derived stage whose output for an
+    untouched file can still change because a neighbor changed (stage
+    2's delta maintenance re-links alias-delta-affected files).  Same
+    write order and crash contract as :func:`run_incremental_stage`.
 
     ``params``: the parameter string the rows were computed under.
     ``tombstone_paths``: (repo, path) rows to mark deleted in the same
@@ -323,9 +315,7 @@ def run_forced_incremental_stage(
     the params and tombstone rows commit alone, in one standalone
     append; the run reports ``skipped`` only when there was nothing at
     all to commit.  Read params back with :func:`latest_params`."""
-    return _run_files(
-        spark, base, stage, files, lambda: rows, partition_cols, params, tombstone_paths
-    )
+    return _run_files(spark, base, stage, files, lambda: rows, params, tombstone_paths)
 
 
 def _run_files(
@@ -334,7 +324,6 @@ def _run_files(
     stage: str,
     files: DataFrame,
     rows,
-    partition_cols: list[str] | None = None,
     params: str | None = None,
     tombstone_paths: DataFrame | None = None,
 ) -> StageRun:
@@ -359,7 +348,7 @@ def _run_files(
         if n_files == 0:  # no data: the params and tombstones commit alone
             entries.write.mode("append").parquet(_ckpt_dir(base, stage))
             return StageRun(stage, run_id, 0, 0, skipped=False)
-        n_rows = _commit_increment(spark, base, stage, rows(), entries, run_id, partition_cols)
+        n_rows = _commit_increment(spark, base, stage, rows(), entries, run_id)
     finally:
         files.unpersist()
     return StageRun(stage, run_id, n_files, n_rows, skipped=False)
@@ -435,18 +424,25 @@ def read_stage_output(spark: SparkSession, base: str, stage: str, schema=None) -
     samples — with the declared schema, columns missing from old files
     read as null and the liveness join filters those rows out anyway.
     """
-    data = _read_parquet(
+    data = _read_data(spark, base, stage, schema)
+    if "run_id" not in data.columns:
+        return data  # legitimately-empty stage: nothing to join
+    ckpt = current_checkpoint(spark, base, stage)
+    keys = ["repo", "path", "content_sha", "run_id"]
+    return data.join(ckpt.select(*keys), on=keys, how="left_semi").drop("run_id")
+
+
+def _read_data(spark: SparkSession, base: str, stage: str, schema) -> DataFrame:
+    """Every data row of the stage with its ``run_id``, read under the
+    declared ``schema`` (see :func:`read_stage_output`); without
+    ``run_id`` when the stage has no rows at all."""
+    return _read_parquet(
         spark,
         _data_dir(base, stage),
         read_schema=_with_run_id(schema),
         empty_schema=schema,
         codes=_ABSENT_OR_EMPTY,
     )
-    if "run_id" not in data.columns:
-        return data  # legitimately-empty stage: nothing to join
-    ckpt = current_checkpoint(spark, base, stage)
-    keys = ["repo", "path", "content_sha", "run_id"]
-    return data.join(ckpt.select(*keys), on=keys, how="left_semi").drop("run_id")
 
 
 def _with_run_id(schema):
@@ -476,13 +472,7 @@ def stage_rows_for_keys(
         .groupBy(*key_cols)
         .agg(F.max("run_id").alias("run_id"))
     )
-    data = _read_parquet(
-        spark,
-        _data_dir(base, stage),
-        read_schema=_with_run_id(schema),
-        empty_schema=schema,
-        codes=_ABSENT_OR_EMPTY,
-    )
+    data = _read_data(spark, base, stage, schema)
     if "run_id" not in data.columns:
         return data
     return data.join(latest, key_cols + ["run_id"], "left_semi").drop("run_id")
@@ -511,13 +501,13 @@ def delete_files(spark: SparkSession, base: str, stage: str, paths: DataFrame) -
 
 
 # ---------------------------------------------------------------------------
-# Snapshot stages (derived tables).  Only the pipeline's stage 3
-# (canonical nodes) is one: canonicalization is a global fixpoint, so one
-# changed file can merge or split components anywhere.  Each run writes
-# a complete snapshot and commits it with the *input fingerprint*; an
-# unchanged fingerprint skips the run entirely.  Stages 2 and 4 are 1:1
-# with the triples and are stored as per-file increments instead
-# (plans/pipeline.py).
+# Snapshot stages (derived tables): the pipeline's stage 3 (canonical
+# nodes) and stage 4 (edges).  Canonicalization is a global fixpoint, so
+# one changed file can merge or split components anywhere, and every
+# edge row carries canonical ids.  Each run writes a complete snapshot
+# and commits it with the *input fingerprint*; an unchanged fingerprint
+# skips the run entirely.  Stage 2 is 1:1 with the triples and is stored
+# as per-file increments instead (plans/pipeline.py).
 
 
 def input_fingerprint(keys: DataFrame) -> str:
@@ -566,11 +556,13 @@ def run_snapshot_stage(
 ) -> StageRun:
     """Full-snapshot stage with fingerprint skip + commit-last visibility.
 
-    ``input_fp`` is :func:`input_fingerprint` of the stage's input keys
-    (the pipeline computes it once per run and shares it between stages
-    2 and 3).  ``producer()`` → the complete output DataFrame for this
-    snapshot.  Crash before the commit row → snapshot invisible, rerun
-    regenerates.  The output must depend on the input keys alone: the
+    ``input_fp`` starts with an :func:`input_fingerprint` of the stage's
+    input keys (the pipeline computes it once per run and shares it
+    between stages 2 and 3; stage 4 joins the stage-2 and stage-3
+    fingerprints); the run reports its key count as ``input_files``.
+    ``producer()`` → the complete output DataFrame for this snapshot.
+    Crash before the commit row → snapshot invisible, rerun regenerates.
+    The output must depend on what ``input_fp`` names alone: the
     fingerprint is the whole skip key.
     """
     run_id = new_run_id()
@@ -581,7 +573,9 @@ def run_snapshot_stage(
         spark, base, stage, producer(), _mark_row(spark, stage, COMMIT_MARK, input_fp, run_id), run_id,
         partition_cols,
     )
-    return StageRun(stage, run_id, -1, n_rows, skipped=False, fingerprint=input_fp)
+    return StageRun(
+        stage, run_id, fingerprint_rows(input_fp), n_rows, skipped=False, fingerprint=input_fp
+    )
 
 
 def read_snapshot(spark: SparkSession, base: str, stage: str, schema=None) -> DataFrame:
@@ -593,32 +587,12 @@ def read_snapshot(spark: SparkSession, base: str, stage: str, schema=None) -> Da
     return read_snapshot_run(spark, base, stage, last.run_id, schema)
 
 
-def read_committed_snapshot(
-    spark: SparkSession, base: str, stage: str, fingerprint: str, schema
-) -> DataFrame | None:
-    """Rows of the latest snapshot run committed under ``fingerprint``
-    (an older snapshot stays readable until compaction) — None when
-    that history is gone: no such commit is logged, or the data dir is
-    absent or the run has no rows.  Every other read error propagates
-    (the :func:`_read_parquet` policy)."""
-    rid = (
-        read_checkpoint_log(spark, base, stage)
-        .filter((F.col("repo") == COMMIT_MARK) & (F.col("content_sha") == fingerprint))
-        .agg(F.max("run_id"))
-        .collect()[0][0]
-    )
-    if rid is None:
-        return None
-    rows = read_snapshot_run(spark, base, stage, rid, schema)
-    return rows if rows.limit(1).count() > 0 else None
-
-
 def read_snapshot_run(spark: SparkSession, base: str, stage: str, run_id: str, schema) -> DataFrame:
     """Rows of the snapshot committed as ``run_id`` (e.g. the run id a
-    :func:`run_snapshot_stage` call returned)."""
-    data = _read_parquet(
-        spark, _data_dir(base, stage), empty_schema=schema, codes=_ABSENT_OR_EMPTY
-    )
+    :func:`run_snapshot_stage` call returned), read under the declared
+    ``schema`` like :func:`read_stage_output`: the data dir keeps older
+    runs, whose files can lack columns the current run has."""
+    data = _read_data(spark, base, stage, schema)
     if "run_id" not in data.columns:
         return data  # legitimately-empty snapshot
     return data.filter(F.col("run_id") == run_id).drop("run_id")
@@ -705,27 +679,19 @@ def compact(spark: SparkSession, base: str, stage: str) -> str:
     in a maintenance window with no concurrent reads, or read through
     ``materialize``/collected results rather than live scans."""
     rid = new_run_id()
-    last = _latest_commit(spark, base, stage)
     if not any(
         "run_id=" in p.rsplit("/", 1)[-1] for p in _list_children(spark, _data_dir(base, stage))
     ):
         # legitimately-empty stage (zero-row runs write no files): nothing
         # to rewrite and no schema to infer — no-op
         return rid
-    # a stage with ANY per-file or params row is incremental, even if a
-    # snapshot commit mark lingers from the snapshot storage format
-    # that stages 2 and 4 had before r6: preferring the mark would
-    # rewrite the stage back to the stale snapshot and GC the live
-    # increments.  file_rows() is not enough here: it excludes the
-    # params marker, and a stage whose whole per-file state is one
-    # params row must stay incremental too
-    has_new_rows = (
-        read_checkpoint_log(spark, base, stage)
-        .filter(F.col("repo") != COMMIT_MARK)
-        .limit(1)
-        .count()
-        > 0
-    )
+    # the stage's kind is that of its LATEST log row: a snapshot commits
+    # one commit mark, an increment per-file, params or tombstone rows.
+    # A stage whose storage kind changed keeps rows of the old kind in
+    # its log — stage 2's pre-r6 snapshot mark, stage 4's per-file rows
+    # from before it became a snapshot — and trusting those would
+    # rewrite the stale rows and garbage-collect the live ones
+    latest = read_checkpoint_log(spark, base, stage).orderBy(F.desc("run_id")).limit(1).collect()
     # preserve the stage's partition layout below run_id — writing a
     # different depth would make the directory unreadable mid-GC
     extra_parts = _partition_cols_of(spark, _data_dir(base, stage))
@@ -733,26 +699,21 @@ def compact(spark: SparkSession, base: str, stage: str) -> str:
         p for p in _list_children(spark, _data_dir(base, stage)) if f"run_id={rid}" not in p
     ]
     old_ckpt = list(_list_children(spark, _ckpt_dir(base, stage)))
-    if last is not None and not has_new_rows:  # snapshot stage
-        live = read_snapshot(spark, base, stage).withColumn("run_id", F.lit(rid))
-        ckpt_new = _mark_row(spark, stage, COMMIT_MARK, last.content_sha, rid)
+    # merge footers: a data dir can mix file generations with different
+    # column sets, and compact has no declared schema to read under
+    # (maintenance op — the footer-listing cost is fine)
+    data = _read_parquet(spark, _data_dir(base, stage), merge_schema=True, codes=_ABSENT_OR_EMPTY)
+    if latest and latest[0].repo == COMMIT_MARK:  # snapshot stage
+        live = data.filter(F.col("run_id") == latest[0].run_id)
+        ckpt_new = _mark_row(spark, stage, COMMIT_MARK, latest[0].content_sha, rid)
     else:  # incremental stage: keep rows referenced by the live checkpoint
-        # merge footers: a migrated dir can mix file generations with
-        # different column sets, and compact has no declared schema to
-        # read under (maintenance op — the footer-listing cost is fine)
-        data = _read_parquet(
-            spark, _data_dir(base, stage), merge_schema=True, codes=_ABSENT_OR_EMPTY
-        )
         ckpt = current_checkpoint(spark, base, stage)
         jk = ["repo", "path", "content_sha", "run_id"]
-        live = (
-            data.join(ckpt.select(*jk), on=jk, how="left_semi")
-            .drop("run_id")
-            .withColumn("run_id", F.lit(rid))
-        )
+        live = data.join(ckpt.select(*jk), on=jk, how="left_semi")
         # the params marker must survive compaction or the next
         # maintenance run would needlessly distrust the stored rows
         ckpt_new = _log_entry_rows(spark, stage, rid, ckpt, latest_params(spark, base, stage))
+    live = live.drop("run_id").withColumn("run_id", F.lit(rid))
     # (1) data append: read of the old state completes while writing
     live.write.mode("append").partitionBy("run_id", *extra_parts).parquet(_data_dir(base, stage))
     # (2) checkpoint append: the compacted run becomes current

@@ -65,11 +65,10 @@ def test_toml_roundtrip(tmp_path):
     assert cfg.exclude_patterns == PipelineConfig().exclude_patterns  # default kept
 
 
-def test_cli_config_is_the_only_crawl_filter(spark, tmp_path, monkeypatch, capsys):
+def test_cli_config_is_the_only_crawl_filter(spark, tmp_path, capsys):
     """The CLI applies the TOML config once and stage 1 adds no crawl
     filter of its own: with hidden files included and only `.git`
     excluded, a hidden dir and a `target/` dir both reach the graph."""
-    import sema_spark.session
     from sema_spark.__main__ import main
     from sema_spark.plans.pipeline import read_triples
 
@@ -81,7 +80,6 @@ def test_cli_config_is_the_only_crawl_filter(spark, tmp_path, monkeypatch, capsy
     cfg = tmp_path / "config.toml"
     cfg.write_text('[general]\ninclude_hidden = true\nexclude_patterns = [".git"]\n')
     base = str(tmp_path / "kg")
-    monkeypatch.setattr(sema_spark.session, "get_spark", lambda **kw: spark)
 
     assert main(["--src", src, "--base", base, "--config", str(cfg)]) == 0
     capsys.readouterr()

@@ -246,12 +246,12 @@ def test_linked_stage_delete_propagates(spark, tmp_path):
     assert full.exceptAll(live).count() == 0
 
 
-def test_edges_stage_write_volume_and_canon_flip(spark, tmp_path):
-    """Log-structured stage 4: a 1-file change rewrites only the
-    affected files' edge rows; and a CANONICAL-ID flip caused by
-    deleting one copy of duplicated content must refresh edges of
-    OTHER untouched files via the canonical-map diff (the global
-    effect of stage 3 re-entering the per-file world)."""
+def test_edges_stage_canon_flip(spark, tmp_path):
+    """Stage 4 is a snapshot of every linked row under the current
+    canonical map: a CANONICAL-ID flip caused by deleting one copy of
+    duplicated content must reach the edges of the OTHER, untouched
+    copy (the global effect of stage 3), and the stage reports its
+    input file count."""
     from sema_spark.operators.canonicalize import canonical_edges, canonicalize_nodes
     from sema_spark.operators.linking import build_nodes, link_triples
     from sema_spark.operators.mentions import extract_triples
@@ -260,40 +260,20 @@ def test_edges_stage_write_volume_and_canon_flip(spark, tmp_path):
     src = corpus_df(spark, "xs")
     base = str(tmp_path / "kg")
     P.run_pipeline(spark, src, base, incremental_link=True)
-    total = P.read_edges(spark, base).count()
 
-    # leg 1: single content change — tiny refresh set
-    mutated = src.withColumn(
-        "content",
-        F.when(
-            (F.col("repo") == "org1/proj1") & (F.col("path") == "src/m2.js"),
-            F.lit("// rewritten\nfunction tiny_delta_fn(x) {\n  const y = tiny_delta_fn(x);\n  return y;\n}\n"),
-        ).otherwise(F.col("content")),
-    )
-    r = P.run_pipeline(spark, mutated, base, incremental_link=True)
-    assert not r.edges.skipped
-    inc = spark.read.parquet(f"{base}/edges/data").filter(F.col("run_id") == r.edges.run_id)
-    assert inc.count() == r.edges.output_rows
-    assert 0 < r.edges.output_rows < total / 2
-
-    # leg 2: delete the canonical hub of the cross-repo duplicated file
+    # delete the canonical hub of the cross-repo duplicated file
     # (dup_shared.py is identical in proj0 and proj3 at xs; org0 holds
     # the lexicographic-min entity ids) — org3's copy is untouched but
-    # its canonical ids flip to itself, so its edges must refresh
+    # its canonical ids flip to itself
     delete_files(
         spark, base, "triples",
         spark.createDataFrame([("org0/proj0", "src/dup_shared.py")], "repo string, path string"),
     )
-    shrunk = mutated.filter(
+    shrunk = src.filter(
         ~((F.col("repo") == "org0/proj0") & (F.col("path") == "src/dup_shared.py"))
     )
-    r2 = P.run_pipeline(spark, shrunk, base, incremental_link=True)
-    assert not r2.edges.skipped
-    inc2 = spark.read.parquet(f"{base}/edges/data").filter(F.col("run_id") == r2.edges.run_id)
-    refreshed = {
-        (x.repo, x.path) for x in inc2.select("repo", "path").distinct().collect()
-    }
-    assert ("org3/proj3", "src/dup_shared.py") in refreshed  # untouched file refreshed
+    r = P.run_pipeline(spark, shrunk, base, incremental_link=True)
+    assert not r.edges.skipped and r.edges.input_files == shrunk.count()
 
     # live view equals a from-scratch build of the final corpus
     live = P.read_edges(spark, base).select("src", "pred", "dst").distinct()
@@ -307,6 +287,7 @@ def test_edges_stage_write_volume_and_canon_flip(spark, tmp_path):
     assert live.exceptAll(full).count() == 0
     # no edge keeps the deleted hub as canonical id
     assert live.filter(F.col("src").startswith("org0/proj0/src/dup_shared")).count() == 0
+    assert live.filter(F.col("src").startswith("org3/proj3/src/dup_shared")).count() > 0
 
 
 def test_fuzzy_flip_forces_full_relink_and_params_survive_compact(spark, tmp_path):
@@ -337,10 +318,12 @@ def test_fuzzy_flip_forces_full_relink_and_params_survive_compact(spark, tmp_pat
 def test_legacy_snapshot_base_reads_and_migrates(spark, tmp_path):
     """A pre-r6 base stores linked/edges as SNAPSHOTS.  There is no read
     fallback: the first pipeline run diffs the empty per-file log as
-    all-changed and rebuilds both stages as per-file increments equal to
-    a from-scratch build.  A post-migration compact must keep the LIVE
-    increments, not revert to the stale legacy snapshot (data loss), and
-    must merge the mixed-schema edges dir."""
+    all-changed and rebuilds stage 2 as per-file increments, and stage
+    4's legacy commit mark holds another fingerprint, so stage 4 writes
+    a new snapshot; both equal a from-scratch build.  A post-migration
+    compact must keep the LIVE increments of stage 2, not revert to the
+    stale legacy snapshot (data loss), and must read the mixed-schema
+    edges dir (pre-r6 runs lack content_sha)."""
     from sema_spark.operators.canonicalize import canonical_edges, canonicalize_nodes
     from sema_spark.operators.linking import build_nodes, link_triples
     from sema_spark.operators.mentions import extract_triples, salted_repartition, with_content_sha
@@ -388,17 +371,59 @@ def test_legacy_snapshot_base_reads_and_migrates(spark, tmp_path):
         assert sorted(map(tuple, P.read_linked(spark, base).collect())) == want_linked
         assert sorted(map(tuple, P.read_edges(spark, base).collect())) == want_edges
 
-    # first pipeline contact migrates stages 2 and 4
+    # first pipeline contact migrates stage 2 and regenerates stage 4
     r = P.run_pipeline(spark, src, base, incremental_link=True)
     assert not r.linked.skipped and not r.edges.skipped
     assert_from_scratch()
-    # compact must keep the live increments (per-file branch wins even
-    # though the legacy __SNAPSHOT__ mark lingers in the log), and the
-    # mixed-schema edges dir must compact cleanly (mergeSchema)
+    # compact must keep stage 2's live increments (its latest log row is
+    # per-file, though the legacy __SNAPSHOT__ mark lingers in the log)
+    # and stage 4's new snapshot, reading the mixed-schema edges dir
+    # with content_sha intact
     compact(spark, base, "linked")
     compact(spark, base, "edges")
     assert_from_scratch()
     assert not P.run_pipeline(spark, src, base, incremental_link=True).any_work
+
+
+def test_per_file_edges_base_regenerates_and_compacts(spark, tmp_path):
+    """A base whose stage 4 holds per-file edge increments (per-file log
+    rows, a JSON params row, no snapshot commit mark: the stage-4 format
+    before it became a snapshot) regenerates stage 4 on its first run,
+    through the fingerprint miss.  compact must then keep the new
+    snapshot: taken for an incremental stage because of the per-file
+    rows still in its log, it would rewrite the stale increments and
+    garbage-collect the snapshot's commit mark."""
+    import json
+    import shutil
+
+    from sema_spark.operators.canonicalize import canonical_edges
+    from sema_spark.sources import checkpoint as ck
+
+    src = corpus_df(spark, "xs").filter("repo = 'org0/proj0'")
+    base = str(tmp_path / "kg")
+    # stages 1-3 over the corpus without m1.py, then stage 4 rewritten
+    # in the per-file format
+    r = P.run_pipeline(spark, src.filter("path != 'src/m1.py'"), base)
+    shutil.rmtree(f"{base}/edges")
+    rid = ck.new_run_id()
+    keys = ck.current_checkpoint(spark, base, "triples").select("repo", "path", "content_sha")
+    anchor = {"linked": r.linked.fingerprint, "nodes": r.nodes.fingerprint, "linked_run": rid}
+    ck._commit_increment(
+        spark, base, "edges",
+        canonical_edges(P.read_linked(spark, base), P.read_nodes(spark, base)),
+        ck._log_entry_rows(spark, "edges", rid, files=keys, params=json.dumps(anchor)),
+        rid, ["pred"],
+    )
+
+    fresh = str(tmp_path / "fresh")
+    P.run_pipeline(spark, src, fresh)
+    want = sorted(map(tuple, P.read_edges(spark, fresh).collect()))
+    assert want
+
+    assert not P.run_pipeline(spark, src, base).edges.skipped
+    ck.compact(spark, base, "edges")
+    assert sorted(map(tuple, P.read_edges(spark, base).collect())) == want
+    assert not P.run_pipeline(spark, src, base).any_work
 
 
 def test_deletion_wave_commits_tombstones_atomically_with_relinks(spark, tmp_path):
@@ -462,8 +487,9 @@ def test_legacy_base_emptied_corpus_serves_empty_not_stale(spark, tmp_path):
     assert P.read_edges(spark, base).count() == 0
     # and the state is now stable
     assert not P.run_pipeline(spark, empty, base, incremental_link=True).any_work
-    # compaction rewrites the legacy snapshot as a snapshot; the per-file
-    # read still ignores it
+    # compaction rewrites stage 2's legacy snapshot as a snapshot (its
+    # only log row is the legacy mark); the per-file read still ignores
+    # it.  Stage 4 is an empty snapshot with no data to rewrite
     from sema_spark.sources.checkpoint import compact
 
     compact(spark, base, "linked")
@@ -521,9 +547,9 @@ def test_pipeline_empty_source_is_valid_state(spark, tmp_path):
 
 
 def test_fuzzy_flag_change_regenerates_linked(spark, tmp_path):
-    """The snapshot skip fingerprint covers pipeline params: flipping
-    fuzzy= must re-run stage 2 (and stage 4, which keys on stage-2's
-    run_id) even though the input keys are unchanged."""
+    """The skip fingerprint covers pipeline params: flipping fuzzy= must
+    re-run stage 2 (and stage 4, whose skip key starts with stage 2's
+    fingerprint) even though the input keys are unchanged."""
     base = str(tmp_path / "kg")
     src = corpus_df(spark, "xs")
     r_a = P.run_pipeline(spark, src, base, fuzzy=True)

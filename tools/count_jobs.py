@@ -9,7 +9,7 @@ per pass, on the benchmark corpus.
 the ~1%-change pass (stage-1 tombstones for the deleted files, then
 ``run_pipeline`` over the mutated source), all with
 ``incremental_link=True``.  Then ``change_full`` runs the same change
-pass with ``incremental_link=False`` (a full stage-2/4 re-link) on a
+pass with ``incremental_link=False`` (a full stage-2 re-link) on a
 copy of the base taken before the change pass, so the delta and the
 full path are compared on one seed and one state.
 
@@ -24,12 +24,14 @@ Both run in one ``local[4]`` session (``all``, the default, runs ``kg``
 first).  Per pass it prints one line: Spark jobs (the pass runs under
 its own job group, counted with ``statusTracker().getJobIdsForGroup``),
 wall seconds and process-tree CPU seconds (driver, JVM and Python
-workers); KG passes add ``link_mode``, relinked files and
-edge-refreshed files, index passes the indexed file count.  After each
+workers); KG passes add ``link_mode``, relinked files and stage 4's
+input file count, index passes the indexed file count.  After each
 part one line holds the sha256 of its sorted final rows — linked and
-edge rows (after ``change`` and again after ``change_full``), or the live chunk rows without their ``run_id``/``_gen``
-bookkeeping column, columns in name order (the liveness join of each
-store puts its own keys first) — so two trees can be compared for
+edge rows (after ``change`` and again after ``change_full``), or the
+live chunk rows without their ``run_id``/``_gen`` bookkeeping columns
+— hashed with columns in name order, so two trees whose reads order
+columns differently (a liveness join puts its keys first, a snapshot
+read puts partition columns last) can still be compared for
 bit-identical output.  Everything is written under ``--work``, or under a fresh
 temporary directory that is removed at the end.
 """
@@ -52,8 +54,9 @@ CORES = 4
 
 
 def rows_sha256(df) -> str:
-    """sha256 over the sorted rows of ``df`` (columns in schema order)."""
-    lines = sorted("\t".join(repr(v) for v in r) for r in df.collect())
+    """sha256 over the sorted rows of ``df``, columns in name order (a
+    read's column order depends on the store's layout, not its rows)."""
+    lines = sorted("\t".join(repr(v) for v in r) for r in df.select(*sorted(df.columns)).collect())
     return hashlib.sha256("\n".join(lines).encode()).hexdigest()
 
 
@@ -159,8 +162,7 @@ def main(argv=None) -> int:
         run_pass("changed_append", lambda: A.semantic_index_append(docs("append"), idx), indexed)
         run_pass("unchanged_append", lambda: A.semantic_index_append(docs("live"), idx), indexed)
         chunks = A.live_chunks(spark, idx)
-        keep = sorted(c for c in chunks.columns if c not in ("run_id", "_gen"))
-        print(f"sha256 live_chunks={rows_sha256(chunks.select(*keep))}", flush=True)
+        print(f"sha256 live_chunks={rows_sha256(chunks.drop('run_id', '_gen'))}", flush=True)
 
     try:
         if args.part in ("kg", "all"):

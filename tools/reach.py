@@ -91,6 +91,7 @@ KEPT_OPTIONS = {
     "functions/bpe.py:bpe_encode(vocab)": "None is the one-shot encode (no driver-side precompute, see the docstring's A/B); the graded queries reuse one merge table",
     "sources/checkpoint.py:_read_parquet(empty_schema)": "checkpoint.compact reads without one; compact is reached via the kept compact_*_index calls",
     "sources/checkpoint.py:_read_parquet(merge_schema)": "checkpoint.compact sets it; compact is reached via the kept compact_*_index calls",
+    "sources/checkpoint.py:_read_parquet(read_schema)": "checkpoint.compact reads without one (it merges the footers instead); compact is reached via the kept compact_*_index calls",
 }
 
 
