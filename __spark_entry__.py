@@ -298,9 +298,10 @@ def q_ann_ivf_incr_topk(spark, sf):
     loop, storage/mod.rs:30-52): the quantizer trains only on the lower
     half of the corpus (vec_id < count//2), is frozen into the stored
     index, and the rest arrives via ivf_index_append — assigned by the
-    frozen quantizer, anti-joined so re-appending is a no-op (the
-    append runs on EVERY grading call; on a warm index it must append
-    nothing, so idempotence itself is under the gate).  Oracle = an
+    frozen quantizer, anti-joined against the stored table's own vec_id
+    column so re-appending is a no-op (the append runs on EVERY grading
+    call; on a warm index it must append nothing, so idempotence itself
+    is under the gate).  Oracle = an
     independent python replica of train-on-half → frozen-assign-all →
     probe → sequential cosine (ivf_kmeans_incr.parquet)."""
     from sema_spark.sources.ann_index import (
@@ -802,8 +803,8 @@ def q_ann_lsh_stored_topk(spark, sf):
     ANN tier without a stored form): the sketch-bucketed table written
     partitionBy(bucket) once (build_lsh_stored_index), probed via a
     PARTITION-PRUNED scan (plan-gated in tests/test_ann_index.py),
-    maintained by the same anti-join + inflight-marker append as the
-    IVF index — built here incrementally (even ids first, the rest
+    maintained by the same anti-join append (against the stored ids) as
+    the IVF index — built here incrementally (even ids first, the rest
     appended; the no-op re-append runs on every grading call).  Probe
     selection shares similarity.probe_buckets with the in-plan
     operator, so results are identical by construction and this grades

@@ -123,8 +123,8 @@ def encode_text(s: pd.Series) -> pd.Series:
     return pd.Series(list(encode_batch_numpy(s.tolist())))
 
 
-def with_embedding(df, text_col: str = "content", out_col: str = "embedding"):
-    return df.withColumn(out_col, encode_text(F.col(text_col)))
+def with_embedding(df):
+    return df.withColumn("embedding", encode_text(F.col("content")))
 
 
 def encode_query(text: str) -> list[float]:

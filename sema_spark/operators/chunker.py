@@ -143,4 +143,4 @@ def chunk_and_embed(df: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     vector per chunk, /root/reference/src/storage/lance_indexer.rs:30-105)."""
     from sema_spark.functions.encoder import with_embedding
 
-    return with_embedding(chunk_files(df, carry=carry), text_col="content")
+    return with_embedding(chunk_files(df, carry=carry))

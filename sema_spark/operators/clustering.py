@@ -82,30 +82,21 @@ def _assign_udf(centroids: np.ndarray):
     return assign
 
 
-def kmeans(
-    df: DataFrame,
-    k: int = 8,
-    iterations: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id_col, cluster) after ``iterations`` Lloyd rounds + one final
+def kmeans(df: DataFrame, k: int = 8, iterations: int = 5) -> DataFrame:
+    """(vec_id, cluster) after ``iterations`` Lloyd rounds + one final
     assignment with the converged centroids (see module docstring for
     the determinism contract)."""
-    cents, src = kmeans_fit(df, k, iterations, id_col, vec_col)
-    return assigned_final(src, cents, id_col)
+    cents, src = kmeans_fit(df, k, iterations)
+    return src.select(
+        "vec_id", _assign_udf(cents)(F.col("embedding")).cast("bigint").alias("cluster")
+    )
 
 
-def kmeans_fit(
-    df: DataFrame,
-    k: int = 8,
-    iterations: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Train the quantizer: returns ``(centroids ndarray, materialized
-    (_id, _v) source)`` — the IVF index-build half, reused by
-    :func:`kmeans` and the IVF ANN query."""
+def kmeans_fit(df: DataFrame, k: int = 8, iterations: int = 5):
+    """Train the quantizer on ``df``'s ``(vec_id, embedding)`` columns:
+    returns ``(centroids ndarray, materialized (vec_id, embedding)
+    source)`` — the IVF index-build half, reused by :func:`kmeans` and
+    the IVF ANN query."""
     # SIZE-ADAPTIVE parallelism (r7, guide §2): a single-row-group
     # parquet arrives as ONE split, serializing every Lloyd pass (the
     # per-iteration posexplode + decimal aggregation was the measured
@@ -116,22 +107,22 @@ def kmeans_fit(
     # parallelizes real ones; the determinism contract (batch-invariant
     # einsum, order-independent decimal sums) makes results identical
     # under any partitioning.
-    src = materialize(df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")))
+    src = materialize(df.select("vec_id", "embedding"))
     n_rows = src.count()
     want = min(
         2 * df.sparkSession.sparkContext.defaultParallelism, max(1, n_rows // 2048)
     )
     if want > src.rdd.getNumPartitions():
         src = materialize(src.repartition(want))
-    init = src.orderBy("_id").limit(k).collect()
+    init = src.orderBy("vec_id").limit(k).collect()
     cents = np.stack(
-        [np.asarray(r._v, dtype=np.float32).astype(np.float64) for r in init]
+        [np.asarray(r.embedding, dtype=np.float32).astype(np.float64) for r in init]
     )
     dim = cents.shape[1]
     for _ in range(iterations):
-        assigned = src.withColumn("_c", _assign_udf(cents)(F.col("_v")))
+        assigned = src.withColumn("_c", _assign_udf(cents)(F.col("embedding")))
         sums = (
-            assigned.select("_c", F.posexplode("_v").alias("_p", "_x"))
+            assigned.select("_c", F.posexplode("embedding").alias("_p", "_x"))
             .groupBy("_c", "_p")
             .agg(
                 F.sum(F.col("_x").cast("double").cast("decimal(38,12)")).alias("_s"),
@@ -165,13 +156,6 @@ def kmeans_fit(
     return cents, src
 
 
-def assigned_final(src: DataFrame, cents: np.ndarray, id_col: str) -> DataFrame:
-    return src.select(
-        F.col("_id").alias(id_col),
-        _assign_udf(cents)(F.col("_v")).cast("bigint").alias("cluster"),
-    )
-
-
 def kmeans_python(ids, vectors, k: int = 8, iterations: int = 5) -> dict:
     """Independent full-matrix oracle: same determinism contract, none
     of the Spark machinery.  ``vectors`` are float32 rows (as stored);
@@ -198,8 +182,6 @@ def ivf_kmeans_topk(
     n_clusters: int = 8,
     iterations: int = 3,
     probes: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-Flat ANN: the k-means quantizer above as the coarse index.
     The query vector picks its ``probes`` nearest centroids (squared-L2
@@ -214,21 +196,21 @@ def ivf_kmeans_topk(
     """
     from sema_spark.functions.vector import cosine_literal_fold
 
-    cents, src = kmeans_fit(df, n_clusters, iterations, id_col, vec_col)
+    cents, src = kmeans_fit(df, n_clusters, iterations)
     probe = probe_cells(cents, qvec, probes)
     return (
-        src.withColumn("_c", _assign_udf(cents)(F.col("_v")))
+        src.withColumn("_c", _assign_udf(cents)(F.col("embedding")))
         .where(F.col("_c").isin(probe))
         .select(
-            F.col("_id").alias(id_col),
-            F.round(cosine_literal_fold(F.col("_v"), qvec), 6).alias("score"),
+            "vec_id",
+            F.round(cosine_literal_fold(F.col("embedding"), qvec), 6).alias("score"),
         )
         # zero-norm vectors score NULL — not results (the python oracle
         # filters its None scores identically); without this, desc
         # ordering parks them last but limit(k) still admits them when
         # the probed cells hold fewer than k scoreable vectors
         .where(F.col("score").isNotNull())
-        .orderBy(F.desc("score"), F.col(id_col))
+        .orderBy(F.desc("score"), F.col("vec_id"))
         .limit(k)
     )
 

@@ -645,13 +645,11 @@ def hyperplane_sketch(dim: int, num_bits: int = 16):
 
 def embedding_dup_pairs(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
     threshold: float = 0.95,
     num_bits: int = 16,
 ) -> DataFrame:
-    """Cosine ≥ threshold pairs: sketch-block (exact 16-bit agreement)
+    """Cosine ≥ threshold ``(vec_id, embedding)`` pairs: sketch-block (exact 16-bit agreement)
     then exact cosine re-rank.  High thresholds keep blocking recall
     honest: at cos ≥ 0.95 the probability all 16 sign bits agree is
     (1 - arccos(0.95)/π)^16 ≈ 0.27 per band; we use 4 rotated bands of the
@@ -676,7 +674,7 @@ def embedding_dup_pairs(
     scale the dedup-then-join trade wins again)."""
     sk = hyperplane_sketch(dim, num_bits)
     base = (
-        spread(df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")), "id")
+        spread(df.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v")), "id")
         .withColumn("sk", sk(F.col("v")))
         .transform(materialize)
     )

@@ -24,15 +24,14 @@ from sema_spark.functions.vector import cosine_fold_arrow, cosine_literal_fold
 from sema_spark.operators.dedup import hyperplane_sketch
 
 
-def cosine_topk(
-    df: DataFrame, qvec: list[float], k: int = 10, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """Exact brute-force top-k (the oracle tier).  Scoring is the r7
-    Arrow fold UDF — bit-identical to the zip_with/aggregate HOF
-    (tests/test_vector_fold.py), so the oracle contract is unchanged."""
+def cosine_topk(df: DataFrame, qvec: list[float], k: int = 10) -> DataFrame:
+    """Exact brute-force top-k over ``(vec_id, embedding)`` (the oracle
+    tier).  Scoring is the r7 Arrow fold UDF — bit-identical to the
+    zip_with/aggregate HOF (tests/test_vector_fold.py), so the oracle
+    contract is unchanged."""
     return (
-        df.select(id_col, F.round(cosine_literal_fold(F.col(vec_col), qvec), 6).alias("score"))
-        .orderBy(F.desc("score"), F.col(id_col))
+        df.select("vec_id", F.round(cosine_literal_fold(F.col("embedding"), qvec), 6).alias("score"))
+        .orderBy(F.desc("score"), F.col("vec_id"))
         .limit(k)
     )
 
@@ -41,52 +40,48 @@ def knn_join(
     queries: DataFrame,
     candidates: DataFrame,
     k: int = 5,
-    q_id: str = "q_id",
-    q_vec: str = "q_vec",
-    c_id: str = "vec_id",
-    c_vec: str = "embedding",
     num_salts: int = 32,
 ) -> DataFrame:
-    """Per-query exact top-k: broadcast the small query side, then a
-    SALTED two-phase rank so no single reducer ever sees a query's full
-    candidate set.
+    """Per-query exact top-k of ``queries (q_id, q_vec)`` against
+    ``candidates (vec_id, embedding)``: broadcast the small query side,
+    then a SALTED two-phase rank so no single reducer ever sees a
+    query's full candidate set.
 
     Phase 1 ranks within (q_id, salt) — the exchange key has Q×S
     cardinality, so the N×Q scored rows spread across Q×S tasks and
     each keeps ≤ k survivors.  Phase 2 re-ranks the ≤ Q×S×k survivors
     per q_id (a few KB per query regardless of N).  Equivalent to one
     global row_number per query: every global top-k row is also top-k
-    within its salt group, and the (score desc, c_id) order is total,
+    within its salt group, and the (score desc, vec_id) order is total,
     so phase 2 reproduces the exact global ranks.
 
     At 10^2-10^4 queries × a 100 TB candidate table this is the right
     plan: one pass over candidates, no candidate-side shuffle below the
     join, and the only full-width exchange is bounded by k per group.
     """
-    j = candidates.crossJoin(F.broadcast(queries.select(q_id, q_vec)))
+    j = candidates.crossJoin(F.broadcast(queries.select("q_id", "q_vec")))
     scored = j.select(
-        q_id,
-        c_id,
-        F.round(cosine_fold_arrow(F.col(c_vec), F.col(q_vec)), 6).alias("score"),
-        F.pmod(F.xxhash64(F.col(c_id)), F.lit(int(num_salts))).alias("_salt"),
+        "q_id",
+        "vec_id",
+        F.round(cosine_fold_arrow(F.col("embedding"), F.col("q_vec")), 6).alias("score"),
+        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(int(num_salts))).alias("_salt"),
     )
-    w_local = Window.partitionBy(q_id, "_salt").orderBy(F.desc("score"), F.col(c_id))
+    w_local = Window.partitionBy("q_id", "_salt").orderBy(F.desc("score"), F.col("vec_id"))
     survivors = (
         scored.withColumn("_lrank", F.row_number().over(w_local))
         .filter(F.col("_lrank") <= k)
         .drop("_lrank", "_salt")
     )
-    w_global = Window.partitionBy(q_id).orderBy(F.desc("score"), F.col(c_id))
+    w_global = Window.partitionBy("q_id").orderBy(F.desc("score"), F.col("vec_id"))
     return survivors.withColumn("rank", F.row_number().over(w_global)).filter(F.col("rank") <= k)
 
 
-def build_lsh_index(
-    df: DataFrame, dim: int, id_col: str = "vec_id", vec_col: str = "embedding", num_bits: int = 8
-) -> DataFrame:
-    """Assign each vector a coarse bucket (IVF-style inverted file).
-    Persist/write this partitioned by bucket for repeated queries."""
+def build_lsh_index(df: DataFrame, dim: int, num_bits: int = 8) -> DataFrame:
+    """Assign each ``embedding`` a coarse bucket (IVF-style inverted
+    file).  Persist/write this partitioned by bucket for repeated
+    queries."""
     sk = hyperplane_sketch(dim, num_bits)
-    return df.withColumn("bucket", sk(F.col(vec_col)))
+    return df.withColumn("bucket", sk(F.col("embedding")))
 
 
 def probe_buckets(qvec: list[float], dim: int, num_bits: int, probes: int) -> list[int]:
@@ -113,8 +108,6 @@ def ann_lsh_topk(
     index_df: DataFrame,
     qvec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
     num_bits: int = 8,
     probes: int = 4,
@@ -125,7 +118,7 @@ def ann_lsh_topk(
         F.col("bucket").isin(probe_buckets(qvec, dim, num_bits, probes))
     )
     return (
-        cand.select(id_col, F.round(cosine_literal_fold(F.col(vec_col), qvec), 6).alias("score"))
-        .orderBy(F.desc("score"), F.col(id_col))
+        cand.select("vec_id", F.round(cosine_literal_fold(F.col("embedding"), qvec), 6).alias("score"))
+        .orderBy(F.desc("score"), F.col("vec_id"))
         .limit(k)
     )

@@ -33,7 +33,13 @@ amortized.  This module is the stored-engine analog:
   reference's incremental behavior, lance_indexer.rs:165-189 appends
   into the existing dataset) and appended to their cluster partitions;
   already-indexed ids are skipped, so re-submitting an input is a
-  no-op.  The id-scan for the anti-join is column-pruned to ``vec_id``.
+  no-op.  Membership is the stored table's own ``vec_id`` column (a
+  column-pruned read of ``vectors``): the table is the one copy of
+  the index, so there is no second id list to keep in step with it.
+
+Every writer and reader uses the fixed ``(vec_id, embedding)`` input
+columns.  An ``ids/`` id list or an in-flight marker file that an older
+layout left in an index dir is ignored.
 
 Layout notes for a real cluster: ``vectors`` should additionally be
 bucketed/sorted by ``vec_id`` within each cluster partition for point
@@ -49,6 +55,7 @@ import os
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from sema_spark.operators.clustering import _assign_udf, kmeans_fit, probe_cells
 from sema_spark.schemas import EMBEDDING_DIM, STORED_CHUNKS
@@ -64,8 +71,10 @@ def _maintenance_lock(index_dir: str, wait: bool):
     compact's read and its GC was silently discarded).  Appends WAIT
     (compactions are short); compactions raise if any writer is active
     so an operator never blocks behind a long append — retry once the
-    append has finished.  The IVF and LSH indexes also rely on a rename-capable
-    filesystem for their compaction swap (:func:`_compact_table`); the
+    append has finished.  The lock is the whole write protocol of the
+    IVF and LSH indexes: each writer changes only ``vectors`` (plus the
+    centroids or meta on a build), and their compaction swap
+    (:func:`_compact_table`) needs a rename-capable filesystem; the
     semantic index compacts with the checkpoint log's append-then-GC
     (sources/checkpoint.compact), which needs no rename."""
     import fcntl
@@ -115,78 +124,24 @@ def build_ivf_index(
     index_dir: str,
     n_clusters: int = 8,
     iterations: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> np.ndarray:
-    """Train the quantizer on ``df`` and write the stored index.
+    """Train the quantizer on ``df``'s ``(vec_id, embedding)`` and write
+    the stored index ``(vec_id, embedding, cluster)``.
 
-    Returns the converged centroids (driver-side k×dim ndarray).  The
-    stored column names are canonicalized to ``(vec_id, embedding,
-    cluster)`` so readers need no schema hints.  Vectors added later by
-    :func:`ivf_index_append` are assigned to these frozen centroids.
+    Returns the converged centroids (driver-side k×dim ndarray).
+    Vectors added later by :func:`ivf_index_append` are assigned to
+    these frozen centroids.
     """
-    cents, src = kmeans_fit(df, n_clusters, iterations, id_col, vec_col)
+    cents, src = kmeans_fit(df, n_clusters, iterations)
     with _maintenance_lock(index_dir, wait=True):
         _write_centroids(index_dir, cents)
-        # r7 ADVICE fix: the inflight marker brackets the REBUILD too —
-        # a crash between the vectors overwrite and the sidecar rewrite
-        # used to leave a stale sidecar with _SUCCESS that _indexed_ids
-        # trusted, so appends anti-joined the wrong membership set and
-        # skipped vectors forever; with the marker, the next contact
-        # reconciles the sidecar from the payload.
-        marker = f"{index_dir}/.append-inflight"
-        open(marker, "w").close()
         (
-            src.select(
-                F.col("_id").alias("vec_id"),
-                F.col("_v").alias("embedding"),
-                _assign_udf(cents)(F.col("_v")).cast("int").alias("cluster"),
-            )
+            src.withColumn("cluster", _assign_udf(cents)(F.col("embedding")).cast("int"))
             .write.mode("overwrite")
             .partitionBy("cluster")
             .parquet(f"{index_dir}/vectors")
         )
-        _write_ids_sidecar(df.sparkSession, index_dir)
-        os.remove(marker)
     return cents
-
-
-def _write_ids_sidecar(spark: SparkSession, index_dir: str) -> None:
-    """(Re)derive the one-column membership sidecar (see _indexed_ids)
-    from the just-written vectors table, so the two can never disagree
-    at build time.  Shared by the IVF and LSH builds — the sidecar
-    protocol must stay identical across index families."""
-    (
-        spark.read.parquet(f"{index_dir}/vectors")
-        .select("vec_id")
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/ids")
-    )
-
-
-def _indexed_ids(spark: SparkSession, index_dir: str) -> DataFrame:
-    """Membership set for the append anti-join, served from the slim
-    one-column ``{index_dir}/ids`` sidecar — NOT from the wide
-    cluster-partitioned payload table (at 100 TB the payload has
-    thousands of files per cell; membership must not pay that listing +
-    footer cost per append).  The sidecar is kept consistent by the
-    ``.append-inflight`` marker protocol in :func:`ivf_index_append`:
-    the marker is set before the payload append and cleared only after
-    the sidecar append, so a crash between the two leaves the marker
-    and the NEXT append reconciles the sidecar from the payload table
-    (one recovery scan) before trusting it again."""
-    marker = f"{index_dir}/.append-inflight"
-    sidecar = f"{index_dir}/ids"
-    if os.path.exists(marker) or not os.path.exists(f"{sidecar}/_SUCCESS"):
-        (
-            spark.read.parquet(f"{index_dir}/vectors")
-            .select("vec_id")
-            .write.mode("overwrite")
-            .parquet(sidecar)
-        )
-        if os.path.exists(marker):
-            os.remove(marker)
-    return spark.read.parquet(sidecar)
 
 
 def load_centroids(spark: SparkSession, index_dir: str) -> np.ndarray:
@@ -195,58 +150,48 @@ def load_centroids(spark: SparkSession, index_dir: str) -> np.ndarray:
     return np.stack([np.asarray(r.centroid, dtype=np.float64) for r in rows])
 
 
-def ivf_index_append(
-    df: DataFrame,
-    index_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
-    """Append only NOT-yet-indexed vectors, assigned by the frozen
-    quantizer (no retrain).  Returns the number of rows appended;
-    re-submitting already-indexed ids appends nothing (J1 anti-join,
-    same discipline as checkpoint.pending_files).  The membership check
-    reads the slim ``ids`` sidecar, not the payload table (see
-    :func:`_indexed_ids` for the crash-reconcile protocol)."""
+def ivf_index_append(df: DataFrame, index_dir: str) -> int:
+    """Append only NOT-yet-indexed vectors of ``df``'s ``(vec_id,
+    embedding)``, assigned by the frozen quantizer (no retrain).
+    Returns the number of rows appended; re-submitting already-indexed
+    ids appends nothing (J1 anti-join against the stored ``vec_id``
+    column, same discipline as checkpoint.pending_files)."""
     spark = df.sparkSession
     with _maintenance_lock(index_dir, wait=True):
         cents = load_centroids(spark, index_dir)
         return _append_new_vectors(
-            df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")),
+            df,
             index_dir,
             part_col="cluster",
             assign=_assign_udf(cents)(F.col("embedding")).cast("int"),
         )
 
 
-def _append_new_vectors(canon: DataFrame, index_dir: str, part_col, assign) -> int:
+def _append_new_vectors(df: DataFrame, index_dir: str, part_col, assign) -> int:
     """Shared append core for partition-keyed stored vector tables (IVF
-    by quantizer cluster, LSH by sketch bucket): anti-join the id
-    sidecar, append survivors to their partitions, log their ids — with
-    the inflight-marker crash protocol of :func:`_indexed_ids`.
-    Caller holds the maintenance lock and supplies the frozen partition
-    assignment expression."""
+    by quantizer cluster, LSH by sketch bucket): anti-join ``df``'s
+    ``(vec_id, embedding)`` rows against the ids already in
+    ``vectors`` and append the survivors to their partitions.  Caller
+    holds the maintenance lock and supplies the frozen partition
+    assignment expression.  A crash mid-append leaves none or some of
+    the new rows in ``vectors``; those are served, and the next append
+    anti-joins against the same table, so it appends exactly the rest."""
     from sema_spark.plans.materialize import materialize
 
-    spark = canon.sparkSession
-    _recover_swap(f"{index_dir}/vectors")
-    _recover_swap(f"{index_dir}/ids")
-    existing = _indexed_ids(spark, index_dir)
+    spark = df.sparkSession
+    vectors = f"{index_dir}/vectors"
+    _recover_swap(vectors)
+    # the id column's type is the input's: a given schema spares the
+    # footer-reading job Spark runs to infer one
+    ids = StructType([df.schema["vec_id"]])
+    existing = spark.read.schema(ids).parquet(vectors).select("vec_id")
     # cut so the count and the write share one anti-join execution;
     # materialize() keeps the cut mode a deployment decision (persist /
     # reliable on a cluster) instead of hardcoding localCheckpoint
-    fresh = materialize(canon.join(existing, "vec_id", "left_anti"))
+    fresh = materialize(df.select("vec_id", "embedding").join(existing, "vec_id", "left_anti"))
     n = fresh.count()
     if n:
-        marker = f"{index_dir}/.append-inflight"
-        open(marker, "w").close()
-        (
-            fresh.withColumn(part_col, assign)
-            .write.mode("append")
-            .partitionBy(part_col)
-            .parquet(f"{index_dir}/vectors")
-        )
-        fresh.select("vec_id").write.mode("append").parquet(f"{index_dir}/ids")
-        os.remove(marker)
+        fresh.withColumn(part_col, assign).write.mode("append").partitionBy(part_col).parquet(vectors)
     return n
 
 
@@ -311,31 +256,22 @@ def build_lsh_stored_index(
     index_dir: str,
     dim: int,
     num_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> None:
-    """Sketch every vector and store the table ``partitionBy(bucket)``
-    plus the (dim, num_bits) meta and the id membership sidecar."""
+    """Sketch every ``(vec_id, embedding)`` row and store the table
+    ``partitionBy(bucket)`` plus the (dim, num_bits) meta."""
     import json
 
     from sema_spark.operators.similarity import build_lsh_index
 
-    spark = df.sparkSession
     with _maintenance_lock(index_dir, wait=True):
-        canon = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
-        # same rebuild-crash marker discipline as build_ivf_index (r7)
-        marker = f"{index_dir}/.append-inflight"
-        open(marker, "w").close()
         (
-            build_lsh_index(canon, dim=dim, num_bits=num_bits)
+            build_lsh_index(df.select("vec_id", "embedding"), dim=dim, num_bits=num_bits)
             .write.mode("overwrite")
             .partitionBy("bucket")
             .parquet(f"{index_dir}/vectors")
         )
         with open(f"{index_dir}/lsh_meta.json", "w") as f:
             json.dump({"dim": dim, "num_bits": num_bits}, f)
-        _write_ids_sidecar(spark, index_dir)
-        os.remove(marker)
 
 
 def _lsh_meta(index_dir: str) -> tuple[int, int]:
@@ -346,19 +282,17 @@ def _lsh_meta(index_dir: str) -> tuple[int, int]:
     return int(m["dim"]), int(m["num_bits"])
 
 
-def lsh_index_append(
-    df: DataFrame, index_dir: str, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> int:
-    """Append NOT-yet-indexed vectors, bucketed by the stored sketch
-    params (no re-hash of existing data); same anti-join + inflight-
-    marker discipline as :func:`ivf_index_append`."""
+def lsh_index_append(df: DataFrame, index_dir: str) -> int:
+    """Append NOT-yet-indexed ``(vec_id, embedding)`` rows, bucketed by
+    the stored sketch params (no re-hash of existing data); the same
+    anti-join against the stored ids as :func:`ivf_index_append`."""
     from sema_spark.operators.dedup import hyperplane_sketch
 
     with _maintenance_lock(index_dir, wait=True):
         dim, num_bits = _lsh_meta(index_dir)
         sk = hyperplane_sketch(dim, num_bits)
         return _append_new_vectors(
-            df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")),
+            df,
             index_dir,
             part_col="bucket",
             assign=sk(F.col("embedding")),
@@ -401,8 +335,7 @@ def compact_lsh_index(spark: SparkSession, index_dir: str) -> None:
     """Compact to one file per bucket partition (raises if a writer is
     active)."""
     with _maintenance_lock(index_dir, wait=False):
-        _compact_table(spark, f"{index_dir}/vectors", partition_by="bucket")
-        _compact_table(spark, f"{index_dir}/ids")
+        _compact_table(spark, f"{index_dir}/vectors", "bucket")
 
 
 # ------------------------------------------------- stored semantic index
@@ -562,18 +495,20 @@ def build_semantic_ann_index(
     from sema_spark.operators.clustering import kmeans_fit
     from sema_spark.plans.materialize import materialize
 
+    # the quantizer trains on (vec_id, embedding); a chunk's vec_id is
+    # its hashed (repo, path, chunk_idx) key, dropped before the write
     chunks = materialize(
         chunk_and_embed(docs)
         .withColumn("emb_norm", l2_norm(F.col("embedding")))
-        .withColumn("_cid", F.xxhash64("repo", "path", "chunk_idx"))
+        .withColumn("vec_id", F.xxhash64("repo", "path", "chunk_idx"))
     )
-    cents, _ = kmeans_fit(chunks, n_clusters, iterations, "_cid", "embedding")
+    cents, _ = kmeans_fit(chunks, n_clusters, iterations)
     _write_centroids(index_dir, cents)
     (
         chunks.withColumn(
             "cluster", _assign_udf(cents)(F.col("embedding")).cast("int")
         )
-        .drop("_cid")
+        .drop("vec_id")
         .write.mode("overwrite")
         .partitionBy("cluster")
         .parquet(f"{index_dir}/chunks")
@@ -612,11 +547,7 @@ def semantic_ann_ready(index_dir: str) -> bool:
 
 
 # ---------------------------------------------------------- maintenance
-def _compact_table(
-    spark: SparkSession,
-    table_dir: str,
-    partition_by: str | None = None,
-) -> None:
+def _compact_table(spark: SparkSession, table_dir: str, partition_by: str) -> None:
     """Rewrite a stored-index table into few large files (the Lance
     ``optimize``/compaction analog — every append above leaves one file
     set per batch, and a long-lived incrementally-maintained index
@@ -640,12 +571,8 @@ def _compact_table(
     tmp = f"{table_dir}.compact-tmp"
     shutil.rmtree(tmp, ignore_errors=True)  # stale partial from a crash
     # hash-cluster rows so each partition value lands in one task → one
-    # output file per partition dir; unpartitioned tables coalesce flat
-    writer = df.coalesce(1) if partition_by is None else df.repartition(partition_by)
-    w = writer.write.mode("overwrite")
-    if partition_by is not None:
-        w = w.partitionBy(partition_by)
-    w.parquet(tmp)
+    # output file per partition dir
+    df.repartition(partition_by).write.mode("overwrite").partitionBy(partition_by).parquet(tmp)
     old = f"{table_dir}.old"
     os.rename(table_dir, old)
     os.rename(tmp, table_dir)
@@ -687,9 +614,7 @@ def compact_ivf_index(spark: SparkSession, index_dir: str) -> None:
     """Compact the vector table to one file per cluster partition.
     Raises if another writer (build / append) is active."""
     with _maintenance_lock(index_dir, wait=False):
-        _compact_table(spark, f"{index_dir}/vectors", partition_by="cluster")
-        # resize the membership sidecar too (same row set, fewer files)
-        _compact_table(spark, f"{index_dir}/ids")
+        _compact_table(spark, f"{index_dir}/vectors", "cluster")
 
 
 def compact_semantic_index(spark: SparkSession, index_dir: str) -> None:

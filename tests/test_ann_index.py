@@ -454,9 +454,22 @@ def test_semantic_compaction_gcs_dead_generations(spark, tmp_path):
     assert after == before and before
 
 
-def test_noop_append_membership_reads_log_not_payload(spark, tmp_path, monkeypatch):
-    """VERDICT r5 #7: append membership must come from the slim
-    file-level log / id sidecar, never a scan of the payload table."""
+def _tree(d):
+    """Every file under ``d`` with its size and mtime."""
+    import os
+
+    out = {}
+    for root, _, files in os.walk(d):
+        for f in files:
+            st = os.stat(os.path.join(root, f))
+            out[os.path.join(root, f)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+def test_noop_append_reads_log_and_writes_nothing(spark, tmp_path, monkeypatch):
+    """A no-op semantic append reads membership from the file-level
+    log, never the chunk payload; a no-op IVF append (membership is the
+    stored ``vec_id`` column) writes no file under its index dir."""
     from sema_spark.sources import ann_index as A
 
     body = "def spark_shuffle_join():\n    pass\n" * 8
@@ -479,34 +492,48 @@ def test_noop_append_membership_reads_log_not_payload(spark, tmp_path, monkeypat
 
     monkeypatch.setattr(DataFrameReader, "parquet", spy)
     assert A.semantic_index_append(docs, sidx) == 0
-    assert A.ivf_index_append(_df(spark, ids, vecs), vidx) == 0
-    payload_reads = [p for p in seen if p.endswith("/chunks/data") or p.endswith("/vectors")]
-    assert payload_reads == []
+    assert [p for p in seen if p.endswith("/chunks/data")] == []
     assert any(p.endswith("/chunks/checkpoint") for p in seen)
-    assert any(p.endswith("/ids") for p in seen)
+
+    before = _tree(vidx)
+    assert A.ivf_index_append(_df(spark, ids, vecs), vidx) == 0
+    assert _tree(vidx) == before
 
 
-def test_ivf_append_inflight_marker_reconciles(spark, tmp_path):
-    """A crash between the payload append and the sidecar append leaves
-    the marker; the next append must rebuild the sidecar from the
-    payload before trusting it (no duplicates, no losses)."""
-    import os
+def test_older_layout_index_dirs_keep_working(spark, tmp_path):
+    """An index dir written by the older layout also holds an ``ids/``
+    copy of the stored ids and may hold a leftover ``.append-inflight``
+    marker.  Both are ignored: answers are unchanged, a no-op append
+    appends nothing and a real append adds exactly the new ids."""
+    from sema_spark.sources.ann_index import (
+        build_lsh_stored_index,
+        lsh_index_append,
+        lsh_stored_topk,
+    )
 
-    ids, vecs = _blob_data(n=30)
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(_df(spark, ids[:20], vecs[:20]), idx, n_clusters=3, iterations=2)
+    ids, vecs = _blob_data(n=60, dim=6)
+    q = [float(x) for x in vecs[0]]
+    cases = [
+        ("ivf", lambda d, idx: build_ivf_index(d, idx, n_clusters=3, iterations=2),
+         ivf_index_append, ivf_stored_topk),
+        ("lsh", lambda d, idx: build_lsh_stored_index(d, idx, dim=6, num_bits=4),
+         lsh_index_append, lsh_stored_topk),
+    ]
+    for name, build, append, topk in cases:
+        idx = str(tmp_path / name)
+        build(_df(spark, ids[:40], vecs[:40]), idx)
+        fresh = [(r.vec_id, r.score) for r in topk(spark, idx, q, k=5, probes=2).collect()]
+        # the older layout: a one-column copy of the stored ids beside
+        # the vectors, plus the marker a crashed append left behind
+        spark.read.parquet(f"{idx}/vectors").select("vec_id").write.parquet(f"{idx}/ids")
+        open(f"{idx}/.append-inflight", "w").close()
 
-    # simulate the crash window: payload has rows the sidecar lacks
-    import shutil
-
-    shutil.rmtree(f"{idx}/ids")
-    open(f"{idx}/.append-inflight", "w").close()
-
-    assert ivf_index_append(_df(spark, ids[:20], vecs[:20]), idx) == 0  # reconciled, no dupes
-    assert not os.path.exists(f"{idx}/.append-inflight")
-    assert ivf_index_append(_df(spark, ids, vecs), idx) == 10
-    assert spark.read.parquet(f"{idx}/vectors").count() == 30
-    assert spark.read.parquet(f"{idx}/ids").count() == 30
+        got = [(r.vec_id, r.score) for r in topk(spark, idx, q, k=5, probes=2).collect()]
+        assert got == fresh and got
+        assert append(_df(spark, ids[:40], vecs[:40]), idx) == 0
+        assert append(_df(spark, ids, vecs), idx) == 20
+        stored = sorted(r.vec_id for r in spark.read.parquet(f"{idx}/vectors").collect())
+        assert stored == ids
 
 
 def test_compaction_refuses_while_writer_active(spark, tmp_path):

@@ -1,7 +1,7 @@
-"""Spark job count of the KG pipeline and the stored semantic index,
-per pass, on the benchmark corpus.
+"""Spark job count of the KG pipeline, the stored semantic index and
+the stored IVF/LSH vector indexes, per pass.
 
-    python tools/count_jobs.py --seed 7 [--part kg|semantic|all]
+    python tools/count_jobs.py --seed 7 [--part kg|semantic|ann|all] [--sf DIR]
 
 ``kg`` builds the seeded ``full`` KG slice with perfbench's own
 ``workloads.kg_prepare`` and runs the three passes of perfbench's
@@ -20,15 +20,27 @@ full path are compared on one seed and one state.
 An untimed three-file build starts the Python workers first, as
 perfbench does.
 
-Both run in one ``local[4]`` session (``all``, the default, runs ``kg``
-first).  Per pass it prints one line: Spark jobs (the pass runs under
-its own job group, counted with ``statusTracker().getJobIdsForGroup``),
-wall seconds and process-tree CPU seconds (driver, JVM and Python
-workers); KG passes add ``link_mode``, relinked files and stage 4's
-input file count, index passes the indexed file count.  After each
-part one line holds the sha256 of its sorted final rows — linked and
-edge rows (after ``change`` and again after ``change_full``), or the
-live chunk rows without their ``run_id``/``_gen`` bookkeeping columns
+``ann`` reads ``embeddings.parquet`` of the scale-factor directory
+``--sf`` (default ``$SPARK_GRAFT_SF_DIR``; ``--seed`` plays no part)
+and, for the stored IVF index and then the stored LSH index (``dim=64``,
+``num_bits=8``), runs four passes: a build over ``vec_id < n/2``, a
+changed append of the whole table (it adds the other half), a no-op
+append of the same table, and one stored top-k query for ``vec_id``
+0's vector (IVF ``probes=2``, LSH ``probes=8``).  An untimed tiny IVF
+build starts the Python workers first.
+
+All parts run in one ``local[4]`` session (``all``, the default, runs
+``kg``, ``semantic``, then ``ann``).  Per pass it prints one line:
+Spark jobs (the pass runs under its own job group, counted with
+``statusTracker().getJobIdsForGroup``), wall seconds and process-tree
+CPU seconds (driver, JVM and Python workers); KG passes add
+``link_mode``, relinked files and stage 4's input file count, index
+passes the indexed file count, vector appends the appended row count.
+After each part one line holds the sha256 of its sorted final rows —
+linked and edge rows (after ``change`` and again after
+``change_full``), the live chunk rows without their
+``run_id``/``_gen`` bookkeeping columns, or per vector index the stored
+``(vec_id, embedding, cluster|bucket)`` rows and the query's rows
 — hashed with columns in name order, so two trees whose reads order
 columns differently (a liveness join puts its keys first, a snapshot
 read puts partition columns last) can still be compared for
@@ -63,9 +75,16 @@ def rows_sha256(df) -> str:
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--seed", type=int, default=7)
-    ap.add_argument("--part", choices=("kg", "semantic", "all"), default="all")
+    ap.add_argument("--part", choices=("kg", "semantic", "ann", "all"), default="all")
+    ap.add_argument(
+        "--sf",
+        default=os.environ.get("SPARK_GRAFT_SF_DIR"),
+        help="scale-factor directory holding embeddings.parquet (ann part)",
+    )
     ap.add_argument("--work", default=None, help="scratch directory (default: a new temp dir)")
     args = ap.parse_args(argv)
+    if args.part in ("ann", "all") and not args.sf:
+        ap.error("the ann part needs --sf or $SPARK_GRAFT_SF_DIR")
 
     import inputs
     import workloads
@@ -164,11 +183,41 @@ def main(argv=None) -> int:
         chunks = A.live_chunks(spark, idx)
         print(f"sha256 live_chunks={rows_sha256(chunks.drop('run_id', '_gen'))}", flush=True)
 
+    def ann_part():
+        from pyspark.sql import functions as F
+
+        emb = spark.read.parquet(f"{args.sf}/embeddings.parquet").select("vec_id", "embedding")
+        n = emb.count()
+        base = emb.where(F.col("vec_id") < n // 2)
+        qvec = [float(x) for x in emb.where("vec_id = 0").collect()[0].embedding]
+        print(f"ann: {n} vectors, build on {base.count()}", flush=True)
+        A.build_ivf_index(emb.limit(50), f"{work}/warm_ivf", n_clusters=2, iterations=1)
+        families = (
+            ("ivf", lambda d: A.build_ivf_index(base, d, n_clusters=8, iterations=3),
+             A.ivf_index_append, lambda d: A.ivf_stored_topk(spark, d, qvec, k=10, probes=2)),
+            ("lsh", lambda d: A.build_lsh_stored_index(base, d, dim=64, num_bits=8),
+             A.lsh_index_append, lambda d: A.lsh_stored_topk(spark, d, qvec, k=10, probes=8)),
+        )
+        appended = "appended={}".format
+        for name, build, append, topk in families:
+            d = f"{work}/{name}"
+            run_pass(f"{name}_build", lambda: build(d), lambda _: "")
+            run_pass(f"{name}_changed_append", lambda: append(emb, d), appended)
+            run_pass(f"{name}_noop_append", lambda: append(emb, d), appended)
+            run_pass(f"{name}_query", lambda: topk(d).collect(), lambda rows: f"rows={len(rows)}")
+            print(
+                f"sha256 {name} stored={rows_sha256(spark.read.parquet(f'{d}/vectors'))} "
+                f"query={rows_sha256(topk(d))}",
+                flush=True,
+            )
+
     try:
         if args.part in ("kg", "all"):
             kg_part()
         if args.part in ("semantic", "all"):
             semantic_part()
+        if args.part in ("ann", "all"):
+            ann_part()
     finally:
         spark.stop()
         if args.work is None:
