@@ -398,9 +398,7 @@ def q_dedup_exact(spark, sf):
     """Exact dedup survivors (min doc_id per normalized fingerprint)."""
     from sema_spark.operators.dedup import exact_dedup
 
-    return exact_dedup(_docs(spark, sf), id_col="doc_id", text_col="text").select(
-        "doc_id", "group_size"
-    )
+    return exact_dedup(_docs(spark, sf)).select("doc_id", "group_size")
 
 
 def q_s4_posting_list(spark, sf):
@@ -733,7 +731,7 @@ def q_dedup_minhash(spark, sf):
     """MinHash-LSH near-dedup survivors over documents."""
     from sema_spark.operators.dedup import minhash_dedup
 
-    return minhash_dedup(_docs(spark, sf), id_col="doc_id", text_col="text", threshold=0.7).select("doc_id")
+    return minhash_dedup(_docs(spark, sf), threshold=0.7).select("doc_id")
 
 
 def q_dedup_minhash_sha(spark, sf):
@@ -747,8 +745,7 @@ def q_dedup_minhash_sha(spark, sf):
     from sema_spark.operators.dedup import minhash_dedup
 
     return minhash_dedup(
-        _docs(spark, sf), id_col="doc_id", text_col="text",
-        threshold=0.7, exact_pairs=True, base="sha",
+        _docs(spark, sf), threshold=0.7, exact_pairs=True, base="sha"
     ).select("doc_id")
 
 
@@ -756,7 +753,7 @@ def q_dedup_simhash(spark, sf):
     """SimHash near-dedup survivors over documents."""
     from sema_spark.operators.dedup import simhash_dedup
 
-    return simhash_dedup(_docs(spark, sf), id_col="doc_id", text_col="text", max_hamming=3).select("doc_id")
+    return simhash_dedup(_docs(spark, sf), max_hamming=3).select("doc_id")
 
 
 def q_ngram_jaccard_pairs(spark, sf):
@@ -767,9 +764,7 @@ def q_ngram_jaccard_pairs(spark, sf):
     ints, so both engines produce the bit-identical IEEE quotient."""
     from sema_spark.operators.dedup import ngram_jaccard_pairs
 
-    return ngram_jaccard_pairs(_docs(spark, sf), id_col="doc_id", text_col="text", threshold=0.8).select(
-        "a", "b", "jaccard"
-    )
+    return ngram_jaccard_pairs(_docs(spark, sf), threshold=0.8).select("a", "b", "jaccard")
 
 
 def q_embedding_dedup_lsh(spark, sf):
@@ -1149,7 +1144,7 @@ def _ensure_kmeans_expected(sf: str) -> str:
     RUNS AT into its signature-keyed dir (memoized by a done-marker —
     the dir name already encodes file identity + params).  Returns the
     dir."""
-    from sema_spark.operators.clustering import write_expected_kmeans
+    from sema_spark.oracles import write_expected_kmeans
 
     d = _keyed_dir(
         "/tmp/sema_expected_kmeans", f"{sf}/embeddings.parquet", "k8_i5__ivf_i3_p2_q0__incr_half"
@@ -1165,7 +1160,7 @@ def q_kmeans_assign(spark, sf):
     """Deterministic k-means (k=8, 5 Lloyd rounds + final assign) over
     the embeddings table — the IVF coarse quantizer of the similarity
     stack.  Oracle = an independent full-matrix numpy/decimal
-    implementation (operators/clustering.kmeans_python) materialized as
+    implementation (oracles.kmeans_python) materialized as
     kmeans.parquet; the determinism contract (min-id init, numpy
     argmin assignment, decimal-exact sums, driver-side means) is what
     makes a value-exact oracle possible for an iterative float
@@ -1181,7 +1176,7 @@ def q_ann_ivf_kmeans_topk(spark, sf):
     """IVF-Flat ANN over the embeddings table: the deterministic k-means
     quantizer as the coarse index (3 rounds, 8 cells), query = vec_id
     0's embedding, 2 probed cells, exact sequential-summation cosine
-    within.  Oracle = clustering.ivf_kmeans_topk_python (independent
+    within.  Oracle = oracles.ivf_kmeans_topk_python (independent
     quantizer + probe + scan) materialized as ivf_kmeans.parquet."""
     from sema_spark.operators.clustering import ivf_kmeans_topk
 
@@ -1378,7 +1373,7 @@ def q_semantic_search_ann(spark, sf):
         F.col("doc_id").cast("string").alias("path"),
         F.col("text").alias("content"),
     )
-    idx = _keyed_dir("/tmp/sema_semantic_ann", f"{sf}/documents.parquet", "semann_v1")
+    idx = _keyed_dir("/tmp/sema_semantic_ann", f"{sf}/documents.parquet", "semann_v2")
     if not semantic_ann_ready(idx):
         build_semantic_ann_index(docs, idx, n_clusters=8, iterations=3)
     out = semantic_search_ann(
@@ -1564,12 +1559,9 @@ def q_stratified_sample(spark, sf):
     dropped."""
     from sema_spark.operators.curation import stratified_sample
 
-    return stratified_sample(
-        _docs(spark, sf),
-        {"en": 0.5, "de": 0.25, "zh": 0.1},
-        strata_col="lang",
-        key_col="doc_id",
-    ).select("doc_id", "lang")
+    return stratified_sample(_docs(spark, sf), {"en": 0.5, "de": 0.25, "zh": 0.1}).select(
+        "doc_id", "lang"
+    )
 
 
 def q_sequence_packing(spark, sf):
@@ -1588,12 +1580,7 @@ def q_weighted_interleave(spark, sf):
     key a consumer range-partitions on."""
     from sema_spark.operators.curation import weighted_interleave
 
-    return weighted_interleave(
-        _docs(spark, sf),
-        {"src0": 1.0, "src1": 0.5, "src2": 0.25},
-        source_col="source",
-        id_col="doc_id",
-    )
+    return weighted_interleave(_docs(spark, sf), {"src0": 1.0, "src1": 0.5, "src2": 0.25})
 
 
 def q_curation_v2(spark, sf):

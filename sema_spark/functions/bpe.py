@@ -80,10 +80,10 @@ def _select_batch(cands, batch_m: int, remaining: int):
 def bpe_train(
     docs: DataFrame,
     n_merges: int,
-    text_col: str = "text",
     batch_m: int = 1,
 ) -> list[tuple[int, str, str, str, int]]:
-    """Learn up to ``n_merges`` BPE merge rules from the corpus.
+    """Learn up to ``n_merges`` BPE merge rules from the corpus's
+    ``text`` column.
 
     Returns ``[(rank, left, right, merged, pair_count), ...]`` — a small
     driver-side list (the merge table IS the tokenizer; it is the
@@ -105,7 +105,7 @@ def bpe_train(
     bounded by ``m`` (keep m ≲ 16 — expression nesting grows with it).
     """
     vocab = materialize(
-        docs.select(F.explode(_words(F.col(text_col))).alias("w"))
+        docs.select(F.explode(_words(F.col("text"))).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("cnt"))
         .select(
@@ -256,15 +256,16 @@ def precompute_vocab(merges, words) -> dict[str, list[str]]:
 VOCAB_TOP_N = 20_000
 
 
-def word_vocab(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_vocab(docs: DataFrame) -> DataFrame:
     """The :data:`VOCAB_TOP_N` most frequent distinct words of the
-    corpus (same word regex as train/encode) — the bounded vocabulary a
-    caller pre-encodes with :func:`precompute_vocab` and broadcasts via
-    :func:`bpe_encode`'s ``vocab``.  Zipf makes a modest cap cover
+    corpus's ``text`` column (same word regex as train/encode) — the
+    bounded vocabulary a caller pre-encodes with
+    :func:`precompute_vocab` and broadcasts via :func:`bpe_encode`'s
+    ``vocab``.  Zipf makes a modest cap cover
     nearly all occurrences, so the broadcast stays small at any corpus
     size."""
     return (
-        docs.select(F.explode(_words(F.col(text_col))).alias("w"))
+        docs.select(F.explode(_words(F.col("text"))).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("cnt"))
         .orderBy(F.desc("cnt"), "w")
@@ -276,12 +277,11 @@ def word_vocab(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def bpe_encode(
     docs: DataFrame,
     merges,
-    text_col: str = "text",
     id_col: str | None = None,
     vocab=None,
 ) -> DataFrame:
-    """Tokenize the corpus with a learned merge table: ``(id?, tokens
-    array<string>, n_tokens)`` per document.
+    """Tokenize the corpus's ``text`` column with a learned merge table:
+    ``(id?, tokens array<string>, n_tokens)`` per document.
 
     Tokenization is the textbook right use of an Arrow-batched pandas
     UDF: per-string sequential merge application is irreducible to
@@ -345,7 +345,7 @@ def bpe_encode(
 
     cols = [F.col(id_col)] if id_col else []
     return docs.select(
-        *cols, encode(F.col(text_col)).alias("tokens")
+        *cols, encode(F.col("text")).alias("tokens")
     ).withColumn("n_tokens", F.size("tokens"))
 
 

@@ -32,30 +32,10 @@ MAX_TOKENS = 256  # parity: reference MAX_LENGTH
 _MULT = 2654435761  # Knuth multiplicative hash constant
 
 
-def encode_numpy(text: str | None) -> np.ndarray:
-    """Encode one string; reference implementation for parity tests."""
-    out = np.zeros(EMBEDDING_DIM, dtype=np.float64)
-    if not text:
-        return out.astype(np.float32)
-    b = np.frombuffer(text.encode("utf-8"), dtype=np.uint8).astype(np.int64)
-    if len(b) < 3:
-        return out.astype(np.float32)
-    codes = (b[:-2] << 16) + (b[1:-1] << 8) + b[2:]
-    codes = codes[:MAX_TOKENS]  # truncation parity
-    h = (codes * _MULT) & 0xFFFFFFFF
-    idx = h % EMBEDDING_DIM
-    sign = np.where((h >> 16) & 1, 1.0, -1.0)
-    np.add.at(out, idx, sign)
-    out /= len(codes)  # mean pool
-    n = np.linalg.norm(out)
-    if n > 0:
-        out /= n  # L2 normalize
-    return out.astype(np.float32)
-
-
 def encode_batch_numpy(texts) -> np.ndarray:
-    """Whole-batch encoder, VALUE-IDENTICAL to a per-row
-    :func:`encode_numpy` loop (asserted in
+    """Whole-batch encoder, the one production encoder path:
+    VALUE-IDENTICAL to a loop of the per-row reference encoder
+    ``encode_numpy`` in tests/hof_oracles.py (asserted in
     tests/test_vector_fold.py::test_encode_batch_matches_per_row)
     but vectorized across rows — the per-row path was the measured
     hotspot of u1_encoder / semantic_index_build (one ``np.add.at`` +
@@ -130,5 +110,5 @@ def with_embedding(df):
 def encode_query(text: str) -> list[float]:
     """Driver-side single-query encoding (search entry point B,
     /root/reference/src/storage/lance_indexer.rs:113-118)."""
-    return [float(x) for x in encode_numpy(text)]
+    return [float(x) for x in encode_batch_numpy([text])[0]]
 

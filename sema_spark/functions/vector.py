@@ -1,17 +1,21 @@
 """Vector math over array columns.
 
 Re-expresses the reference's f32 vector ops
-(/root/reference/src/semantic/embeddings.rs:83-88 — L2 norm, dot) two
-ways:
+(/root/reference/src/semantic/embeddings.rs:83-88 — L2 norm, dot) in
+three forms:
 
-* ``zip_with`` + ``aggregate`` HOFs — no Python workers, sequential
-  summation (bit-compatible with the DuckDB oracle's
-  list_cosine_similarity), the right call for small result sets;
+* ``zip_with`` + ``aggregate`` HOFs (:func:`dot`, :func:`l2_norm`,
+  :func:`cosine`) — no Python workers, sequential summation
+  (bit-compatible with the DuckDB oracle's list_cosine_similarity),
+  the right call for small result sets;
+* Arrow cosine folds (:func:`cosine_fold_arrow` for two columns,
+  :func:`cosine_literal_fold` against one query vector) — the HOF's
+  exact sequential arithmetic, vectorized across rows; every semantic
+  and vector top-k scores with them;
 * :func:`cosine_arrow` — Arrow-batched numpy for BULK re-ranking
-  (e.g. 10^5+ blocked candidate pairs, where interpreted HOF lambdas
-  are the bottleneck).  numpy's pairwise summation differs from
-  sequential in the last bits, so use the HOF path when an oracle
-  compares unrounded values.
+  (e.g. 10^5+ blocked candidate pairs).  numpy's pairwise summation
+  differs from sequential in the last bits, so use a fold when an
+  oracle compares unrounded values.
 """
 
 from __future__ import annotations
@@ -99,28 +103,6 @@ def cosine_fold_arrow(a, b):
     return _cos(a, b)
 
 
-def dot_literal_fold(vec, qvec: list[float]):
-    """``dot(vec, lit(qvec))`` with the HOF's sequential left-fold
-    arithmetic (see :func:`_fold_dot`), the query vector riding in the
-    UDF closure instead of a dim-wide literal-array expression.  NULL in
-    → NULL out."""
-    q = [float(x) for x in qvec]
-
-    @pandas_udf(DoubleType())
-    def _dot(va):
-        if len(va) == 0:
-            return pd.Series([], dtype="float64")
-        A, mask = _mat64(va)
-        if mask.all():
-            return _null_safe(np.zeros(len(va)), mask)
-        acc = np.zeros(A.shape[0], dtype=np.float64)
-        for j in range(len(q)):
-            acc = acc + A[:, j] * q[j]
-        return _null_safe(acc, mask)
-
-    return _dot(vec)
-
-
 def cosine_literal_fold(vec, qvec: list[float]):
     """``cosine(vec, lit(qvec))`` bit-identical to the HOF: sequential
     folds for the dot and the row norm; the query norm is folded ONCE
@@ -153,20 +135,6 @@ def cosine_literal_fold(vec, qvec: list[float]):
         return _null_safe(num / safe, mask | (den == 0.0))
 
     return _cos(vec)
-
-
-def l2_norm_fold(vec):
-    """``l2_norm(vec)`` with fold arithmetic — bit-identical to the HOF
-    (used by the stored semantic index to precompute ``emb_norm``)."""
-
-    @pandas_udf(DoubleType())
-    def _norm(va):
-        if len(va) == 0:
-            return pd.Series([], dtype="float64")
-        A, mask = _mat64(va)
-        return _null_safe(np.sqrt(_fold_dot(A, A)), mask)
-
-    return _norm(vec)
 
 
 def cosine_rows(a: np.ndarray, b: np.ndarray) -> pd.Series:

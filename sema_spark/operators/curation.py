@@ -19,6 +19,10 @@ Five operators a 100 TB curation job needs beyond near-dup detection:
   (``df.sampleBy`` is seed-dependent across partitionings; a content-keyed
   hash is not).
 
+Every operator reads the fixed documents columns ``(doc_id, text)``,
+plus ``source`` (:func:`weighted_interleave`) or ``lang``
+(:func:`stratified_sample`) where it uses them.
+
 All hot paths are built-in expressions (whole-stage codegen); the only
 shuffles are the ones the semantics force, and each docstring names them.
 Every operator is dual-expressed in ANSI SQL by the driver oracles in
@@ -94,13 +98,11 @@ def decontaminate(
     benchmark: DataFrame,
     *,
     n: int = 13,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Flag training documents that share any word ``n``-gram with a
     benchmark set.
 
-    Returns ``docs`` columns ``(id_col, contaminated)`` — callers anti-join
+    Returns ``docs`` columns ``(doc_id, contaminated)`` — callers anti-join
     or filter on the flag.  ``n=13`` is the published GPT-3/Gopher choice;
     tests use a smaller ``n`` because the synthetic corpus repeats a tiny
     vocabulary.
@@ -122,22 +124,22 @@ def decontaminate(
       broadcast side is the small one so the string width doesn't matter.
     """
     bench_grams = (
-        benchmark.select(F.explode(_word_ngrams(F.col(text_col), n)).alias("gram"))
+        benchmark.select(F.explode(_word_ngrams(F.col("text"), n)).alias("gram"))
         .distinct()
     )
-    doc_grams = spread(docs.select(id_col, text_col)).select(
-        F.col(id_col), F.explode(_word_ngrams(F.col(text_col), n)).alias("gram")
+    doc_grams = spread(docs.select("doc_id", "text")).select(
+        "doc_id", F.explode(_word_ngrams(F.col("text"), n)).alias("gram")
     )
     contaminated = (
         doc_grams.join(F.broadcast(bench_grams), "gram", "left_semi")
-        .select(id_col)
+        .select("doc_id")
         .distinct()
         .withColumn("contaminated", F.lit(True))
     )
     return (
-        docs.select(id_col)
-        .join(contaminated, id_col, "left")
-        .select(id_col, F.coalesce("contaminated", F.lit(False)).alias("contaminated"))
+        docs.select("doc_id")
+        .join(contaminated, "doc_id", "left")
+        .select("doc_id", F.coalesce("contaminated", F.lit(False)).alias("contaminated"))
     )
 
 
@@ -145,15 +147,13 @@ def dedup_passages(
     docs: DataFrame,
     *,
     passage_words: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Corpus-wide passage dedup: split each document into consecutive
     ``passage_words``-word passages, keep only the globally-first
     occurrence of each distinct passage (ordered by ``(id, position)``),
     and reassemble the surviving text.
 
-    Returns ``(id_col, clean_text, n_passages, n_kept)``.
+    Returns ``(doc_id, clean_text, n_passages, n_kept)``.
 
     Scale design: two semantic shuffles — winner selection (a window
     rank partitioned by a **128-bit sha256 prefix** of the passage:
@@ -167,7 +167,7 @@ def dedup_passages(
     from the word count — no second explode.  Null-text documents are
     excluded entirely (they have no passages on either engine).
     """
-    words = _norm_words(F.col(text_col))
+    words = _norm_words(F.col("text"))
     n_pass = F.ceil(F.size(words) / F.lit(passage_words)).cast("int")
     # consecutive non-overlapping passages in ONE compiled regex pass:
     # greedy `\S+( \S+){0,w-1}` eats w words per match and the scan
@@ -177,7 +177,7 @@ def dedup_passages(
     # bit-identical: an empty/whitespace text still yields ONE empty
     # passage (split of "" is [""] — both engines' oracle semantics),
     # which the regex alone would drop.
-    norm = _norm(F.col(text_col))
+    norm = _norm(F.col("text"))
     pat = r"\S+( \S+){0,%d}" % (passage_words - 1)
     passage_arr = F.when(norm == "", F.array(F.lit(""))).otherwise(
         F.regexp_extract_all(norm, F.lit(pat), 0)
@@ -186,8 +186,8 @@ def dedup_passages(
     # bijective with the hex form, so winner selection groups
     # identically, at half the shuffled key bytes (A/B at sf1.0: ~20%
     # off the winner shuffle)
-    passages = spread(docs.select(id_col, text_col)).select(
-        F.col(id_col).alias("_id"),
+    passages = spread(docs.select("doc_id", "text")).select(
+        F.col("doc_id").alias("_id"),
         F.posexplode(passage_arr).alias("_pos", "_passage"),
     ).withColumn("_h", F.unhex(F.substring(F.sha2(F.col("_passage"), 256), 1, 32)))
 
@@ -200,8 +200,8 @@ def dedup_passages(
     # null text yields no exploded passages, so it must be absent from
     # totals too — a right-join row with NULL n_passages would diverge
     # from any oracle built off the passage rows
-    totals = docs.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("_id"), n_pass.cast("bigint").alias("n_passages")
+    totals = docs.where(F.col("text").isNotNull()).select(
+        F.col("doc_id").alias("_id"), n_pass.cast("bigint").alias("n_passages")
     )
     return (
         kept.groupBy("_id")
@@ -217,7 +217,7 @@ def dedup_passages(
         )
         .join(totals, "_id", "right")
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("doc_id"),
             F.coalesce("clean_text", F.lit("")).alias("clean_text"),
             "n_passages",
             F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
@@ -229,8 +229,6 @@ def duplicated_spans(
     docs: DataFrame,
     *,
     w: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """EXACT-SUBSTRING duplicated-span detection — the strongest tier of
     training-data dedup (Lee et al. 2022, "Deduplicating Training Data
@@ -244,7 +242,7 @@ def duplicated_spans(
     any length ≥ w is reported as one maximal span, exactly what the
     suffix-array method finds for threshold ``w``.
 
-    Returns ``(id_col, span_start, span_end, span_words)`` — word-index
+    Returns ``(doc_id, span_start, span_end, span_words)`` — word-index
     spans ``[span_start, span_end)``, one row per maximal duplicated
     span, deterministic.
 
@@ -261,11 +259,11 @@ def duplicated_spans(
     """
     from sema_spark.plans.materialize import materialize
 
-    normed = _norm(F.col(text_col))
+    normed = _norm(F.col("text"))
     occ = materialize(
-        spread(docs.select(id_col, text_col))
+        spread(docs.select("doc_id", "text"))
         .select(
-            F.col(id_col).alias("_id"),
+            F.col("doc_id").alias("_id"),
             F.posexplode(_word_ngrams_of_norm(normed, w)).alias("_pos", "_gram"),
         )
         .select(
@@ -306,7 +304,7 @@ def duplicated_spans(
         .groupBy("_id", "_g")
         .agg(F.min("_s").alias("_ss"), F.max("_e").alias("_se"))
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("doc_id"),
             F.col("_ss").cast("bigint").alias("span_start"),
             F.col("_se").cast("bigint").alias("span_end"),
             (F.col("_se") - F.col("_ss")).cast("bigint").alias("span_words"),
@@ -314,17 +312,11 @@ def duplicated_spans(
     )
 
 
-def remove_spans(
-    docs: DataFrame,
-    spans: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def remove_spans(docs: DataFrame, spans: DataFrame) -> DataFrame:
     """CUT duplicated spans out of the corpus — the consumption step of
     :func:`duplicated_spans` (Lee et al. 2022 don't just report
     duplicated substrings, their pipeline removes them from the
-    training set).  ``spans`` is the (id, span_start, span_end) output:
+    training set).  ``spans`` is the (doc_id, span_start, span_end) output:
     word-index intervals over the whitespace-NORMALIZED text, which is
     exactly the domain the spans were computed in, so dropping the
     words whose index falls in any ``[span_start, span_end)`` and
@@ -333,7 +325,7 @@ def remove_spans(
     shared coordinate system of both operators (and of their DuckDB
     replay oracles).
 
-    Returns ``(id_col, clean_text, n_words, n_removed)`` for every doc
+    Returns ``(doc_id, clean_text, n_words, n_removed)`` for every doc
     with non-null text.  Note removal can create NEW w-grams across cut
     boundaries (two formerly-distant words become adjacent) — the same
     property as the suffix-array original; callers wanting a fixpoint
@@ -343,12 +335,12 @@ def remove_spans(
     span set + one id-keyed join; the per-word span test is an
     interpreted HOF but the span list per doc is tiny, so cost stays
     O(words × spans_per_doc) with spans_per_doc ≈ a handful."""
-    sp = spans.groupBy(id_col).agg(
+    sp = spans.groupBy("doc_id").agg(
         F.collect_list(
             F.struct(F.col("span_start").alias("s"), F.col("span_end").alias("e"))
         ).alias("_spans")
     )
-    words = _norm_words(F.col(text_col))
+    words = _norm_words(F.col("text"))
     kept = F.filter(
         words,
         lambda w, i: ~F.exists(
@@ -359,10 +351,10 @@ def remove_spans(
         # spread (r7): the span map broadcasts, so without it the
         # interpreted per-word cut HOF ran on the (single-split) scan's
         # partitioning — one core for the whole corpus
-        spread(docs.where(F.col(text_col).isNotNull()))
-        .join(sp, id_col, "left")
+        spread(docs.where(F.col("text").isNotNull()))
+        .join(sp, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.when(F.col("_spans").isNull(), F.array_join(words, " "))
             .otherwise(F.array_join(kept, " "))
             .alias("clean_text"),
@@ -378,14 +370,12 @@ def remove_spans(
 def repetition_signals(
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_top_word_frac: float = 0.12,
     max_dup_bigram_frac: float = 0.05,
 ) -> DataFrame:
     """Gopher-style repetition quality signals per document.
 
-    Returns ``(id_col, n_words, top_word_frac, dup_bigram_frac,
+    Returns ``(doc_id, n_words, top_word_frac, dup_bigram_frac,
     mean_word_len, keep)`` where ``keep`` ANDs the two repetition
     thresholds (defaults chosen to split the synthetic corpus; Gopher's
     published thresholds are for web text).
@@ -402,9 +392,9 @@ def repetition_signals(
     token count per document, not the token count.  No join, no window
     functions, no Python.
     """
-    normed = _norm(F.col(text_col))
-    base = spread(docs.select(id_col, text_col)).select(
-        F.col(id_col).alias("_id"), normed.alias("_nt")
+    normed = _norm(F.col("text"))
+    base = spread(docs.select("doc_id", "text")).select(
+        F.col("doc_id").alias("_id"), normed.alias("_nt")
     )
     # words = split of the normalized text ([''] for empty text — the
     # shared one-empty-passage edge, identical to _norm_words); bigrams
@@ -441,7 +431,7 @@ def repetition_signals(
         F.col("_nbg") > 0, F.lit(1.0) - F.col("_dbg") / F.col("_nbg")
     ).otherwise(F.lit(0.0))
     return stats.select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         "n_words",
         F.round(top_frac, 6).alias("top_word_frac"),
         F.round(dup_frac, 6).alias("dup_bigram_frac"),
@@ -494,12 +484,10 @@ def stratified_sample(
     df: DataFrame,
     fractions: dict[str, float],
     *,
-    strata_col: str,
-    key_col: str,
     buckets: int = 10_000,
 ) -> DataFrame:
-    """Deterministic stratified sample: keep a row iff
-    ``sha_bucket(key) < fractions[stratum] * buckets``.
+    """Deterministic stratified sample by ``lang``: keep a row iff
+    ``sha_bucket(doc_id) < fractions[lang] * buckets``.
 
     Unlike ``DataFrame.sampleBy`` (Bernoulli on a per-partition seeded RNG
     — result changes with partitioning), this is a pure function of row
@@ -513,8 +501,8 @@ def stratified_sample(
     """
     frac = F.lit(0.0)
     for s, f in fractions.items():
-        frac = F.when(F.col(strata_col) == s, F.lit(float(f))).otherwise(frac)
-    return df.where(sha_bucket(F.col(key_col), buckets) < frac * buckets)
+        frac = F.when(F.col("lang") == s, F.lit(float(f))).otherwise(frac)
+    return df.where(sha_bucket(F.col("doc_id"), buckets) < frac * buckets)
 
 
 def pack_sequences(
@@ -522,8 +510,6 @@ def pack_sequences(
     *,
     capacity: int,
     n_shards: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Sequence packing for pretraining batches: assign each document to
@@ -531,13 +517,13 @@ def pack_sequences(
     downstream training reads near-full, fixed-budget concatenation
     groups instead of padding per document.
 
-    Returns ``(id_col, shard, bin_idx, n_tokens, *carry)`` — ``carry``
+    Returns ``(doc_id, shard, bin_idx, n_tokens, *carry)`` — ``carry``
     names extra per-document columns of ``docs`` to thread through the
     fold unchanged (they never influence packing), which lets a
     composition avoid a post-packing join back to per-doc attributes
     (curation_chain threads the interleave schedule through this way
     instead of joining two branches).  Bin assignment is
-    next-fit: documents are visited in ``id`` order within a shard and a
+    next-fit: documents are visited in ``doc_id`` order within a shard and a
     new bin opens when the current one cannot fit the next document (a
     document larger than ``capacity`` occupies a bin alone).
 
@@ -553,21 +539,21 @@ def pack_sequences(
     """
     import pandas as pd
 
-    words = _norm_words(F.col(text_col))
-    n_tokens = F.when(_norm(F.col(text_col)) == "", F.lit(0)).otherwise(F.size(words))
+    words = _norm_words(F.col("text"))
+    n_tokens = F.when(_norm(F.col("text")) == "", F.lit(0)).otherwise(F.size(words))
     # spread (r7): the token-count map phase (normalize + split per
     # doc) otherwise runs on the scan's partitioning — one task for a
     # single-row-group parquet; the fold itself stays n_shards-wide
     base = spread(docs).select(
-        F.col(id_col),
-        (sha_bucket(F.col(id_col)) % n_shards).alias("shard"),
+        "doc_id",
+        (sha_bucket(F.col("doc_id")) % n_shards).alias("shard"),
         n_tokens.cast("long").alias("n_tokens"),
         *[F.col(c) for c in carry],
     )
-    out_cols = [id_col, "shard", "bin_idx", "n_tokens", *carry]
+    out_cols = ["doc_id", "shard", "bin_idx", "n_tokens", *carry]
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
+        pdf = pdf.sort_values("doc_id").reset_index(drop=True)
         bins = []
         fill, b = 0, 0
         for i, t in enumerate(pdf["n_tokens"]):
@@ -579,7 +565,7 @@ def pack_sequences(
         pdf["bin_idx"] = pd.Series(bins, dtype="int64")
         return pdf[out_cols]
 
-    schema = f"{id_col} long, shard long, bin_idx long, n_tokens long" + "".join(
+    schema = "doc_id long, shard long, bin_idx long, n_tokens long" + "".join(
         f", {c} {docs.schema[c].dataType.simpleString()}" for c in carry
     )
     return base.groupBy("shard").applyInPandas(pack, schema)
@@ -668,8 +654,6 @@ def curation_chain(
     mixed = weighted_interleave(
         cleaned.join(docs.select("doc_id", "source"), "doc_id"),
         weights,
-        source_col="source",
-        id_col="doc_id",
         keep_cols=("text",),
         unknown_sources="error",
     )
@@ -685,8 +669,6 @@ def weighted_interleave(
     docs: DataFrame,
     weights: dict[str, float],
     *,
-    source_col: str,
-    id_col: str,
     keep_cols: tuple[str, ...] = (),
     unknown_sources: str = "drop",
 ) -> DataFrame:
@@ -701,7 +683,7 @@ def weighted_interleave(
     (curation_chain's fused pack) enforce their contract this way at
     zero extra cost (the check rides the existing job, no extra scan).
 
-    Returns ``(id_col, source_col, rn_in_source, vt, *keep_cols)``
+    Returns ``(doc_id, source, rn_in_source, vt, *keep_cols)``
     where ``vt`` is the virtual-time sort key (``keep_cols`` ride
     through untouched so a downstream stage needs no join back).  Sources absent from ``weights`` — and
     sources with weight <= 0, the natural way to express "exclude" — are
@@ -717,8 +699,8 @@ def weighted_interleave(
     """
     frac = F.lit(None).cast("double")
     for s, wt in weights.items():
-        frac = F.when(F.col(source_col) == s, F.lit(float(wt))).otherwise(frac)
-    w = Window.partitionBy(source_col).orderBy(sha_bucket(F.col(id_col)), id_col)
+        frac = F.when(F.col("source") == s, F.lit(float(wt))).otherwise(frac)
+    w = Window.partitionBy("source").orderBy(sha_bucket(F.col("doc_id")), "doc_id")
     if unknown_sources == "error":
         frac = F.when(
             frac.isNotNull() & (frac > 0), frac
@@ -726,7 +708,7 @@ def weighted_interleave(
             F.raise_error(
                 F.concat(
                     F.lit("weighted_interleave: source "),
-                    F.col(source_col),
+                    F.col("source"),
                     F.lit(" has no positive weight (curation_chain contract)"),
                 )
             ).cast("double")
@@ -736,15 +718,15 @@ def weighted_interleave(
         # non-ANSI division and an error under ANSI mode
         docs.where(frac.isNotNull() & (frac > 0))
         .select(
-            F.col(id_col),
-            F.col(source_col),
+            "doc_id",
+            "source",
             frac.alias("_w"),
             *[F.col(c) for c in keep_cols],
         )
         .withColumn("rn_in_source", F.row_number().over(w).cast("bigint"))
         .select(
-            id_col,
-            source_col,
+            "doc_id",
+            "source",
             "rn_in_source",
             F.round(F.col("rn_in_source") / F.col("_w"), 6).alias("vt"),
             *keep_cols,

@@ -1,7 +1,7 @@
 """Deduplication family for large-scale training-data pipelines.
 
-Five strategies over a document table ``(id, text)``, all
-shuffle-conscious:
+Five strategies over a document table ``(doc_id, text)`` (the fixed
+columns every text operator reads), all shuffle-conscious:
 
 * :func:`exact_dedup` — normalized sha256 groupBy (one shuffle on the
   hash, min-id survivor).
@@ -60,18 +60,25 @@ from sema_spark.functions.vector import cosine_arrow, cosine_rows
 from sema_spark.operators.canonicalize import connected_components
 
 
+def _id_text(df: DataFrame) -> DataFrame:
+    """The slim ``(id, t)`` projection of ``(doc_id, text)``, spread
+    (r7): the per-document hashing otherwise runs on the scan's
+    partitioning — one task for a single-row-group parquet."""
+    return spread(df.select(F.col("doc_id").alias("id"), F.col("text").alias("t")), "id")
+
+
 # ---------------------------------------------------------------------- exact
-def exact_dedup(df: DataFrame, id_col: str = "id", text_col: str = "text") -> DataFrame:
-    """Keep one row (min id) per normalized-content fingerprint; adds
-    group_size.  Single hash-keyed shuffle, no content comparison.
+def exact_dedup(df: DataFrame) -> DataFrame:
+    """Keep one row (min doc_id) per normalized-content fingerprint;
+    adds group_size.  Single hash-keyed shuffle, no content comparison.
     spread (r7): the normalize+sha map phase otherwise inherits the
     scan's partitioning — one task for a single-row-group parquet."""
-    fp = spread(df, id_col).withColumn("_fp", content_fingerprint(text_col))
+    fp = spread(df, "doc_id").withColumn("_fp", content_fingerprint("text"))
     w = Window.partitionBy("_fp")
     return (
         fp.withColumn("group_size", F.count("*").over(w))
-        .withColumn("_keep", F.min(id_col).over(w))
-        .filter(F.col(id_col) == F.col("_keep"))
+        .withColumn("_keep", F.min("doc_id").over(w))
+        .filter(F.col("doc_id") == F.col("_keep"))
         .drop("_keep", "_fp")
     )
 
@@ -79,8 +86,6 @@ def exact_dedup(df: DataFrame, id_col: str = "id", text_col: str = "text") -> Da
 # -------------------------------------------------------------------- minhash
 def _lsh_raw_band_pairs(
     df: DataFrame,
-    id_col: str,
-    text_col: str,
     threshold: float,
     max_bucket: int,
     shingle_words: bool,
@@ -105,7 +110,7 @@ def _lsh_raw_band_pairs(
     # pipeline), then band/join on slim (id, band, bh) rows only — the
     # 64-long signature array never enters the self-join shuffle
     mh = with_minhash(
-        spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t")), "id"),
+        _id_text(df),
         text_col="t",
         shingle_words=shingle_words,
         bands=choose_bands(threshold),
@@ -133,8 +138,6 @@ def _lsh_raw_band_pairs(
 
 def minhash_candidate_pairs(
     df: DataFrame,
-    id_col: str = "id",
-    text_col: str = "text",
     threshold: float = 0.7,
     max_bucket: int = 1000,
     shingle_words: bool = True,
@@ -147,9 +150,7 @@ def minhash_candidate_pairs(
     char-n-gram Jaccard — candidate filter and re-rank then estimate
     the SAME quantity).  ``base="sha"`` switches the token base hash to
     a sha256-derived value a DuckDB oracle can replicate."""
-    mh, raw = _lsh_raw_band_pairs(
-        df, id_col, text_col, threshold, max_bucket, shingle_words, base, tokens_ready
-    )
+    mh, raw = _lsh_raw_band_pairs(df, threshold, max_bucket, shingle_words, base, tokens_ready)
     # pair dedup is the band phase's hot aggregation (each pair repeats
     # once per agreeing band — 8.6M raw → 5.2M distinct at sf0.1): an
     # explicit wide repartition parallelizes the hash-agg past the
@@ -177,7 +178,7 @@ def minhash_candidate_pairs(
     )
 
 
-def _drop_cc_losers(df: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
+def _drop_cc_losers(df: DataFrame, pairs: DataFrame) -> DataFrame:
     """Remove every non-survivor of the duplicate-pair graph from df:
     :func:`connected_components` over the long ids labels each component
     with its numeric min id (the survivor), and every other member is
@@ -186,7 +187,7 @@ def _drop_cc_losers(df: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
         pairs.select(F.col("a").cast("long").alias("a"), F.col("b").cast("long").alias("b"))
     )
     losers = comp.filter(F.col("id") != F.col("component")).select(F.col("id").alias("_loser"))
-    return df.join(losers, df[id_col] == F.col("_loser"), "left_anti")
+    return df.join(losers, df["doc_id"] == F.col("_loser"), "left_anti")
 
 
 def _star_edges(
@@ -213,12 +214,7 @@ def _star_edges(
     )
 
 
-def minhash_dup_edges(
-    df: DataFrame,
-    id_col: str = "id",
-    text_col: str = "text",
-    threshold: float = 0.7,
-) -> DataFrame:
+def minhash_dup_edges(df: DataFrame, threshold: float = 0.7) -> DataFrame:
     """Verified duplicate-graph edges in O(Σ bucket), not O(Σ bucket²).
 
     Per LSH bucket emit STAR edges (bucket-min-id hub → member), then
@@ -241,7 +237,7 @@ def minhash_dup_edges(
     :func:`minhash_candidate_pairs`, bounded by its ``max_bucket``
     cap)."""
     mh = with_minhash(
-        spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t")), "id"),
+        _id_text(df),
         text_col="t",
         bands=choose_bands(threshold),
     ).select("id", "mh_sig", "mh_bands").transform(materialize)
@@ -252,8 +248,6 @@ def minhash_dup_edges(
 
 def minhash_dedup(
     df: DataFrame,
-    id_col: str = "id",
-    text_col: str = "text",
     threshold: float = 0.7,
     exact_pairs: bool = False,
     base: str = "xxhash64",
@@ -267,10 +261,10 @@ def minhash_dedup(
     signature Jaccard ≥ threshold is linked.  ``base="sha"`` makes the
     whole pipeline DuckDB-replicable (the dedup_minhash_sha oracle)."""
     if exact_pairs:
-        pairs = minhash_candidate_pairs(df, id_col, text_col, threshold, base=base)
+        pairs = minhash_candidate_pairs(df, threshold, base=base)
     else:
-        pairs = minhash_dup_edges(df, id_col, text_col, threshold)
-    return _drop_cc_losers(df, pairs, id_col)
+        pairs = minhash_dup_edges(df, threshold)
+    return _drop_cc_losers(df, pairs)
 
 
 # -------------------------------------------------------------------- simhash
@@ -320,19 +314,14 @@ def hamming_bits(a, b, num_bits: int = SIMHASH_BITS):
     )
 
 
-def simhash_dup_edges(
-    df: DataFrame,
-    id_col: str = "id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-) -> DataFrame:
+def simhash_dup_edges(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Verified duplicate-graph star edges for simhash (same O(Σ bucket)
     rationale as :func:`minhash_dup_edges`): block on 4 x 15-bit bands
     (any pair with Hamming ≤ 3 over 60 bits agrees exactly on ≥ 1 of 4
     bands), link members to the bucket-min-id hub, keep links with
     Hamming ≤ max."""
     sh = (
-        spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t")), "id")
+        _id_text(df)
         .select("id", simhash_arrow(F.col("t")).alias("sh"))
         .transform(materialize)
     )
@@ -353,12 +342,7 @@ def simhash_dup_edges(
     )
 
 
-def simhash_dedup(
-    df: DataFrame,
-    id_col: str = "id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-) -> DataFrame:
+def simhash_dedup(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """df minus simhash near-duplicates (min numeric id kept per
     component): CC over verified star edges — O(Σ bucket), with the
     same RECALL CAVEAT as :func:`minhash_dup_edges`: a member-member
@@ -366,14 +350,12 @@ def simhash_dedup(
     verification is silently missed (each of the 4 bands contributes an
     independent hub, so misses decay with band count but are not
     zero)."""
-    return _drop_cc_losers(df, simhash_dup_edges(df, id_col, text_col, max_hamming), id_col)
+    return _drop_cc_losers(df, simhash_dup_edges(df, max_hamming))
 
 
 # ------------------------------------------------------------- ngram jaccard
 def ngram_jaccard_pairs(
     df: DataFrame,
-    id_col: str = "id",
-    text_col: str = "text",
     n: int = 3,
     threshold: float = 0.8,
     max_bucket: int = 1000,
@@ -428,19 +410,16 @@ def ngram_jaccard_pairs(
     # the bitmap encoding or the fallback's hashed arrays + sizes.
     # spread (r7): the shingle regex otherwise runs on the scan's
     # partitioning — one task for a single-row-group parquet
-    gsets = materialize(
-        spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t")), "id")
-        .select("id", char_shingles(F.col("t"), n).alias("gs"))
-    )
+    gsets = materialize(_id_text(df).select("id", char_shingles(F.col("t"), n).alias("gs")))
+    # the shingle arrays as the band stage's (doc_id, text) input
+    shingled = gsets.select(F.col("id").alias("doc_id"), F.col("gs").alias("text"))
     ex = gsets.select("id", F.explode("gs").alias("gram"))
     udict = ex.select("gram").distinct()
     u = udict.count()  # driver scalar: picks the verify path at plan time
     if 0 < u <= max_universe:
-        return _ngram_bitmap_pairs(
-            gsets, ex, udict, u, threshold, max_bucket
-        )
+        return _ngram_bitmap_pairs(shingled, ex, udict, u, threshold, max_bucket)
     cand = minhash_candidate_pairs(
-        gsets, "id", "gs",
+        shingled,
         threshold=threshold * 0.78, max_bucket=max_bucket, shingle_words=False,
         tokens_ready=True,
     )
@@ -491,7 +470,7 @@ def ngram_jaccard_pairs(
 
 
 def _ngram_bitmap_pairs(
-    gsets: DataFrame,
+    shingled: DataFrame,
     ex: DataFrame,
     udict: DataFrame,
     u: int,
@@ -500,7 +479,8 @@ def _ngram_bitmap_pairs(
 ) -> DataFrame:
     """Small-universe exact verify (see :func:`ngram_jaccard_pairs`).
 
-    ``ex`` is the exploded (id, gram) stream, ``udict`` its distinct
+    ``shingled`` holds the shingle arrays as ``(doc_id, text)`` band
+    input, ``ex`` the exploded (id, gram) stream, ``udict`` its distinct
     grams, ``u`` their count.  Builds (id, sz, w0..w{W-1}) bitmaps and
     popcount-verifies every raw band pair; duplicate band pairs are
     verified redundantly and deduplicated only after the threshold
@@ -531,12 +511,11 @@ def _ngram_bitmap_pairs(
         )
     )
     _, raw = _lsh_raw_band_pairs(
-        gsets, "id", "gs", threshold * 0.78, max_bucket, False, "xxhash64",
-        tokens_ready=True,
+        shingled, threshold * 0.78, max_bucket, False, "xxhash64", tokens_ready=True
     )
     bm_side = (
         (lambda d: F.broadcast(d))
-        if bm.count() * (2 + n_words) * 8 <= _broadcast_budget(gsets.sparkSession)
+        if bm.count() * (2 + n_words) * 8 <= _broadcast_budget(shingled.sparkSession)
         else (lambda d: d)
     )
     ba = bm_side(bm.select(

@@ -42,21 +42,16 @@ def _glob_body_regex(p: Column) -> Column:
     return r
 
 
-def compile_gitignore(
-    patterns: DataFrame,
-    repo_col: str = "repo",
-    idx_col: str = "idx",
-    pattern_col: str = "pattern",
-) -> DataFrame:
+def compile_gitignore(patterns: DataFrame) -> DataFrame:
     """(repo, idx, pattern) → (repo, idx, negated, rx) rules.
 
     Comments and blank lines are dropped; ``!`` strips to a negated
     rule; anchoring and directory suffixes follow gitignore semantics.
     """
-    p = F.trim(F.col(pattern_col))
+    p = F.trim(F.col("pattern"))
     base = patterns.filter((p != "") & ~p.startswith("#")).select(
-        F.col(repo_col).alias("repo"),
-        F.col(idx_col).alias("idx"),
+        "repo",
+        "idx",
         p.startswith("!").alias("negated"),
         F.when(p.startswith("!"), F.substring(p, 2, 1 << 20)).otherwise(p).alias("_p"),
     )
@@ -73,20 +68,16 @@ def compile_gitignore(
     return base.select("repo", "idx", "negated", rx.alias("rx"))
 
 
-def apply_gitignore(
-    df: DataFrame,
-    patterns: DataFrame,
-    repo_col: str = "repo",
-    path_col: str = "path",
-) -> DataFrame:
-    """Drop rows of ``df`` ignored by their repo's gitignore patterns.
+def apply_gitignore(df: DataFrame, patterns: DataFrame) -> DataFrame:
+    """Drop rows of ``df`` (with ``repo`` and ``path`` columns) ignored
+    by their repo's gitignore patterns.
 
     Last match wins: a path is dropped iff the highest-idx matching rule
     is non-negated.  One repo-keyed join + one aggregate; the rules
     always broadcast (per-repo pattern lists are tiny).
     """
     rules = F.broadcast(compile_gitignore(patterns))
-    keys = df.select(F.col(repo_col).alias("repo"), F.col(path_col).alias("path")).distinct()
+    keys = df.select("repo", "path").distinct()
     matches = keys.join(rules, "repo").filter(F.expr("path rlike rx"))
     ignored = (
         matches.groupBy("repo", "path")
@@ -96,7 +87,7 @@ def apply_gitignore(
     )
     return df.join(
         ignored,
-        on=[df[repo_col] == F.col("_ig_repo"), df[path_col] == F.col("_ig_path")],
+        on=[df["repo"] == F.col("_ig_repo"), df["path"] == F.col("_ig_path")],
         how="left_anti",
     )
 

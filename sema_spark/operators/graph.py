@@ -11,6 +11,8 @@ the KG pipeline's output becomes an analyzable graph).
   floats from iteration order (sums commute up to fp rounding, which is
   why the test oracle is a numpy power iteration, not DuckDB).
 
+Every operator reads the fixed edge columns ``(src, dst)``.
+
 At 100 TB: ranks are (node, double) rows — orders of magnitude smaller
 than the edge table; the edge table shuffles once per iteration on its
 join key, which bucketing on src would eliminate entirely on a real
@@ -25,10 +27,10 @@ from pyspark.sql import functions as F
 from sema_spark.plans.materialize import materialize
 
 
-def degree_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def degree_stats(edges: DataFrame) -> DataFrame:
     """(id, out_degree, in_degree) for every node appearing in edges."""
-    out = edges.groupBy(F.col(src).alias("id")).agg(F.count("*").alias("out_degree"))
-    inn = edges.groupBy(F.col(dst).alias("id")).agg(F.count("*").alias("in_degree"))
+    out = edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("out_degree"))
+    inn = edges.groupBy(F.col("dst").alias("id")).agg(F.count("*").alias("in_degree"))
     return (
         out.join(inn, "id", "full_outer")
         .select(
@@ -43,15 +45,13 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 10,
     damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """(id, rank) after ``iterations`` of damped power iteration.
 
     Parallel edges count once (the edge set is distinct-ed); dangling
     nodes redistribute their mass uniformly, so ranks sum to 1 every
     iteration (asserted in tests against a numpy reference)."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
+    e = edges.select("src", "dst").distinct()
     nodes = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
@@ -92,7 +92,7 @@ def pagerank(
     return ranks
 
 
-def triangles(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def triangles(edges: DataFrame) -> DataFrame:
     """Enumerate every triangle ``(a < b < c)`` in the undirected simple
     graph induced by ``edges`` (direction, parallel edges, and self-loops
     are normalized away first).
@@ -117,8 +117,8 @@ def triangles(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame
     # only added checkpoint overhead (2.6s -> 3.1s at sf1.0).
     e = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
+            F.least(F.col("src"), F.col("dst")).alias("a"),
+            F.greatest(F.col("src"), F.col("dst")).alias("b"),
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
@@ -137,8 +137,6 @@ def k_hop(
     edges: DataFrame,
     seeds: DataFrame,
     k: int,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Min-distance BFS frontier: every node reachable from ``seeds``
     (a DataFrame with column ``node``) in at most ``k`` directed hops,
@@ -157,18 +155,15 @@ def k_hop(
     # common subtrees — without this every hop and the final union
     # re-derive the full upstream plan (same discipline as pagerank's
     # materialized links)
-    edges = materialize(edges.select(src, dst))
+    edges = materialize(edges.select("src", "dst"))
     seen = materialize(
         seeds.select(F.col("node"), F.lit(0).cast("bigint").alias("dist"))
     )
     frontier = seen
     for hop in range(1, k + 1):
         nxt = (
-            edges.join(
-                frontier.withColumnRenamed("node", src).select(src),
-                src,
-            )
-            .select(F.col(dst).alias("node"))
+            edges.join(frontier.select(F.col("node").alias("src")), "src")
+            .select(F.col("dst").alias("node"))
             .distinct()
             # settled nodes leave the frontier: re-expanding a node
             # already reached at a smaller distance would re-join its
@@ -185,8 +180,6 @@ def k_hop(
 def label_propagation(
     edges: DataFrame,
     iterations: int = 5,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Synchronous label-propagation communities over the undirected
     simple graph induced by ``edges``: every node starts labeled with its
@@ -211,8 +204,8 @@ def label_propagation(
     """
     sym = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
+            F.least(F.col("src"), F.col("dst")).alias("a"),
+            F.greatest(F.col("src"), F.col("dst")).alias("b"),
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
@@ -244,8 +237,6 @@ def label_propagation(
 def k_core(
     edges: DataFrame,
     k: int,
-    src: str = "src",
-    dst: str = "dst",
     max_rounds: int = 100,
 ) -> DataFrame:
     """Nodes of the k-core (maximal subgraph where every vertex has
@@ -264,8 +255,8 @@ def k_core(
     """
     sym = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
+            F.least(F.col("src"), F.col("dst")).alias("a"),
+            F.greatest(F.col("src"), F.col("dst")).alias("b"),
         )
         .where(F.col("a") != F.col("b"))
         .distinct()

@@ -298,10 +298,9 @@ def bm25_search(
     docs: DataFrame,
     query: str | ParsedQuery,
     k: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
-    """Top-k (id, score) for a parsed query over a document table.
+    """Top-k (doc_id, score) for a parsed query over a ``(doc_id, text)``
+    document table.
 
     Value-parity notes (the DuckDB oracle compares unrounded-fold
     results at round-4): terms fold in LEXICOGRAPHIC order — fp
@@ -326,19 +325,19 @@ def bm25_search(
     # per-doc frame" note, now done without a construction-time job —
     # tests/test_plans.py forbids driver actions at build time).
     scoped_fields = {f for f, _ in pq.scoped} | {f for f, _ in pq.scoped_not}
-    keep_text = text_col in scoped_fields  # a text-scoped filter needs the raw column
-    # every projected column gets an INTERNAL name, so a scoped user
-    # column called doc_id, _text or _toks cannot collide with the
+    keep_text = "text" in scoped_fields  # a text-scoped filter needs the raw column
+    # every other projected column gets an INTERNAL name, so a scoped
+    # user column called _text or _toks cannot collide with the
     # projection's own columns; _field_ref resolves a field to its alias
     scoped = {
         c: f"_s{i}"
-        for i, c in enumerate(sorted((scoped_fields & set(docs.columns)) - {id_col, text_col}))
+        for i, c in enumerate(sorted((scoped_fields & set(docs.columns)) - {"doc_id", "text"}))
     }
     slim = spread(
         docs.select(
-            F.col(id_col).alias("doc_id"),
+            "doc_id",
             *[F.col(c).alias(a) for c, a in scoped.items()],
-            F.col(text_col).alias("_text"),
+            F.col("text").alias("_text"),
         )
     )
     tokenized = slim.select(
@@ -347,7 +346,7 @@ def bm25_search(
         *(["_text"] if keep_text else []),
         _tokens("_text").alias("_toks"),
     )
-    internal = {**scoped, id_col: "doc_id", text_col: "_text"}
+    internal = {**scoped, "doc_id": "doc_id", "text": "_text"}
 
     def _field_ref(field: str):
         return F.col(internal[field])

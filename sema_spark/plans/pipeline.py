@@ -344,28 +344,22 @@ def semantic_search(
     chunks_with_embeddings: DataFrame,
     query: str,
     k: int = 50,
-    norm_col: str | None = None,
 ) -> DataFrame:
     """Reference entry point B (src/tui/engine.rs:102-154): encode the
     query driver-side, cosine against the embedding column, top-k, then
     the A1 per-file dedup+count window.  Unlike the reference we keep the
     real cosine score (it hardcodes 1.0, src/storage/mod.rs:123).
 
-    ``norm_col``: name of a column holding the PRECOMPUTED chunk L2
-    norm (written by the stored index at build time with the identical
-    ``l2_norm`` expression, so the stored float64 is bit-equal to an
-    in-query recomputation).  With it, scoring runs ONE interpreted
-    O(dim) aggregate per chunk (the dot) instead of three — the chunk
-    norm comes from the column and the query norm is one driver-side
-    scalar whose sequential float64 arithmetic replicates the HOF
-    exactly.  Scores are bit-identical either way; the fast path is
-    measured ~2x on the stored-index query."""
-    import math
-
+    Scoring is one Arrow cosine fold (:func:`cosine_literal_fold`,
+    bit-identical to the ``cosine`` HOF): the dot and the chunk norm
+    fold per row, the query norm once driver-side.  The stored indexes
+    score the same way and keep no per-chunk norm; the encoder's
+    vectors are L2-normalized, so such a column would hold only 1.0 or
+    0.0, and reading it measured slower than folding the norm."""
     from pyspark.sql import Window
 
     from sema_spark.functions.encoder import encode_query
-    from sema_spark.functions.vector import cosine_literal_fold, dot_literal_fold
+    from sema_spark.functions.vector import cosine_literal_fold
 
     if len(query.strip()) <= 2:
         # F5 min-query-length guard (reference clears results instead of
@@ -381,27 +375,9 @@ def semantic_search(
             + [StructField("score", DoubleType()), StructField("matches_in_file", LongType())]
         )
         return local_frame(spark, [], empty_schema)
-    if norm_col is not None:
-        # replicate the HOF's sequential float64 query-norm exactly:
-        # acc = 0.0; acc += q[i]*q[i] in index order, then one sqrt —
-        # the same additions the aggregate lambda performs.  The dot is
-        # the Arrow fold UDF (r7): BIT-IDENTICAL to the zip_with/
-        # aggregate HOF (tests/test_vector_fold.py) but vectorized —
-        # the interpreted O(dim) fold per chunk was the dominant cost
-        # of the stored-index query.
-        acc = 0.0
-        for v in encode_query(query):
-            acc += float(v) * float(v)
-        qnorm = math.sqrt(acc)
-        scored = chunks_with_embeddings.withColumn(
-            "score",
-            dot_literal_fold(F.col("embedding"), encode_query(query))
-            / F.nullif(F.col(norm_col) * F.lit(qnorm), F.lit(0.0)),
-        )
-    else:
-        scored = chunks_with_embeddings.withColumn(
-            "score", cosine_literal_fold(F.col("embedding"), encode_query(query))
-        )
+    scored = chunks_with_embeddings.withColumn(
+        "score", cosine_literal_fold(F.col("embedding"), encode_query(query))
+    )
     # the cut needs a TOTAL order: bit-identical scores (duplicate
     # chunks) straddling rank k would otherwise pick partition-order
     # rows — nondeterministic run-to-run and divergent from any oracle

@@ -47,14 +47,13 @@ CHUNKS = StructType(
 )
 
 # Stored semantic-index rows (sources/ann_index): a chunk, its file's
-# content_sha (the per-file checkpoint key), its embedding and the
-# precomputed embedding L2 norm — chunk_and_embed's column order.
+# content_sha (the per-file checkpoint key) and its embedding —
+# chunk_and_embed's column order.
 STORED_CHUNKS = StructType(
     CHUNKS.fields
     + [
         StructField("content_sha", StringType(), True),
         StructField("embedding", ArrayType(FloatType()), True),
-        StructField("emb_norm", DoubleType(), True),
     ]
 )
 

@@ -350,8 +350,9 @@ def compact_lsh_index(spark: SparkSession, index_dir: str) -> None:
 # content, so paying it per query is wrong at any scale.  The stored
 # form pays chunk+encode once and makes every later search a scan of
 # precomputed vectors; results are identical by construction (float32
-# embeddings round-trip parquet bit-exactly), so the stored entry point
-# grades against the same oracle as the in-plan one.
+# embeddings round-trip parquet bit-exactly, and the query scores them
+# with the same cosine fold, so no per-chunk norm is stored), so the
+# stored entry point grades against the same oracle as the in-plan one.
 #
 # The store is ONE incremental stage of sources/checkpoint under
 # ``index_dir``: chunk rows are its data and its per-file checkpoint log
@@ -373,15 +374,9 @@ def _prep_docs(docs: DataFrame) -> DataFrame:
 
 
 def _chunk_rows(docs_with_sha: DataFrame) -> DataFrame:
-    # l2_norm_fold: bit-identical to the l2_norm HOF
-    # (tests/test_vector_fold.py) — indexes written by either path hold
-    # the same bytes, so old and new indexes stay interchangeable
-    from sema_spark.functions.vector import l2_norm_fold
     from sema_spark.operators.chunker import chunk_and_embed
 
-    return chunk_and_embed(docs_with_sha, carry=("content_sha",)).withColumn(
-        "emb_norm", l2_norm_fold(F.col("embedding"))
-    )
+    return chunk_and_embed(docs_with_sha, carry=("content_sha",))
 
 
 def _require_index(index_dir: str) -> None:
@@ -392,19 +387,19 @@ def _require_index(index_dir: str) -> None:
 def live_chunks(spark: SparkSession, index_dir: str) -> DataFrame:
     """The CURRENT chunk set: the rows the checkpoint log references.
     Superseded runs, removed files and crash orphans drop out without a
-    physical delete; :func:`compact_semantic_index` reclaims them."""
+    physical delete; :func:`compact_semantic_index` reclaims them.  The
+    read takes the declared :data:`STORED_CHUNKS` columns, so the
+    ``emb_norm`` column of an index built by an older layout is not
+    read."""
     _require_index(index_dir)
     return ck.read_stage_output(spark, index_dir, _STAGE, STORED_CHUNKS)
 
 
 def build_semantic_index(docs: DataFrame, index_dir: str) -> None:
     """Chunk + embed ``docs`` (repo, path, content) once and persist the
-    chunk-embedding table, with each chunk's L2 norm PRECOMPUTED (the
-    identical ``l2_norm`` expression a query would run, so the stored
-    float64 is bit-equal to in-query recomputation — queries then pay
-    one interpreted aggregate per chunk instead of three).  Each chunk
-    carries its file's ``content_sha``, the checkpoint key; the cleared
-    stage takes the whole key set as one forced increment."""
+    chunk-embedding table.  Each chunk carries its file's
+    ``content_sha``, the checkpoint key; the cleared stage takes the
+    whole key set as one forced increment."""
     import shutil
 
     d = _prep_docs(docs)
@@ -457,8 +452,7 @@ def semantic_search_stored(spark: SparkSession, index_dir: str, query: str, k: i
     never served)."""
     from sema_spark.plans.pipeline import semantic_search
 
-    out = semantic_search(spark, live_chunks(spark, index_dir), query, k=k, norm_col="emb_norm")
-    return out.drop("emb_norm", "content_sha")
+    return semantic_search(spark, live_chunks(spark, index_dir), query, k=k).drop("content_sha")
 
 
 def semantic_index_ready(index_dir: str) -> bool:
@@ -490,7 +484,6 @@ def build_semantic_ann_index(
     """Chunk + embed once, train the quantizer on the chunk embeddings,
     and store the chunk table partitioned by its cluster assignment
     (plus the centroid table for driver-side probe selection)."""
-    from sema_spark.functions.vector import l2_norm
     from sema_spark.operators.chunker import chunk_and_embed
     from sema_spark.operators.clustering import kmeans_fit
     from sema_spark.plans.materialize import materialize
@@ -498,9 +491,7 @@ def build_semantic_ann_index(
     # the quantizer trains on (vec_id, embedding); a chunk's vec_id is
     # its hashed (repo, path, chunk_idx) key, dropped before the write
     chunks = materialize(
-        chunk_and_embed(docs)
-        .withColumn("emb_norm", l2_norm(F.col("embedding")))
-        .withColumn("vec_id", F.xxhash64("repo", "path", "chunk_idx"))
+        chunk_and_embed(docs).withColumn("vec_id", F.xxhash64("repo", "path", "chunk_idx"))
     )
     cents, _ = kmeans_fit(chunks, n_clusters, iterations)
     _write_centroids(index_dir, cents)
@@ -526,7 +517,7 @@ def semantic_search_ann(
     query driver-side, pick the ``probes`` nearest cells against the
     collected centroids (squared-L2, a scalar cost), scan ONLY those
     cells' chunk files, then the exact scoring + per-file window of
-    :func:`plans.pipeline.semantic_search` (stored-norm fast path).
+    :func:`plans.pipeline.semantic_search`.
     ``probes == n_clusters`` reads everything and equals the exact
     entry point bit-for-bit."""
     from sema_spark.functions.encoder import encode_query
@@ -536,8 +527,7 @@ def semantic_search_ann(
     cand = spark.read.parquet(f"{index_dir}/chunks").where(
         F.col("cluster").isin(probe)
     )
-    out = semantic_search(spark, cand, query, k=k, norm_col="emb_norm")
-    return out.drop("emb_norm", "cluster")
+    return semantic_search(spark, cand, query, k=k).drop("cluster")
 
 
 def semantic_ann_ready(index_dir: str) -> bool:

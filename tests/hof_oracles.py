@@ -1,19 +1,50 @@
-"""Interpreted higher-order-function references for the dedup family.
+"""Per-row references for the batched production forms.
 
-Built only from Spark built-ins (``transform``/``aggregate``/``zip_with``
-lambdas, no Python workers), these are independent implementations of
-the arithmetic the Arrow-batched production forms perform.  The parity
-tests assert the production forms value-identical to them; the DuckDB
-oracles in ``__spark_entry__.oracle_sql`` replicate the same arithmetic.
+* The dedup family: interpreted higher-order-function references, built
+  only from Spark built-ins (``transform``/``aggregate``/``zip_with``
+  lambdas, no Python workers).
+* The encoder: :func:`encode_numpy`, the one-string numpy encoder that
+  ``functions/encoder.encode_batch_numpy`` vectorizes across rows.
+
+These are independent implementations of the arithmetic the production
+forms perform.  The parity tests assert the production forms
+value-identical to them; the DuckDB oracles in
+``__spark_entry__.oracle_sql`` replicate the same arithmetic.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from sema_spark.functions.encoder import _MULT, MAX_TOKENS
 from sema_spark.functions.minhash import NUM_PERM, _H_SPACE, _P, _base_hash, _coefficients, tokenize
 from sema_spark.operators.dedup import SIMHASH_BITS
+from sema_spark.schemas import EMBEDDING_DIM
+
+
+def encode_numpy(text: str | None) -> np.ndarray:
+    """Encode one string: UTF-8 byte 3-grams (truncated at
+    ``MAX_TOKENS``), a signed hashed basis vector per gram, mean pool,
+    L2 normalize."""
+    out = np.zeros(EMBEDDING_DIM, dtype=np.float64)
+    if not text:
+        return out.astype(np.float32)
+    b = np.frombuffer(text.encode("utf-8"), dtype=np.uint8).astype(np.int64)
+    if len(b) < 3:
+        return out.astype(np.float32)
+    codes = (b[:-2] << 16) + (b[1:-1] << 8) + b[2:]
+    codes = codes[:MAX_TOKENS]  # truncation parity
+    h = (codes * _MULT) & 0xFFFFFFFF
+    idx = h % EMBEDDING_DIM
+    sign = np.where((h >> 16) & 1, 1.0, -1.0)
+    np.add.at(out, idx, sign)
+    out /= len(codes)  # mean pool
+    n = np.linalg.norm(out)
+    if n > 0:
+        out /= n  # L2 normalize
+    return out.astype(np.float32)
 
 
 def minhash_signature(tokens: Column, num_perm: int = NUM_PERM, base: str = "xxhash64") -> Column:

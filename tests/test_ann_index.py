@@ -122,7 +122,7 @@ def test_probe_scan_is_partition_pruned(spark, tmp_path):
 def test_incremental_matches_python_oracle(spark, tmp_path):
     """Train-on-half → frozen-assign-all → probe: the Spark stored path
     and the independent python replica must agree value-exactly."""
-    from sema_spark.operators.clustering import ivf_incremental_topk_python
+    from sema_spark.oracles import ivf_incremental_topk_python
 
     ids, vecs = _blob_data(n=66, dim=6, seed=13)
     emb = _df(spark, ids, vecs)
@@ -501,10 +501,12 @@ def test_noop_append_reads_log_and_writes_nothing(spark, tmp_path, monkeypatch):
 
 
 def test_older_layout_index_dirs_keep_working(spark, tmp_path):
-    """An index dir written by the older layout also holds an ``ids/``
-    copy of the stored ids and may hold a leftover ``.append-inflight``
-    marker.  Both are ignored: answers are unchanged, a no-op append
-    appends nothing and a real append adds exactly the new ids."""
+    """An IVF or LSH index dir written by the older layout also holds an
+    ``ids/`` copy of the stored ids and may hold a leftover
+    ``.append-inflight`` marker; an older stored semantic index holds an
+    extra ``emb_norm`` chunk column.  All are ignored: answers are
+    unchanged, a no-op append appends nothing and a real append adds
+    exactly the new ids (files)."""
     from sema_spark.sources.ann_index import (
         build_lsh_stored_index,
         lsh_index_append,
@@ -534,6 +536,38 @@ def test_older_layout_index_dirs_keep_working(spark, tmp_path):
         assert append(_df(spark, ids, vecs), idx) == 20
         stored = sorted(r.vec_id for r in spark.read.parquet(f"{idx}/vectors").collect())
         assert stored == ids
+
+    # stored semantic index: the older layout's chunk rows also carry a
+    # precomputed ``emb_norm`` double column, which reads ignore
+    import glob
+    import shutil
+
+    from sema_spark.functions.vector import l2_norm
+    from sema_spark.sources.ann_index import (
+        build_semantic_index,
+        live_chunks,
+        semantic_index_append,
+        semantic_search_stored,
+    )
+
+    docs = _sem_docs(spark)
+    built = docs.where(F.col("path") != "f7.py")
+    fresh, idx = str(tmp_path / "sem_fresh"), str(tmp_path / "sem_old")
+    build_semantic_index(built, fresh)
+    build_semantic_index(built, idx)
+    (run,) = glob.glob(f"{idx}/chunks/data/run_id=*")
+    spark.read.parquet(run).withColumn("emb_norm", l2_norm("embedding")).write.parquet(f"{run}.old")
+    shutil.rmtree(run)
+    shutil.move(f"{run}.old", run)
+    assert "emb_norm" in spark.read.parquet(run).columns
+
+    q = "spark shuffle join"
+    got, want = (semantic_search_stored(spark, d, q, k=10) for d in (idx, fresh))
+    assert got.columns == want.columns
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect())) and want.count()
+    assert semantic_index_append(built, idx) == 0
+    assert semantic_index_append(docs, idx) == 1
+    assert live_chunks(spark, idx).where(F.col("path") == "f7.py").count() > 0
 
 
 def test_compaction_refuses_while_writer_active(spark, tmp_path):

@@ -7,7 +7,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from sema_spark.operators.clustering import kmeans, kmeans_python
+from sema_spark.operators.clustering import kmeans
+from sema_spark.oracles import kmeans_python
 
 
 def _df(spark, ids, vecs, parts=1):
@@ -60,7 +61,8 @@ def test_kmeans_on_real_embeddings(spark):
 
 
 def test_ivf_kmeans_topk_matches_python(spark):
-    from sema_spark.operators.clustering import ivf_kmeans_topk, ivf_kmeans_topk_python
+    from sema_spark.operators.clustering import ivf_kmeans_topk
+    from sema_spark.oracles import ivf_kmeans_topk_python
 
     rng = np.random.default_rng(7)
     blobs = [rng.normal(c, 0.4, size=(20, 6)) for c in (-4.0, 0.0, 4.0)]

@@ -162,8 +162,7 @@ def test_sha_bucket_matches_hashlib(spark):
 def test_stratified_sample_exact_membership(spark):
     rows = [(i, "en" if i % 2 == 0 else "xx") for i in range(200)]
     df = _df(spark, rows, "doc_id long, lang string")
-    kept = {r["doc_id"] for r in stratified_sample(
-        df, {"en": 0.3}, strata_col="lang", key_col="doc_id").collect()}
+    kept = {r["doc_id"] for r in stratified_sample(df, {"en": 0.3}).collect()}
     expected = {i for i, lang in rows if lang == "en" and _py_bucket(str(i)) < 3000}
     assert kept == expected
     assert all(i % 2 == 0 for i in kept)  # absent strata dropped
@@ -173,10 +172,8 @@ def test_stratified_sample_is_partitioning_invariant(spark):
     rows = [(i, "en") for i in range(100)]
     df1 = _df(spark, rows, "doc_id long, lang string").repartition(1)
     df8 = _df(spark, rows, "doc_id long, lang string").repartition(8)
-    k1 = sorted(r["doc_id"] for r in stratified_sample(
-        df1, {"en": 0.5}, strata_col="lang", key_col="doc_id").collect())
-    k8 = sorted(r["doc_id"] for r in stratified_sample(
-        df8, {"en": 0.5}, strata_col="lang", key_col="doc_id").collect())
+    k1 = sorted(r["doc_id"] for r in stratified_sample(df1, {"en": 0.5}).collect())
+    k8 = sorted(r["doc_id"] for r in stratified_sample(df8, {"en": 0.5}).collect())
     assert k1 == k8 and 20 < len(k1) < 80
 
 
@@ -244,7 +241,7 @@ def test_weighted_interleave_proportions(spark):
 
     rows = [(i, "a" if i < 40 else "b") for i in range(80)]  # 40 of each
     df = _df(spark, rows, "doc_id long, source string")
-    out = weighted_interleave(df, {"a": 1.0, "b": 0.5}, source_col="source", id_col="doc_id")
+    out = weighted_interleave(df, {"a": 1.0, "b": 0.5})
     got = sorted((r["vt"], r["source"], r["doc_id"]) for r in out.collect())
     # in any prefix of the vt order, 'a' appears ~2x as often as 'b'
     prefix = [s for _, s, _ in got[:30]]
@@ -262,10 +259,8 @@ def test_weighted_interleave_drops_unweighted_and_is_deterministic(spark):
     rows = [(i, ["a", "b", "c"][i % 3]) for i in range(60)]
     df1 = _df(spark, rows, "doc_id long, source string").repartition(1)
     df7 = _df(spark, rows, "doc_id long, source string").repartition(7)
-    o1 = sorted(tuple(r) for r in weighted_interleave(
-        df1, {"a": 1.0, "b": 0.5}, source_col="source", id_col="doc_id").collect())
-    o7 = sorted(tuple(r) for r in weighted_interleave(
-        df7, {"a": 1.0, "b": 0.5}, source_col="source", id_col="doc_id").collect())
+    o1 = sorted(tuple(r) for r in weighted_interleave(df1, {"a": 1.0, "b": 0.5}).collect())
+    o7 = sorted(tuple(r) for r in weighted_interleave(df7, {"a": 1.0, "b": 0.5}).collect())
     assert o1 == o7                       # partitioning invariant
     assert all(s != "c" for _, s, _, _ in o1)  # unweighted source dropped
     assert len(o1) == 40

@@ -25,15 +25,15 @@ def docs(spark):
         (4, "completely different content about spark dataframes and shuffles at scale"),
         (5, "another unrelated document mentioning catalyst optimizer and codegen"),
     ]
-    return spark.createDataFrame(rows, "id long, text string")
+    return spark.createDataFrame(rows, "doc_id long, text string")
 
 
 def test_exact_dedup(spark, docs):
     kept = exact_dedup(docs)
-    ids = {r.id for r in kept.select("id").collect()}
+    ids = {r.doc_id for r in kept.select("doc_id").collect()}
     assert 0 in ids and 1 not in ids and 2 not in ids
     assert {3, 4, 5} <= ids
-    sizes = {r.id: r.group_size for r in kept.select("id", "group_size").collect()}
+    sizes = {r.doc_id: r.group_size for r in kept.select("doc_id", "group_size").collect()}
     assert sizes[0] == 3 and sizes[3] == 1
 
 
@@ -41,7 +41,7 @@ def test_minhash_candidates_and_dedup(spark, docs):
     pairs = {(r.a, r.b) for r in minhash_candidate_pairs(docs, threshold=0.5).collect()}
     assert (0, 1) in pairs and (0, 3) in pairs
     assert not any({a, b} == {0, 4} or {a, b} == {4, 5} for a, b in pairs)
-    kept = {r.id for r in minhash_dedup(docs, threshold=0.5).select("id").collect()}
+    kept = {r.doc_id for r in minhash_dedup(docs, threshold=0.5).select("doc_id").collect()}
     assert kept == {0, 4, 5}  # 1,2,3 all collapse into 0's component
 
 
@@ -56,15 +56,15 @@ def test_simhash_blocking(spark):
         (2, " ".join(words + ["suffixword"])),  # near dup (measured ham=1)
         (3, " ".join(f"other{i}" for i in range(150))),  # unrelated
     ]
-    docs = spark.createDataFrame(rows, "id long, text string")
-    sh = {r.id: r.s for r in docs.select("id", simhash(F.col("text")).alias("s")).collect()}
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    sh = {r.doc_id: r.s for r in docs.select("doc_id", simhash(F.col("text")).alias("s")).collect()}
     assert sh[0] == sh[1]
     # star edges: 0 is the min-id hub of every bucket 1 and 2 share with it
     pairs = {(r.a, r.b): r.hamming for r in simhash_dup_edges(docs, max_hamming=3).collect()}
     assert pairs[(0, 1)] == 0
     assert (0, 2) in pairs and pairs[(0, 2)] <= 3
     assert not any(3 in p for p in pairs)
-    kept = {r.id for r in simhash_dedup(docs, max_hamming=3).select("id").collect()}
+    kept = {r.doc_id for r in simhash_dedup(docs, max_hamming=3).select("doc_id").collect()}
     assert kept == {0, 3}
 
 
@@ -107,13 +107,13 @@ def test_dedup_negative_ids_keep_numeric_min(spark):
     """Sign-safe id encoding: among negative ids the NUMERIC min
     survives (raw zero-padding would invert the order of negatives)."""
     rows = [(-13, BASE), (-12, BASE), (7, BASE), (-20, "totally unrelated words here and more")]
-    docs = spark.createDataFrame(rows, "id long, text string")
-    kept = {r.id for r in minhash_dedup(docs, threshold=0.5).select("id").collect()}
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    kept = {r.doc_id for r in minhash_dedup(docs, threshold=0.5).select("doc_id").collect()}
     assert kept == {-13, -20}
 
 
 def test_minhash_dedup_exact_pairs_mode(spark, docs):
-    kept = {r.id for r in minhash_dedup(docs, threshold=0.5, exact_pairs=True).select("id").collect()}
+    kept = {r.doc_id for r in minhash_dedup(docs, threshold=0.5, exact_pairs=True).select("doc_id").collect()}
     assert kept == {0, 4, 5}
 
 
@@ -140,7 +140,7 @@ def test_ngram_two_paths_agree(spark, docs):
             (1, alphabet + alphabet[::-1]),          # exact dup
             (2, alphabet),                           # subset, J < 0.8
         ],
-        "id long, text string",
+        "doc_id long, text string",
     )
     got = {(r.a, r.b): r.jaccard for r in ngram_jaccard_pairs(long_docs, threshold=0.8).collect()}
     assert got == {(0, 1): 1.0}
@@ -206,13 +206,13 @@ def test_minhash_est_broadcast_equals_join_path(spark):
     docs = spark.createDataFrame(
         [(i, "the quick brown fox jumps over the lazy dog " + ("x" * (i % 4)))
          for i in range(60)],
-        "id long, text string",
+        "doc_id long, text string",
     )
-    fast = {(r.a, r.b, r.est_jaccard) for r in minhash_candidate_pairs(docs, "id", "text").collect()}
+    fast = {(r.a, r.b, r.est_jaccard) for r in minhash_candidate_pairs(docs).collect()}
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
-        slow = {(r.a, r.b, r.est_jaccard) for r in minhash_candidate_pairs(docs, "id", "text").collect()}
+        slow = {(r.a, r.b, r.est_jaccard) for r in minhash_candidate_pairs(docs).collect()}
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert fast == slow and len(fast) > 0

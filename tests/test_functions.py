@@ -1,9 +1,9 @@
 import numpy as np
 import pytest
-from hof_oracles import estimated_jaccard, minhash_signature
+from hof_oracles import encode_numpy, estimated_jaccard, minhash_signature
 from pyspark.sql import functions as F
 
-from sema_spark.functions.encoder import EMBEDDING_DIM, encode_numpy, encode_text
+from sema_spark.functions.encoder import EMBEDDING_DIM, encode_text
 from sema_spark.functions.minhash import char_shingles, explode_bands, tokenize, with_minhash
 from sema_spark.functions.vector import cosine, dot, l2_norm
 

@@ -17,8 +17,8 @@ fixture corpus.
 import duckdb
 import numpy as np
 import pytest
+from hof_oracles import encode_numpy
 
-from sema_spark.functions.encoder import encode_numpy
 from sema_spark.operators.chunker import chunk_python
 
 ADVERSARIAL = {
@@ -85,8 +85,6 @@ def test_semantic_search_oracle_matches_python(oracles):
     import math
 
     import numpy as np
-
-    from sema_spark.functions.encoder import encode_numpy
 
     docs = {2: ADVERSARIAL[2], 4: ADVERSARIAL[4], 5: ADVERSARIAL[5], 8: ADVERSARIAL[8]}
     c = duckdb.connect()

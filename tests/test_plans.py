@@ -165,7 +165,7 @@ def test_ngram_bitmap_path_plan(spark):
     from sema_spark.operators.dedup import ngram_jaccard_pairs
 
     docs = spark.createDataFrame(
-        [(i, f"abcdefgh{i % 3}") for i in range(12)], "id long, text string"
+        [(i, f"abcdefgh{i % 3}") for i in range(12)], "doc_id long, text string"
     )
     plan = _plan(ngram_jaccard_pairs(docs, threshold=0.8))
     assert "bit_count" in plan

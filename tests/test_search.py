@@ -136,16 +136,16 @@ def test_bm25_scoped_exclusion_filters(spark):
     # en excluded; de kept; NULL lang must survive the exclusion
     assert got == {2, 3}
     # scoped user columns named like the operator's internal columns
-    # (the id alias doc_id, the text alias _text, the token array _toks)
-    # must not collide with them
+    # (the text alias _text, the token array _toks) must not collide
+    # with them; a scope on the id column itself reads the id
     docs = spark.createDataFrame(
-        [(1, "a", "x", "t", "spark rows"), (2, "b", "x", "t", "spark rows"),
-         (3, None, "y", "t", "spark rows")],
-        "id long, doc_id string, _text string, _toks string, text string",
+        [(1, "x", "t", "spark rows"), (2, "x", "t", "spark rows"),
+         (3, "y", "t", "spark rows")],
+        "doc_id long, _text string, _toks string, text string",
     )
     got = {
         r["doc_id"]
-        for r in bm25_search(docs, "spark -doc_id:a _text:x _toks:t", k=10, id_col="id").collect()
+        for r in bm25_search(docs, "spark -doc_id:1 _text:x _toks:t", k=10).collect()
     }
     assert got == {2}
 

@@ -16,9 +16,10 @@ full path are compared on one seed and one state.
 ``semantic`` builds the inputs of perfbench's ``search_dedup`` with
 ``workloads.search_prepare`` and runs its index operations:
 ``build_semantic_index`` over the corpus, the seeded changed append
-(edited and new files), then an unchanged append of the live corpus.
-An untimed three-file build starts the Python workers first, as
-perfbench does.
+(edited and new files), an unchanged append of the live corpus, then
+``stored_query``: one ``semantic_search_stored`` top-10 over the live
+index for the fixed query :data:`SEMANTIC_QUERY`.  An untimed
+three-file build starts the Python workers first, as perfbench does.
 
 ``ann`` reads ``embeddings.parquet`` of the scale-factor directory
 ``--sf`` (default ``$SPARK_GRAFT_SF_DIR``; ``--seed`` plays no part)
@@ -39,7 +40,9 @@ passes the indexed file count, vector appends the appended row count.
 After each part one line holds the sha256 of its sorted final rows —
 linked and edge rows (after ``change`` and again after
 ``change_full``), the live chunk rows without their
-``run_id``/``_gen`` bookkeeping columns, or per vector index the stored
+``run_id``/``_gen`` bookkeeping columns (and without the ``emb_norm``
+column an older index layout stored) and the stored query's rows, or
+per vector index the stored
 ``(vec_id, embedding, cluster|bucket)`` rows and the query's rows
 — hashed with columns in name order, so two trees whose reads order
 columns differently (a liveness join puts its keys first, a snapshot
@@ -63,6 +66,7 @@ sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 
 CORES = 4
+SEMANTIC_QUERY = "def f1_0 return value python"
 
 
 def rows_sha256(df) -> str:
@@ -180,8 +184,16 @@ def main(argv=None) -> int:
         indexed = "indexed_files={}".format
         run_pass("changed_append", lambda: A.semantic_index_append(docs("append"), idx), indexed)
         run_pass("unchanged_append", lambda: A.semantic_index_append(docs("live"), idx), indexed)
-        chunks = A.live_chunks(spark, idx)
-        print(f"sha256 live_chunks={rows_sha256(chunks.drop('run_id', '_gen'))}", flush=True)
+
+        def query():
+            return A.semantic_search_stored(spark, idx, SEMANTIC_QUERY, k=10)
+
+        run_pass("stored_query", lambda: query().collect(), lambda rows: f"rows={len(rows)}")
+        chunks = A.live_chunks(spark, idx).drop("run_id", "_gen", "emb_norm")
+        print(
+            f"sha256 live_chunks={rows_sha256(chunks)} stored_query={rows_sha256(query())}",
+            flush=True,
+        )
 
     def ann_part():
         from pyspark.sql import functions as F
