@@ -339,14 +339,14 @@ def _augmented_embeddings(spark, sf):
 def q_cosine_dup_pairs(spark, sf):
     """Embedding near-dup pairs, exact tier (oracle-checked); the LSH
     blocking tier is q_embedding_dedup_lsh (rows-only)."""
-    from sema_spark.functions.vector import cosine
+    from sema_spark.functions.vector import cosine_fold_arrow
 
     emb = _augmented_embeddings(spark, sf)
     l = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("va"))
     r = emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("vb"))
     return (
         l.join(r, F.col("a") < F.col("b"))
-        .withColumn("cos", F.round(cosine("va", "vb"), 4))
+        .withColumn("cos", F.round(cosine_fold_arrow(F.col("va"), F.col("vb")), 4))
         .filter(F.col("cos") >= 0.8)
         .select("a", "b", "cos")
     )
@@ -713,14 +713,15 @@ def q_u1_encoder(spark, sf):
     it.  norm checks L2 normalization (1.0 at round-4 for any nonzero
     vector)."""
     from sema_spark.functions.encoder import encode_text
-    from sema_spark.functions.vector import l2_norm
 
+    # the L2 norm as a sequential sum of float64 squares
+    sq = F.transform("embedding", lambda x: x.cast("double") * x.cast("double"))
     return (
         spread(_docs(spark, sf).select("doc_id", "text"))
         .select("doc_id", encode_text(F.col("text")).alias("embedding"))
         .select(
             "doc_id",
-            F.round(l2_norm("embedding"), 4).alias("norm"),
+            F.round(F.sqrt(F.aggregate(sq, F.lit(0.0), lambda acc, x: acc + x)), 4).alias("norm"),
             F.size("embedding").alias("dim"),
             F.size(F.filter("embedding", lambda x: x != F.lit(0.0))).alias("nnz"),
         )

@@ -460,7 +460,8 @@ def write_expected_tables(out_dir: str, scale: str = "xs") -> None:
         "lpa5",
         pa.table({"id": lpa_ids, "label": [lpa[i] for i in lpa_ids]}),
     )
-    from sema_spark.functions.bpe import _WORD_RE, apply_merges, bpe_python
+    from sema_spark.functions.bpe import _WORD_RE, apply_merges
+    from sema_spark.oracles import bpe_python
 
     rows, _ = _generated(scale)
     bm = bpe_python([r.content for r in rows], 20)

@@ -23,9 +23,10 @@ Distributed shape per merge round:
 
 Determinism: ties on pair count break lexicographically on (left,
 right); the fold merges left-to-right non-overlapping (["a","a","a"]
-under merge (a,a) → ["aa","a"]) exactly like the reference Python
-implementation below, which doubles as the driver oracle
-(expected-parquet mechanism) and the unit-test reference.
+under merge (a,a) → ["aa","a"]) exactly like the pure-Python
+reference ``oracles.bpe_python``, the oracle queries' expected-parquet
+source and the unit-test reference.  The word regex, the candidate
+window and the batch selection below are shared by both engines.
 """
 
 from __future__ import annotations
@@ -61,7 +62,8 @@ def _select_batch(cands, batch_m: int, remaining: int):
     applying the whole batch in rank order equals ``m`` sequential
     greedy rounds whenever greedy's own ranking wouldn't have been
     reshuffled by intermediate merges.  Shared by bpe_train and
-    bpe_python — the selection rule IS the batched-mode contract."""
+    oracles.bpe_python — the selection rule IS the batched-mode
+    contract."""
     used: set[str] = set()
     selected: list[tuple[str, str, int]] = []
     for left, right, n in cands:
@@ -173,54 +175,6 @@ def bpe_train(
             .where(F.size("syms") >= 2),
             truncate=True,
         )
-    return merges
-
-
-def bpe_python(
-    texts, n_merges: int, batch_m: int = 1
-) -> list[tuple[int, str, str, str, int]]:
-    """Independent pure-Python BPE — unit-test reference AND the driver
-    oracle's expected-parquet source.  Same word regex, weighting,
-    tiebreak, merge fold, early stop, and (for ``batch_m`` > 1) the same
-    candidate window + non-conflicting batch selection as
-    :func:`bpe_train`."""
-    from collections import Counter
-
-    vocab = Counter()
-    for t in texts:
-        for w in _WORD_RE.findall((t or "").lower()):
-            vocab[w] += 1
-    syms = {w: tuple(w) for w in vocab if len(w) >= 2}
-
-    merges: list[tuple[int, str, str, str, int]] = []
-    while len(merges) < n_merges:
-        counts: Counter = Counter()
-        for w, s in syms.items():
-            c = vocab[w]
-            for i in range(len(s) - 1):
-                counts[(s[i], s[i + 1])] += c
-        ranked = sorted(
-            ((p, c) for p, c in counts.items() if c >= 2),
-            key=lambda kv: (-kv[1], kv[0][0], kv[0][1]),
-        )[: _candidate_k(batch_m)]
-        selected = _select_batch(
-            [(l, r, c) for (l, r), c in ranked], batch_m, n_merges - len(merges)
-        )
-        if not selected:
-            break
-        for left, right, n in selected:
-            merged = left + right
-            merges.append((len(merges), left, right, merged, n))
-            new_syms = {}
-            for w, s in syms.items():
-                out: list[str] = []
-                for x in s:
-                    if out and out[-1] == left and x == right:
-                        out[-1] = merged
-                    else:
-                        out.append(x)
-                new_syms[w] = tuple(out)
-            syms = new_syms
     return merges
 
 

@@ -157,32 +157,18 @@ def ivf_kmeans_topk(
     probes: int = 2,
 ) -> DataFrame:
     """IVF-Flat ANN: the k-means quantizer above as the coarse index.
-    The query vector picks its ``probes`` nearest centroids (squared-L2
-    on the driver — centroids are k×dim, a scalar cost), and cosine is
-    brute-forced only inside those clusters' member lists, i.e.
-    ~probes/n_clusters of the corpus.  Scores use the sequential
-    zip_with/aggregate cosine (functions/vector.dot) so an oracle can
-    replicate the summation order bit-for-bit, rounded at 6; ties break
-    on id.  At 100 TB: the assignment column is the partition key — a
-    stored IVF index clusters/bucket-sorts vectors by it so a probe
-    reads only its clusters' files (partition pruning does the rest).
+    The query vector picks its ``probes`` nearest centroids
+    (:func:`probe_cells`), and :func:`similarity.cosine_topk` brute-forces
+    the fold cosine only inside those clusters' member lists, i.e.
+    ~probes/n_clusters of the corpus; an oracle replicates the fold's
+    summation order bit-for-bit (``oracles._seq_cosine``).  At 100 TB:
+    the assignment column is the partition key — a stored IVF index
+    clusters/bucket-sorts vectors by it so a probe reads only its
+    clusters' files (partition pruning does the rest).
     """
-    from sema_spark.functions.vector import cosine_literal_fold
+    from sema_spark.operators.similarity import cosine_topk
 
     cents, src = kmeans_fit(df, n_clusters, iterations)
     probe = probe_cells(cents, qvec, probes)
-    return (
-        src.withColumn("_c", _assign_udf(cents)(F.col("embedding")))
-        .where(F.col("_c").isin(probe))
-        .select(
-            "vec_id",
-            F.round(cosine_literal_fold(F.col("embedding"), qvec), 6).alias("score"),
-        )
-        # zero-norm vectors score NULL — not results (the python oracle
-        # filters its None scores identically); without this, desc
-        # ordering parks them last but limit(k) still admits them when
-        # the probed cells hold fewer than k scoreable vectors
-        .where(F.col("score").isNotNull())
-        .orderBy(F.desc("score"), F.col("vec_id"))
-        .limit(k)
-    )
+    cand = src.withColumn("_c", _assign_udf(cents)(F.col("embedding"))).where(F.col("_c").isin(probe))
+    return cosine_topk(cand, qvec, k)

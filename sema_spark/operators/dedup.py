@@ -56,7 +56,7 @@ from sema_spark.functions.minhash import (
 )
 from sema_spark.functions.text import content_fingerprint
 from sema_spark.plans.materialize import materialize, spread
-from sema_spark.functions.vector import cosine_arrow, cosine_rows
+from sema_spark.functions.vector import cosine_fold_arrow, cosine_rows
 from sema_spark.operators.canonicalize import connected_components
 
 
@@ -664,7 +664,7 @@ def embedding_dup_pairs(
         .filter(F.col("l.id") < F.col("r.id"))
         .select(F.col("l.id").alias("a"), F.col("r.id").alias("b"))
     )
-    # the same float64 rows and cosine_rows arithmetic as cosine_arrow
+    # the same float64 rows and fold arithmetic as cosine_fold_arrow
     cos = _broadcast_pair_score(base, "v", dim, np.float64, cosine_rows)
     if cos is not None:
         return (
@@ -678,7 +678,7 @@ def embedding_dup_pairs(
         cand.distinct()
         .join(vec.select(F.col("id").alias("a"), F.col("v").alias("va")), "a")
         .join(vec.select(F.col("id").alias("b"), F.col("v").alias("vb")), "b")
-        .withColumn("cos", cosine_arrow("va", "vb"))
+        .withColumn("cos", cosine_fold_arrow(F.col("va"), F.col("vb")))
         .filter(F.col("cos") >= threshold)
         .select("a", "b", F.round("cos", 6).alias("cos"))
     )

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from sema_spark.functions.encoder import encode_text
 from sema_spark.functions.minhash import explode_bands, with_minhash
-from sema_spark.functions.vector import cosine
+from sema_spark.functions.vector import cosine_fold_arrow
 from sema_spark.plans.materialize import materialize
 
 LINK_PREDS = ("calls", "imports")
@@ -296,7 +296,7 @@ def _fuzzy_link(unresolved: DataFrame, alias: DataFrame, threshold: float) -> Da
     pairs = (
         cand_pairs.join(q_embs, ["repo", "obj"])
         .join(c_embs, ["repo", "alias"])
-        .withColumn("score", cosine("q_emb", "c_emb"))
+        .withColumn("score", cosine_fold_arrow(F.col("q_emb"), F.col("c_emb")))
         .filter(F.col("score") >= threshold)
     )
     w = Window.partitionBy("repo", "obj").orderBy(F.desc("score"), F.col("cand_id"))

@@ -1,18 +1,22 @@
 """Similarity search over embedding columns (SURVEY J2/W4 generalized).
 
-Three tiers, all returning the same (id, score) shape:
+Every single-query tier ends in :func:`cosine_topk`, the engine's one
+vector top-k; the tiers differ only in which candidates reach it:
 
-* :func:`cosine_topk` — brute-force cosine vs a literal query vector;
-  Catalyst plans TakeOrderedAndProject (no full sort), the correct
-  baseline and the exactness oracle for the ANN tiers.
-* :func:`knn_join` — per-query top-k against a candidate table; the
-  broadcast side is the (small) query set, mirroring the reference's
-  1-query-vs-N search (/root/reference/src/storage/lance_indexer.rs:120-126)
-  generalized to a query batch.
+* :func:`cosine_topk` over the whole table — brute force; Catalyst
+  plans TakeOrderedAndProject (no full sort), the exactness oracle for
+  the ANN tiers.
 * :func:`ann_lsh_topk` — IVF-style scale path: coarse quantization by
   hyperplane sign-sketch buckets; probe the query's bucket (+ optional
   multi-probe by flipping weakest bits), exact re-rank inside.  Recall
-  traded for touching ~1/2^bits of the data per probe.
+  traded for touching ~1/2^bits of the data per probe.  The stored LSH
+  index's query is this function over its table; the IVF tiers
+  (operators/clustering, sources/ann_index) end in the same call.
+
+:func:`knn_join` is the batch form — per-query top-k against a
+candidate table, broadcasting the (small) query set, mirroring the
+reference's 1-query-vs-N search
+(``src/storage/lance_indexer.rs:120-126``).
 """
 
 from __future__ import annotations
@@ -25,12 +29,14 @@ from sema_spark.operators.dedup import hyperplane_sketch
 
 
 def cosine_topk(df: DataFrame, qvec: list[float], k: int = 10) -> DataFrame:
-    """Exact brute-force top-k over ``(vec_id, embedding)`` (the oracle
-    tier).  Scoring is the r7 Arrow fold UDF — bit-identical to the
-    zip_with/aggregate HOF (tests/test_vector_fold.py), so the oracle
-    contract is unchanged."""
+    """Exact top-k ``(vec_id, score)`` of ``df``'s ``(vec_id,
+    embedding)`` rows against ``qvec``: the fold cosine rounded at 6,
+    ties on ``vec_id``.  A NULL score (null or zero-norm vector) is no
+    result, also when fewer than ``k`` rows are scoreable — the python
+    oracles drop it identically."""
     return (
         df.select("vec_id", F.round(cosine_literal_fold(F.col("embedding"), qvec), 6).alias("score"))
+        .where(F.col("score").isNotNull())
         .orderBy(F.desc("score"), F.col("vec_id"))
         .limit(k)
     )
@@ -87,9 +93,9 @@ def build_lsh_index(df: DataFrame, dim: int, num_bits: int = 8) -> DataFrame:
 def probe_buckets(qvec: list[float], dim: int, num_bits: int, probes: int) -> list[int]:
     """The buckets an LSH query inspects: the query's own sign-sketch
     bucket plus multi-probe variants flipping the lowest-|margin| bits
-    (closest to a hyperplane boundary).  Shared by the in-plan
-    :func:`ann_lsh_topk` and the stored index's partition-pruned query
-    (sources/ann_index.lsh_stored_topk) so the two can never diverge."""
+    (closest to a hyperplane boundary) — the probe rule of
+    :func:`ann_lsh_topk`, which the stored index's partition-pruned
+    query (sources/ann_index.lsh_stored_topk) also runs."""
     import numpy as np
 
     from sema_spark.operators.dedup import _planes
@@ -113,12 +119,8 @@ def ann_lsh_topk(
     probes: int = 4,
 ) -> DataFrame:
     """ANN top-k over a build_lsh_index output: probe the query bucket and
-    its nearest variants (weakest-bit flips), exact cosine inside."""
+    its nearest variants (weakest-bit flips), :func:`cosine_topk` inside."""
     cand = index_df.filter(
         F.col("bucket").isin(probe_buckets(qvec, dim, num_bits, probes))
     )
-    return (
-        cand.select("vec_id", F.round(cosine_literal_fold(F.col("embedding"), qvec), 6).alias("score"))
-        .orderBy(F.desc("score"), F.col("vec_id"))
-        .limit(k)
-    )
+    return cosine_topk(cand, qvec, k)

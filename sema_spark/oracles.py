@@ -1,10 +1,14 @@
-"""Independent pure-Python oracles of the engine's clustering operators.
+"""Independent pure-Python oracles of the engine's clustering and BPE
+operators.
 
-No Spark: each function recomputes what an operator in
+No Spark session: each function recomputes what an operator in
 ``operators/clustering`` or ``sources/ann_index`` returns under the
 same determinism contract (see the ``operators/clustering`` module
 docstring), and :func:`write_expected_kmeans` materializes the answers
 as the expected parquet tables the driver's oracle queries read.
+:func:`bpe_python` is the reference of ``functions/bpe.bpe_train``
+and the source of the expected merge tables
+(``corpus.write_expected_tables``).
 """
 
 from __future__ import annotations
@@ -66,9 +70,9 @@ def _kmeans_python_fit(ids, vectors, k: int, iterations: int):
 
 
 def _seq_cosine(v, q) -> float | None:
-    """Replica of functions/vector.cosine's SEQUENTIAL zip_with +
-    aggregate summation (numpy pairwise sums differ in the last bits,
-    which an unrounded-value oracle cannot tolerate)."""
+    """Replica of functions/vector's SEQUENTIAL fold cosine, one row
+    at a time (numpy pairwise sums differ in the last bits, which an
+    unrounded-value oracle cannot tolerate)."""
     dot = 0.0
     na = 0.0
     nb = 0.0
@@ -198,3 +202,53 @@ def write_expected_kmeans(
             }
         ),
     )
+
+
+def bpe_python(
+    texts, n_merges: int, batch_m: int = 1
+) -> list[tuple[int, str, str, str, int]]:
+    """Independent pure-Python BPE — unit-test reference AND the oracle
+    queries' expected-parquet source.  Same word regex, weighting,
+    tiebreak, merge fold, early stop, and (for ``batch_m`` > 1) the same
+    candidate window + non-conflicting batch selection as
+    :func:`functions.bpe.bpe_train`."""
+    from collections import Counter
+
+    from sema_spark.functions.bpe import _WORD_RE, _candidate_k, _select_batch
+
+    vocab = Counter()
+    for t in texts:
+        for w in _WORD_RE.findall((t or "").lower()):
+            vocab[w] += 1
+    syms = {w: tuple(w) for w in vocab if len(w) >= 2}
+
+    merges: list[tuple[int, str, str, str, int]] = []
+    while len(merges) < n_merges:
+        counts: Counter = Counter()
+        for w, s in syms.items():
+            c = vocab[w]
+            for i in range(len(s) - 1):
+                counts[(s[i], s[i + 1])] += c
+        ranked = sorted(
+            ((p, c) for p, c in counts.items() if c >= 2),
+            key=lambda kv: (-kv[1], kv[0][0], kv[0][1]),
+        )[: _candidate_k(batch_m)]
+        selected = _select_batch(
+            [(l, r, c) for (l, r), c in ranked], batch_m, n_merges - len(merges)
+        )
+        if not selected:
+            break
+        for left, right, n in selected:
+            merged = left + right
+            merges.append((len(merges), left, right, merged, n))
+            new_syms = {}
+            for w, s in syms.items():
+                out: list[str] = []
+                for x in s:
+                    if out and out[-1] == left and x == right:
+                        out[-1] = merged
+                    else:
+                        out.append(x)
+                new_syms[w] = tuple(out)
+            syms = new_syms
+    return merges

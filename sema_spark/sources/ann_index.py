@@ -206,27 +206,16 @@ def ivf_stored_topk(
 
     Probe selection is :func:`clustering.probe_cells` over the collected
     centroids (the in-plan operator's rule, so results match it
-    bit-for-bit); the scan reads only the probed
-    cluster partitions (PartitionFilters, not a post-scan filter).
-    Scores are the sequential-fold cosine rounded at 6 with id
-    tiebreaks — the same contract the python oracle replicates (the r7
-    Arrow fold UDF is bit-identical to the zip_with/aggregate HOF,
-    tests/test_vector_fold.py).
+    bit-for-bit); the scan reads only the probed cluster partitions
+    (PartitionFilters, not a post-scan filter), and
+    :func:`similarity.cosine_topk` ranks them — the contract the python
+    oracle replicates.
     """
-    from sema_spark.functions.vector import cosine_literal_fold
+    from sema_spark.operators.similarity import cosine_topk
 
     probe = probe_cells(load_centroids(spark, index_dir), qvec, probes)
-    return (
-        spark.read.parquet(f"{index_dir}/vectors")
-        .where(F.col("cluster").isin(probe))
-        .select(
-            "vec_id",
-            F.round(cosine_literal_fold(F.col("embedding"), qvec), 6).alias("score"),
-        )
-        .where(F.col("score").isNotNull())
-        .orderBy(F.desc("score"), F.col("vec_id"))
-        .limit(k)
-    )
+    cand = spark.read.parquet(f"{index_dir}/vectors").where(F.col("cluster").isin(probe))
+    return cosine_topk(cand, qvec, k)
 
 
 def ivf_index_ready(index_dir: str) -> bool:
@@ -306,23 +295,16 @@ def lsh_stored_topk(
     k: int = 10,
     probes: int = 4,
 ) -> DataFrame:
-    """ANN top-k over the stored LSH index: probe buckets chosen
-    driver-side via the SHARED :func:`similarity.probe_buckets` (so
-    results equal the in-plan ann_lsh_topk by construction), then a
-    partition-pruned scan of only those buckets with exact cosine
-    re-rank inside (fold UDF — bit-identical to the HOF)."""
-    from sema_spark.functions.vector import cosine_literal_fold
-    from sema_spark.operators.similarity import probe_buckets
+    """ANN top-k over the stored LSH index: :func:`similarity.ann_lsh_topk`
+    over the stored ``vectors`` table with the stored ``(dim,
+    num_bits)``, so results equal the in-plan operator's by
+    construction.  Its bucket filter is on the partition column: the
+    scan reads only the probed buckets (PartitionFilters)."""
+    from sema_spark.operators.similarity import ann_lsh_topk
 
     dim, num_bits = _lsh_meta(index_dir)
-    buckets = probe_buckets([float(x) for x in qvec], dim, num_bits, probes)
-    return (
-        spark.read.parquet(f"{index_dir}/vectors")
-        .where(F.col("bucket").isin(buckets))
-        .select("vec_id", F.round(cosine_literal_fold(F.col("embedding"), qvec), 6).alias("score"))
-        .orderBy(F.desc("score"), F.col("vec_id"))
-        .limit(k)
-    )
+    vectors = spark.read.parquet(f"{index_dir}/vectors")
+    return ann_lsh_topk(vectors, qvec, k=k, dim=dim, num_bits=num_bits, probes=probes)
 
 
 def lsh_index_ready(index_dir: str) -> bool:

@@ -1,8 +1,11 @@
 """Per-row references for the batched production forms.
 
-* The dedup family: interpreted higher-order-function references, built
-  only from Spark built-ins (``transform``/``aggregate``/``zip_with``
-  lambdas, no Python workers).
+* The dedup family and the vector functions: interpreted
+  higher-order-function references, built only from Spark built-ins
+  (``transform``/``aggregate``/``zip_with`` lambdas, no Python
+  workers).  :func:`dot`, :func:`l2_norm` and :func:`cosine` sum
+  sequentially in index order — the arithmetic that
+  ``functions/vector``'s Arrow fold vectorizes across rows.
 * The encoder: :func:`encode_numpy`, the one-string numpy encoder that
   ``functions/encoder.encode_batch_numpy`` vectorizes across rows.
 
@@ -22,6 +25,24 @@ from sema_spark.functions.encoder import _MULT, MAX_TOKENS
 from sema_spark.functions.minhash import NUM_PERM, _H_SPACE, _P, _base_hash, _coefficients, tokenize
 from sema_spark.operators.dedup import SIMHASH_BITS
 from sema_spark.schemas import EMBEDDING_DIM
+
+
+def dot(a: Column | str, b: Column | str) -> Column:
+    a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def l2_norm(a: Column | str) -> Column:
+    return F.sqrt(dot(a, a))
+
+
+def cosine(a: Column | str, b: Column | str) -> Column:
+    """Cosine similarity; null/zero-norm safe (returns NULL)."""
+    return dot(a, b) / F.nullif(l2_norm(a) * l2_norm(b), F.lit(0.0))
 
 
 def encode_numpy(text: str | None) -> np.ndarray:

@@ -542,7 +542,8 @@ def test_older_layout_index_dirs_keep_working(spark, tmp_path):
     import glob
     import shutil
 
-    from sema_spark.functions.vector import l2_norm
+    from hof_oracles import l2_norm
+
     from sema_spark.sources.ann_index import (
         build_semantic_index,
         live_chunks,

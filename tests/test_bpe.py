@@ -5,7 +5,8 @@ fold-merge loop must equal the independent pure-Python reference
 
 from __future__ import annotations
 
-from sema_spark.functions.bpe import bpe_python, bpe_train
+from sema_spark.functions.bpe import bpe_train
+from sema_spark.oracles import bpe_python
 
 
 def _df(spark, texts):

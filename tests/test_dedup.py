@@ -198,9 +198,13 @@ def test_sha_signature_memo_path_value_identical(spark):
 
 
 def test_minhash_est_broadcast_equals_join_path(spark):
-    """r7: broadcast-signature est verification must yield identical
-    candidate pairs as the signature-join path (forced by shrinking the
-    broadcast budget)."""
+    """r7: broadcast-matrix scoring must yield identical pairs as the
+    payload-join path (forced by shrinking the broadcast budget), for
+    the minhash estimate and for the embedding cosine — whose scores
+    also equal the interpreted HOF reference's at round 6."""
+    import numpy as np
+    from hof_oracles import cosine
+
     from sema_spark.operators.dedup import minhash_candidate_pairs
 
     docs = spark.createDataFrame(
@@ -208,11 +212,35 @@ def test_minhash_est_broadcast_equals_join_path(spark):
          for i in range(60)],
         "doc_id long, text string",
     )
-    fast = {(r.a, r.b, r.est_jaccard) for r in minhash_candidate_pairs(docs).collect()}
+    rng = np.random.default_rng(5)
+    centers = rng.standard_normal((8, 64)).astype(np.float32)
+    vecs = spark.createDataFrame(
+        [(i, [float(x) for x in centers[i % 8] + rng.standard_normal(64).astype(np.float32) * 0.01])
+         for i in range(40)],
+        "vec_id long, embedding array<float>",
+    )
+
+    def run():
+        return (
+            {(r.a, r.b, r.est_jaccard) for r in minhash_candidate_pairs(docs).collect()},
+            {(r.a, r.b, r.cos) for r in embedding_dup_pairs(vecs).collect()},
+        )
+
+    fast = run()
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
-        slow = {(r.a, r.b, r.est_jaccard) for r in minhash_candidate_pairs(docs).collect()}
+        slow = run()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert fast == slow and len(fast) > 0
+    for f, s in zip(fast, slow):
+        assert f == s and len(f) > 0
+    l = vecs.select(F.col("vec_id").alias("a"), F.col("embedding").alias("va"))
+    r = vecs.select(F.col("vec_id").alias("b"), F.col("embedding").alias("vb"))
+    ref = {
+        (x.a, x.b, x.cos)
+        for x in l.join(r, F.col("a") < F.col("b"))
+        .select("a", "b", F.round(cosine("va", "vb"), 6).alias("cos"))
+        .collect()
+    }
+    assert fast[1] <= ref

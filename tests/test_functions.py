@@ -1,11 +1,10 @@
 import numpy as np
 import pytest
-from hof_oracles import encode_numpy, estimated_jaccard, minhash_signature
+from hof_oracles import cosine, dot, encode_numpy, estimated_jaccard, l2_norm, minhash_signature
 from pyspark.sql import functions as F
 
 from sema_spark.functions.encoder import EMBEDDING_DIM, encode_text
 from sema_spark.functions.minhash import char_shingles, explode_bands, tokenize, with_minhash
-from sema_spark.functions.vector import cosine, dot, l2_norm
 
 
 def test_encoder_contract():

@@ -82,3 +82,40 @@ def test_ann_lsh_recall(spark):
     index.unpersist()
     assert hits_top1 == 3  # self-vector always found (its own bucket)
     assert overlap >= 12  # ≥ 4/5 average overlap with exact top-5
+
+
+def test_vector_topks_drop_null_scores(spark, tmp_path):
+    """A zero-norm vector scores NULL and is not a result of any vector
+    top-k, even when fewer than k scoreable rows are probed."""
+    from sema_spark.operators.clustering import ivf_kmeans_topk
+    from sema_spark.sources.ann_index import (
+        build_ivf_index,
+        build_lsh_stored_index,
+        ivf_stored_topk,
+        lsh_stored_topk,
+    )
+
+    dim = 4
+    rows = [
+        (0, [1.0, 0.5, 0.0, 0.0]),
+        (1, [0.0] * dim),
+        (2, [0.5, 1.0, 0.25, 0.0]),
+        (3, [-1.0, 0.0, 0.5, 1.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    q = [1.0, 1.0, 0.5, 0.25]
+    ivf, lsh = str(tmp_path / "ivf"), str(tmp_path / "lsh")
+    build_ivf_index(df, ivf, n_clusters=2, iterations=2)
+    build_lsh_stored_index(df, lsh, dim=dim, num_bits=1)
+    # every cell and bucket is probed: all four rows reach the scorer
+    results = {
+        "cosine_topk": cosine_topk(df, q, k=10),
+        "ann_lsh_topk": ann_lsh_topk(build_lsh_index(df, dim, 1), q, k=10, dim=dim, num_bits=1, probes=2),
+        "ivf_kmeans_topk": ivf_kmeans_topk(df, q, k=10, n_clusters=2, iterations=2, probes=2),
+        "lsh_stored_topk": lsh_stored_topk(spark, lsh, q, k=10, probes=2),
+        "ivf_stored_topk": ivf_stored_topk(spark, ivf, q, k=10, probes=2),
+    }
+    for name, out in results.items():
+        got = out.collect()
+        assert sorted(r.vec_id for r in got) == [0, 2, 3], name
+        assert all(r.score is not None for r in got), name

@@ -1,7 +1,7 @@
-"""r7 optimization-round parity gates: the Arrow fold-order vector UDFs
-and the batched encoder must be BIT-IDENTICAL to the interpreted-HOF /
-per-row paths they replace — these tests are what lets the fast paths
-ship under unrounded-value oracles."""
+"""Parity gates: the Arrow fold-order vector UDFs and the batched
+encoder must be BIT-IDENTICAL to the interpreted-HOF / per-row
+references in tests/hof_oracles.py — these tests are what lets the
+production forms ship under unrounded-value oracles."""
 
 from __future__ import annotations
 
@@ -10,11 +10,11 @@ import random
 
 import numpy as np
 import pytest
-from hof_oracles import encode_numpy
+from hof_oracles import cosine, encode_numpy
 from pyspark.sql import functions as F
 
 from sema_spark.functions.encoder import encode_batch_numpy
-from sema_spark.functions.vector import cosine, cosine_fold_arrow, cosine_literal_fold
+from sema_spark.functions.vector import cosine_fold_arrow, cosine_literal_fold
 
 
 def _vec(rng: random.Random, dim: int) -> list[float]:

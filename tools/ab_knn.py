@@ -3,8 +3,9 @@
 Old shape (r5): one row_number() window over q_id — every scored row
 exchanges onto Q keys, one reducer per query sees the whole candidate
 set.  New shape (r6): salted two-phase rank (see similarity.knn_join).
-Run at sf0.1 (default) with Q=100, best-of-3 per shape, and verify the
-two shapes return identical rows.
+Both shapes score with the same ``cosine_fold_arrow``, so the A/B
+measures the rank shape only.  Run at sf0.1 (default) with Q=100,
+best-of-3 per shape, and verify the two shapes return identical rows.
 """
 
 import os
@@ -16,7 +17,7 @@ sys.path.insert(0, "/root/repo")
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from sema_spark.functions.vector import cosine
+from sema_spark.functions.vector import cosine_fold_arrow
 from sema_spark.operators.similarity import knn_join
 from sema_spark.session import get_spark
 
@@ -24,7 +25,7 @@ from sema_spark.session import get_spark
 def knn_join_r5(queries, candidates, k=5):
     j = candidates.crossJoin(F.broadcast(queries.select("q_id", "q_vec")))
     scored = j.select(
-        "q_id", "vec_id", F.round(cosine(F.col("embedding"), F.col("q_vec")), 6).alias("score")
+        "q_id", "vec_id", F.round(cosine_fold_arrow(F.col("embedding"), F.col("q_vec")), 6).alias("score")
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.col("vec_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
