@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from sema_spark.plans.materialize import spread
+from sema_spark.schemas import CHUNKS
 
 CHUNK_SIZE = 1000
 OVERLAP_SIZE = 100
@@ -89,12 +90,6 @@ def chunk_python(content: str) -> list[tuple[int, int, int, str]]:
     return out
 
 
-_CHUNK_SCHEMA = (
-    "id string, repo string, path string, chunk_idx long, "
-    "start_line long, end_line long, content string"
-)
-
-
 def chunk_files(df: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     """(repo, path, …, content) → CHUNKS rows (1 file → N chunks).
 
@@ -102,17 +97,15 @@ def chunk_files(df: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     that file (the carry-column pattern — e.g. the stored semantic
     index threads ``content_sha`` through so no post-chunk join is
     needed to attach file-level metadata)."""
-    from pyspark.sql.types import StructType, _parse_datatype_string
+    from pyspark.sql.types import StructType
 
-    base = _parse_datatype_string(_CHUNK_SCHEMA)
-    schema = StructType(list(base.fields) + [df.schema[c] for c in carry])
+    schema = StructType(CHUNKS.fields + [df.schema[c] for c in carry])
 
     def run(batches):
         import pandas as pd
 
-        base_keys = ("id", "repo", "path", "chunk_idx", "start_line", "end_line", "content")
         for pdf in batches:
-            rows = {k: [] for k in base_keys}
+            rows = {k: [] for k in CHUNKS.names}
             for c in carry:
                 rows[c] = []
             for i, (repo, path, content) in enumerate(

@@ -140,13 +140,11 @@ def _file_class_col() -> Column:
 
 
 def extract_mentions(df: DataFrame) -> DataFrame:
-    """(repo, path, commit, lang, content[, content_sha]) →
+    """(repo, path, commit, lang, content, content_sha) →
     (repo, path, commit, content_sha, line, kind, sym, file_class).
 
     Pure built-ins; one narrow map, no shuffle.
     """
-    if "content_sha" not in df.columns:
-        df = with_content_sha(df)
     mention_expr = F.lit(None).cast("array<struct<kind:string,sym:string>>")
     prefilter = F.lit(False)
     for lang, bank in PATTERN_BANK.items():

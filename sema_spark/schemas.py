@@ -133,10 +133,3 @@ LINEAGE = StructType(
         StructField("run_id", StringType(), False),
     ]
 )
-
-EMBEDDINGS = StructType(
-    [
-        StructField("entity_id", StringType(), False),
-        StructField("embedding", ArrayType(FloatType(), False), False),
-    ]
-)

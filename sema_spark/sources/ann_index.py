@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from sema_spark.operators.clustering import _assign_udf, kmeans_fit, probe_cells
+from sema_spark.operators.mentions import with_content_sha
 from sema_spark.schemas import EMBEDDING_DIM, STORED_CHUNKS
 from sema_spark.sources import checkpoint as ck
 
@@ -350,9 +351,7 @@ _PARAMS = f"embedding_dim={EMBEDDING_DIM}"
 
 def _prep_docs(docs: DataFrame) -> DataFrame:
     """(repo, path, content) + the per-row sha256 invariant column."""
-    return docs.select(
-        "repo", "path", "content", F.sha2(F.col("content"), 256).alias("content_sha")
-    )
+    return with_content_sha(docs.select("repo", "path", "content"))
 
 
 def _chunk_rows(docs_with_sha: DataFrame) -> DataFrame:
@@ -476,16 +475,17 @@ def build_semantic_ann_index(
         chunk_and_embed(docs).withColumn("vec_id", F.xxhash64("repo", "path", "chunk_idx"))
     )
     cents, _ = kmeans_fit(chunks, n_clusters, iterations)
-    _write_centroids(index_dir, cents)
-    (
-        chunks.withColumn(
-            "cluster", _assign_udf(cents)(F.col("embedding")).cast("int")
+    with _maintenance_lock(index_dir, wait=True):
+        _write_centroids(index_dir, cents)
+        (
+            chunks.withColumn(
+                "cluster", _assign_udf(cents)(F.col("embedding")).cast("int")
+            )
+            .drop("vec_id")
+            .write.mode("overwrite")
+            .partitionBy("cluster")
+            .parquet(f"{index_dir}/chunks")
         )
-        .drop("vec_id")
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(f"{index_dir}/chunks")
-    )
 
 
 def semantic_search_ann(
@@ -592,7 +592,9 @@ def compact_ivf_index(spark: SparkSession, index_dir: str) -> None:
 def compact_semantic_index(spark: SparkSession, index_dir: str) -> None:
     """Rewrite the live chunk rows into one run and GC every older run,
     checkpoint file and crash orphan (:func:`checkpoint.compact`:
-    append-then-GC, crash-safe at every step).  Raises if another writer
-    (build / append / remove) is active."""
+    append-then-GC, crash-safe at every step).  Raises if no index was
+    built there, or if another writer (build / append / remove) is
+    active."""
     with _maintenance_lock(index_dir, wait=False):
-        ck.compact(spark, index_dir, _STAGE)
+        _require_index(index_dir)
+        ck.compact(spark, index_dir, _STAGE, STORED_CHUNKS)

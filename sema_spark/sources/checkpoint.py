@@ -41,12 +41,23 @@ Every driver-built frame — lineage rows, marker rows, the empty frame
 of an absent path — is one Arrow batch (:func:`local_frame`): it plans
 as a ``LocalTableScan``, so no Python worker unpickles its rows.
 
-Absent-log rule: a path that does not exist yet reads as the empty
-local frame of its schema (``_read_or_empty``); a driver-side existence
-check decides it, so Spark never sees the absent path.  Spark's optimizer
-folds a filter/sort/limit collect over that frame without running a
-job, so :func:`latest_params` and ``_latest_commit`` of a stage with no
-log yet answer ``None`` at no job cost.
+One read rule: every read of a stored table (the checkpoint log, the
+lineage, a stage's data, a snapshot's run, compaction's input) is
+``_read_or_empty(spark, path, schema)`` under the table's declared
+schema.  A path that does not exist yet reads as the empty local frame
+of that schema; a driver-side existence check decides it, so Spark
+never sees the absent path.  Spark's optimizer folds a filter/sort/limit
+collect or a join over that frame without running a job, so
+:func:`latest_params` and ``_latest_commit`` of a stage with no log yet
+answer ``None`` at no job cost.  The declared schema also makes a data
+dir that mixes file generations read the same every time: a column an
+older file lacks reads as null, and a column outside the schema is not
+read.
+
+A snapshot read opens only the directory of its committed run,
+``data/run_id=<rid>``; other runs are never listed.  Compacting a
+snapshot stage keeps that run as it is and deletes every other run and
+log file (Iceberg's ``expire_snapshots``, not ``rewrite_data_files``).
 
 This is Iceberg snapshot semantics hand-rolled over plain parquet; on a
 cluster with an Iceberg catalog the same API maps onto MERGE INTO +
@@ -121,47 +132,26 @@ def local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
     return spark.createDataFrame(table, schema)
 
 
-_ABSENT = ("PATH_NOT_FOUND",)
-_ABSENT_OR_EMPTY = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-
-
-def _read_parquet(
-    spark: SparkSession,
-    path: str,
-    *,
-    read_schema=None,
-    empty_schema=None,
-    codes=_ABSENT,
-    merge_schema: bool = False,
-) -> DataFrame:
-    """Read parquet; an AnalysisException matching ``codes`` returns an
-    empty frame when ``empty_schema`` is given, otherwise propagates.
-    The ONE place the absent-vs-broken policy lives: anything outside
-    ``codes`` (corruption, permissions, transient storage errors) always
-    propagates — swallowing it would silently reprocess and re-append
-    every file on the next incremental run.
-
-    Absence is decided on the driver first (:func:`_exists`, no Spark
-    job): handed an absent path, Spark logs a WARN with a full
-    ``FileNotFoundException`` trace before it raises ``PATH_NOT_FOUND``."""
+def _read_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
+    """The one read of a stored table: ``path`` under its declared
+    ``schema``, or the empty local frame of ``schema`` when the path is
+    absent (nothing written there yet).  Absence is decided on the
+    driver first (:func:`_exists`, no Spark job): handed an absent path,
+    Spark logs a WARN with a full ``FileNotFoundException`` trace before
+    it raises ``PATH_NOT_FOUND``, which still reads as absent when the
+    path goes between the check and the read.  Every other error
+    (corruption, permissions, transient storage errors) propagates:
+    swallowing it would silently reprocess and re-append every file on
+    the next incremental run."""
     from pyspark.errors import AnalysisException
 
-    if empty_schema is not None and not _exists(spark, path):
-        return local_frame(spark, [], empty_schema)
-    try:
-        reader = spark.read.schema(read_schema) if read_schema is not None else spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(path)
-    except AnalysisException as e:
-        if empty_schema is not None and any(c in str(e) for c in codes):
-            return local_frame(spark, [], empty_schema)
-        raise
-
-
-def _read_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
-    """Empty frame ONLY for a genuinely absent path ('no checkpoint yet')."""
-    return _read_parquet(spark, path, read_schema=schema, empty_schema=schema)
+    if _exists(spark, path):
+        try:
+            return spark.read.schema(schema).parquet(path)
+        except AnalysisException as e:
+            if "PATH_NOT_FOUND" not in str(e):
+                raise
+    return local_frame(spark, [], schema)
 
 
 def read_checkpoint_log(spark: SparkSession, base: str, stage: str) -> DataFrame:
@@ -405,57 +395,39 @@ def _commit_increment(
     return n_rows
 
 
-def read_stage_output(spark: SparkSession, base: str, stage: str, schema=None) -> DataFrame:
-    """Current snapshot: data rows referenced by the live checkpoint.
+def read_stage_output(spark: SparkSession, base: str, stage: str, schema) -> DataFrame:
+    """Current snapshot: data rows referenced by the live checkpoint, in
+    the declared ``schema``'s column order (without run_id).
 
     left-semi on (repo, path, content_sha, run_id) — orphans from
     crashed runs and superseded rows from re-indexed files vanish here.
-
-    ``schema``: expected data schema (without run_id).  A stage whose
-    every run produced ZERO rows writes no parquet footers, so schema
-    inference fails on a legitimately-empty stage; with ``schema`` the
-    caller gets an empty DataFrame instead of an error (an empty or
-    fully-filtered source is a valid pipeline state, not a crash).
-
-    When ``schema`` is given the scan uses it EXPLICITLY (plus run_id):
-    a stage dir can mix file generations with different column sets
-    (e.g. snapshot-format edges without content_sha), and inferred-schema
-    reads would nondeterministically adopt whichever footer Spark
-    samples — with the declared schema, columns missing from old files
-    read as null and the liveness join filters those rows out anyway.
+    The scan takes ``schema`` (see the module's read rule), so a stage
+    whose every run produced zero rows, and wrote no parquet file, reads
+    as an empty frame; a data dir that mixes file generations (e.g.
+    edges written before they carried content_sha) reads the missing
+    columns as null, and the liveness join drops those rows anyway.
     """
     data = _read_data(spark, base, stage, schema)
-    if "run_id" not in data.columns:
-        return data  # legitimately-empty stage: nothing to join
     ckpt = current_checkpoint(spark, base, stage)
     keys = ["repo", "path", "content_sha", "run_id"]
-    return data.join(ckpt.select(*keys), on=keys, how="left_semi").drop("run_id")
+    return data.join(ckpt.select(*keys), on=keys, how="left_semi").select(*schema.names)
 
 
 def _read_data(spark: SparkSession, base: str, stage: str, schema) -> DataFrame:
     """Every data row of the stage with its ``run_id``, read under the
-    declared ``schema`` (see :func:`read_stage_output`); without
-    ``run_id`` when the stage has no rows at all."""
-    return _read_parquet(
-        spark,
-        _data_dir(base, stage),
-        read_schema=_with_run_id(schema),
-        empty_schema=schema,
-        codes=_ABSENT_OR_EMPTY,
-    )
+    declared ``schema``."""
+    return _read_or_empty(spark, _data_dir(base, stage), _with_run_id(schema))
 
 
 def _with_run_id(schema):
-    """Declared data schema + the run_id partition column (None → None)."""
-    if schema is None:
-        return None
+    """Declared data schema + the run_id partition column."""
     from pyspark.sql.types import StringType, StructField, StructType
 
     return StructType(list(schema.fields) + [StructField("run_id", StringType(), False)])
 
 
 def stage_rows_for_keys(
-    spark: SparkSession, base: str, stage: str, keys: DataFrame, schema=None
+    spark: SparkSession, base: str, stage: str, keys: DataFrame, schema
 ) -> DataFrame:
     """Data rows for an EXPLICIT (repo, path, content_sha) key set —
     including versions superseded in the live state: data and log are
@@ -473,8 +445,6 @@ def stage_rows_for_keys(
         .agg(F.max("run_id").alias("run_id"))
     )
     data = _read_data(spark, base, stage, schema)
-    if "run_id" not in data.columns:
-        return data
     return data.join(latest, key_cols + ["run_id"], "left_semi").drop("run_id")
 
 
@@ -578,9 +548,9 @@ def run_snapshot_stage(
     )
 
 
-def read_snapshot(spark: SparkSession, base: str, stage: str, schema=None) -> DataFrame:
-    """Rows of the latest committed snapshot run.  ``schema`` handles the
-    legitimately-empty committed snapshot (see read_stage_output)."""
+def read_snapshot(spark: SparkSession, base: str, stage: str, schema) -> DataFrame:
+    """Rows of the latest committed snapshot run, under the declared
+    ``schema`` (a committed zero-row snapshot reads as an empty frame)."""
     last = _latest_commit(spark, base, stage)
     if last is None:
         raise FileNotFoundError(f"no committed snapshot for stage {stage!r} under {base}")
@@ -589,13 +559,11 @@ def read_snapshot(spark: SparkSession, base: str, stage: str, schema=None) -> Da
 
 def read_snapshot_run(spark: SparkSession, base: str, stage: str, run_id: str, schema) -> DataFrame:
     """Rows of the snapshot committed as ``run_id`` (e.g. the run id a
-    :func:`run_snapshot_stage` call returned), read under the declared
-    ``schema`` like :func:`read_stage_output`: the data dir keeps older
-    runs, whose files can lack columns the current run has."""
-    data = _read_data(spark, base, stage, schema)
-    if "run_id" not in data.columns:
-        return data  # legitimately-empty snapshot
-    return data.filter(F.col("run_id") == run_id).drop("run_id")
+    :func:`run_snapshot_stage` call returned): a read of that run's own
+    directory under the declared ``schema``.  Partition columns below
+    run_id come last.  A zero-row snapshot wrote no directory and reads
+    as an empty frame."""
+    return _read_or_empty(spark, f"{_data_dir(base, stage)}/run_id={run_id}", schema)
 
 
 def read_lineage(spark: SparkSession, base: str, stage: str) -> DataFrame:
@@ -619,49 +587,38 @@ def _list_children(spark: SparkSession, path: str) -> list[str]:
     return [s.getPath().toString() for s in fs.listStatus(hpath(path))]
 
 
-def _partition_cols_of(spark: SparkSession, data_dir: str) -> list[str]:
-    """Partition columns BELOW run_id, inferred from the directory
-    layout of an existing run — compact must write the same layout or
-    the data dir would mix partition depths and become unreadable."""
-    cols: list[str] = []
-    rundirs = [
-        p for p in _list_children(spark, data_dir) if p.rsplit("/", 1)[-1].startswith("run_id=")
-    ]
-    if not rundirs:
-        return cols
-    cur = rundirs[0]
-    while True:
-        subs = [
-            p
-            for p in _list_children(spark, cur)
-            if "=" in p.rsplit("/", 1)[-1] and not p.rsplit("/", 1)[-1].startswith("_")
-        ]
-        if not subs:
-            return cols
-        cols.append(subs[0].rsplit("/", 1)[-1].split("=", 1)[0])
-        cur = subs[0]
+def compact(spark: SparkSession, base: str, stage: str, schema) -> str:
+    """Maintenance: leave the stage's live rows in ONE run and garbage-
+    collect everything older, in the log's own append-then-GC terms.
+    ``schema`` is the stage's declared data schema (without run_id).
+    Returns the live run id.
 
+    The stage's kind is that of its LATEST log row.  A stage whose
+    storage kind changed keeps rows of the old kind in its log (stage
+    2's pre-r6 snapshot mark, stage 4's per-file rows from before it
+    became a snapshot); trusting those would keep the stale rows and
+    garbage-collect the live ones.
 
-def compact(spark: SparkSession, base: str, stage: str) -> str:
-    """Maintenance: rewrite the live rows into ONE new run and garbage-
-    collect everything older (Iceberg's rewrite_data_files + snapshot
-    expiry, expressed in the log's own append-then-GC terms).
+    * Snapshot stage (the latest row is a commit mark): the live rows
+      already sit in one run, so nothing is read or rewritten.  The
+      commit mark is re-appended with the same run id and fingerprint
+      (an unchanged input still skips), then every older log file and
+      every other run dir is deleted: Iceberg's ``expire_snapshots``.
+    * Incremental stage: the live rows, read under ``schema``, are
+      rewritten into one new run, and one checkpoint append references
+      it for every live file, with the latest params row.  Tombstoned
+      files get no new row: a surviving old tombstone still reads as
+      deleted, and a GC'd one leaves the file with no row at all.
 
-    Crash-safe AT EVERY POINT under the existing read rules — no
-    directory swap, no window where the checkpoint is absent:
-
-    1. append compacted data under ``run_id=<rid>`` — invisible until
-       referenced (crash here: harmless orphan, next compact re-runs);
-    2. append checkpoint rows with ``run_id=<rid>`` for every live file
-       — ``max_by(run_id)`` makes the compacted rows the current ones
-       and supersedes every older row atomically-per-reader;
-    3. delete pre-existing data run directories and checkpoint files —
-       all unreferenced after (2), so a crash mid-delete just leaves
-       garbage for the next compact.
-
-    Tombstoned files get no new checkpoint row: if their old tombstone
-    row survives a partial GC it still reads as deleted; once GC'd the
-    file has no row at all — also deleted.  Returns the new run_id.
+    Crash-safe AT EVERY POINT under the read rules, with no directory
+    swap and no window where the checkpoint is absent: (1) the data
+    append (incremental stages only) is invisible until referenced;
+    (2) the checkpoint append makes the live run current; (3) the GC
+    deletes what existed before (2), log files first and data dirs
+    second, so a crash mid-GC leaves a harmless data orphan rather than
+    log rows whose data is gone (the delta path's trust check,
+    ``logged_keys`` ⊇ gone, would accept those rows while
+    :func:`stage_rows_for_keys` returns nothing).
 
     SINGLE-WRITER maintenance op: crash-safe against itself, but do not
     run it concurrently with ingest into the same stage — a writer whose
@@ -670,61 +627,36 @@ def compact(spark: SparkSession, base: str, stage: str) -> str:
     checkpoint row survives (the optimistic-commit protection a real
     catalog provides is exactly what plain directories lack).
 
-    READERS need exclusion too: a reader that resolved the checkpoint
-    before step (2) and is still scanning the prior snapshot's parquet
-    when step (3) deletes it fails mid-scan (FileNotFound).  Step (3) is
-    immediate GC with no grace period — Iceberg separates these as
-    rewrite (safe under readers) vs expire_snapshots (run after in-flight
-    reads drain); here both happen in one call, so schedule compact()
-    in a maintenance window with no concurrent reads, or read through
-    ``materialize``/collected results rather than live scans."""
-    rid = new_run_id()
-    if not any(
-        "run_id=" in p.rsplit("/", 1)[-1] for p in _list_children(spark, _data_dir(base, stage))
-    ):
-        # legitimately-empty stage (zero-row runs write no files): nothing
-        # to rewrite and no schema to infer — no-op
-        return rid
-    # the stage's kind is that of its LATEST log row: a snapshot commits
-    # one commit mark, an increment per-file, params or tombstone rows.
-    # A stage whose storage kind changed keeps rows of the old kind in
-    # its log — stage 2's pre-r6 snapshot mark, stage 4's per-file rows
-    # from before it became a snapshot — and trusting those would
-    # rewrite the stale rows and garbage-collect the live ones
+    READERS need exclusion too: a reader still scanning a run that step
+    (3) deletes fails mid-scan (FileNotFound).  The GC is immediate,
+    with no grace period, so schedule compact() in a maintenance window
+    with no concurrent reads, or read through ``materialize``/collected
+    results rather than live scans."""
     latest = read_checkpoint_log(spark, base, stage).orderBy(F.desc("run_id")).limit(1).collect()
-    # preserve the stage's partition layout below run_id — writing a
-    # different depth would make the directory unreadable mid-GC
-    extra_parts = _partition_cols_of(spark, _data_dir(base, stage))
-    old_data = [
-        p for p in _list_children(spark, _data_dir(base, stage)) if f"run_id={rid}" not in p
-    ]
-    old_ckpt = list(_list_children(spark, _ckpt_dir(base, stage)))
-    # merge footers: a data dir can mix file generations with different
-    # column sets, and compact has no declared schema to read under
-    # (maintenance op — the footer-listing cost is fine)
-    data = _read_parquet(spark, _data_dir(base, stage), merge_schema=True, codes=_ABSENT_OR_EMPTY)
+    old_ckpt = _list_children(spark, _ckpt_dir(base, stage))
     if latest and latest[0].repo == COMMIT_MARK:  # snapshot stage
-        live = data.filter(F.col("run_id") == latest[0].run_id)
+        rid = latest[0].run_id
         ckpt_new = _mark_row(spark, stage, COMMIT_MARK, latest[0].content_sha, rid)
     else:  # incremental stage: keep rows referenced by the live checkpoint
+        rid = new_run_id()
         ckpt = current_checkpoint(spark, base, stage)
         jk = ["repo", "path", "content_sha", "run_id"]
-        live = data.join(ckpt.select(*jk), on=jk, how="left_semi")
+        live = _read_data(spark, base, stage, schema).join(ckpt.select(*jk), on=jk, how="left_semi")
+        # (1) data append: the read of the old state completes while writing
+        live.withColumn("run_id", F.lit(rid)).write.mode("append").partitionBy("run_id").parquet(
+            _data_dir(base, stage)
+        )
         # the params marker must survive compaction or the next
         # maintenance run would needlessly distrust the stored rows
         ckpt_new = _log_entry_rows(spark, stage, rid, ckpt, latest_params(spark, base, stage))
-    live = live.drop("run_id").withColumn("run_id", F.lit(rid))
-    # (1) data append: read of the old state completes while writing
-    live.write.mode("append").partitionBy("run_id", *extra_parts).parquet(_data_dir(base, stage))
-    # (2) checkpoint append: the compacted run becomes current
+    old_data = [
+        p
+        for p in _list_children(spark, _data_dir(base, stage))
+        if p.rsplit("/", 1)[-1] != f"run_id={rid}"
+    ]
+    # (2) checkpoint append: the live run becomes the only referenced one
     ckpt_new.write.mode("append").parquet(_ckpt_dir(base, stage))
-    # (3) GC the superseded files (anything that existed before (2)) —
-    # CHECKPOINT rows first, data dirs second (r7 ADVICE fix): a crash
-    # mid-GC then leaves dangling DATA (a harmless orphan later GC'd)
-    # instead of dangling LOG rows whose data is gone — the delta
-    # path's trust check (logged_keys ⊇ gone) would accept those rows
-    # while stage_rows_for_keys returns nothing, silently committing an
-    # incomplete old-side alias delta
+    # (3) GC what existed before (2): log files first, data dirs second
     fs, hpath = _fs(spark, base)
     for p in old_ckpt + old_data:
         fs.delete(hpath(p), True)

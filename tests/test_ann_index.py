@@ -338,6 +338,42 @@ def test_semantic_ann_allprobe_equals_exact_and_prunes(spark, tmp_path):
     assert "cluster" in plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
 
 
+def test_semantic_ann_build_takes_the_writer_lock(spark, tmp_path, monkeypatch):
+    """build_semantic_ann_index writes its centroids and its chunk table
+    under the index dir's writer lock, like every other index writer: two
+    concurrent builds into one dir must not leave one build's centroids
+    beside the other build's cluster partitions."""
+    import contextlib
+
+    from sema_spark.sources import ann_index as A
+
+    entered, held = [], []
+    lock, write_centroids = A._maintenance_lock, A._write_centroids
+
+    @contextlib.contextmanager
+    def recording_lock(index_dir, wait):
+        entered.append((index_dir, wait))
+        with lock(index_dir, wait):
+            held.append(index_dir)
+            try:
+                yield
+            finally:
+                held.pop()
+
+    def recording_centroids(index_dir, cents):
+        assert held == [index_dir]
+        write_centroids(index_dir, cents)
+
+    monkeypatch.setattr(A, "_maintenance_lock", recording_lock)
+    monkeypatch.setattr(A, "_write_centroids", recording_centroids)
+    docs = _docs_df(
+        spark, [("r", f"f{i}.txt", f"spark shuffle join window {i}\n" * 8) for i in range(4)]
+    )
+    idx = str(tmp_path / "semann")
+    A.build_semantic_ann_index(docs, idx, n_clusters=2, iterations=1)
+    assert entered == [(idx, True)] and A.semantic_ann_ready(idx)
+
+
 # ------------------------- round-6 maintenance semantics (ADVICE r5) --
 
 
@@ -584,6 +620,8 @@ def test_compaction_refuses_while_writer_active(spark, tmp_path):
 
     body = "def spark_shuffle_join():\n    pass\n" * 8
     idx = str(tmp_path / "sem")
+    with pytest.raises(ValueError, match="no index"):  # nothing built to compact
+        compact_semantic_index(spark, idx)
     build_semantic_index(_docs_df(spark, [("r", "a.py", body)]), idx)
 
     fd = os.open(f"{idx}/.lock", os.O_CREAT | os.O_RDWR)

@@ -1,12 +1,18 @@
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.readwriter import DataFrameWriter
+from pyspark.sql.readwriter import DataFrameReader, DataFrameWriter
 from pyspark.sql.types import StringType, StructField, StructType
 
 from sema_spark.corpus import corpus_df
 from sema_spark.operators.mentions import extract_triples, with_content_sha
-from sema_spark.schemas import CHECKPOINT, LINEAGE
+from sema_spark.schemas import CHECKPOINT, LINEAGE, TRIPLES
 from sema_spark.sources import checkpoint as ck
+
+# the declared schemas of the ad-hoc ``nodes`` snapshot stages below
+NODE_KEYS = StructType(
+    [StructField("repo", StringType(), False), StructField("path", StringType(), False)]
+)
+NODE_KINDS = StructType(NODE_KEYS.fields + [StructField("kind", StringType(), False)])
 
 
 @pytest.fixture()
@@ -22,14 +28,14 @@ def test_incremental_run_and_skip(spark, src, tmp_path):
     base = str(tmp_path / "kg")
     r1 = ck.run_incremental_stage(spark, src, "triples", base, _transform)
     assert not r1.skipped and r1.output_rows > 0
-    out1 = ck.read_stage_output(spark, base, "triples")
+    out1 = ck.read_stage_output(spark, base, "triples", TRIPLES)
     n1 = out1.count()
     assert n1 == r1.output_rows
 
     # identical rerun → everything skipped, snapshot unchanged
     r2 = ck.run_incremental_stage(spark, src, "triples", base, _transform)
     assert r2.skipped and r2.input_files == 0
-    assert ck.read_stage_output(spark, base, "triples").count() == n1
+    assert ck.read_stage_output(spark, base, "triples", TRIPLES).count() == n1
 
 
 def test_changed_file_supersedes(spark, src, tmp_path):
@@ -37,7 +43,7 @@ def test_changed_file_supersedes(spark, src, tmp_path):
     ck.run_incremental_stage(spark, src, "triples", base, _transform)
     before = {
         (r.subj, r.pred, r.obj)
-        for r in ck.read_stage_output(spark, base, "triples")
+        for r in ck.read_stage_output(spark, base, "triples", TRIPLES)
         .filter("path = 'src/m0.py' and repo = 'org0/proj0'")
         .collect()
     }
@@ -55,7 +61,7 @@ def test_changed_file_supersedes(spark, src, tmp_path):
     r = ck.run_incremental_stage(spark, mutated, "triples", base, _transform)
     assert r.input_files == 1  # only the changed file reprocessed
     after_rows = (
-        ck.read_stage_output(spark, base, "triples")
+        ck.read_stage_output(spark, base, "triples", TRIPLES)
         .filter("path = 'src/m0.py' and repo = 'org0/proj0'")
         .collect()
     )
@@ -74,11 +80,11 @@ def test_crash_before_checkpoint_reprocesses(spark, src, tmp_path):
     ).parquet(f"{base}/triples/data")
     # orphan rows are not visible
     assert ck.current_checkpoint(spark, base, "triples").count() == 0
-    assert ck.read_stage_output(spark, base, "triples").count() == 0
+    assert ck.read_stage_output(spark, base, "triples", TRIPLES).count() == 0
     # rerun processes everything (never skips unprocessed work)
     r = ck.run_incremental_stage(spark, src, "triples", base, _transform)
     assert not r.skipped
-    assert ck.read_stage_output(spark, base, "triples").count() == r.output_rows
+    assert ck.read_stage_output(spark, base, "triples", TRIPLES).count() == r.output_rows
 
 
 def test_tombstone_delete(spark, src, tmp_path):
@@ -86,7 +92,7 @@ def test_tombstone_delete(spark, src, tmp_path):
     ck.run_incremental_stage(spark, src, "triples", base, _transform)
     victim = spark.createDataFrame([("org0/proj0", "src/m0.py")], "repo string, path string")
     ck.delete_files(spark, base, "triples", victim)
-    out = ck.read_stage_output(spark, base, "triples")
+    out = ck.read_stage_output(spark, base, "triples", TRIPLES)
     assert out.filter("repo = 'org0/proj0' and path = 'src/m0.py'").count() == 0
     assert out.count() > 0
 
@@ -125,7 +131,7 @@ def test_driver_built_frames_are_local_scans(spark, src, tmp_path, monkeypatch):
     try:
         assert ck.latest_params(spark, base, "nodes") is None
         with pytest.raises(FileNotFoundError):
-            ck.read_snapshot(spark, base, "nodes")
+            ck.read_snapshot(spark, base, "nodes", NODE_KEYS)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert not sc.statusTracker().getJobIdsForGroup("absent-log")
@@ -176,10 +182,6 @@ def test_absent_paths_are_never_read(spark, tmp_path, monkeypatch):
     reads of a fresh base answer empty frames with their exact schemas."""
     import os
 
-    from pyspark.sql.readwriter import DataFrameReader
-
-    from sema_spark.schemas import TRIPLES
-
     parquet = DataFrameReader.parquet
 
     def existing_only(self, *paths, **kwargs):
@@ -219,7 +221,9 @@ def _fragmented_stage(spark, src, base):
 
 def _live_triples(spark, base):
     """The stage's live rows as a sorted list (duplicates count)."""
-    rows = ck.read_stage_output(spark, base, "triples").select("subj", "pred", "obj").collect()
+    rows = (
+        ck.read_stage_output(spark, base, "triples", TRIPLES).select("subj", "pred", "obj").collect()
+    )
     return sorted(tuple(r) for r in rows)
 
 
@@ -232,7 +236,7 @@ def test_compact_incremental_stage(spark, src, tmp_path):
     before = _live_triples(spark, base)
     raw_before = spark.read.parquet(f"{base}/triples/data").count()
 
-    rid = ck.compact(spark, base, "triples")
+    rid = ck.compact(spark, base, "triples", TRIPLES)
     assert _live_triples(spark, base) == before  # reader-visible snapshot unchanged
     raw = spark.read.parquet(f"{base}/triples/data")
     assert raw.count() < raw_before  # superseded + tombstoned rows physically gone
@@ -263,7 +267,7 @@ def test_compact_crash_windows(spark, src, tmp_path, window):
     _fragmented_stage(spark, src, base)
     before = _live_triples(spark, base)
     shutil.copytree(stage, saved)
-    rid = ck.compact(spark, base, "triples")
+    rid = ck.compact(spark, base, "triples", TRIPLES)
     if window == "data_appended":  # the old stage + the compacted run's data
         shutil.copytree(f"{stage}/data/run_id={rid}", f"{saved}/data/run_id={rid}")
         shutil.rmtree(stage)
@@ -275,7 +279,7 @@ def test_compact_crash_windows(spark, src, tmp_path, window):
     assert sum(d.startswith("run_id=") for d in os.listdir(f"{stage}/data")) > 1
     assert _live_triples(spark, base) == before
 
-    rid2 = ck.compact(spark, base, "triples")
+    rid2 = ck.compact(spark, base, "triples", TRIPLES)
     assert _live_triples(spark, base) == before
     raw = spark.read.parquet(f"{stage}/data")
     assert {r.run_id for r in raw.select("run_id").distinct().collect()} == {rid2}
@@ -283,20 +287,39 @@ def test_compact_crash_windows(spark, src, tmp_path, window):
     assert {r.run_id for r in log.select("run_id").distinct().collect()} == {rid2}
 
 
-def test_compact_snapshot_stage(spark, src, tmp_path):
+def _compact_writes(spark, monkeypatch, base, schema):
+    """Compact the ``nodes`` stage; returns its run id and the paths it
+    wrote parquet to."""
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def recording(self, path, *args, **kwargs):
+        written.append(path)
+        return parquet(self, path, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", recording)
+        rid = ck.compact(spark, base, "nodes", schema)
+    return rid, written
+
+
+def test_compact_snapshot_stage(spark, src, tmp_path, monkeypatch):
+    """Compacting a snapshot stage rewrites nothing: it re-appends the
+    live commit mark and deletes the superseded runs."""
     base = str(tmp_path / "kg")
     keys = src.select("repo", "path", "content_sha")
     fp, fp10 = ck.input_fingerprint(keys), ck.input_fingerprint(keys.limit(10))
     ck.run_snapshot_stage(spark, fp, "nodes", base, lambda: src.select("repo", "path"))
     # second snapshot with different input → supersedes the first
-    ck.run_snapshot_stage(
+    live = ck.run_snapshot_stage(
         spark, fp10, "nodes", base, lambda: src.select("repo", "path").limit(10)
     )
-    before = ck.read_snapshot(spark, base, "nodes").count()
+    before = ck.read_snapshot(spark, base, "nodes", NODE_KEYS).count()
     raw_before = spark.read.parquet(f"{base}/nodes/data").count()
     assert raw_before > before  # old snapshot still on disk
-    rid = ck.compact(spark, base, "nodes")
-    assert ck.read_snapshot(spark, base, "nodes").count() == before
+    rid, written = _compact_writes(spark, monkeypatch, base, NODE_KEYS)
+    assert written == [f"{base}/nodes/checkpoint"] and rid == live.run_id
+    assert ck.read_snapshot(spark, base, "nodes", NODE_KEYS).count() == before
     assert spark.read.parquet(f"{base}/nodes/data").count() == before
     # fingerprint preserved → unchanged input still skips
     r = ck.run_snapshot_stage(
@@ -314,9 +337,9 @@ def test_run_ids_sortable_and_unique_within_second(spark):
     assert ids[0] > old_style
 
 
-def test_compact_partitioned_snapshot_stage(spark, src, tmp_path):
-    """compact must preserve the stage's partition layout below run_id —
-    a different depth would mix leaf levels and make the dir unreadable."""
+def test_compact_partitioned_snapshot_stage(spark, src, tmp_path, monkeypatch):
+    """compact keeps the live run's partition layout below run_id as it
+    is, and a snapshot read opens that run's directory alone."""
     base = str(tmp_path / "kg")
     keys = src.select("repo", "path", "content_sha")
 
@@ -329,12 +352,26 @@ def test_compact_partitioned_snapshot_stage(spark, src, tmp_path):
     ck.run_snapshot_stage(
         spark, ck.input_fingerprint(keys), "nodes", base, prod, partition_cols=["kind"]
     )
-    ck.run_snapshot_stage(
+    live = ck.run_snapshot_stage(
         spark, ck.input_fingerprint(keys.limit(10)), "nodes", base, lambda: prod().limit(10),
         partition_cols=["kind"],
     )
-    before = ck.read_snapshot(spark, base, "nodes").count()
-    ck.compact(spark, base, "nodes")
-    after = ck.read_snapshot(spark, base, "nodes")
+    before = ck.read_snapshot(spark, base, "nodes", NODE_KINDS).count()
+    rid, written = _compact_writes(spark, monkeypatch, base, NODE_KINDS)
+    assert written == [f"{base}/nodes/checkpoint"] and rid == live.run_id
+
+    read = []
+    parquet = DataFrameReader.parquet
+
+    def recording(self, *paths, **kwargs):
+        read.extend(paths)
+        return parquet(self, *paths, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameReader, "parquet", recording)
+        after = ck.read_snapshot(spark, base, "nodes", NODE_KINDS)
+    assert [p for p in read if p.startswith(f"{base}/nodes/data")] == [
+        f"{base}/nodes/data/run_id={rid}"
+    ]
     assert after.count() == before and "kind" in after.columns
     assert spark.read.parquet(f"{base}/nodes/data").count() == before

@@ -310,7 +310,9 @@ def test_repetition_signals_incremental_stage(spark, tmp_path):
 
     got = {
         r["doc_id"]: (r["n_words"], r["top_word_frac"], r["keep"])
-        for r in read_stage_output(spark, base, "rep_sigs").collect()
+        for r in read_stage_output(
+            spark, base, "rep_sigs", transform(src_of(batch1)).schema
+        ).collect()
     }
     expect = {
         r["doc_id"]: (r["n_words"], r["top_word_frac"], r["keep"])

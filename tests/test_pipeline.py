@@ -296,6 +296,7 @@ def test_fuzzy_flip_forces_full_relink_and_params_survive_compact(spark, tmp_pat
     computed under the other setting), flipping back must re-link
     again, and compaction must preserve the params row so the next run
     still trusts the store."""
+    from sema_spark.schemas import LINKED_TRIPLES
     from sema_spark.sources.checkpoint import compact, latest_params
 
     src = corpus_df(spark, "xs").filter("repo = 'org0/proj0'")
@@ -309,7 +310,7 @@ def test_fuzzy_flip_forces_full_relink_and_params_survive_compact(spark, tmp_pat
     assert P.run_pipeline(spark, src, base, fuzzy=False).linked.skipped
 
     before = P.read_linked(spark, base).count()
-    compact(spark, base, "linked")
+    compact(spark, base, "linked", LINKED_TRIPLES)
     assert latest_params(spark, base, "linked") == "fuzzy=False"
     assert P.read_linked(spark, base).count() == before
     assert P.run_pipeline(spark, src, base, fuzzy=False).linked.skipped
@@ -327,7 +328,7 @@ def test_legacy_snapshot_base_reads_and_migrates(spark, tmp_path):
     from sema_spark.operators.canonicalize import canonical_edges, canonicalize_nodes
     from sema_spark.operators.linking import build_nodes, link_triples
     from sema_spark.operators.mentions import extract_triples, salted_repartition, with_content_sha
-    from sema_spark.schemas import LINKED_TRIPLES, NODES, TRIPLES
+    from sema_spark.schemas import EDGES, LINKED_TRIPLES, NODES, TRIPLES
     from sema_spark.sources.checkpoint import (
         compact,
         input_fingerprint,
@@ -379,8 +380,8 @@ def test_legacy_snapshot_base_reads_and_migrates(spark, tmp_path):
     # per-file, though the legacy __SNAPSHOT__ mark lingers in the log)
     # and stage 4's new snapshot, reading the mixed-schema edges dir
     # with content_sha intact
-    compact(spark, base, "linked")
-    compact(spark, base, "edges")
+    compact(spark, base, "linked", LINKED_TRIPLES)
+    compact(spark, base, "edges", EDGES)
     assert_from_scratch()
     assert not P.run_pipeline(spark, src, base, incremental_link=True).any_work
 
@@ -397,6 +398,7 @@ def test_per_file_edges_base_regenerates_and_compacts(spark, tmp_path):
     import shutil
 
     from sema_spark.operators.canonicalize import canonical_edges
+    from sema_spark.schemas import EDGES
     from sema_spark.sources import checkpoint as ck
 
     src = corpus_df(spark, "xs").filter("repo = 'org0/proj0'")
@@ -421,7 +423,7 @@ def test_per_file_edges_base_regenerates_and_compacts(spark, tmp_path):
     assert want
 
     assert not P.run_pipeline(spark, src, base).edges.skipped
-    ck.compact(spark, base, "edges")
+    ck.compact(spark, base, "edges", EDGES)
     assert sorted(map(tuple, P.read_edges(spark, base).collect())) == want
     assert not P.run_pipeline(spark, src, base).any_work
 
@@ -460,7 +462,7 @@ def test_legacy_base_emptied_corpus_serves_empty_not_stale(spark, tmp_path):
     not bring the snapshot back."""
     from sema_spark.operators.linking import link_triples
     from sema_spark.operators.mentions import extract_triples, salted_repartition, with_content_sha
-    from sema_spark.schemas import REPOS, TRIPLES
+    from sema_spark.schemas import EDGES, LINKED_TRIPLES, REPOS, TRIPLES
     from sema_spark.sources.checkpoint import (
         delete_files,
         input_fingerprint,
@@ -492,8 +494,8 @@ def test_legacy_base_emptied_corpus_serves_empty_not_stale(spark, tmp_path):
     # it.  Stage 4 is an empty snapshot with no data to rewrite
     from sema_spark.sources.checkpoint import compact
 
-    compact(spark, base, "linked")
-    compact(spark, base, "edges")
+    compact(spark, base, "linked", LINKED_TRIPLES)
+    compact(spark, base, "edges", EDGES)
     assert P.read_linked(spark, base).count() == 0
     assert P.read_edges(spark, base).count() == 0
     assert not P.run_pipeline(spark, empty, base, incremental_link=True).any_work

@@ -89,9 +89,6 @@ KEPT_OPTIONS = {
     "operators/mentions.py:salted_repartition(num_partitions)": "the CLI's --salt-partitions sets it (via run_pipeline(salt_partitions)); the recorded CLI run uses the defaults",
     "config.py:PipelineConfig.include_hidden": "reference config key (src/config/mod.rs:113) read from the user's TOML; the recorded CLI run reads an empty one",
     "functions/bpe.py:bpe_encode(vocab)": "None is the one-shot encode (no driver-side precompute, see the docstring's A/B); the graded queries reuse one merge table",
-    "sources/checkpoint.py:_read_parquet(empty_schema)": "checkpoint.compact reads without one; compact is reached via the kept compact_*_index calls",
-    "sources/checkpoint.py:_read_parquet(merge_schema)": "checkpoint.compact sets it; compact is reached via the kept compact_*_index calls",
-    "sources/checkpoint.py:_read_parquet(read_schema)": "checkpoint.compact reads without one (it merges the footers instead); compact is reached via the kept compact_*_index calls",
 }
 
 
